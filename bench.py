@@ -29,6 +29,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from hbasewd_spark.fsutil import Fs
     from hbasewd_spark.session import get_spark
     from hbasewd_spark.plans.distributor import Hash31Distributor, HashDistributor
     from hbasewd_spark.sources.loaders import load_table
@@ -162,17 +163,7 @@ def main() -> None:
         # bench SF so intra-file pruning engages like it does on
         # production GB-class files (128 MB groups). Estimated off the
         # source size; clamped to parquet's sane range.
-        src = os.path.join(SF_DIR, "events.parquet")
-        est = (
-            sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(src)
-                for f in fs
-                if not f.startswith((".", "_"))
-            )
-            if os.path.isdir(src)
-            else (os.path.getsize(src) if os.path.exists(src) else 0)
-        )
+        est = Fs.du(spark, os.path.join(SF_DIR, "events.parquet"))
         rg = min(128 << 20, max(256 << 10, est // (32 * 8))) if est else None
         tbl_holder["t"] = SaltedTable.write(
             events,

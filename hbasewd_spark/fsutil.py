@@ -41,6 +41,34 @@ class Fs:
             for s in statuses
         )
 
+    @classmethod
+    def du(cls, spark: SparkSession, path: str) -> int | None:
+        """Bytes of the data files at or under ``path`` — files and
+        directories whose name starts with ``.`` or ``_`` below it are
+        skipped, as Spark's file listing skips them. ``None`` when the
+        size is unknown: the path does not exist or its filesystem
+        cannot be reached from here (no FileSystem for the scheme,
+        missing credentials). Callers sizing work from input bytes
+        treat ``None`` as "large", never as empty."""
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            fs = cls(spark, path)
+            root = fs.fs.makeQualified(fs._p)
+            if not fs.fs.exists(root):
+                return None
+            prefix = len(str(root).rstrip("/")) + 1
+            it = fs.fs.listFiles(root, True)
+            total = 0
+            while it.hasNext():
+                st = it.next()
+                rel = str(st.getPath())[prefix:]
+                if not any(part.startswith((".", "_")) for part in rel.split("/")):
+                    total += st.getLen()
+            return total
+        except Py4JJavaError:  # no FileSystem for the scheme, access denied
+            return None
+
     def delete(self, p: str, recursive: bool = False) -> None:
         self.fs.delete(self.path(p), recursive)
 

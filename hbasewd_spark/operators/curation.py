@@ -104,9 +104,10 @@ def passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 optimization: segs feeds both the first-occurrence aggregate
     # and the mark join, so the tokenize+md5 segmentation generator ran
     # twice (two Generate subtrees in the plan). The relation is slim
-    # (doc_id, seg_key, fp — no text); one eager checkpoint trades a
-    # ~24 B/row serialize for the second full segmentation pass, the
-    # same persist-the-projection stance quality_calibration documents.
+    # (doc_id, seg_key, fp — no text); one checkpoint (filled by the
+    # first job that reads it) trades a ~24 B/row serialize for the
+    # second full segmentation pass, the same persist-the-projection
+    # stance quality_calibration documents.
     segs = _segments(docs).localCheckpoint(eager=False)
     firsts = segs.groupBy("fp").agg(F.min("seg_key").alias("first_key"))
     marked = segs.join(firsts, "fp").select(
@@ -166,9 +167,10 @@ def domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"), spark)
     # r12 optimization: per_src feeds totals, max_ratio and the final
     # select — four lazy references that each re-ran the corpus
-    # tokenize+aggregate. The relation is |sources| rows; one eager
-    # localCheckpoint makes every downstream step re-aggregate it
-    # instead (corpus passes 4 -> 1).
+    # tokenize+aggregate. The relation is |sources| rows; one
+    # localCheckpoint (filled by the first job that reads it) makes
+    # every downstream step re-aggregate it instead (corpus passes
+    # 4 -> 1).
     per_src = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(tokens("text")).cast("long")).alias("n_tokens"),
@@ -266,9 +268,10 @@ def temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `rates` twice (the resample join AND the final output), and
     # `total` references it again — lazily that re-ran the full corpus
     # count THREE times (the plan carried three scan+agg subtrees).
-    # The relation is bounded (|languages| rows), so one eager
-    # localCheckpoint pins it: corpus passes drop 3 -> 2 (count +
-    # resample), which is the operator's floor.
+    # The relation is bounded (|languages| rows), so one
+    # localCheckpoint (filled by the first job that reads it) pins it:
+    # corpus passes drop 3 -> 2 (count + resample), which is the
+    # operator's floor.
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_docs")).localCheckpoint(eager=False)
     w = F.sqrt(F.col("n_docs").cast("double"))
     wq = F.floor(w * _WQUANT + F.lit(0.5)).cast("long")

@@ -425,11 +425,16 @@ def pagerank(
         srcs = e.select("src").distinct().localCheckpoint(eager=False)
     base = (3 * PR_SCALE) // (PR_D_DEN * n_nodes)
     r = nodes.select("node", F.lit(PR_SCALE // n_nodes).cast("bigint").alias("r"))
-    for _ in range(iters):
-        # N rows; the checkpoint cuts the doubling lineage (and, being
-        # eager, runs every job referencing the persisted operands
-        # before they are released below)
-        r = _pr_iteration(e, r, srcs, nodes, base, n_nodes, big_v).localCheckpoint(eager=False)
+    for i in range(iters):
+        # N rows; the checkpoint cuts the doubling lineage. The chain
+        # is lazy, so on the persisted path the LAST checkpoint is
+        # eager: it runs every iteration while the pinned operands are
+        # still cached, and the consumer then reads the checkpointed
+        # ranks instead of recomputing the released edge relation
+        last = i == iters - 1
+        r = _pr_iteration(e, r, srcs, nodes, base, n_nodes, big_v).localCheckpoint(
+            eager=last and bool(persisted)
+        )
     for df in persisted:
         df.unpersist()
     return r.select("node", F.col("r").alias("rank_e9"))

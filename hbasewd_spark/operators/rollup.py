@@ -44,10 +44,10 @@ def time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is referenced by the union AND by hour (which day references
         # again), so Catalyst expanded three full scans+aggregations
         # of the raw table (3 "Scan parquet" in the plan). The minute
-        # aggregate is bounded (time buckets x event types), so an
-        # eager localCheckpoint costs one tiny serialize and every
-        # coarser level now truly re-aggregates it: one full-data
-        # pass, 3 scans -> 1.
+        # aggregate is bounded (time buckets x event types), so a
+        # localCheckpoint (filled by the first job that reads it)
+        # costs one tiny serialize and every coarser level now truly
+        # re-aggregates it: one full-data pass, 3 scans -> 1.
         .localCheckpoint(eager=False)
     )
 

@@ -306,54 +306,6 @@ def o9b_merged_ordered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@q(
-    "o9c_merged_scan_spark_planned",
-    _O9_SQL,
-    "O9 via scan_merged with plan='spark': shard planning runs as a "
-    "small Spark job over the zone-map relation (proportional-sample "
-    "percentile cuts + broadcast-join file assembly) instead of a "
-    "driver collect — the 100-TB manifest path (SCALE.md driver-side "
-    "metadata). Same oracle as o9/o9b: all three order-restoration "
-    "routes must agree exactly, rank included.",
-)
-def o9c_merged_scan_spark_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hbasewd_spark.operators.topk import global_rank
-    from hbasewd_spark.sources.salted_table import SaltedTable
-
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        (F.min("ts") + F.expr("INTERVAL '12' HOUR")).alias("lo"),
-        (F.min("ts") + F.expr("INTERVAL '36' HOUR")).alias("hi"),
-    ).collect()[0]
-    from hbasewd_spark.plans.distributor import Hash31Distributor
-
-    class _EventDist(Hash31Distributor):
-        def salt_expr(self, key):
-            return self.salt_expr_long(key)
-
-    # own path + fresh write (a cross-round cache dir could hold stale
-    # events); zone_map_cols gives the spark planner its sidecar
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "hbasewd_cache",
-        os.path.basename(os.path.normpath(sf_dir)),
-        "events_salted_sparkplan",
-    )
-    t = SaltedTable.write(
-        ev, path, _EventDist(H31_BUCKETS), "ts", zone_map_cols=["ts"]
-    )
-    merged = t.scan_merged(
-        start=bounds.lo,
-        stop=bounds.hi,
-        columns=["event_id", "ts", "event_type", "value"],
-        tiebreak=["event_id"],
-        plan="spark",
-    )
-    return global_rank(merged, ["ts", "event_id"], presorted=True, rk_name="rn").select(
-        "rn", "event_id", "ts", "event_type", "value"
-    )
-
-
 _P2_SQL = f"""
 SELECT event_id, {_H31_SALT} AS salt, event_type, value
 FROM events WHERE event_id IN {_POINT_KEYS}

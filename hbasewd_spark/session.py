@@ -14,6 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 48 GiB, at least 1 GiB. In
+    local mode the driver JVM is the whole engine, and ParallelGC grows
+    its heap toward the cap under a high allocation rate: a cap above
+    the host's memory ends with the kernel's OOM killer taking the JVM
+    (a 16 GB host lost the test session that way with a fixed 48 GiB
+    cap). The 128 GiB bench container keeps its 48 GiB."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48, (total >> 30) // 2))}g"
+
+
 def get_spark(app_name: str = "hbasewd_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
@@ -32,7 +46,10 @@ def get_spark(app_name: str = "hbasewd_spark", cpus: int | None = None) -> Spark
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # Throughput collector for batch analytics: the default G1 on a
         # large single-JVM heap showed frequent ~500ms young-gen pauses
         # under allocation-heavy explode/HOF stages (measured at sf1:

@@ -29,6 +29,9 @@ import os
 import time
 from typing import Any, Iterator
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hbasewd_spark.fsutil import Fs
@@ -364,9 +367,6 @@ class SaltedTable:
         self._zone_maps = None
         self._key_index = None
         self._index_fresh_memo = None
-        # the sidecar file-count memo steers _plan_shards_spark's
-        # auto-routing — a compaction/expire changes the count
-        self._zone_counts = None
 
     def scan(
         self,
@@ -777,28 +777,29 @@ class SaltedTable:
         if isinstance(getattr(self, "_zone_maps", None), dict):
             self._zone_maps.pop(col, None)
 
-    def _footer_stats_local(self, col: str):
-        """The driver footer route, as ``(status, table)``:
+    def _footer_stats_local(self, col: str, paths: list[str] | None = None):
+        """The ONE driver footer reader, as ``(status, table)`` over
+        ``paths`` (default: every data file):
 
         - ``("ok", pa.Table)`` — route applies and EVERY file's stats
           are usable (``_stats_ok`` verified driver-side and dropped);
         - ``("bad_stats", None)`` — route applies but some file's
           stats are missing/un-decodable. The executor footer route
           would re-read the SAME footers and reach the same verdict,
-          so the only correct fallback is the column scan — callers
-          branch on the status instead of re-reading (ADVICE r9);
+          so callers branch on the status instead of re-reading
+          (ADVICE r9);
         - ``("na", None)`` — route does not apply (non-parquet,
-          unmappable column/type, remote or too-many files)."""
+          unmappable column/type, no files, remote or more than
+          FOOTER_DRIVER_MAX_FILES files)."""
         if self.fmt != "parquet":
             return "na", None
         resolved = self._zone_stats_schemas(col)
         if resolved is None:
             return "na", None
-        out_schema, target = resolved
-        fs = Fs(self.spark, self.path)
-        paths = [
-            self._canon_file_uri(t[0]) for t in self._data_signature(fs)
-        ]
+        _, target = resolved
+        if paths is None:
+            paths = [t[0] for t in self._data_signature(Fs(self.spark, self.path))]
+        paths = [self._canon_file_uri(p) for p in paths]
         if not paths or len(paths) > self.FOOTER_DRIVER_MAX_FILES or not all(
             p.startswith("file:") for p in paths
         ):
@@ -811,61 +812,68 @@ class SaltedTable:
         tbl = pa.Table.from_batches([batch])
         return "ok", tbl.drop_columns(["_stats_ok"])
 
-    def _zone_source(
-        self, col: str, _local_status: str | None = None
-    ) -> tuple[DataFrame, "Callable[[], None]"]:
-        """Best available zone-map source for ``col``: the footer-stats
-        relation when EVERY file's column chunk has usable stats, else
-        the column-pruned scan. The all-or-nothing rule keeps the two
-        sources interchangeable (equivalence-tested): a mixed sidecar
-        would hold scan-exact rows next to possibly-conservative footer
-        rows with no record of which is which.
+    def _footer_source(
+        self,
+        col: str,
+        paths: list[str] | None = None,
+        _local_status: str | None = None,
+    ):
+        """Footer-stats zone relation for ``paths`` (default: every data
+        file) as ``(df, done)``, or ``None`` when some file's footer
+        stats are unusable. The all-or-nothing rule keeps footer and
+        scan sources interchangeable (equivalence-tested): a mixed
+        sidecar would hold scan-exact rows next to possibly-
+        conservative footer rows with no record of which is which.
 
-        Returns ``(df, done)``: on the driver footer route the rows are
-        already materialized (a LocalRelation — single-pass and
-        job-free by construction); on the executor route the relation
-        is ``persist()``-ed so the ``_stats_ok`` probe and the caller's
-        write/collect share ONE footer pass (VERDICT r8 #1: the
-        uncached relation ran the whole O(#files × footer) job twice on
-        every build). The caller MUST invoke ``done()`` once finished
-        consuming ``df``.
+        On the driver route the rows are already materialized (a
+        LocalRelation — single-pass and job-free by construction); on
+        the executor route the relation is ``persist()``-ed so the
+        ``_stats_ok`` probe and the caller's write/collect share ONE
+        footer pass (VERDICT r8 #1). The caller MUST invoke ``done()``
+        once finished consuming ``df``.
 
         ``_local_status``: a caller that already ran
-        :meth:`_footer_stats_local` passes its status (``"bad_stats"``
-        or ``"na"``) so the driver footers are never re-read here
-        (ADVICE r9: the bad-stats fallback cost 3 full footer passes)."""
+        :meth:`_footer_stats_local` and got no table passes its status
+        so the driver footers are never re-read (ADVICE r9)."""
+        local = None
         if _local_status is None:
-            _local_status, local = self._footer_stats_local(col)
-        else:
-            local = None
-        if _local_status == "ok" and local is not None:
-            resolved = self._zone_stats_schemas(col)
-            out_schema, _ = resolved
+            _local_status, local = self._footer_stats_local(col, paths)
+        if local is not None:
             from pyspark.sql.types import StructType
 
+            out_schema, _ = self._zone_stats_schemas(col)
             df = self.spark.createDataFrame(local).to(
                 StructType(out_schema.fields[:-1])  # minus _stats_ok
             )
             return df, lambda: None
         if _local_status == "bad_stats":
-            # the driver route already read every footer and found
-            # unusable stats; the executor route reads the same footers
-            # — go straight to the column-pruned scan
-            return self.zone_map(col), lambda: None
-        fdf = self._footer_zone_map(col)
-        if fdf is not None:
-            fdf = fdf.persist()
-            try:
-                all_ok = (
-                    fdf.where(~F.col("_stats_ok")).limit(1).count() == 0
-                )
-            except Exception:
-                fdf.unpersist()
-                raise
-            if all_ok:
-                return fdf.drop("_stats_ok"), lambda: fdf.unpersist()
+            return None
+        fdf = self._footer_zone_map(col, paths)
+        if fdf is None:
+            return None
+        fdf = fdf.persist()
+        try:
+            all_ok = fdf.where(~F.col("_stats_ok")).limit(1).count() == 0
+        except Exception:
             fdf.unpersist()
-        return self.zone_map(col), lambda: None
+            raise
+        if all_ok:
+            return fdf.drop("_stats_ok"), fdf.unpersist
+        fdf.unpersist()
+        return None
+
+    def _zone_source(
+        self, col: str, _local_status: str | None = None
+    ) -> tuple[DataFrame, "Callable[[], None]"]:
+        """Best available zone-map source for ``col`` as ``(df, done)``:
+        the footer-stats relation (:meth:`_footer_source`) when EVERY
+        file's column chunk has usable stats, else the column-pruned
+        scan (:meth:`zone_map`). Same ``done()`` contract as
+        :meth:`_footer_source`."""
+        return self._footer_source(col, _local_status=_local_status) or (
+            self.zone_map(col),
+            lambda: None,
+        )
 
     @staticmethod
     def _canon_file_uri(p: str) -> str:
@@ -927,13 +935,15 @@ class SaltedTable:
         O(column bytes): at 100 TB the difference between a metadata
         pass and re-reading a full column of the table (VERDICT r7 #1).
 
-        Distributed: the driver holds only the file list (the same
-        listing `_data_signature` already does); footers are read on
-        executors via ``mapInArrow`` over the path relation. Each row
-        carries ``_stats_ok`` — False when any row group's stats are
-        missing, un-decodable (pyarrow cannot extract e.g. FLBA decimal
-        stats), or lack a null count; the caller falls back to the scan
-        path when any file is not ok.
+        The executor route: the driver holds only the file list (the
+        same listing `_data_signature` already does); footers are read
+        on executors via ``mapInArrow`` over the path relation, with
+        the extraction code the driver reader
+        (:meth:`_footer_stats_local`) uses, so both produce identical
+        sidecars. Each row carries ``_stats_ok`` — False when any row
+        group's stats are missing, un-decodable (pyarrow cannot
+        extract e.g. FLBA decimal stats), or lack a null count; the
+        caller falls back to the scan path when any file is not ok.
 
         Returns ``None`` for non-parquet formats. Stats semantics:
         parquet writers may TRUNCATE long binary min/max (parquet-mr
@@ -960,23 +970,6 @@ class SaltedTable:
         if not paths:
             return spark.createDataFrame([], out_schema)
         col_name = col
-        if len(paths) <= self.FOOTER_DRIVER_MAX_FILES and all(
-            p.startswith("file:") for p in paths
-        ):
-            # Small LOCAL file sets: read the footers on the driver.
-            # O(#files) metadata I/O does not justify a Spark job —
-            # the job launch + Arrow-worker round trip costs ~1-2 s
-            # per build regardless of data size (measured r9: the
-            # whole salted_write bench regression). The executor path
-            # below remains the scale route (object stores, large
-            # file counts) and shares this exact extraction code, so
-            # both produce byte-identical sidecars.
-            import pyarrow as pa
-
-            batch = _footer_stats_batch(paths, col_name, target)
-            return spark.createDataFrame(
-                pa.Table.from_batches([batch])
-            ).to(out_schema)
         n_tasks = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
         paths_df = spark.createDataFrame(
             [(p,) for p in paths], "file string"
@@ -1056,14 +1049,11 @@ class SaltedTable:
                 continue  # unstamped/corrupt: leave for rebuild
             if meta.get("data_sig") != pre_sig:
                 continue  # was already stale before this mutation
-            fdf = self._footer_zone_map(col, paths=added_files)
-            if fdf is None:
-                continue
-            new_rows = fdf.persist()
+            src = self._footer_source(col, paths=added_files)
+            if src is None:
+                continue  # footer can't speak for this column type
+            new_rows, done = src
             try:
-                if new_rows.where(~F.col("_stats_ok")).limit(1).count() > 0:
-                    continue  # footer can't speak for this column type
-                new_rows = new_rows.drop("_stats_ok")
                 if removed:
                     tmp = zm_dir + ".tmp"
                     fs.delete(tmp, recursive=True)
@@ -1082,7 +1072,7 @@ class SaltedTable:
                 else:
                     new_rows.write.mode("append").parquet(zm_dir)
             finally:
-                fdf.unpersist()
+                done()
             if post_sig is None:
                 post_sig = self._data_signature(fs)
             fs.write_text(
@@ -1092,7 +1082,6 @@ class SaltedTable:
             updated.append(col)
         if updated:
             self._zone_maps = None
-            self._zone_counts = None
         return updated
 
     def _zone_sidecar_df(self, col: str) -> DataFrame | None:
@@ -1114,11 +1103,19 @@ class SaltedTable:
         except Exception:
             return None  # unreadable/stale sidecar
 
-    def _zone_rows(self, col: str) -> list:
-        """Collected zone rows for ``col`` — from the persisted sidecar
-        when present and fresh, else computed live; memoized per table
-        handle (refresh() clears). O(#files) driver rows by design;
-        warns past ZONE_MAP_DRIVER_WARN_FILES."""
+    def _zone_table(self, col: str):
+        """Zone metadata for ``col`` as ONE columnar ``pa.Table`` —
+        ``(file, lo, hi, n_rows, n_nulls)``, one row per data file —
+        from the persisted sidecar when present and fresh, else
+        computed (footers first, column scan last); memoized per table
+        handle (refresh() clears). Every zone consumer reads this one
+        representation: scan_merged's shard planner, fast_count,
+        pruned_scan, expire, scanner chunking and :meth:`manifest`.
+
+        Instant (TimestampType) zones are normalized to
+        ``timestamp[us, tz=UTC]`` and ``n_nulls`` is 0-filled.
+        O(#files) driver memory by design (SCALE.md, driver-side
+        metadata); warns past ZONE_MAP_DRIVER_WARN_FILES."""
         import warnings
 
         zm_cache = getattr(self, "_zone_maps", None)
@@ -1127,27 +1124,80 @@ class SaltedTable:
         if col not in zm_cache:
             zdf = self._zone_sidecar_df(col)
             if zdf is not None:
-                rows = zdf.collect()
+                tbl = zdf.toArrow()
             else:
-                src, done = self._zone_source(col)
-                try:
-                    rows = src.collect()
-                finally:
-                    done()
-            if len(rows) > self.ZONE_MAP_DRIVER_WARN_FILES:
+                status, tbl = self._footer_stats_local(col)
+                if tbl is None:
+                    src, done = self._zone_source(col, _local_status=status)
+                    try:
+                        tbl = src.toArrow()
+                    finally:
+                        done()
+            key_type = tbl.schema.field("lo").type
+            if pa.types.is_timestamp(key_type) and key_type.tz:
+                key_type = pa.timestamp("us", tz="UTC")
+            tbl = pa.table(
+                {
+                    "file": tbl["file"].cast(pa.string()),
+                    "lo": tbl["lo"].cast(key_type),
+                    "hi": tbl["hi"].cast(key_type),
+                    "n_rows": pc.fill_null(tbl["n_rows"].cast(pa.int64()), 0),
+                    "n_nulls": pc.fill_null(tbl["n_nulls"].cast(pa.int64()), 0),
+                }
+            ).combine_chunks()
+            if tbl.num_rows > self.ZONE_MAP_DRIVER_WARN_FILES:
                 warnings.warn(
-                    f"zone map for {col!r} holds {len(rows)} file entries "
+                    f"zone map for {col!r} holds {tbl.num_rows} file entries "
                     f"on the driver (past the "
                     f"{self.ZONE_MAP_DRIVER_WARN_FILES}-file planning "
-                    f"threshold); use the manifest routes instead: "
-                    f"SaltedTable.manifest({col!r}) reads this relation AS "
-                    f"a DataFrame, and scan_merged(plan='spark') / "
-                    f"fast_count plan through it as Spark jobs "
-                    f"(SCALE.md, driver-side metadata)",
+                    f"threshold); compact() the table to cut its file "
+                    f"count (SCALE.md, driver-side metadata)",
                     stacklevel=3,
                 )
-            zm_cache[col] = rows
+            zm_cache[col] = tbl
         return zm_cache[col]
+
+    def _zone_bound(self, v: Any, key_type):
+        """A range bound as an Arrow scalar comparable with zone columns
+        of ``key_type`` — every zone consumer normalizes its bounds once
+        through here. Instant zones take the bound's instant exactly as
+        ``F.lit`` builds it for :meth:`scan` (``TimestampType
+        .toInternal``: an aware bound by its own offset, a naive one in
+        the process-local zone), so tz-aware and naive bounds classify
+        files the way the scan predicate filters rows. Wall-clock (NTZ)
+        zones take an aware bound's session-zone wall clock, which is
+        how Spark compares an NTZ column with an instant literal."""
+        import datetime
+
+        if v is None or isinstance(v, pa.Scalar):
+            return v
+        if pa.types.is_timestamp(key_type) and isinstance(v, datetime.datetime):
+            if key_type.tz:
+                from pyspark.sql.types import TimestampType
+
+                return pa.scalar(TimestampType().toInternal(v), key_type)
+            if v.tzinfo is not None:
+                tz = _session_tzinfo(self.spark.conf.get("spark.sql.session.timeZone"))
+                v = v.astimezone(tz).replace(tzinfo=None)
+            return pa.scalar(v, key_type)
+        # uncast: Arrow comparisons promote (int vs decimal, date vs
+        # timestamp) where a cast to the key type could truncate
+        return pa.scalar(v)
+
+    def _zones_in_range(self, col: str, start: Any, stop: Any):
+        """``(zones, start, stop)``: the zone rows of files that may hold
+        a ``col`` value in ``[start, stop)`` (all-NULL files never
+        match a range), with both bounds normalized by
+        :meth:`_zone_bound`."""
+        zt = self._zone_table(col)
+        key_type = zt.schema.field("lo").type
+        start, stop = self._zone_bound(start, key_type), self._zone_bound(stop, key_type)
+        mask = pc.is_valid(zt["lo"])
+        if stop is not None:
+            mask = pc.and_(mask, pc.less(zt["lo"], stop))
+        if start is not None:
+            mask = pc.and_(mask, pc.greater_equal(zt["hi"], start))
+        return zt.filter(mask), start, stop
 
     def zone_map(self, col: str) -> DataFrame:
         """Secondary zone-map index: per-file (lo, hi, n_rows) stats for
@@ -1175,28 +1225,16 @@ class SaltedTable:
     def manifest(self, col: str | None = None) -> DataFrame:
         """The per-table MANIFEST relation — ``(salt, file, lo, hi,
         n_rows, n_nulls)``, one row per data file — readable AS a
-        DataFrame (VERDICT r11 #4; SCALE.md "driver-side metadata").
-        This is the metastore seam at 100 TB: every planning step that
-        outgrows the driver (shard cuts, wholly-inside/boundary count
-        classification, per-salt file audits) reads THIS relation as a
-        Spark job instead of collecting O(#files) zone rows —
-        :meth:`scan_merged` (``plan='spark'``/past-threshold ``auto``)
-        and :meth:`fast_count` route through it via
-        :meth:`_manifest_past_threshold`.
-
-        Source: the watermark-fresh persisted zone-map sidecar when
-        present (a metadata-only parquet read), else one column-pruned
-        scan (:meth:`zone_map`) — run ``build_zone_map(col)`` /
-        ``write(zone_map_cols=…)`` to make the manifest metadata-cheap.
-        ``salt`` is parsed from the Hive-style ``salt=N/`` path segment
-        (NULL for files outside a salt directory)."""
-        col = col or self.key_col
-        zdf = self._zone_sidecar_df(col)
-        if zdf is None:
-            zdf = self.zone_map(col)
-        return self._manifest_of(zdf)
-
-    def _manifest_of(self, zdf: DataFrame) -> DataFrame:
+        DataFrame (VERDICT r11 #4; SCALE.md "driver-side metadata"):
+        the DataFrame view of the same zone metadata every planner
+        reads (:meth:`_zone_table` — the fresh sidecar, else footer
+        stats, else one column-pruned scan; run
+        ``build_zone_map(col)`` / ``write(zone_map_cols=…)`` to make it
+        metadata-cheap). For per-salt file audits and ad-hoc SQL over
+        the table's layout. ``salt`` is parsed from the Hive-style
+        ``salt=N/`` path segment (NULL for files outside a salt
+        directory)."""
+        zdf = self.spark.createDataFrame(self._zone_table(col or self.key_col))
         salt = F.regexp_extract("file", f"{SALT_COL}=([0-9]+)/", 1)
         return zdf.select(
             F.when(salt != "", salt.cast("int")).alias(SALT_COL),
@@ -1204,26 +1242,8 @@ class SaltedTable:
             "lo",
             "hi",
             "n_rows",
-            F.coalesce(F.col("n_nulls"), F.lit(0)).alias("n_nulls"),
+            "n_nulls",
         )
-
-    def _manifest_past_threshold(self, col: str) -> DataFrame | None:
-        """The sidecar-backed manifest relation, but only when the
-        FRESH sidecar reports more files than the driver threshold —
-        the shared auto rule of :meth:`_plan_shards_spark` and
-        :meth:`_fast_count_spark` (below it, collecting the zone rows
-        is cheaper than extra Spark jobs). ``None`` means: use the
-        driver walk."""
-        zdf = self._zone_sidecar_df(col)
-        if zdf is None:
-            return None
-        counts = getattr(self, "_zone_counts", None) or {}
-        self._zone_counts = counts
-        if col not in counts:
-            counts[col] = zdf.count()  # parquet footer count, tiny
-        if counts[col] <= self.ZONE_MAP_DRIVER_WARN_FILES:
-            return None
-        return self._manifest_of(zdf)
 
     def pruned_scan(self, col: str, lo: Any = None, hi: Any = None) -> DataFrame:
         """Scan only the files whose ``col`` zone [lo_f, hi_f] overlaps
@@ -1237,13 +1257,7 @@ class SaltedTable:
         because Spark still has to open every footer. The residual
         predicate is re-applied, so results are exact regardless of how
         loose the zones are."""
-        keep = [
-            r.file
-            for r in self._zone_rows(col)
-            if r.lo is not None  # all-NULL-col files can't match a range
-            and (hi is None or r.lo < hi)
-            and (lo is None or r.hi >= lo)
-        ]
+        keep = self._zones_in_range(col, lo, hi)[0]["file"].to_pylist()
         pred = range_predicate(col, lo, hi)
         if not keep:
             return self.df().where(F.lit(False)).drop(SALT_COL)
@@ -1384,39 +1398,37 @@ class SaltedTable:
             # under the lock for EVERY verb, so this run already plans
             # against the recovered file set
             fs = Fs(self.spark, self.path)
-            zones = self._zone_rows(self.key_col)
+            zones = self._zone_table(self.key_col)
+            cut = self._zone_bound(before, zones.schema.field("lo").type)
             # zone lo/hi are min/max over NON-NULL keys: a null key has no
             # age, so null-keyed rows must survive every path. A file whose
-            # keys are all null ((None, None) bounds) is kept untouched; a
-            # file wholly below the cutoff takes the metadata-only delete
-            # ONLY when its zone row proves it holds no nulls (n_nulls == 0)
-            # — otherwise it joins the rewrite set, where the isNull
-            # disjunct preserves the null-keyed rows
-            drop = [
-                r
-                for r in zones
-                if r.hi is not None and r.hi < before and r.n_nulls == 0
-            ]
-            boundary = [
-                r
-                for r in zones
-                if r.lo is not None
-                and (
-                    (r.lo < before <= r.hi)
-                    or (r.hi < before and r.n_nulls > 0)
+            # keys are all null (NULL bounds: every comparison is NULL, so
+            # neither filter keeps it) is kept untouched; a file wholly
+            # below the cutoff takes the metadata-only delete ONLY when its
+            # zone row proves it holds no nulls (n_nulls == 0) — otherwise
+            # it joins the rewrite set, where the isNull disjunct
+            # preserves the null-keyed rows
+            below = pc.less(zones["hi"], cut)
+            drop = zones.filter(pc.and_(below, pc.equal(zones["n_nulls"], 0)))
+            boundary = zones.filter(
+                pc.or_(
+                    pc.and_(pc.less(zones["lo"], cut), pc.greater_equal(zones["hi"], cut)),
+                    pc.and_(below, pc.greater(zones["n_nulls"], 0)),
                 )
-            ]
+            )
+            drop_files = drop["file"].to_pylist()
+            boundary_files = boundary["file"].to_pylist()
             stats = {
-                "files_dropped": len(drop),
-                "files_rewritten": len(boundary),
-                "files_kept": len(zones) - len(drop) - len(boundary),
-                "rows_dropped": sum(r.n_rows for r in drop),
+                "files_dropped": len(drop_files),
+                "files_rewritten": len(boundary_files),
+                "files_kept": zones.num_rows - len(drop_files) - len(boundary_files),
+                "rows_dropped": pc.sum(drop["n_rows"]).as_py() or 0,
             }
             stage = self.path.rstrip("/") + "/" + self.EXPIRE_STAGE_DIR
-            if boundary:
+            if boundary_files:
                 kept = (
                     self._reader(base_path=self.path)
-                    .load([r.file for r in boundary])
+                    .load(boundary_files)
                     .where(
                         (F.col(self.key_col) >= F.lit(before))
                         | F.col(self.key_col).isNull()
@@ -1424,13 +1436,15 @@ class SaltedTable:
                 )
                 fs.delete(stage, recursive=True)
                 self._writer(
-                    kept.repartition(max(len(boundary), 1), F.col(SALT_COL))
+                    kept.repartition(len(boundary_files), F.col(SALT_COL))
                     .sortWithinPartitions(SALT_COL, self.key_col)
                 ).mode("overwrite").save(stage)
                 # _reader, not a bare format read: csv needs header=true +
                 # the persisted schema or header lines count as data rows
                 staged_rows = self._reader(base_path=stage).load(stage).count()
-                stats["rows_dropped"] += sum(r.n_rows for r in boundary) - staged_rows
+                stats["rows_dropped"] += (
+                    pc.sum(boundary["n_rows"]).as_py() - staged_rows
+                )
                 # WRITE-AHEAD manifest: the stage is only ACTIONABLE
                 # once this file exists. A retry that finds a stage
                 # WITH a manifest completes the protocol (finish the
@@ -1441,15 +1455,15 @@ class SaltedTable:
                 # "originals all intact, merging would duplicate"
                 fs.write_text(
                     stage + "/" + self.EXPIRE_MANIFEST,
-                    json.dumps({"delete": [r.file for r in drop + boundary]}),
+                    json.dumps({"delete": drop_files + boundary_files}),
                 )
             # originals go away only after the staged replacements are fully
             # written (crash between these steps loses no surviving row —
             # the stage dir is hidden from table scans, and the manifest
             # makes the next expire() complete the merge automatically)
-            for r in drop + boundary:
-                fs.delete(r.file)
-            if boundary:
+            for f in drop_files + boundary_files:
+                fs.delete(f)
+            if boundary_files:
                 failed = _merge_stage_into_base(
                     fs, stage, self.path.rstrip("/"), skip_existing=False
                 )
@@ -1532,26 +1546,17 @@ class SaltedTable:
         cannot support quantile cuts (callers stream the bucket whole,
         the pre-cap behavior)."""
         try:
-            zone = self._zone_rows(self.key_col)
+            zt, start, stop = self._zones_in_range(self.key_col, start, stop)
         except Exception:
             return []  # no stats source: stream whole (pre-cap behavior)
-        pat = f"/{SALT_COL}={salt}/"
-        in_range = [
-            r
-            for r in zone
-            if pat in r.file
-            and r.lo is not None
-            and (stop is None or r.lo < stop)
-            and (start is None or r.hi >= start)
-        ]
-        if not in_range:
+        zt = zt.filter(pc.match_substring(zt["file"], f"/{SALT_COL}={salt}/"))
+        if not zt.num_rows:
             return []
-        est = self._est_in_range_rows(in_range, start, stop)
-        n_chunks = int(est // max(cap, 1)) + 1
+        n_chunks = int(self._est_in_range_rows(zt, start, stop) // max(cap, 1)) + 1
         if n_chunks <= 1:
             return []
-        in_range.sort(key=lambda r: (r.lo, r.file))
-        return self._quantile_bounds(in_range, start, stop, n_chunks) or []
+        bounds = self._quantile_bounds(zt, start, stop, n_chunks)
+        return [] if bounds is None else bounds.to_pylist()
 
     def _bucket_chunked_rows(
         self, salt: int, start: Any, stop: Any, cap: int
@@ -1606,460 +1611,222 @@ class SaltedTable:
         )
 
     @staticmethod
-    def _key_axis(v):
-        """Map a key bound onto a float interpolation axis; ``None``
-        when the key domain has no usable arithmetic (strings). float64
-        loses bits past 2^53 — acceptable here because the axis only
-        positions heuristic CUT POINTS; range semantics at the seams
-        stay exact in the key's own type."""
-        import datetime
-        import decimal
-
-        import pandas as pd
-
-        if isinstance(v, bool) or v is None:
+    def _zone_axis(arr):
+        """float64 interpolation axis of a key-typed Arrow array (epoch
+        micros for instants, days for dates); ``None`` when the key
+        domain has no usable arithmetic (strings, binary, booleans).
+        float64 loses bits past 2^53 — acceptable here because the axis
+        only positions heuristic CUT POINTS; range semantics at the
+        seams stay exact in the key's own type."""
+        t = arr.type
+        if pa.types.is_timestamp(t):
+            arr = pc.cast(arr, pa.int64())
+        elif pa.types.is_date32(t):
+            arr = pc.cast(arr, pa.int32())
+        elif not (
+            pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_decimal(t)
+        ):
             return None
-        if isinstance(v, (int, float)):
-            return float(v)
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-        if isinstance(v, datetime.datetime):
-            return float(pd.Timestamp(v).value)  # wall-clock ns
-        if isinstance(v, datetime.date):
-            return float(v.toordinal())
-        return None
+        return pc.cast(arr, pa.float64()).to_numpy()
 
     @staticmethod
-    def _axis_key(x: float, template):
-        """Inverse of :meth:`_key_axis`: land the interpolated cut back
-        in the key's own domain, typed like ``template``."""
-        import datetime
-        import decimal
+    def _zone_unaxis(x, key_type):
+        """Inverse of :meth:`_zone_axis`: land interpolated cut points
+        back in the key's own type, as an Arrow array."""
+        if pa.types.is_floating(key_type):
+            return pa.array(x).cast(key_type)
+        if pa.types.is_decimal(key_type):
+            import decimal
 
-        import pandas as pd
-
-        if isinstance(template, int):
-            return int(round(x))
-        if isinstance(template, float):
-            return float(x)
-        if isinstance(template, decimal.Decimal):
-            return decimal.Decimal(repr(x))
-        if isinstance(template, datetime.datetime):
-            # floor to Spark's timestamp precision (us) — a cut point
-            # needs no sub-microsecond resolution
-            ts = pd.Timestamp(int(round(x))).floor("us")
-            return ts.tz_localize(template.tzinfo).to_pydatetime()
-        if isinstance(template, datetime.date):
-            return datetime.date.fromordinal(int(round(x)))
-        return None
-
-    @staticmethod
-    def _est_in_range_rows(in_range, start, stop) -> float:
-        """Estimated rows of ``in_range`` zone entries inside
-        ``[start, stop)`` by per-file uniform-density interpolation —
-        shared by shard-count planning and scanner chunk planning.
-        Non-arithmetic keys count whole files (no interpolation axis)."""
-        est = 0.0
-        for r in in_range:
-            frac = 1.0
-            try:
-                span = r.hi - r.lo
-                if span and (start is not None or stop is not None):
-                    s = max(r.lo, start) if start is not None else r.lo
-                    e = min(r.hi, stop) if stop is not None else r.hi
-                    frac = max(0.0, min(1.0, (e - s) / span))
-            except TypeError:
-                pass  # non-arithmetic key (string): whole file
-            est += r.n_rows * frac
-        return est
+            return pa.array(
+                [decimal.Decimal(f"{v:.{key_type.scale}f}") for v in x], key_type
+            )
+        ints = pa.array(np.round(x).astype(np.int64))
+        if pa.types.is_date32(key_type):
+            ints = ints.cast(pa.int32())
+        return ints.cast(key_type)
 
     @classmethod
-    def _quantile_bounds(cls, in_range, start, stop, n_shards):
-        """Shard boundaries at the j/n_shards quantiles of the mixture
-        of per-file uniform row densities over the clipped zone
-        overlaps. F(b) = sum_f w_f * clip((b - s_f) / (e_f - s_f), 0, 1)
-        is monotone in b, so each boundary is one vectorized bisection:
-        (n_shards-1) x ~60 iterations x O(#files) numpy — the same
-        driver cost class as the zone planning itself. Returns ``None``
-        for non-arithmetic keys (caller falls back to whole-file cuts)
-        and ``[]`` when no interior cut exists."""
-        if n_shards <= 1:
-            return []
-        import numpy as np
-
-        axes = [(cls._key_axis(r.lo), cls._key_axis(r.hi)) for r in in_range]
-        if any(a is None or b is None for a, b in axes):
+    def _zone_weights(cls, zt, start, stop):
+        """``(cs, ce, frac)`` on the interpolation axis: every zone
+        clipped to ``[start, stop)`` and the estimated fraction of its
+        rows inside, by per-file uniform density (a point-mass file
+        counts fully iff it survives the clip). ``None`` for keys with
+        no axis."""
+        s, e = cls._zone_axis(zt["lo"]), cls._zone_axis(zt["hi"])
+        if s is None:
             return None
-        s = np.array([a for a, _ in axes])
-        e = np.array([b for _, b in axes])
-        w = np.array(
-            [max(0, r.n_rows - (getattr(r, "n_nulls", 0) or 0)) for r in in_range],
-            dtype=np.float64,
-        )
-        a0 = cls._key_axis(start) if start is not None else None
-        a1 = cls._key_axis(stop) if stop is not None else None
-        cs = s if a0 is None else np.maximum(s, a0)
-        ce = e if a1 is None else np.minimum(e, a1)
+        cs = s if start is None else np.maximum(s, cls._zone_axis(pa.array([start]))[0])
+        ce = e if stop is None else np.minimum(e, cls._zone_axis(pa.array([stop]))[0])
         span = np.where(e > s, e - s, 1.0)
-        # estimated in-range weight per file; point-mass files (lo==hi)
-        # count fully iff they survive the clip
         frac = np.where(
             e > s,
             np.clip((ce - cs) / span, 0.0, 1.0),
             (cs <= ce).astype(np.float64),
         )
-        w = w * frac
-        total = float(w.sum())
-        lo_ax, hi_ax = float(cs.min()), float(ce.max())
-        if total <= 0 or not hi_ax > lo_ax:
-            return []
-        seg = np.where(ce > cs, ce - cs, 1.0)
+        return cs, ce, frac
 
-        def cdf(b):
-            t = np.where(
-                ce > cs,
-                np.clip((b - cs) / seg, 0.0, 1.0),
-                (b >= ce).astype(np.float64),
-            )
-            return float((w * t).sum())
+    @classmethod
+    def _est_in_range_rows(cls, zt, start, stop) -> float:
+        """Estimated rows of the zone table ``zt`` inside ``[start,
+        stop)`` by per-file uniform-density interpolation — shared by
+        shard-count planning and scanner chunk planning. Keys with no
+        axis (strings) count whole files."""
+        n = zt["n_rows"].to_numpy().astype("float64")
+        wf = cls._zone_weights(zt, start, stop)
+        return float(n.sum() if wf is None else (n * wf[2]).sum())
 
-        template = in_range[0].lo
-        bounds = []
-        for j in range(1, n_shards):
-            target = total * j / n_shards
-            lo_b, hi_b = lo_ax, hi_ax
-            for _ in range(60):
-                mid = 0.5 * (lo_b + hi_b)
-                if cdf(mid) < target:
-                    lo_b = mid
-                else:
-                    hi_b = mid
-            b = cls._axis_key(0.5 * (lo_b + hi_b), template)
-            if b is None:
-                return None
-            if (
-                (not bounds or b > bounds[-1])
-                and (start is None or b > start)
-                and (stop is None or b < stop)
-            ):
-                bounds.append(b)
-        return bounds
-
-    def _plan_shards_driver(
-        self, start, stop, shards, key_type
-    ) -> DataFrame | None:
-        """scan_merged step 1 on the DRIVER: collect the O(#files) zone
-        rows (the reference's client-side scan-planning cost class,
-        fine to ~ZONE_MAP_DRIVER_WARN_FILES), cut row-balanced shard
-        boundaries, and emit the |shards|-row descriptor relation.
-        Returns ``None`` when no file intersects the request."""
-        spark, key_col = self.spark, self.key_col
-        zone = self._zone_rows(key_col)
-        in_range = [
-            r
-            for r in zone
-            if r.lo is not None
-            and (stop is None or r.lo < stop)
-            and (start is None or r.hi >= start)
-        ]
-        if not in_range:
+    @classmethod
+    def _quantile_bounds(cls, zt, start, stop, n_shards):
+        """Shard boundaries at the j/n_shards quantiles of the mixture
+        of per-file uniform row densities over the clipped zone
+        overlaps, as a key-typed Arrow array: strictly increasing,
+        strictly inside ``(start, stop)``. The mixture CDF F(b) =
+        sum_f w_f * clip((b - s_f) / (e_f - s_f), 0, 1) (a point-mass
+        file steps by w_f at its key) is piecewise linear between the
+        sorted zone edges, so it is built once in O(#files log #files)
+        numpy and every quantile is inverted on its own segment.
+        Returns ``None`` for keys with no axis (caller falls back to
+        whole-file cuts); empty when no interior cut exists."""
+        key_type = zt.schema.field("lo").type
+        none = pa.array([], key_type)
+        if n_shards <= 1:
+            return none
+        wf = cls._zone_weights(zt, start, stop)
+        if wf is None:
             return None
+        cs, ce, frac = wf
+        w = (
+            np.maximum(0, zt["n_rows"].to_numpy() - zt["n_nulls"].to_numpy()) * frac
+        )
+        total = float(w.sum())
+        if total <= 0 or not ce.max() > cs.min():
+            return none
+        live = w > 0
+        cs, ce, w = cs[live], ce[live], w[live]
+        point = ce <= cs
+        rate = np.where(point, 0.0, w / np.where(point, 1.0, ce - cs))
+        xs = np.unique(np.concatenate([cs, ce]))
+        slope = np.zeros(len(xs))
+        jump = np.zeros(len(xs))
+        np.add.at(slope, np.searchsorted(xs, cs), rate)
+        np.add.at(slope, np.searchsorted(xs, ce), -rate)
+        np.add.at(jump, np.searchsorted(xs, ce[point]), w[point])
+        slope = np.maximum(np.cumsum(slope), 0.0)  # on [xs[k], xs[k+1])
+        # left[k] = F just below xs[k]; at[k] = F at xs[k]
+        left = np.concatenate([[0.0], np.cumsum(jump[:-1] + slope[:-1] * np.diff(xs))])
+        at = left + jump
+        targets = total * np.arange(1, n_shards) / n_shards
+        k = np.minimum(np.searchsorted(at, targets), len(xs) - 1)
+        km1 = np.maximum(k - 1, 0)
+        rise = slope[km1]
+        on_seg = (k > 0) & (targets <= left[k]) & (rise > 0)
+        b = np.where(
+            on_seg,
+            xs[km1] + (targets - at[km1]) / np.where(rise > 0, rise, 1.0),
+            xs[k],
+        )
+        # b is nondecreasing, so unique() keeps it sorted
+        cuts = pc.unique(cls._zone_unaxis(b, key_type))
+        if start is not None:
+            cuts = cuts.filter(pc.greater(cuts, start))
+        if stop is not None:
+            cuts = cuts.filter(pc.less(cuts, stop))
+        return cuts
 
-        if shards:
-            n_shards = shards
-        else:
-            # shard count follows the ESTIMATED IN-RANGE row volume
-            # (zone-map interpolation) via _merged_shard_count — tiny
-            # ranges stay on one task (every (shard x file) pairing is
-            # a footer read + row-group decode), core-scale ranges fan
-            # out, 100-TB ranges yield thousands of ~TARGET-row shards.
-            est = self._est_in_range_rows(in_range, start, stop)
-            n_shards = self._merged_shard_count(
-                est, spark.sparkContext.defaultParallelism
-            )
+    @staticmethod
+    def _file_boundary_cuts(zt, start, stop, n_shards):
+        """Whole-file shard boundaries for keys with no interpolation
+        axis (strings): walk the ``(lo, file)``-sorted zones' cumulative
+        row weight and cut at the ``hi`` of the first file reaching
+        each j/n_shards threshold — exact for the disjoint file
+        geometry such keys realistically pair with. The last file is
+        never a cut (its hi would leave an empty final shard)."""
+        cum = np.cumsum(
+            np.maximum(0, zt["n_rows"].to_numpy() - zt["n_nulls"].to_numpy())
+        )
+        thresholds = cum[-1] * np.arange(1, n_shards) / n_shards
+        idx = np.unique(np.searchsorted(cum[:-1], thresholds))
+        cuts = zt["hi"].take(idx[idx < len(cum) - 1]).combine_chunks()
+        cuts = pc.unique(cuts.take(pc.array_sort_indices(cuts)))
+        if start is not None:
+            cuts = cuts.filter(pc.greater(cuts, start))
+        if stop is not None:
+            cuts = cuts.filter(pc.less(cuts, stop))
+        return cuts
+
+    def _plan_shards(self, start, stop, shards, key_type: str) -> DataFrame | None:
+        """scan_merged step 1 — the client-side scan planning of the
+        reference (``getDistributedScans``), over the memoized columnar
+        zone table: intersect per-file [lo, hi] with the request, cut
+        row-balanced shard boundaries, and emit the |shards|-row
+        descriptor relation ``(shard_id, lo, hi, files)`` built from
+        Arrow. Every step is an array operation over the in-range
+        zones; no Spark job runs before the caller's scan. Returns
+        ``None`` when no file intersects the request."""
+        zt, start, stop = self._zones_in_range(self.key_col, start, stop)
+        if not zt.num_rows:
+            return None
+        # shard count follows the ESTIMATED IN-RANGE row volume
+        # (zone-map interpolation) via _merged_shard_count — tiny
+        # ranges stay on one task (every (shard x file) pairing is a
+        # footer read + row-group decode), core-scale ranges fan out,
+        # 100-TB ranges yield thousands of ~TARGET-row shards.
+        n_shards = shards or self._merged_shard_count(
+            self._est_in_range_rows(zt, start, stop),
+            self.spark.sparkContext.defaultParallelism,
+        )
         # row-balanced boundaries. Two file geometries exist:
         #   * compacted/range-partitioned layouts: files hold DISJOINT
         #     key slices, so cutting at whole-file hi values balances;
         #   * salted layouts (this class's write path): every bucket
         #     file is a sorted run over ~the FULL key domain, so every
-        #     whole-file hi sits at the domain max and the old
-        #     cumulative-count walk degenerated to ONE shard merging
-        #     the entire range (single-task OOM class at 100 TB).
-        # For arithmetic keys, cut instead at the j/n_shards quantiles
-        # of the mixture of per-file uniform densities over the CLIPPED
-        # zone overlaps — boundaries land inside the overlap no matter
-        # how the files tile the domain. Non-arithmetic (string) keys
-        # fall back to the whole-file walk, which is exact for the
-        # disjoint geometry they'd realistically pair with.
-        in_range.sort(key=lambda r: (r.lo, r.file))
-        bounds = self._quantile_bounds(in_range, start, stop, n_shards)
-        if bounds is None:
-            total = sum(r.n_rows for r in in_range) or 1
-            bounds, acc, next_cut = [], 0, 1
-            for r in in_range[:-1]:
-                acc += r.n_rows
-                if acc >= next_cut * total / n_shards and len(bounds) < n_shards - 1:
-                    nxt = r.hi  # first key of NEXT shard is past this file's hi
-                    if (not bounds or nxt > bounds[-1]) and (
-                        stop is None or nxt < stop
-                    ):
-                        bounds.append(nxt)
-                    next_cut += 1
-        edges = [start] + bounds + [stop]
-        shard_rows = []
-        for i in range(len(edges) - 1):
-            lo, hi = edges[i], edges[i + 1]
-            files = [
-                r.file
-                for r in in_range
-                if (hi is None or r.lo < hi) and (lo is None or r.hi >= lo)
-            ]
-            shard_rows.append((i, lo, hi, files))
-        return spark.createDataFrame(
-            shard_rows,
-            f"shard_id int, lo {key_type}, hi {key_type}, files array<string>",
-        ).repartitionByRange(len(shard_rows), "shard_id")
+        #     whole-file hi sits at the domain max and a whole-file walk
+        #     degenerates to ONE shard merging the entire range
+        #     (single-task OOM class at 100 TB).
+        # For arithmetic keys, cut instead at the quantiles of the
+        # per-file uniform density mixture over the CLIPPED zone
+        # overlaps — boundaries land inside the overlap no matter how
+        # the files tile the domain. Non-arithmetic (string) keys fall
+        # back to the whole-file walk.
+        zt = zt.sort_by([("lo", "ascending"), ("file", "ascending")])
+        cuts = self._quantile_bounds(zt, start, stop, n_shards)
+        if cuts is None:
+            cuts = self._file_boundary_cuts(zt, start, stop, n_shards)
+        typ = zt.schema.field("lo").type
 
-    def _plan_shards_spark(
-        self, start, stop, shards, data_schema, auto: bool
-    ) -> DataFrame | None:
-        """scan_merged step 1 as a small SPARK JOB over the zone-map
-        relation (SCALE.md's driver-side-metadata escape hatch): the
-        driver never materializes O(#files) zone rows — it holds only
-        the O(#shards) boundary list; the per-shard file lists are
-        assembled by a broadcast join + collect_list that stays on the
-        executors. Same quantile cuts as :meth:`_quantile_bounds`,
-        computed by proportional per-file sampling + percentile_approx
-        (each file contributes samples in proportion to its estimated
-        in-range rows, so the unweighted percentile of the samples IS
-        the weighted quantile of the mixture).
+        def edge(b):
+            return pa.nulls(1, typ) if b is None else pa.array([b.as_py()], typ)
 
-        Arithmetic keys cut at mixture quantiles via proportional
-        sampling + percentile_approx; non-arithmetic (string) keys —
-        which interpolation cannot cut — cut at weighted-quantile FILE
-        BOUNDARY values instead (every file's hi is a valid whole-file
-        cut; a cumulative-weight window over the zone relation finds
-        the ≤ n_shards-1 crossing files, so the collect stays
-        O(#shards) — VERDICT r6 #2a).
-
-        Returns ``None`` to fall back to driver planning only on
-        ``auto`` when there is no fresh sidecar or it is below the warn
-        threshold (collecting it is cheaper than 3 extra jobs)."""
-        spark, key_col = self.spark, self.key_col
-        if auto:
-            zdf = self._manifest_past_threshold(key_col)
-            if zdf is None:
-                return None
-        else:
-            # explicit plan='spark': the manifest relation regardless
-            # of threshold (sidecar when fresh, else one column-pruned
-            # scan)
-            zdf = self.manifest(key_col)
-
-        dt = data_schema[key_col].dataType
-        tn = dt.typeName()
-        key_type = dt.simpleString()
-        epoch = F.to_date(F.lit("1970-01-01"))
-
-        def axis(c):  # key-typed Column -> double interpolation axis
-            if tn in ("long", "integer", "short", "byte", "double", "float") or tn.startswith("decimal"):
-                return c.cast("double")
-            if tn.startswith("timestamp"):
-                return F.unix_micros(c.cast("timestamp")).cast("double")
-            if tn == "date":
-                return F.datediff(c, epoch).cast("double")
-            return None
-
-        def unaxis(x):  # double axis Column -> key-typed Column
-            if tn in ("long", "integer", "short", "byte"):
-                return F.round(x).cast(dt)
-            if tn.startswith("timestamp"):
-                return F.timestamp_micros(F.round(x).cast("long")).cast(dt)
-            if tn == "date":
-                return F.date_add(epoch, F.round(x).cast("int"))
-            return x.cast(dt)
-
-        arith = axis(F.col("lo")) is not None
-
-        zin = zdf.where(F.col("lo").isNotNull())
-        if stop is not None:
-            zin = zin.where(F.col("lo") < F.lit(stop))
-        if start is not None:
-            zin = zin.where(F.col("hi") >= F.lit(start))
-
-        if arith:
-            s, e = axis(F.col("lo")), axis(F.col("hi"))
-            cs = F.greatest(s, axis(F.lit(start))) if start is not None else s
-            ce = F.least(e, axis(F.lit(stop))) if stop is not None else e
-            frac = F.when(
-                e > s, F.greatest(F.lit(0.0), F.least(F.lit(1.0), (ce - cs) / (e - s)))
-            ).otherwise((cs <= ce).cast("double"))
-        else:
-            # non-arithmetic (string) keys: no interpolation axis, so no
-            # in-file clipping — whole-file weights, mirroring the
-            # driver path's whole-file walk (VERDICT r6 #2a). cs/ce stay
-            # key-typed: every file's hi is a valid whole-file cut
-            # candidate and needs no numeric round-trip.
-            cs, ce, frac = F.col("lo"), F.col("hi"), F.lit(1.0)
-        w = (
-            F.col("n_rows") - F.coalesce(F.col("n_nulls"), F.lit(0))
-        ).cast("double") * frac
-        zw = zin.select(
-            "file", cs.alias("cs"), ce.alias("ce"), w.alias("w")
-        ).where(F.col("w") > 0)
-
-        # job 1: O(1) driver — total estimated in-range rows + file count
-        tot_row = zw.agg(
-            F.sum("w").alias("tot"), F.count("*").alias("nf")
-        ).collect()[0]
-        if not tot_row.nf:
-            return spark.createDataFrame(
-                [], f"shard_id int, lo {key_type}, hi {key_type}, files array<string>"
-            )
-        n_shards = shards or self._merged_shard_count(
-            tot_row.tot, spark.sparkContext.defaultParallelism
-        )
-
-        # job 2: O(#shards) driver — quantile boundaries over
-        # proportional samples
-        bvals: list = []
-        if n_shards > 1 and not arith:
-            # string keys: weighted-quantile pick over FILE-BOUNDARY
-            # values — cumulative-weight walk in file order (the exact
-            # computation _plan_shards_driver does in Python), run over
-            # the zone relation. A file "crosses" threshold j when its
-            # cumulative weight first reaches j*tot/n_shards; at most
-            # n_shards-1 files cross, so the collect is O(#shards),
-            # never O(#files).
-            #
-            # The cumulative sum is a TWO-PASS sharded prefix sum (the
-            # training.py pattern, VERDICT r7 #3): the old global
-            # Window.orderBy ran ONE task over all #files rows — the
-            # last single-task stage in planning. Pass 1
-            # range-partitions by (cs, file) (contiguous ordered
-            # slices) and collects only the O(P) per-partition weight
-            # totals; pass 2 adds each partition's broadcast offset to
-            # a WITHIN-partition running sum, so every task cumsums its
-            # own slice.
-            from pyspark.sql import Window as _W
-
-            step = float(tot_row.tot) / n_shards
-            n_parts = max(
-                1,
-                min(
-                    spark.sparkContext.defaultParallelism,
-                    int(tot_row.nf // 1024) + 1,
+        los = pa.concat_arrays([edge(start), cuts])
+        his = pa.concat_arrays([cuts, edge(stop)])
+        files = []
+        for lo, hi in zip(los, his):
+            keep = pc.is_valid(zt["file"])
+            if hi.is_valid:
+                keep = pc.and_(keep, pc.less(zt["lo"], hi))
+            if lo.is_valid:
+                keep = pc.and_(keep, pc.greater_equal(zt["hi"], lo))
+            files.append(zt["file"].filter(keep))
+        offsets = [0]
+        for f in files:
+            offsets.append(offsets[-1] + len(f))
+        desc = pa.table(
+            {
+                "shard_id": pa.array(range(len(files)), pa.int32()),
+                "lo": los,
+                "hi": his,
+                "files": pa.ListArray.from_arrays(
+                    pa.array(offsets, pa.int32()),
+                    pa.chunked_array(
+                        [c for f in files for c in f.chunks], pa.string()
+                    ).combine_chunks(),
                 ),
-            )
-            # breadcrumb for the planning tests: the cumsum stage width
-            # (the booby-trap asserts a stage of exactly this many
-            # tasks actually ran — >1 past the file threshold)
-            self._plan_cum_tasks = n_parts
-            zp = zw.repartitionByRange(n_parts, "cs", "file").withColumn(
-                "_pid", F.spark_partition_id()
-            )
-            zp = zp.persist()  # pin partition identity across the 2 jobs
-            try:
-                acc, offs = 0.0, []
-                for r in sorted(
-                    zp.groupBy("_pid").agg(F.sum("w").alias("pw")).collect(),
-                    key=lambda r: r._pid,
-                ):
-                    offs.append((r._pid, acc))
-                    acc += r.pw
-                off_df = spark.createDataFrame(offs, "_pid int, _off double")
-                wnd = (
-                    _W.partitionBy("_pid")
-                    .orderBy("cs", "file")
-                    .rowsBetween(_W.unboundedPreceding, 0)
-                )
-                cross = (
-                    zp.join(F.broadcast(off_df), "_pid")
-                    .withColumn("cum", F.sum("w").over(wnd) + F.col("_off"))
-                    .where(
-                        # clamp to the LAST interior threshold: the
-                        # final in-range file always reaches cum == tot
-                        # (threshold n_shards), which is not a cut — the
-                        # old form promoted the global max hi to a
-                        # boundary and left a degenerate near-empty
-                        # final shard (ADVICE r7); the driver walk's
-                        # in_range[:-1] equivalent
-                        F.floor((F.col("cum") - F.col("w")) / F.lit(step))
-                        < F.least(
-                            F.floor(F.col("cum") / F.lit(step)),
-                            F.lit(n_shards - 1).cast("bigint"),
-                        )
-                    )
-                    .select("ce")
-                    .limit(n_shards)
-                )
-                collected = cross.collect()
-            finally:
-                zp.unpersist()
-            cands = sorted(
-                r.ce for r in collected if r.ce is not None
-            )
-            seen = start
-            for b in cands:
-                if len(bvals) >= n_shards - 1:
-                    break
-                if (seen is None or b > seen) and (stop is None or b < stop):
-                    bvals.append(b)
-                    seen = b
-        elif n_shards > 1:
-            n_samples = max(4096, n_shards * 64)
-            ns = F.greatest(
-                F.lit(1),
-                F.round(F.col("w") / F.lit(float(tot_row.tot)) * n_samples).cast("int"),
-            )
-            samples = zw.select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), ns - 1),
-                        lambda i: F.col("cs")
-                        + ((i.cast("double") + F.lit(0.5)) / ns.cast("double"))
-                        * (F.col("ce") - F.col("cs")),
-                    )
-                ).alias("v")
-            )
-            qs = F.array(*[F.lit(j / n_shards) for j in range(1, n_shards)])
-            brow = samples.agg(
-                F.transform(
-                    F.percentile_approx("v", qs, F.lit(20000)), unaxis
-                ).alias("bs")
-            ).collect()[0]
-            seen = start
-            for b in brow.bs or []:
-                if (
-                    b is not None
-                    and (seen is None or b > seen)
-                    and (stop is None or b < stop)
-                ):
-                    bvals.append(b)
-                    seen = b
-
-        # job 3 (lazy, part of the scan plan): per-shard file lists via
-        # a broadcast join — file names never leave the executors
-        edges = [start] + bvals + [stop]
-        bounds_df = spark.createDataFrame(
-            [(i, edges[i], edges[i + 1]) for i in range(len(edges) - 1)],
-            f"shard_id int, blo {key_type}, bhi {key_type}",
+            }
         )
-        overlap = (
-            F.col("bhi").isNull() | (F.col("lo") < F.col("bhi"))
-        ) & (F.col("blo").isNull() | (F.col("hi") >= F.col("blo")))
-        return (
-            zin.join(F.broadcast(bounds_df), overlap)
-            .groupBy("shard_id", "blo", "bhi")
-            .agg(F.sort_array(F.collect_list("file")).alias("files"))
-            .select(
-                "shard_id",
-                F.col("blo").alias("lo"),
-                F.col("bhi").alias("hi"),
-                "files",
-            )
-            .repartitionByRange(max(1, len(edges) - 1), "shard_id")
-        )
+        return self.spark.createDataFrame(
+            desc, f"shard_id int, lo {key_type}, hi {key_type}, files array<string>"
+        ).repartitionByRange(len(files), "shard_id")
 
     def scan_merged(
         self,
@@ -2068,7 +1835,6 @@ class SaltedTable:
         shards: int | None = None,
         columns: list[str] | None = None,
         tiebreak: list[str] | None = None,
-        plan: str = "auto",
     ) -> DataFrame:
         """Distributed ordered range scan with NO exchange of table data
         — the DistributedScanner merge (DistributedScanner.java:106-139)
@@ -2081,12 +1847,14 @@ class SaltedTable:
         at write) with tight row-group stats — and plans on the key
         zone map instead:
 
-        1. PLAN (driver by default — the reference's client-side scan
-           planning cost class — or a small Spark job over the zone
-           relation, see ``plan`` below): intersect per-file [lo, hi]
-           with the request and cut row-balanced shard boundaries at
-           the quantiles of the per-file uniform-density mixture over
-           the clipped overlaps.
+        1. PLAN on the driver (:meth:`_plan_shards` — the reference's
+           client-side scan planning, ``getDistributedScans``): over the
+           table handle's memoized columnar zone metadata, intersect
+           per-file [lo, hi] with the request and cut row-balanced
+           shard boundaries at the quantiles of the per-file
+           uniform-density mixture over the clipped overlaps (string
+           keys: weighted whole-file cuts). A warm handle plans with
+           no Spark job.
         2. A |shards|-row descriptor relation (shard key range + the
            files that intersect it) is range-partitioned by shard id —
            the only Exchange in the plan, moving kilobytes.
@@ -2101,15 +1869,8 @@ class SaltedTable:
         At 100 TB: data moves storage→task exactly once, no shuffle
         write/read, and a shard re-merges only its slice.
 
-        ``plan`` picks where step 1 runs. ``"driver"`` collects the
-        O(#files) zone rows (the reference's client-side planning cost
-        class — fine to ~1e5 files). ``"spark"`` runs the SAME quantile
-        planning as a small Spark job over the zone-map relation, the
-        driver holding only the O(#shards) boundary list — the manifest
-        escape hatch for 100-TB tables (SCALE.md, driver-side
-        metadata). ``"auto"`` (default) switches to Spark planning when
-        a fresh key sidecar reports more than
-        ``ZONE_MAP_DRIVER_WARN_FILES`` files.
+        Bounds may be naive or tz-aware datetimes on timestamp keys,
+        exactly as :meth:`scan` accepts them.
 
         Contract deltas vs :meth:`scan`: parquet tables only (the
         interchange formats have no row-group stats to prune by) and
@@ -2122,9 +1883,6 @@ class SaltedTable:
             raise ValueError(
                 f"scan_merged needs parquet row-group stats; table format is {self.fmt!r}"
             )
-        if plan not in ("auto", "driver", "spark"):
-            raise ValueError(f"plan must be auto|driver|spark, got {plan!r}")
-        import pandas as pd
         from pyspark.sql.types import StructType
 
         data_schema = (
@@ -2157,14 +1915,8 @@ class SaltedTable:
             "long", "integer", "short", "byte",
         )
 
-        desc = None
-        if plan != "driver":
-            desc = self._plan_shards_spark(
-                start, stop, shards, data_schema, auto=(plan == "auto")
-            )
-        if desc is None:
-            desc = self._plan_shards_driver(start, stop, shards, key_type)
-        if desc is None:  # driver planning found nothing in range
+        desc = self._plan_shards(start, stop, shards, key_type)
+        if desc is None:  # no file intersects the request
             return spark.createDataFrame([], out_schema)
 
         chunk = self.MERGED_SCAN_CHUNK_ROWS
@@ -2356,93 +2108,21 @@ class SaltedTable:
         count touches ~2 files per bucket for real I/O; everything else
         is sidecar metadata. An unbounded ``fast_count()`` is pure
         metadata. Exact-equal to ``scan(start, stop).count()`` by
-        construction (oracle-gated in tests).
-
-        Past ``ZONE_MAP_DRIVER_WARN_FILES`` the wholly-inside/boundary
-        classification itself runs as a 1-row aggregate + boundary-file
-        list over the zone-map RELATION (VERDICT r6 #2b) — the driver
-        holds only the count and the O(#boundary) file list, never the
-        O(#files) zone rows."""
-        spark_total = self._fast_count_spark(start, stop)
-        if spark_total is not None:
-            return spark_total
-        zones = self._zone_rows(self.key_col)
-        unbounded = start is None and stop is None
-        total = 0
-        boundary: list = []
-        for r in zones:
-            if r.lo is None:  # all-null file: no key matches a range
-                if unbounded:
-                    total += r.n_rows
-                continue
-            if unbounded:
-                total += r.n_rows
-                continue
-            lo_in = start is None or r.lo >= start
-            hi_in = stop is None or r.hi < stop
-            overlaps = (stop is None or r.lo < stop) and (
-                start is None or r.hi >= start
-            )
-            if not overlaps:
-                continue
-            if lo_in and hi_in:
-                total += r.n_rows - (r.n_nulls or 0)
-            else:
-                boundary.append(r.file)
-        if unbounded:
-            return total
+        construction (oracle-gated in tests). The classification is
+        array work over the handle's memoized columnar zone table —
+        no Spark job before the boundary-file count."""
+        if start is None and stop is None:
+            return pc.sum(self._zone_table(self.key_col)["n_rows"]).as_py() or 0
+        zt, lo, hi = self._zones_in_range(self.key_col, start, stop)
+        inside = pc.is_valid(zt["lo"])
+        if lo is not None:
+            inside = pc.and_(inside, pc.greater_equal(zt["lo"], lo))
+        if hi is not None:
+            inside = pc.and_(inside, pc.less(zt["hi"], hi))
+        wholly = zt.filter(inside)
+        total = pc.sum(pc.subtract(wholly["n_rows"], wholly["n_nulls"])).as_py() or 0
+        boundary = zt.filter(pc.invert(inside))["file"].to_pylist()
         if boundary:
-            total += (
-                self._reader(base_path=self.path)
-                .load(boundary)
-                .where(range_predicate(self.key_col, start, stop))
-                .count()
-            )
-        return total
-
-    def _fast_count_spark(self, start: Any, stop: Any) -> int | None:
-        """fast_count's classification as a Spark job over the zone
-        relation — engaged only when a fresh sidecar reports more files
-        than the driver threshold (the same auto rule as
-        ``_plan_shards_spark``); returns ``None`` to use the driver
-        walk otherwise. Job 1 is a single-row aggregate (wholly-inside
-        contribution + boundary-file count); job 2 collects only the
-        boundary-file list, O(#boundary) ≈ 2 files per bucket on
-        key-sorted layouts."""
-        key_col = self.key_col
-        zdf = self._manifest_past_threshold(key_col)
-        if zdf is None:
-            return None
-
-        unbounded = start is None and stop is None
-        if unbounded:
-            row = zdf.agg(F.sum("n_rows").alias("t")).collect()[0]
-            return int(row.t or 0)
-        keyed = F.col("lo").isNotNull()
-        lo_in = F.lit(True) if start is None else F.col("lo") >= F.lit(start)
-        hi_in = F.lit(True) if stop is None else F.col("hi") < F.lit(stop)
-        overlaps = keyed
-        if stop is not None:
-            overlaps = overlaps & (F.col("lo") < F.lit(stop))
-        if start is not None:
-            overlaps = overlaps & (F.col("hi") >= F.lit(start))
-        inside = overlaps & lo_in & hi_in
-        row = zdf.agg(
-            F.sum(
-                F.when(
-                    inside, F.col("n_rows") - F.coalesce(F.col("n_nulls"), F.lit(0))
-                ).otherwise(F.lit(0))
-            ).alias("inside_rows"),
-            F.sum((overlaps & ~(lo_in & hi_in)).cast("long")).alias("n_boundary"),
-        ).collect()[0]
-        total = int(row.inside_rows or 0)
-        if row.n_boundary:
-            boundary = [
-                r.file
-                for r in zdf.where(overlaps & ~(lo_in & hi_in))
-                .select("file")
-                .collect()
-            ]
             total += (
                 self._reader(base_path=self.path)
                 .load(boundary)

@@ -419,27 +419,15 @@ def scaled_state_partitions(
     (the deploy's own ceiling), so nothing here is tuned to the bench
     host. Partition count never changes WHAT a streaming aggregation
     computes — only where keys hash — so results are byte-identical.
+    Input is sized through :meth:`Fs.du`, so hdfs:// and s3a:// inputs
+    size like local ones; an input that cannot be sized gets
+    defaultParallelism, never a single store.
     """
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    size = 0
-    if os.path.isdir(path):
-        for r, _, fs in os.walk(path):
-            size += sum(
-                os.path.getsize(os.path.join(r, f))
-                for f in fs
-                if not f.startswith((".", "_"))
-            )
-    elif os.path.exists(path):
-        size = os.path.getsize(path)
-    return int(
-        max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                (size + target_bytes - 1) // target_bytes,
-            ),
-        )
-    )
+    cores = spark.sparkContext.defaultParallelism
+    size = _Fs.du(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    if size is None:  # unsizable (remote without access, missing): scale out
+        return cores
+    return int(max(1, min(cores, (size + target_bytes - 1) // target_bytes)))
 
 
 @contextlib.contextmanager

@@ -235,7 +235,7 @@ def test_bad_stats_fallback_reads_footers_once(spark, tmp_path, monkeypatch):
     t.build_zone_map("dec")  # bad-stats column -> scan fallback
     assert calls["n"] == 1, f"footer pass ran {calls['n']}x, want 1"
     # and the sidecar it wrote via the scan is exact
-    rows = {r["file"]: r for r in t._zone_rows("dec")}
+    rows = {r["file"]: r for r in t._zone_table("dec").to_pylist()}
     assert rows and all(r["lo"] is not None for r in rows.values())
 
 

@@ -242,12 +242,12 @@ def test_driver_and_executor_footer_routes_identical(
     rows AND identical Spark schemas (the sidecar parquet files they
     write are interchangeable)."""
     t = typed_table
-    drv = t._footer_zone_map(col)
+    drv, done = t._zone_source(col)
     monkeypatch.setattr(SaltedTable, "FOOTER_DRIVER_MAX_FILES", 0)
-    exe = t._footer_zone_map(col)
+    exe = t._footer_zone_map(col).drop("_stats_ok")
     assert "mapInArrow" not in drv._jdf.queryExecution().analyzed().toString()
     assert drv.schema == exe.schema
-    assert _canon(drv.drop("_stats_ok")) == _canon(exe.drop("_stats_ok"))
+    assert _canon(drv) == _canon(exe)
 
 
 def test_driver_footer_route_launches_no_jobs(spark, typed_table):
@@ -257,7 +257,7 @@ def test_driver_footer_route_launches_no_jobs(spark, typed_table):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     before = tracker.getJobIdsForGroup(None)
-    fdf = typed_table._footer_zone_map("k")
+    fdf, done = typed_table._zone_source("k")
     rows = fdf.collect()
     assert len(rows) > 0
     after = tracker.getJobIdsForGroup(None)

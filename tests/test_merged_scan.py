@@ -8,7 +8,6 @@ node exists anywhere (the merge happens inside the tasks over
 pre-sorted file runs).
 """
 
-import json
 import shutil
 
 import pytest
@@ -163,58 +162,70 @@ def test_merged_salted_layout_yields_multiple_nonempty_shards(kv_table):
 
 
 def test_quantile_bounds_timestamp_and_string_keys(kv_table):
-    """_quantile_bounds interpolates timestamp keys on the ns axis and
-    declines (-> None, whole-file fallback) on string keys."""
+    """_quantile_bounds interpolates timestamp keys on the epoch-micros
+    axis and declines (-> None, whole-file fallback) on string keys."""
     import datetime
-    from types import SimpleNamespace as Z
 
-    t0 = datetime.datetime(2024, 1, 1)
+    import pyarrow as pa
 
-    def zrow(lo, hi, n):
-        return Z(lo=lo, hi=hi, n_rows=n, n_nulls=0, file="f")
+    t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    t1 = t0 + datetime.timedelta(hours=10)
 
-    rows = [
-        zrow(t0, t0 + datetime.timedelta(hours=10), 1000) for _ in range(4)
-    ]
-    b = SaltedTable._quantile_bounds(rows, None, None, 4)
+    def zones(lo, hi, n, typ):
+        return pa.table({
+            "file": pa.array([f"f{i}" for i in range(n)]),
+            "lo": pa.array([lo] * n, typ),
+            "hi": pa.array([hi] * n, typ),
+            "n_rows": pa.array([1000] * n, pa.int64()),
+            "n_nulls": pa.array([0] * n, pa.int64()),
+        })
+
+    b = SaltedTable._quantile_bounds(
+        zones(t0, t1, 4, pa.timestamp("us", tz="UTC")), None, None, 4
+    ).to_pylist()
     assert len(b) == 3 and b == sorted(b)
-    assert all(t0 < x < t0 + datetime.timedelta(hours=10) for x in b)
+    assert all(t0 < x < t1 for x in b)
     assert SaltedTable._quantile_bounds(
-        [zrow("aa", "zz", 100)], None, None, 4
+        zones("aa", "zz", 1, pa.string()), None, None, 4
     ) is None
 
 
 def test_merged_spark_planning_parity(kv_table):
-    """plan='spark' (shard planning as a Spark job over the zone
-    relation) produces the same rows in the same global order as
-    driver planning and the exchange-sort scan."""
+    """Shard planning over the zone metadata produces the same rows in
+    the same global order as the exchange-sort scan, bounded and
+    unbounded (auto shard sizing)."""
     ref = kv_table.scan(
         start=KEY_PREFIX + 100, stop=KEY_PREFIX + 900, ordered=True
     ).collect()
     got = kv_table.scan_merged(
-        start=KEY_PREFIX + 100, stop=KEY_PREFIX + 900, shards=4, plan="spark"
+        start=KEY_PREFIX + 100, stop=KEY_PREFIX + 900, shards=4
     ).collect()
     assert [r.key_long for r in got] == [r.key_long for r in ref]
     assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
     # and unbounded, with auto shard sizing
-    got_all = kv_table.scan_merged(plan="spark", columns=["key_long"]).collect()
+    got_all = kv_table.scan_merged(columns=["key_long"]).collect()
     ref_all = kv_table.scan(ordered=True).select("key_long").collect()
     assert [r.key_long for r in got_all] == [r.key_long for r in ref_all]
 
 
-def test_spark_planning_holds_only_shards_on_the_driver(spark):
-    """VERDICT r5 #6: past the warn threshold, shard planning must not
-    collect O(#files) zone rows. Plan against a SYNTHETIC 150k-file
-    zone relation (planning never opens data files) with _zone_rows
-    booby-trapped — the descriptor relation must still come out with
-    row-balanced boundaries, every file list assembled executor-side."""
-    from pyspark.sql import functions as SF
-    from pyspark.sql.types import StructType
-
+def _synthetic_table(spark, key_ddl, zone):
+    """A table handle whose key zone metadata is the synthetic
+    ``zone`` relation (planning never opens data files)."""
     t = SaltedTable(
         spark, "/tmp/__no_such_table__", HashDistributor(8), "k", "parquet",
-        json.dumps(json.loads(spark.range(1).select(SF.lit(0).cast("long").alias("k")).schema.json())),
+        spark.range(1).selectExpr(f"CAST(NULL AS {key_ddl}) AS k").schema.json(),
     )
+    t._zone_sidecar_df = lambda col: zone
+    return t
+
+
+def test_spark_planning_holds_only_shards_on_the_driver(spark):
+    """The shard planner at 150k files: plan a SYNTHETIC 150k-file
+    long-key zone relation — the descriptor must come out with at
+    most 16 ordered shards, bounded ranges nested in the request and
+    every shard's file list non-empty."""
+    from pyspark.sql import functions as SF
+
     n_files = 150_000
     zone = spark.range(n_files).select(
         SF.concat(SF.lit("f"), SF.col("id")).alias("file"),
@@ -223,15 +234,9 @@ def test_spark_planning_holds_only_shards_on_the_driver(spark):
         SF.lit(200).alias("n_rows"),
         SF.lit(0).alias("n_nulls"),
     )
-    t._zone_sidecar_df = lambda col: zone
-
-    def boom(col):
-        raise AssertionError("driver collected O(#files) zone rows")
-
-    t._zone_rows = boom
-    schema = StructType.fromJson(json.loads(t.data_schema_json))
-    desc = t._plan_shards_spark(1000, 90_000, 16, schema, auto=True)
-    rows = desc.collect()  # O(#shards) only
+    t = _synthetic_table(spark, "bigint", zone)
+    desc = t._plan_shards(1000, 90_000, 16, "bigint")
+    rows = desc.collect()
     assert 2 <= len(rows) <= 16
     los = [r.lo for r in sorted(rows, key=lambda r: r.shard_id)]
     assert los == sorted(los, key=lambda x: (x is not None, x))
@@ -243,41 +248,13 @@ def test_spark_planning_holds_only_shards_on_the_driver(spark):
             assert 1000 <= r.lo < r.hi <= 90_000
 
 
-def _max_stage_id(spark):
-    return max([sid for sid, _ in _stage_task_counts(spark)], default=-1)
-
-
-def _stage_task_counts(spark):
-    """(stageId, numTasks) for every stage in the app status store —
-    the same store metrics.ShuffleAudit reads; used to prove a stage of
-    a given parallelism actually executed."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    jvm = spark.sparkContext._jvm
-    empty = jvm.java.util.ArrayList()
-    defaults = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-    it = store.stageList(empty, *defaults).iterator()
-    out = []
-    while it.hasNext():
-        s = it.next()
-        out.append((s.stageId(), s.numTasks()))
-    return out
-
-
 def test_spark_planning_string_keys_holds_only_shards_on_the_driver(spark):
-    """VERDICT r6 #2a: string-key tables used to bypass Spark planning
-    (returned None -> O(#files) driver collect). Plan a 150k-file
-    STRING-key zone relation with the driver collect booby-trapped:
-    boundaries are cut at sampled file-boundary values by a window over
-    the zone relation, the driver holds only O(#shards)."""
+    """String keys at 150k files: boundaries are cut at weighted
+    file-boundary values over a SYNTHETIC 150k-file STRING-key zone
+    relation, row-balanced within +-2 percent on disjoint files, on a
+    bounded and a half-open request."""
     from pyspark.sql import functions as SF
-    from pyspark.sql.types import StructType
 
-    t = SaltedTable(
-        spark, "/tmp/__no_such_table__", HashDistributor(8), "k", "parquet",
-        json.dumps(json.loads(
-            spark.range(1).select(SF.lit("x").alias("k")).schema.json()
-        )),
-    )
     n_files = 150_000
     # disjoint lexicographic slices: file i covers [w<i:07d>, w<i+1:07d>)
     zone = spark.range(n_files).select(
@@ -287,15 +264,8 @@ def test_spark_planning_string_keys_holds_only_shards_on_the_driver(spark):
         SF.lit(200).alias("n_rows"),
         SF.lit(0).alias("n_nulls"),
     )
-    t._zone_sidecar_df = lambda col: zone
-
-    def boom(col):
-        raise AssertionError("driver collected O(#files) zone rows")
-
-    t._zone_rows = boom
-    schema = StructType.fromJson(json.loads(t.data_schema_json))
-    before_stage = _max_stage_id(spark)
-    desc = t._plan_shards_spark("w0001000", "w0100000", 16, schema, auto=True)
+    t = _synthetic_table(spark, "string", zone)
+    desc = t._plan_shards("w0001000", "w0100000", 16, "string")
     rows = sorted(desc.collect(), key=lambda r: r.shard_id)
     assert 2 <= len(rows) <= 16
     los = [r.lo for r in rows]
@@ -304,14 +274,6 @@ def test_spark_planning_string_keys_holds_only_shards_on_the_driver(spark):
         assert len(r.files) > 0
         if r.lo is not None and r.hi is not None:
             assert "w0001000" <= r.lo < r.hi <= "w0100000"
-    # VERDICT r7 #3: the cumulative-weight walk must be a SHARDED
-    # prefix sum, not one global-window task — a stage of exactly the
-    # planner's chosen width (>1 at 150k files) must have actually run
-    assert t._plan_cum_tasks > 1
-    assert any(
-        sid > before_stage and n == t._plan_cum_tasks
-        for sid, n in _stage_task_counts(spark)
-    )
     # row balance: disjoint equal-weight files cut at file boundaries
     # land every shard within ~1 file of fair share (+-2 percent)
     sizes = [len(r.files) for r in rows]
@@ -319,10 +281,10 @@ def test_spark_planning_string_keys_holds_only_shards_on_the_driver(spark):
     assert max(sizes) <= 1.02 * mean and min(sizes) >= 0.98 * mean
 
     # ADVICE r7: with stop=None the final in-range file reaches the
-    # full cumulative weight — the old walk promoted the global max hi
-    # to a boundary, leaving a degenerate near-empty last shard; the
-    # clamp must keep balance tight on the unbounded side too
-    desc2 = t._plan_shards_spark("w0001000", None, 16, schema, auto=True)
+    # full cumulative weight — promoting the global max hi to a
+    # boundary would leave a degenerate near-empty last shard; balance
+    # must stay tight on the unbounded side too
+    desc2 = t._plan_shards("w0001000", None, 16, "string")
     rows2 = sorted(desc2.collect(), key=lambda r: r.shard_id)
     sizes2 = [len(r.files) for r in rows2]
     mean2 = sum(sizes2) / len(sizes2)
@@ -330,8 +292,9 @@ def test_spark_planning_string_keys_holds_only_shards_on_the_driver(spark):
 
 
 def test_merged_string_key_spark_plan_parity(spark, tmp_path):
-    """End-to-end on a real string-key table: plan='spark' returns the
-    same rows in the same global order as the exchange sort."""
+    """End-to-end on a real string-key table with a key sidecar:
+    whole-file cuts return the same rows in the same global order as
+    the exchange sort."""
     df = spark.range(500).select(
         F.format_string("user%04d", (F.col("id") * 7919) % 500).alias("uid"),
         F.col("id").alias("v"),
@@ -342,54 +305,10 @@ def test_merged_string_key_spark_plan_parity(spark, tmp_path):
     )
     ref = t.scan(start="user0100", stop="user0400", ordered=True).collect()
     got = t.scan_merged(
-        start="user0100", stop="user0400", shards=4, plan="spark"
+        start="user0100", stop="user0400", shards=4
     ).collect()
     assert [r.uid for r in got] == [r.uid for r in ref]
     assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
-
-
-def test_auto_plan_routes_to_spark_past_threshold(spark, kv, tmp_path, monkeypatch):
-    """plan='auto' switches to Spark planning when the FRESH sidecar
-    reports more files than the driver threshold — exercised end to end
-    on a real table by patching the threshold under the table's file
-    count, with the driver zone collect booby-trapped to prove which
-    path ran. Without a sidecar, auto stays on the driver path."""
-    path = str(tmp_path / "auto")
-    t = SaltedTable.write(
-        kv, path, HashDistributor(8), "key_long", zone_map_cols=["key_long"]
-    )
-    monkeypatch.setattr(SaltedTable, "ZONE_MAP_DRIVER_WARN_FILES", 4)
-    ref = t.scan(
-        start=KEY_PREFIX + 100, stop=KEY_PREFIX + 900, ordered=True
-    ).collect()
-
-    def boom(col):
-        raise AssertionError("auto planning collected zone rows on the driver")
-
-    t._zone_rows = boom
-    got = t.scan_merged(start=KEY_PREFIX + 100, stop=KEY_PREFIX + 900).collect()
-    assert [r.key_long for r in got] == [r.key_long for r in ref]
-
-    # no sidecar -> auto must fall back to driver planning (and the
-    # booby trap above would fire if it didn't collect)
-    t2 = SaltedTable.write(kv, str(tmp_path / "auto2"), HashDistributor(8), "key_long")
-    got2 = t2.scan_merged(start=KEY_PREFIX + 100, stop=KEY_PREFIX + 900).collect()
-    assert [r.key_long for r in got2] == [r.key_long for r in ref]
-
-
-def test_refresh_clears_zone_count_memo(spark, kv, tmp_path):
-    """ADVICE r6: the _zone_counts memo steers auto-routing; after a
-    lifecycle verb changes the file count, refresh() must drop it so
-    the planner re-reads the sidecar instead of routing on the stale
-    count."""
-    t = SaltedTable.write(
-        kv, str(tmp_path / "memo"), HashDistributor(8), "key_long",
-        zone_map_cols=["key_long"],
-    )
-    t.scan_merged(start=KEY_PREFIX + 100, stop=KEY_PREFIX + 200).collect()
-    t._zone_counts = {"key_long": 10**6}  # simulate a stale memo
-    t.refresh()
-    assert t._zone_counts is None
 
 
 def test_merged_timestamp_seams_under_non_utc_session(spark, sf_dir, tmp_path):
@@ -421,6 +340,58 @@ def test_merged_timestamp_seams_under_non_utc_session(spark, sf_dir, tmp_path):
         ).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
         assert [r.ts for r in got] == [r.ts for r in ref]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+@pytest.fixture(scope="module")
+def ts_table(spark, tmp_path_factory):
+    df = spark.range(1200).select(
+        (F.to_timestamp(F.lit("2024-01-01")) + F.make_interval(secs=F.col("id") * 90)).alias("ts"),
+        F.col("id").alias("v"),
+    )
+    path = str(tmp_path_factory.mktemp("tzb") / "t")
+    return SaltedTable.write(
+        df, path, HashDistributor(4), "ts", zone_map_cols=["ts"]
+    )
+
+
+@pytest.mark.parametrize("session_tz", ["UTC", "America/New_York"])
+@pytest.mark.parametrize("aware", [False, True])
+@pytest.mark.parametrize(
+    "method", ["scan_merged", "fast_count", "pruned_scan", "scanner"]
+)
+def test_zone_consumers_accept_naive_and_aware_bounds(
+    spark, ts_table, method, aware, session_tz
+):
+    """Every zone-metadata consumer takes the range bounds scan()
+    takes: naive and tz-aware datetimes, under a UTC and a non-UTC
+    session, with results equal to scan(start, stop)."""
+    import datetime
+
+    if aware:
+        plus5 = datetime.timezone(datetime.timedelta(hours=5))
+        lo = datetime.datetime(2024, 1, 1, 8, 7, tzinfo=plus5)
+        hi = datetime.datetime(2024, 1, 2, 1, 0, 30, tzinfo=plus5)
+    else:
+        lo = datetime.datetime(2024, 1, 1, 3, 7)
+        hi = datetime.datetime(2024, 1, 1, 20, 0, 30)
+    t = ts_table
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", session_tz)
+    try:
+        want = [tuple(r) for r in t.scan(lo, hi).collect()]
+        assert want
+        if method == "fast_count":
+            assert t.fast_count(lo, hi) == len(want)
+        elif method == "pruned_scan":
+            got = t.pruned_scan("ts", lo, hi).collect()
+            assert sorted(map(tuple, got)) == sorted(want)
+        elif method == "scan_merged":
+            assert [tuple(r) for r in t.scan_merged(lo, hi).collect()] == want
+        else:
+            got = [tuple(r) for r in t.scanner(lo, hi, max_buffer_rows=100)]
+            assert got == want
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
 

@@ -192,6 +192,34 @@ def test_scaled_state_partitions_is_input_derived(spark, sf_dir):
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
+def test_input_sizing_unknown_size_scales_out(spark, tmp_path):
+    """One sizer (Fs.du) for every input-sized decision: hidden files
+    and dirs are skipped, a single file sizes directly, and a path
+    that cannot be sized — an s3a:// path with no FileSystem for the
+    scheme here, or a missing one — reports None, which
+    scaled_state_partitions turns into defaultParallelism, not 1."""
+    from hbasewd_spark.fsutil import Fs
+    from hbasewd_spark.streaming.ingest import scaled_state_partitions
+
+    remote = "s3a://no-such-bucket/sf"
+    assert Fs.du(spark, remote + "/events.parquet") is None
+    assert (
+        scaled_state_partitions(spark, remote)
+        == spark.sparkContext.defaultParallelism
+    )
+    d = tmp_path / "events.parquet"
+    (d / "salt=0").mkdir(parents=True)
+    (d / "salt=0" / "part-0.parquet").write_bytes(b"x" * 100)
+    (d / "salt=0" / ".part-0.parquet.crc").write_bytes(b"x" * 3)
+    (d / "_SUCCESS").write_bytes(b"x" * 7)
+    (d / "_zone_maps").mkdir()
+    (d / "_zone_maps" / "z.parquet").write_bytes(b"x" * 50)
+    assert Fs.du(spark, str(d)) == 100
+    assert Fs.du(spark, str(d / "salt=0" / "part-0.parquet")) == 100
+    assert Fs.du(spark, str(tmp_path / "missing")) is None
+    assert scaled_state_partitions(spark, str(tmp_path)) == 1
+
+
 def test_semdedup_hot_cell_completes(spark):
     # 100k-member cell of identical unit vectors: every member after
     # the first is removed, each via its FIRST witness (exists

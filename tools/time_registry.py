@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Noop-sink timing for arbitrary registry queries (guide §1.4), with
-the DataFrame BUILD inside the timed span — eager localCheckpoint jobs
-run at build time, so excluding the build would flatter any
-checkpoint-based rewrite. Reports min of N reps (wave-resistant).
+the DataFrame BUILD inside the timed span — building a query may still
+run jobs (under AQE a lazy localCheckpoint over a shuffle runs the
+shuffle's map stages when it is built; the small-graph pagerank fetch
+collects), so excluding the build would flatter any rewrite that moves
+work there. Reports min of N reps (wave-resistant).
 
 Usage: python tools/time_registry.py --only a,b [--sf DIR] [--reps 3]
 """
