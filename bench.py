@@ -24,6 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# where the per-scale shuffle audit (SHUFFLE_sf<sf>.json) is written
+SIDECAR_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def main() -> None:
@@ -350,10 +352,7 @@ def main() -> None:
     # stderr echo for interactive runs.
     if shuffle_bytes:
         try:
-            side = os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                f"SHUFFLE_sf{sf}.json",
-            )
+            side = os.path.join(SIDECAR_DIR, f"SHUFFLE_sf{sf}.json")
             with open(side, "w") as f:
                 json.dump(
                     {"sf": sf, "noise_probe": noise, "shuffle_bytes": shuffle_bytes},

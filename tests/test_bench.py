@@ -12,7 +12,7 @@ import json
 import pytest
 
 
-def test_bench_isolates_a_broken_query(spark, sf_dir, monkeypatch, capsys):
+def test_bench_isolates_a_broken_query(spark, sf_dir, monkeypatch, capsys, tmp_path):
     import bench
     from hbasewd_spark import queries as Q
 
@@ -22,6 +22,8 @@ def test_bench_isolates_a_broken_query(spark, sf_dir, monkeypatch, capsys):
     # break one mid-suite query; bench must still time all the others
     monkeypatch.setattr(Q.REGISTRY["ext_text_stats"], "fn", boom)
     monkeypatch.setattr(bench, "SF_DIR", sf_dir)
+    # the shuffle audit sidecar lands here, not over the committed one
+    monkeypatch.setattr(bench, "SIDECAR_DIR", str(tmp_path))
 
     bench.main()
 

@@ -138,10 +138,10 @@ def test_salt_domain(table):
 def test_scanner_heap_merge_matrix(table):
     """scanner() parity for EVERY strategy (DistributedScanner.java:
     106-139: one scanner per bucket, next() pops the smallest head):
-    the driver-pull heap merge must yield the same rows as the
+    the driver-pull run merge must yield the same rows as the
     distributed ordered scan, in non-decreasing key order, and each
-    per-bucket stream's plan must be Exchange-free (pruned scan +
-    bucket-local sort only). Duplicate keys (the zig-zag fixture keeps
+    chunk's plan must be Exchange-free (a pushed-down range read of
+    every bucket, nothing else). Duplicate keys (the zig-zag fixture keeps
     them) may tie-break differently between the two paths, so rows are
     compared as a multiset and order is asserted on the key alone."""
     start, stop = _bounds(table, 100, 900)
@@ -156,7 +156,7 @@ def test_scanner_heap_merge_matrix(table):
     keys = [r[key_idx] for r in got]
     assert keys == sorted(keys)
     plan = (
-        table._bucket_scan_df(0, start, stop)
+        table._scanner_chunk_df(start, stop)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

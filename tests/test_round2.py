@@ -560,9 +560,10 @@ def test_register_view_plain_sql_matches_scan(spark, tmp_path):
 
 def test_scanner_heap_merge_matches_ordered_scan(spark, tmp_path):
     """scanner() must yield exactly the ordered-scan rows in key order
-    WITHOUT a cluster-side range sort: each bucket stream's plan is
-    Exchange-free (pruned scan + local sort), and the driver heap-merge
-    restores global order — DistributedScanner.java:106-139 semantics."""
+    WITHOUT a cluster-side range sort: each chunk's plan is
+    Exchange-free (the range predicate pushed into the files, every
+    bucket in one job), and the driver's run merge restores global
+    order — DistributedScanner.java:106-139 semantics."""
     from hbasewd_spark.plans.distributor import HashDistributor
     from hbasewd_spark.sources.kv_fixture import KEY_PREFIX, kv_df
     from hbasewd_spark.sources.salted_table import SaltedTable
@@ -575,23 +576,24 @@ def test_scanner_heap_merge_matches_ordered_scan(spark, tmp_path):
     got = [tuple(r) for r in t.scanner(start=lo, stop=hi)]
     assert got == want and len(got) == 400
     plan = (
-        t._bucket_scan_df(3, lo, hi)
+        t._scanner_chunk_df(lo, hi)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "Exchange" not in plan, plan
-    assert "PartitionFilters: [isnotnull(salt" in plan
+    assert "Sort" not in plan and "Coalesce" not in plan, plan
+    assert "PushedFilters: [IsNotNull(key_long), GreaterThanOrEqual(key_long" in plan
 
 
 def test_scanner_capped_refill_bounds_skewed_bucket(spark, tmp_path):
     """VERDICT r11 #7: the reference's refill buffer is an unbounded
     ArrayList (DistributedScanner.java:123) — one dominant bucket
     balloons the client. scanner(max_buffer_rows=...) must (a) split a
-    90%-skewed bucket into key-range chunks whose ACTUAL row counts
-    stay within ~2x the cap (quantile cuts are estimates), (b) chain
-    them into the identical row stream the uncapped scanner yields,
-    and (c) leave balanced small buckets un-split."""
+    range whose rows sit 90% in one bucket into key-range chunks whose
+    ACTUAL row counts stay within ~2x their target of cap x buckets
+    rows (quantile cuts are estimates), and (b) chain them into the
+    identical row stream the uncapped scanner yields."""
     from pyspark.sql import functions as F
 
     from hbasewd_spark.plans.distributor import HashDistributor
@@ -616,19 +618,18 @@ def test_scanner_capped_refill_bounds_skewed_bucket(spark, tmp_path):
         zone_map_cols=["k"],
     )
     cap = 500
-    # (a) the skewed bucket (9000 rows) splits; every chunk's REAL row
-    # count is bounded near the cap
-    bounds = t._bucket_chunk_bounds(0, None, None, cap)
-    assert len(bounds) >= 9000 // cap - 2, bounds
+    target = cap * t.distributor.buckets
+    # (a) the range splits into ~target-row chunks; every chunk's REAL
+    # row count is bounded near its target
+    bounds = t._scanner_chunk_bounds(None, None, target)
+    assert len(bounds) >= 10_000 // target - 2, bounds
     edges = [None] + bounds + [None]
     chunk_rows = [
-        t._bucket_scan_df(0, edges[i], edges[i + 1]).count()
+        t._scanner_chunk_df(edges[i], edges[i + 1]).count()
         for i in range(len(edges) - 1)
     ]
-    assert sum(chunk_rows) == 9000
-    assert max(chunk_rows) <= 2 * cap, chunk_rows
-    # (c) the small bucket (1000 rows) fits ~2 chunks at most
-    assert len(t._bucket_chunk_bounds(1, None, None, cap)) <= 2
+    assert sum(chunk_rows) == 10_000
+    assert max(chunk_rows) <= 2 * target, chunk_rows
     # (b) capped and uncapped streams are identical, bounded and not
     want = [tuple(r) for r in t.scanner()]
     got = [tuple(r) for r in t.scanner(max_buffer_rows=cap)]
@@ -637,9 +638,9 @@ def test_scanner_capped_refill_bounds_skewed_bucket(spark, tmp_path):
     want_rng = [tuple(r) for r in t.scanner(start=lo, stop=hi)]
     got_rng = [tuple(r) for r in t.scanner(start=lo, stop=hi, max_buffer_rows=cap)]
     assert got_rng == want_rng and len(got_rng) == 5_000
-    # chunk plans stay Exchange-free like the uncapped bucket streams
+    # chunk plans stay Exchange-free like the uncapped one
     plan = (
-        t._bucket_scan_df(0, bounds[0], bounds[1])
+        t._scanner_chunk_df(bounds[0], bounds[1])
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
