@@ -7,23 +7,50 @@ on non-local schemes (s3a://, hdfs://, abfs://), which is exactly
 where a 100 TB table lives. The JVM-side FileSystem resolves the
 scheme from the path, so the same code runs on any Spark-supported
 filesystem.
+
+The JVM classes (``Path``, ``FileUtil``, ``IOUtils``) are looked up
+once per py4j gateway and kept. Resolving a dotted name through
+``spark._jvm`` sends one reflection command per package segment, so a
+fresh ``org.apache.hadoop.fs.Path(p)`` costs six driver round trips,
+and a streaming epoch commit builds a few hundred of them. A kept
+class costs one command per constructor call.
 """
 
 from __future__ import annotations
 
+import weakref
+from types import SimpleNamespace
+
 from pyspark.sql import SparkSession
+
+# gateway client -> its resolved JVM classes; weak so a torn-down
+# gateway does not pin its proxies
+_JVM_CLASSES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _jvm_classes(jvm) -> SimpleNamespace:
+    client = jvm._gateway_client
+    classes = _JVM_CLASSES.get(client)
+    if classes is None:
+        classes = SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            FileUtil=jvm.org.apache.hadoop.fs.FileUtil,
+            IOUtils=jvm.org.apache.commons.io.IOUtils,
+        )
+        _JVM_CLASSES[client] = classes
+    return classes
 
 
 class Fs:
     def __init__(self, spark: SparkSession, path: str):
         self._spark = spark
-        self._jvm = spark._jvm
-        self._p = self._jvm.org.apache.hadoop.fs.Path(path)
+        self._jvm = _jvm_classes(spark._jvm)
+        self._p = self._jvm.Path(path)
         self._conf = spark._jsc.hadoopConfiguration()
         self.fs = self._p.getFileSystem(self._conf)
 
     def path(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
+        return self._jvm.Path(p)
 
     def glob(self, pattern: str) -> list[str]:
         statuses = self.fs.globStatus(self.path(pattern))
@@ -93,7 +120,7 @@ class Fs:
         src_p, dst_p = self.path(src), self.path(dst)
         src_fs = src_p.getFileSystem(self._conf)
         dst_fs = dst_p.getFileSystem(self._conf)
-        self._jvm.org.apache.hadoop.fs.FileUtil.copy(
+        self._jvm.FileUtil.copy(
             src_fs, src_p, dst_fs, dst_p, False, True, self._conf
         )
 
@@ -165,7 +192,7 @@ class Fs:
         stm = self.fs.open(self.path(p))
         try:
             return str(
-                self._jvm.org.apache.commons.io.IOUtils.toString(stm, "UTF-8")
+                self._jvm.IOUtils.toString(stm, "UTF-8")
             )
         finally:
             stm.close()

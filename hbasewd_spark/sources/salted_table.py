@@ -302,15 +302,19 @@ class SaltedTable:
         )
 
     def _reader(self, base_path: str | None = None):
-        """Format-configured DataFrameReader (schema-on-read for the
-        schemaless interchange formats comes from persisted metadata)."""
+        """Format-configured DataFrameReader. Every format reads with
+        the persisted data schema plus ``salt int``: the schemaless
+        interchange formats need it for types, an empty csv/json table
+        needs it to keep its ``salt`` column, and a columnar read skips
+        the schema-inference Spark job."""
         reader = self.spark.read.format(self.fmt)
         if base_path is not None:
             reader = reader.option("basePath", base_path)
-        if self.fmt in ("csv", "json") and self.data_schema_json:
+        if self.data_schema_json:
             from pyspark.sql.types import StructType
 
-            reader = reader.schema(StructType.fromJson(json.loads(self.data_schema_json)))
+            schema = StructType.fromJson(json.loads(self.data_schema_json))
+            reader = reader.schema(schema.add(SALT_COL, "integer"))
         if self.fmt == "csv":
             reader = reader.option("header", "true")
         return reader
@@ -326,39 +330,17 @@ class SaltedTable:
         """Table handle (memoized — repeated point gets / scans reuse
         one file listing; call :meth:`refresh` after external appends).
 
-        A table with ZERO data files (expire() past every key, or a
-        just-created empty table) can't infer a schema from parquet —
-        fall back to the persisted data schema + salt so every
-        downstream operator sees a normal empty relation instead of
-        UNABLE_TO_INFER_SCHEMA. The fallback is gated on an actual
-        file listing: ONLY a genuinely file-less table substitutes the
-        empty relation. Any other load failure (transient store error,
-        corrupt footer, permissions) re-raises — compact()/rebucket()
-        read through here before deleting the base dir, so masking a
-        transient read error as "empty table" would be a data-loss
-        path, not just a wrong answer."""
+        It reads with the persisted schema (:meth:`_reader`), so a
+        table with ZERO data files (expire() past every key, or a
+        just-created empty table) is a normal empty relation with its
+        ``salt`` column. Any load failure (transient store error,
+        corrupt footer, permissions, a vanished base dir) raises —
+        compact()/rebucket() read through here before deleting the
+        base dir, so masking a read error as "empty table" would be a
+        data-loss path, not just a wrong answer."""
         if getattr(self, "_df", None) is None:
-            try:
-                self._df = self._reader().load(self.path)
-            except Exception:
-                if not self.data_schema_json or self._has_data_files():
-                    raise
-                from pyspark.sql.types import StructType
-
-                schema = StructType.fromJson(
-                    json.loads(self.data_schema_json)
-                ).add(SALT_COL, "integer")
-                self._df = self.spark.createDataFrame([], schema)
+            self._df = self._reader().load(self.path)
         return self._df
-
-    def _has_data_files(self) -> bool:
-        """True iff at least one non-hidden data file exists under a
-        salt partition dir — the ground truth for whether an empty-
-        relation fallback is legitimate in :meth:`df`. Delegates to
-        :meth:`_data_signature` so there is exactly ONE definition of
-        "what counts as a data file" shared with the index/zone-map
-        watermarks."""
-        return bool(self._data_signature(Fs(self.spark, self.path)))
 
     def refresh(self) -> None:
         self._df = None
@@ -558,29 +540,20 @@ class SaltedTable:
     def multi_get(self, key_values: list[Any]) -> DataFrame:
         """Batch point lookup — the HBase ``HTable.get(List<Get>)``
         shape: one job for N keys. Under deterministic salting the scan
-        prunes to the union of the keys' salt partitions via an
-        ``(salt, key) IN ...`` pair predicate; under round-robin it
+        prunes to the union of the keys' salt partitions via
+        ``salt IN (f(k)…) AND key IN (k…)``; under round-robin it
         degrades to a key-set scan over all buckets (O4 fan-out)."""
-        from functools import reduce
-        from operator import or_
-
         df = self.df()
         if not key_values:
             return df.where(F.lit(False)).drop(SALT_COL)
+        pred = F.col(self.key_col).isin(key_values)
         if self.distributor.deterministic:
-            # one (salt == const & key == const) disjunct per key: the
-            # salt side constant-folds, so partition pruning keeps only
-            # the union of the keys' buckets
-            pred = reduce(
-                or_,
-                [
-                    (F.col(SALT_COL) == self.distributor.salt_expr(self._key_lit(k)))
-                    & (F.col(self.key_col) == F.lit(k))
-                    for k in key_values
-                ],
-            )
-            return df.where(pred).drop(SALT_COL)
-        return df.where(F.col(self.key_col).isin(key_values)).drop(SALT_COL)
+            # exact because every stored row has salt = f(key) (the
+            # invariant validate() checks); the salt list constant-
+            # folds, so partition pruning keeps only the keys' buckets
+            salts = [self.distributor.salt_expr(self._key_lit(k)) for k in key_values]
+            pred = F.col(SALT_COL).isin(salts) & pred
+        return df.where(pred).drop(SALT_COL)
 
     def upsert_rows(self, changes: DataFrame) -> "SaltedTable":
         """Update-without-read at partition granularity — the dividend
@@ -1031,9 +1004,21 @@ class SaltedTable:
         already stale, or whose column stats footers cannot supply,
         are left stale (the watermark keeps them safely bypassed).
 
+        A pure append (no removed file) on a local table whose added
+        footers the driver reads (:meth:`_footer_stats_local`) writes
+        its rows as one more pyarrow part file, so an epoch commit runs
+        no Spark job for its sidecars; replays (files removed), remote
+        tables and unusable driver-side stats take the Spark route.
+
         Caller must hold the table lock: the read-modify-write of the
         sidecar and the restamp are not atomic against a concurrent
         verb. Returns the updated column names."""
+        if not removed_files and not added_files:
+            return []  # the file set, and so every watermark, is unchanged
+        import uuid
+
+        import pyarrow.parquet as pq
+
         fs = Fs(self.spark, self.path)
         zm_root = f"{self.path.rstrip('/')}/{self.ZONE_MAP_DIR}"
         removed = {self._canon_file_uri(p) for p in removed_files}
@@ -1049,30 +1034,43 @@ class SaltedTable:
                 continue  # unstamped/corrupt: leave for rebuild
             if meta.get("data_sig") != pre_sig:
                 continue  # was already stale before this mutation
-            src = self._footer_source(col, paths=added_files)
-            if src is None:
-                continue  # footer can't speak for this column type
-            new_rows, done = src
-            try:
-                if removed:
-                    tmp = zm_dir + ".tmp"
-                    fs.delete(tmp, recursive=True)
-                    (
-                        self.spark.read.parquet(zm_dir)
-                        .where(~F.col("file").isin(list(removed)))
-                        .unionByName(new_rows)
-                        .write.mode("overwrite")
-                        .parquet(tmp)
-                    )
-                    fs.delete(zm_dir, recursive=True)
-                    if not fs.rename(tmp, zm_dir):
-                        # sidecar now missing -> safe bypass, rebuilt by
-                        # the next lifecycle verb or build_zone_map
-                        continue
-                else:
-                    new_rows.write.mode("append").parquet(zm_dir)
-            finally:
-                done()
+            status, local = None, None
+            if not removed:
+                status, local = self._footer_stats_local(col, added_files)
+            if local is not None:
+                # a pure append whose footers the driver reads: the new
+                # rows become one more pyarrow part file, as in
+                # build_zone_map's driver route — no Spark job
+                pq.write_table(
+                    local, f"{_local_fs_path(zm_dir)}/part-{uuid.uuid4().hex}.parquet"
+                )
+            else:
+                src = self._footer_source(
+                    col, paths=added_files, _local_status=status
+                )
+                if src is None:
+                    continue  # footer can't speak for this column type
+                new_rows, done = src
+                try:
+                    if removed:
+                        tmp = zm_dir + ".tmp"
+                        fs.delete(tmp, recursive=True)
+                        (
+                            self.spark.read.parquet(zm_dir)
+                            .where(~F.col("file").isin(list(removed)))
+                            .unionByName(new_rows)
+                            .write.mode("overwrite")
+                            .parquet(tmp)
+                        )
+                        fs.delete(zm_dir, recursive=True)
+                        if not fs.rename(tmp, zm_dir):
+                            # sidecar now missing -> safe bypass, rebuilt
+                            # by the next lifecycle verb or build_zone_map
+                            continue
+                    else:
+                        new_rows.write.mode("append").parquet(zm_dir)
+                finally:
+                    done()
             if post_sig is None:
                 post_sig = self._data_signature(fs)
             fs.write_text(
@@ -1805,7 +1803,7 @@ class SaltedTable:
         )
         return self.spark.createDataFrame(
             desc, f"shard_id int, lo {key_type}, hi {key_type}, files array<string>"
-        ).repartitionByRange(len(files), "shard_id")
+        )
 
     def scan_merged(
         self,
@@ -1835,8 +1833,9 @@ class SaltedTable:
            keys: weighted whole-file cuts). A warm handle plans with
            no Spark job.
         2. A |shards|-row descriptor relation (shard key range + the
-           files that intersect it) is range-partitioned by shard id —
-           the only Exchange in the plan, moving kilobytes.
+           files that intersect it) is built from Arrow as a local
+           relation, whose partitions are contiguous runs of shards in
+           shard-id order. The plan has no Exchange.
         3. Each task ``mapInArrow``-merges ITS key range: pyarrow
            opens only its descriptor's files, row-group stats skip
            everything outside the range (each file contributes one
@@ -1951,12 +1950,11 @@ class SaltedTable:
                     return ts.tz_convert("UTC").tz_localize(None)
                 return v
 
-            # The range partitioner may co-locate two descriptors in
-            # one partition and upstream batch order is not
-            # deterministic: materialize the (tiny, kilobyte-class)
-            # descriptor rows and process them in shard_id order so
-            # the in-partition output honors the global-order contract
-            # global_rank(presorted=True) consumes.
+            # A partition holds a contiguous run of descriptors; batch
+            # order within it is not guaranteed: materialize the (tiny,
+            # kilobyte-class) descriptor rows and process them in
+            # shard_id order so the in-partition output honors the
+            # global-order contract global_rank(presorted=True) consumes.
             rows = [r for b in batches for r in b.to_pylist()]
             rows.sort(key=lambda r: r["shard_id"])
             for row in rows:

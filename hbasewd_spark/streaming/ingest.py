@@ -227,7 +227,10 @@ def idempotent_salted_batch_write(
                 f"table dir between stage and commit; raising so the epoch "
                 f"replays"
             )
-        gone = [f for f in manifest["files"] if not fs.exists(f)]
+        # one listing of the stage against the manifest, not one exists()
+        # per staged file
+        present = set(fs.glob(f"{stage}/{SALT_COL}=*/*.parquet"))
+        gone = [f for f in manifest["files"] if f not in present]
         if gone:
             raise RuntimeError(
                 f"epoch {epoch_id}: {len(gone)} staged file(s) vanished "
@@ -253,10 +256,21 @@ def idempotent_salted_batch_write(
         ):
             fs.delete(stale)
             purged.append(stale)
-        for salt_dir in fs.glob(f"{stage}/{SALT_COL}=*"):
-            target_dir = dest_path.rstrip("/") + "/" + salt_dir.rsplit("/", 1)[1]
+        # rename from the manifest, grouped by salt dir: the listed
+        # paths are sorted and in the filesystem's own URI form, so
+        # each dir's files come in name order (the seq order) and the
+        # destinations are spelled as the purge glob and the
+        # data-signature listing spell them, which keeps sidecar rows
+        # matching across replays
+        by_dir: dict[str, list[str]] = {}
+        for f in manifest["files"]:
+            by_dir.setdefault(f.rsplit("/", 1)[0], []).append(f)
+        landed: list[str] = []
+        for salt_dir, files in by_dir.items():
+            stage_uri, salt_part = salt_dir.rsplit("/", 1)
+            target_dir = stage_uri.rsplit("/", 1)[0] + "/" + salt_part
             fs.mkdirs(target_dir)
-            for seq, f in enumerate(fs.glob(f"{salt_dir}/*.parquet")):
+            for seq, f in enumerate(files):
                 dest = f"{target_dir}/epoch-{epoch_id:010d}-{seq:05d}.parquet"
                 if not fs.rename(f, dest):
                     # leave the stage dir intact (this epoch's data lives
@@ -266,18 +280,11 @@ def idempotent_salted_batch_write(
                         f"epoch {epoch_id}: rename {f} -> {dest} failed; "
                         f"stage {stage} preserved for the retry"
                     )
+                landed.append(dest)
         fs.delete(stage, recursive=True)
         if tbl is not None:
             import warnings
 
-            # re-glob rather than collecting the rename destinations:
-            # the glob renders paths in the filesystem's own URI form
-            # (the same spelling the purge glob and the data-signature
-            # listing use), so sidecar rows match across replays
-            landed = fs.glob(
-                f"{dest_path.rstrip('/')}/{SALT_COL}=*/"
-                f"epoch-{epoch_id:010d}-*.parquet"
-            )
             try:
                 tbl.maintain_sidecars_incremental(pre_sig, purged, landed)
             except Exception as e:

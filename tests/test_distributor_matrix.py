@@ -176,6 +176,51 @@ def test_multi_get(table):
     assert got == single and len(got) >= len(vals)
 
 
+def test_multi_get_prunes_to_salt_in_list(table):
+    """Deterministic salting: multi_get filters on ``salt IN (f(k)…)``
+    and ``key IN (k…)``, and the salt list is a partition filter."""
+    if not table.distributor.deterministic:
+        pytest.skip("round-robin salts are not a function of the key")
+    vals = [500, 499, 998, 1, 10**6]  # the last key is absent
+    got = table.multi_get([_key(table, v) for v in vals])
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    # a single bucket folds the list to one `salt = 0` equality
+    assert "salt" in pf and (" IN" in pf or table.distributor.buckets == 1), pf
+    want = sorted(
+        r.val
+        for v in vals
+        for r in table.point_get(_key(table, v)).select("val").collect()
+    )
+    assert sorted(r.val for r in got.select("val").collect()) == want
+    assert len(want) >= 4
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "csv", "json"])
+def test_df_schema_matches_inferred_schema(table, spark, kv, tmp_path, fmt):
+    """df() reads every format with the persisted data schema plus
+    ``salt int``; that is the schema Spark infers for the same files:
+    from the files for the columnar formats, from the persisted data
+    schema plus the discovered partition column for csv/json."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    if fmt == "csv" and table.key_col == "key":
+        pytest.skip("CSV cannot carry BinaryType (documented)")
+    data = kv.drop("key") if fmt == "csv" else kv
+    path = str(tmp_path / fmt)
+    SaltedTable.write(data, path, STRATEGIES[table.name](), table.key_col, fmt=fmt)
+    t = SaltedTable.load(spark, path)
+    reader = spark.read.format(fmt)
+    if fmt in ("csv", "json"):
+        reader = reader.schema(StructType.fromJson(json.loads(t.data_schema_json)))
+    if fmt == "csv":
+        reader = reader.option("header", "true")
+    assert t.df().schema == reader.load(path).schema
+    assert t.df().count() == data.count()
+
+
 def test_custom_distributor_spi_full_lifecycle(spark, kv, tmp_path):
     """O12 user-extension path, end to end: a distributor defined
     OUTSIDE the engine registers via register_distributor, salts a

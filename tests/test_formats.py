@@ -47,3 +47,19 @@ def test_format_upsert_keeps_format(spark, tmp_path):
     assert t2.df().count() == df.count()
     bumped = t2.df().where(F.col("val") >= 1000).count()
     assert bumped == 5
+
+
+@pytest.mark.parametrize("fmt", ["csv", "json", "parquet"])
+def test_empty_table_keeps_salt_column(spark, tmp_path, fmt):
+    """A table whose every row expired reads back with its ``salt``
+    column in every format, so salt-pruned reads still resolve."""
+    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
+    path = str(tmp_path / fmt)
+    SaltedTable.write(df, path, HashDistributor(4), "k", fmt=fmt).expire(1000)
+    t = SaltedTable.load(spark, path)
+    assert "salt" in t.df().columns
+    assert t.point_get(5).count() == 0
+    assert t.multi_get([5, 6]).count() == 0
+    assert t.describe().count() == 0
+    assert t.scan(0, 50).count() == 0
+

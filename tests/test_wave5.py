@@ -494,8 +494,8 @@ def test_curation_composes_with_salted_substrate(spark, sf_dir, tmp_path):
 def test_expire_everything_leaves_a_readable_empty_table(spark, kv, tmp_path):
     """Expiring past every key must leave a USABLE empty table (scan /
     point_get / describe / another expire all work), not an
-    UNABLE_TO_INFER_SCHEMA wreck — df() falls back to the persisted
-    schema when zero data files remain."""
+    UNABLE_TO_INFER_SCHEMA wreck — df() reads with the persisted
+    schema, so zero data files read as an empty relation."""
     from hbasewd_spark.plans.distributor import HashDistributor
     from hbasewd_spark.sources.kv_fixture import KEY_PREFIX
     from hbasewd_spark.sources.salted_table import SaltedTable
