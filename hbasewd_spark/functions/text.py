@@ -2,10 +2,15 @@
 extension, BASELINE.json): language ID, quality scoring, token
 counting, document fingerprinting.
 
-All functions are pure Catalyst column expressions over built-ins
-(no UDFs — at 100 TB these run inside whole-stage codegen on the scan),
-with deterministic arithmetic that the DuckDB oracle reproduces
-bit-for-bit. Each has a DuckDB SQL twin below its definition.
+Each function is ONE Spark SQL text plus ONE DuckDB twin, both written
+by its ``sql_*(expr, dialect)`` builder: the Column function is
+``F.expr`` over the Spark text, so there is a single definition per
+engine and building a column costs one py4j call (a Column-API
+builder sent one per node — thousands for the lang/quality gates). The
+texts use built-ins only (no UDFs — at 100 TB these run inside
+whole-stage codegen on the scan), with deterministic arithmetic that
+the DuckDB oracle reproduces bit-for-bit. Double literals carry the
+``D`` suffix on the Spark side: a bare ``0.4`` is a DECIMAL there.
 """
 
 from __future__ import annotations
@@ -29,10 +34,23 @@ LANG_MARKERS = {
 }
 
 
-def tokens(col: Column | str) -> Column:
+def _sql_str(s: str, dialect: str) -> str:
+    """Quote-free ``s`` as a string literal of ``dialect``. Spark's
+    parser reads backslash escapes inside literals (a raw ``\\b``
+    would be a backspace), DuckDB's does not."""
+    if dialect == "spark":
+        s = s.replace("\\", "\\\\")
+    return f"'{s}'"
+
+
+def _dbl(x: float, dialect: str) -> str:
+    """A DOUBLE literal (Spark reads a bare ``0.4`` as a DECIMAL)."""
+    return f"{x!r}D" if dialect == "spark" else repr(x)
+
+
+def tokens(col: str) -> Column:
     """Lowercased alphanumeric tokens (the whitespace+punct tokenizer)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda x: x != F.lit(""))
+    return F.expr(sql_tokens(col, "spark"))
 
 
 def sql_tokens(expr: str, dialect: str) -> str:
@@ -41,8 +59,8 @@ def sql_tokens(expr: str, dialect: str) -> str:
     return f"list_filter(string_split_regex(lower({expr}), '[^a-z0-9]+'), x -> x != '')"
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
+def token_count(col: str) -> Column:
+    return F.expr(sql_token_count(col, "spark"))
 
 
 def sql_token_count(expr: str, dialect: str) -> str:
@@ -51,144 +69,126 @@ def sql_token_count(expr: str, dialect: str) -> str:
     return f"len({sql_tokens(expr, dialect)})"
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
+_BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+
+
+def bpe_ish_token_count(col: str) -> Column:
     """BPE-ish subword proxy: words + digit runs + punctuation marks
     each count as a token (a cheap, deterministic stand-in for a real
     tokenizer's token count; the regex mirrors GPT-2's coarse classes).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
+    return F.expr(sql_bpe_ish_token_count(col, "spark"))
 
 
 def sql_bpe_ish_token_count(expr: str, dialect: str) -> str:
-    pat = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+    pat = _sql_str(_BPE_ISH, dialect)
     if dialect == "spark":
-        return f"regexp_count({expr}, '{pat}')"
-    return f"len(regexp_extract_all({expr}, '{pat}'))"
+        return f"regexp_count({expr}, {pat})"
+    return f"len(regexp_extract_all({expr}, {pat}))"
 
 
-def alpha_ratio(col: Column | str) -> Column:
+def alpha_ratio(col: str) -> Column:
     """Fraction of characters that are ASCII letters (0 for empty)."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_alpha = F.length(F.regexp_replace(c, "[^A-Za-z]", ""))
-    return F.when(F.length(c) > 0, n_alpha.cast("double") / F.length(c).cast("double")).otherwise(F.lit(0.0))
+    return F.expr(sql_alpha_ratio(col, "spark"))
+
+
+def _sql_n_alpha(expr: str, dialect: str) -> str:
+    flags = ", 'g'" if dialect == "duckdb" else ""
+    return f"CAST(length(regexp_replace({expr}, '[^A-Za-z]', ''{flags})) AS DOUBLE)"
 
 
 def sql_alpha_ratio(expr: str, dialect: str) -> str:
     return (
         f"CASE WHEN length({expr}) > 0 THEN "
-        f"CAST(length(regexp_replace({expr}, '[^A-Za-z]', '', 'g')) AS DOUBLE) / CAST(length({expr}) AS DOUBLE) "
-        f"ELSE 0.0 END"
-        if dialect == "duckdb"
-        else f"CASE WHEN length({expr}) > 0 THEN "
-        f"CAST(length(regexp_replace({expr}, '[^A-Za-z]', '')) AS DOUBLE) / CAST(length({expr}) AS DOUBLE) "
-        f"ELSE 0.0 END"
+        f"{_sql_n_alpha(expr, dialect)} / CAST(length({expr}) AS DOUBLE) "
+        f"ELSE {_dbl(0.0, dialect)} END"
     )
 
 
-def _marker_count(c: Column, words: list[str]) -> Column:
-    pat = r"\b(" + "|".join(words) + r")\b"
-    return F.regexp_count(F.lower(c), F.lit(pat))
-
-
 def sql_marker_count(expr: str, words: list[str], dialect: str) -> str:
-    pat = r"\b(" + "|".join(words) + r")\b"
+    pat = _sql_str(r"\b(" + "|".join(words) + r")\b", dialect)
     if dialect == "spark":
-        return f"regexp_count(lower({expr}), '{pat}')"
-    return f"len(regexp_extract_all(lower({expr}), '{pat}'))"
+        return f"regexp_count(lower({expr}), {pat})"
+    return f"len(regexp_extract_all(lower({expr}), {pat}))"
 
 
-def lang_id(col: Column | str) -> Column:
+def lang_id(col: str) -> Column:
     """Stopword-marker language heuristic: argmax of per-language marker
     counts; 'und' (undetermined) when no marker fires. Ties break by
     language code order (deterministic)."""
-    c = F.col(col) if isinstance(col, str) else col
-    scored = [(lang, _marker_count(c, ws)) for lang, ws in sorted(LANG_MARKERS.items())]
-    best_score = F.greatest(*[s for _, s in scored])
-    out = F.lit("und")
-    # first language (in sorted order) achieving the max wins
-    for lang, s in reversed(scored):
-        out = F.when(s == best_score, F.lit(lang)).otherwise(out)
-    return F.when(best_score > 0, out).otherwise(F.lit("und"))
+    return F.expr(sql_lang_id(col, "spark"))
 
 
 def sql_lang_id(expr: str, dialect: str) -> str:
     """Inline (subquery-free, so it works in any select position on
-    both engines) twin of :func:`lang_id`."""
+    both engines): the first language in code order whose marker count
+    reaches the max wins."""
     scored = [(lang, sql_marker_count(expr, ws, dialect)) for lang, ws in sorted(LANG_MARKERS.items())]
     greatest = "greatest(" + ", ".join(s for _, s in scored) + ")"
-    cases = " ".join(f"WHEN {s} = {greatest} THEN '{lang}'" for lang, s in scored)
-    return f"(CASE WHEN {greatest} > 0 THEN CASE {cases} END ELSE 'und' END)"
+    out = "'und'"
+    for lang, s in reversed(scored):
+        out = f"CASE WHEN {s} = {greatest} THEN '{lang}' ELSE {out} END"
+    return f"(CASE WHEN {greatest} > 0 THEN {out} ELSE 'und' END)"
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_score(col: str) -> Column:
     """Deterministic [0,1] quality heuristic:
     0.4·min(1, tokens/100) + 0.4·alpha_ratio + 0.2·[5 ≤ mean_word_len·10 ≤ 120].
     Pure double arithmetic with a fixed op order (oracle-identical)."""
-    c = F.col(col) if isinstance(col, str) else col
-    ntok = token_count(c).cast("double")
-    len_term = F.least(F.lit(1.0), ntok / F.lit(100.0))
-    a_ratio = alpha_ratio(c)
-    n_alpha = F.length(F.regexp_replace(c, "[^A-Za-z]", "")).cast("double")
-    mean_wl10 = F.when(ntok > 0, n_alpha * F.lit(10.0) / ntok).otherwise(F.lit(0.0))
-    wl_ok = F.when((mean_wl10 >= 5.0) & (mean_wl10 <= 120.0), F.lit(1.0)).otherwise(F.lit(0.0))
-    return F.lit(0.4) * len_term + F.lit(0.4) * a_ratio + F.lit(0.2) * wl_ok
+    return F.expr(sql_quality_score(col, "spark"))
 
 
 def sql_quality_score(expr: str, dialect: str) -> str:
+    def d(x: float) -> str:
+        return _dbl(x, dialect)
+
     ntok = f"CAST({sql_token_count(expr, dialect)} AS DOUBLE)"
-    if dialect == "duckdb":
-        n_alpha = f"CAST(length(regexp_replace({expr}, '[^A-Za-z]', '', 'g')) AS DOUBLE)"
-    else:
-        n_alpha = f"CAST(length(regexp_replace({expr}, '[^A-Za-z]', '')) AS DOUBLE)"
+    n_alpha = _sql_n_alpha(expr, dialect)
     a_ratio = sql_alpha_ratio(expr, dialect)
-    mean_wl10 = f"(CASE WHEN {ntok} > 0 THEN {n_alpha} * 10.0 / {ntok} ELSE 0.0 END)"
-    wl_ok = f"(CASE WHEN {mean_wl10} >= 5.0 AND {mean_wl10} <= 120.0 THEN 1.0 ELSE 0.0 END)"
-    return (
-        f"0.4 * (CASE WHEN {ntok} / 100.0 < 1.0 THEN {ntok} / 100.0 ELSE 1.0 END) "
-        f"+ 0.4 * ({a_ratio}) + 0.2 * {wl_ok}"
+    if dialect == "spark":
+        len_term = f"least({d(1.0)}, {ntok} / {d(100.0)})"
+    else:
+        len_term = f"(CASE WHEN {ntok} / 100.0 < 1.0 THEN {ntok} / 100.0 ELSE 1.0 END)"
+    mean_wl10 = f"(CASE WHEN {ntok} > 0 THEN {n_alpha} * {d(10.0)} / {ntok} ELSE {d(0.0)} END)"
+    wl_ok = (
+        f"(CASE WHEN {mean_wl10} >= {d(5.0)} AND {mean_wl10} <= {d(120.0)}"
+        f" THEN {d(1.0)} ELSE {d(0.0)} END)"
     )
+    return f"{d(0.4)} * {len_term} + {d(0.4)} * ({a_ratio}) + {d(0.2)} * {wl_ok}"
 
 
-def fingerprint(col: Column | str) -> Column:
+_WS_RUN = r"\s+"
+
+
+def fingerprint(col: str) -> Column:
     """Rolling 31-polynomial hash of the character stream of the
     normalized (lowercased, whitespace-collapsed) text under TWO
     independent prime moduli, combined as ``h1 * M2 + h2`` — a ~60-bit
     content fingerprint stable under trailing-whitespace noise.
     Collision needs agreement mod both primes, so corpus-scale exact
     dedup doesn't silently merge distinct documents."""
-    c = F.col(col) if isinstance(col, str) else col
-    norm = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
-    chars = F.split(norm, "")
-    cps = F.transform(chars, lambda ch: F.ascii(ch).cast("bigint"))
-    # SINGLE pass with a struct accumulator: two separate aggregate()
-    # calls would inline (and so evaluate) the per-char cps array twice
-    # — measured 3x on the curation pipeline. The DuckDB twin keeps the
-    # two-reduce form (list_reduce has no struct-friendly init there);
-    # same values, and the oracle only needs to be correct, not fast.
-    acc0 = F.struct(
-        F.lit(7).cast("bigint").alias("a"), F.lit(7).cast("bigint").alias("b")
-    )
-    return F.aggregate(
-        cps,
-        acc0,
-        lambda acc, cp: F.struct(
-            ((acc["a"] * 31 + cp) % FNV_MOD).alias("a"),
-            ((acc["b"] * 31 + cp) % FNV_MOD2).alias("b"),
-        ),
-        lambda acc: acc["a"] * FNV_MOD2 + acc["b"],
-    )
+    return F.expr(sql_fingerprint(col, "spark"))
 
 
 def sql_fingerprint(expr: str, dialect: str) -> str:
+    ws = _sql_str(_WS_RUN, dialect)
     if dialect == "spark":
-        norm = f"trim(regexp_replace(lower({expr}), '\\\\s+', ' '))"
+        # SINGLE pass with a struct accumulator: two separate aggregate()
+        # calls would inline (and so evaluate) the per-char cps array
+        # twice — measured 3x on the curation pipeline. The DuckDB twin
+        # keeps the two-reduce form (list_reduce has no struct-friendly
+        # init there); same values, and the oracle only needs to be
+        # correct, not fast.
+        norm = f"trim(regexp_replace(lower({expr}), {ws}, ' '))"
         cps = f"transform(split({norm}, ''), ch -> CAST(ascii(ch) AS BIGINT))"
-        roll = lambda mod: (  # noqa: E731
-            f"aggregate({cps}, CAST(7 AS BIGINT), (h, cp) -> (h * 31 + cp) % {mod})"
+        return (
+            f"aggregate({cps},"
+            f" named_struct('a', CAST(7 AS BIGINT), 'b', CAST(7 AS BIGINT)),"
+            f" (acc, cp) -> named_struct('a', (acc.a * 31 + cp) % {FNV_MOD},"
+            f" 'b', (acc.b * 31 + cp) % {FNV_MOD2}),"
+            f" acc -> acc.a * {FNV_MOD2} + acc.b)"
         )
-        return f"({roll(FNV_MOD)} * {FNV_MOD2} + {roll(FNV_MOD2)})"
-    norm = f"trim(regexp_replace(lower({expr}), '\\s+', ' ', 'g'))"
+    norm = f"trim(regexp_replace(lower({expr}), {ws}, ' ', 'g'))"
     cps = f"list_transform(string_split({norm}, ''), ch -> CAST(ascii(ch) AS BIGINT))"
     # duckdb list_reduce has no init -> prepend it
     roll = lambda mod: (  # noqa: E731

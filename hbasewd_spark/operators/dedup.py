@@ -88,73 +88,55 @@ def _gram_positions(n, k: int):
     ).otherwise(F.array().cast("array<int>"))
 
 
-def _shingles_expr(toks=None):
-    """Word 3-shingles of the token stream, as a deduped array.
-
-    Pass ``toks`` as a *column reference* (not an expression) when
-    composing pipelines: lambda bodies inline their argument expression
-    per element, so an inline tokenizer would re-run once per shingle
-    per reference — a silent 1000× blowup (measured: 110s -> 3s at
-    sf0.1 after staging the token array as a real column)."""
-    if toks is None:
-        toks = tokens("text")
-    k = SHINGLE_K
-    n = F.size(toks)
-    idx = _gram_positions(n, k)
-    sh = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(k)]
-        ),
-    )
-    return F.array_distinct(sh)
-
-
 def minhash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hs, mh0..mh15) — per-shingle 32-bit hashes + MinHash
-    signature, computed in staged projections so every intermediate
-    array materializes exactly once per row (Catalyst keeps the stages
-    separate because collapsing would duplicate non-cheap expressions).
+    signature of the ``documents`` table (see :func:`features_of_docs`).
 
     Only the hash array (8 bytes/shingle) travels downstream — the
-    shingle strings themselves (~20 bytes each) never leave this
-    projection, which matters at 100 TB where the verify join would
+    shingle strings themselves (~20 bytes each) never leave the
+    pipeline, which matters at 100 TB where the verify join would
     otherwise shuffle the full shingle text twice."""
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"), spark)
-    return features_of_docs(docs)
+    return features_of_docs(load_table(spark, sf_dir, "documents"))
 
 
 def features_of_docs(docs: DataFrame) -> DataFrame:
     """The :func:`minhash_features` pipeline over any (doc_id, text)
-    frame — the seam the incremental index probe reuses for new
-    batches that are not a table on disk."""
-    tk = docs.select("doc_id", tokens("text").alias("toks"))
-    sh = tk.select("doc_id", _shingles_expr(F.col("toks")).alias("sh"))
-    hs = sh.select(
-        "doc_id",
-        F.transform(
-            "sh", lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-        ).alias("hs"),
+    frame — the seam the incremental index and the streaming gate reuse
+    for batches that are not a table on disk.
+
+    The input is spread over every core first
+    (:func:`~hbasewd_spark.sources.loaders.ensure_min_parallelism`):
+    the signature pass is the CPU-heavy stage, and a one-file corpus
+    would otherwise compute it in one task.
+
+    Each stage is ONE ``selectExpr`` over the Spark SQL texts the
+    DuckDB oracles share (tokens; shingles → md5 hashes; permutation
+    mins), so building the frame costs a few dozen py4j calls instead
+    of one per Column node (thousands). The stages are the projections
+    the optimizer keeps apart (merging would duplicate non-cheap
+    expressions), so every intermediate array materializes exactly
+    once per row; the shingle array is read once and needs no stage of
+    its own. In particular the token array must be a real column
+    (``toks``), not an inline expression: lambda bodies inline their
+    argument per element, so an inline tokenizer re-runs once per
+    shingle per reference — a silent 1000× blowup (measured: 110s ->
+    3s at sf0.1 after staging ``toks``)."""
+    docs = ensure_min_parallelism(docs, docs.sparkSession)
+    tk = docs.selectExpr("doc_id", f"{sql_tokens('text', 'spark')} AS toks")
+    hs = tk.selectExpr(
+        "doc_id", f"transform({sql_shingles_over_toks('spark')}, s -> {sql_md5_long('s', 'spark')}) AS hs"
     )
-    return hs.select("doc_id", "hs", *_minhash_sig_over_hs(F.col("hs")))
-
-
-def _minhash_sig_over_hs(hs):
-    """Signature mins over an already-materialized hash-array column."""
-
-    def perm(j: int):
-        a, b = MH_A[j], MH_B[j]
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MH_PRIME
-
-    return [
-        F.coalesce(F.array_min(F.transform(hs, perm(j))), F.lit(MH_PRIME)).alias(f"mh{j}")
-        for j in range(MH_PERMS)
-    ]
+    return hs.selectExpr(
+        "doc_id", "hs", *(f"{sql_minhash_min('spark', j)} AS mh{j}" for j in range(MH_PERMS))
+    )
 
 
 def sql_shingles_over_toks(dialect: str) -> str:
-    """Shingle expression over a column named ``toks`` (use inside a
-    CTE that computed the token array — avoids correlated subqueries)."""
+    """Word 3-shingles of a column named ``toks`` (the staged token
+    array), as a deduped array. The Spark text guards short inputs as
+    :func:`_gram_positions` does; DuckDB oracles use it
+    inside a CTE that computed the token array (no correlated
+    subqueries)."""
     k = SHINGLE_K
     if dialect == "spark":
         parts = ", ".join(f"element_at(toks, CAST(i + {j} AS INT))" for j in range(k))
@@ -171,18 +153,19 @@ def sql_shingles_over_toks(dialect: str) -> str:
     )
 
 
+def sql_minhash_min(dialect: str, j: int) -> str:
+    """Permutation ``j``'s min over a column named ``hs`` (the
+    per-shingle hash array); ``MH_PRIME`` for a doc without shingles."""
+    x = f"({MH_A[j]} * x + {MH_B[j]}) % {MH_PRIME}"
+    if dialect == "duckdb":
+        return f"coalesce(list_min(list_transform(hs, x -> {x})), {MH_PRIME})"
+    return f"coalesce(array_min(transform(hs, x -> {x})), {MH_PRIME})"
+
+
 def sql_minhash_band_hash(dialect: str, band: int) -> str:
     """Band hash over a column named ``hs`` (the per-shingle hash
     array): md5-long of the '_'-joined band signature values."""
-    mins = []
-    for j in range(band * MH_ROWS, (band + 1) * MH_ROWS):
-        perm = (
-            f"list_transform(hs, x -> ({MH_A[j]} * x + {MH_B[j]}) % {MH_PRIME})"
-            if dialect == "duckdb"
-            else f"transform(hs, x -> ({MH_A[j]} * x + {MH_B[j]}) % {MH_PRIME})"
-        )
-        m = f"list_min({perm})" if dialect == "duckdb" else f"array_min({perm})"
-        mins.append(f"coalesce({m}, {MH_PRIME})")
+    mins = [sql_minhash_min(dialect, j) for j in range(band * MH_ROWS, (band + 1) * MH_ROWS)]
     concat = " || '_' || ".join(f"CAST({m} AS VARCHAR)" for m in mins)
     return sql_md5_long(f"({concat})", dialect)
 
@@ -191,16 +174,16 @@ def _bands_of(sig: DataFrame) -> DataFrame:
     """(doc_id, band, band_hash) from a signature frame — one pass,
     posexplode of the per-band hash array (no union-of-reprojections,
     which would recompute the signature once per band)."""
-    band_hashes = []
-    for b in range(MH_BANDS):
-        cols = [F.col(f"mh{j}").cast("string") for j in range(b * MH_ROWS, (b + 1) * MH_ROWS)]
-        band_key = F.concat_ws("_", *cols)
-        band_hashes.append(
-            F.conv(F.substring(F.md5(band_key), 1, 8), 16, 10).cast("bigint")
+    band_hashes = ", ".join(
+        sql_md5_long(
+            "concat_ws('_', "
+            + ", ".join(f"CAST(mh{j} AS STRING)" for j in range(b * MH_ROWS, (b + 1) * MH_ROWS))
+            + ")",
+            "spark",
         )
-    return sig.select(
-        "doc_id", F.posexplode(F.array(*band_hashes)).alias("band", "band_hash")
+        for b in range(MH_BANDS)
     )
+    return sig.selectExpr("doc_id", f"posexplode(array({band_hashes})) AS (band, band_hash)")
 
 
 def minhash_band_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,18 +306,27 @@ def _minhash_dedup_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame
     cand = _expand_bucket_pairs(grouped).distinct()
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("hset").alias("hs_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("hset").alias("hs_b"))
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn("n_union", F.size("hs_a") + F.size("hs_b") - F.col("n_inter"))
-        .withColumn(
-            "jaccard",
-            F.when(F.col("n_union") > 0, F.col("n_inter").cast("double") / F.col("n_union").cast("double")).otherwise(0.0),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+    return verify_jaccard(
+        cand.join(sa, "doc_a").join(sb, "doc_b"), "doc_a", "doc_b", "hs_a", "hs_b", JACCARD_THRESHOLD
     )
-    return verified.select("doc_a", "doc_b", "n_inter", "n_union", "jaccard")
+
+
+def verify_jaccard(
+    cand: DataFrame, id_a: str, id_b: str, set_a: str, set_b: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, n_inter, n_union, jaccard) of the candidate pairs
+    whose deduped hash sets reach Jaccard >= ``threshold`` — one
+    projection (``n_union`` and ``jaccard`` read the earlier columns as
+    lateral aliases, so the set intersection runs once per pair) and
+    one filter. The batch pairs and the index probe both verify here."""
+    return cand.selectExpr(
+        id_a,
+        id_b,
+        f"size(array_intersect({set_a}, {set_b})) AS n_inter",
+        f"size({set_a}) + size({set_b}) - n_inter AS n_union",
+        "CASE WHEN n_union > 0 THEN CAST(n_inter AS DOUBLE) / CAST(n_union AS DOUBLE)"
+        " ELSE 0.0D END AS jaccard",
+    ).where(F.col("jaccard") >= threshold)
 
 
 def minhash_pairs_oracle() -> str:
@@ -1046,9 +1038,9 @@ def winnow_fingerprints(docs: DataFrame, hash_fn: str = "md5") -> DataFrame:
     ``packed`` is staged as a real column first: lambda bodies inline
     their argument expression per element, so slicing an inline
     expression would rebuild the full array once per window start
-    (the _shingles_expr lesson). The final explode's child is an
-    expression, so InferFiltersFromGenerate stays disarmed (see
-    :func:`substring_dup_coverage_of`)."""
+    (the staged-``toks`` lesson of :func:`features_of_docs`). The final
+    explode's child is an expression, so InferFiltersFromGenerate stays
+    disarmed (see :func:`substring_dup_coverage_of`)."""
     k, w = SUB_K, WINNOW_W
     staged = docs.select(
         "doc_id",

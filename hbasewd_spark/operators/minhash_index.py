@@ -38,6 +38,7 @@ from hbasewd_spark.operators.dedup import (
     MH_BANDS,
     _bands_of,
     features_of_docs,
+    verify_jaccard,
 )
 
 INDEX_META = "_minhash_index.json"
@@ -159,23 +160,14 @@ def probe_index(
         )
         # candidates are tiny (LSH-selected); broadcast them onto the
         # big hsets relation, then attach the batch's sets (broadcast)
-        verified = (
-            idx_sets.join(F.broadcast(cand), "corpus_doc_id")
-            .join(F.broadcast(new_sets), "new_doc_id")
-            .withColumn("n_inter", F.size(F.array_intersect("hs_n", "hs_c")))
-            .withColumn(
-                "n_union", F.size("hs_n") + F.size("hs_c") - F.col("n_inter")
-            )
-            .withColumn(
-                "jaccard",
-                F.when(
-                    F.col("n_union") > 0,
-                    F.col("n_inter").cast("double") / F.col("n_union").cast("double"),
-                ).otherwise(0.0),
-            )
-            .where(F.col("jaccard") >= jaccard_threshold)
-            .select("new_doc_id", "corpus_doc_id", "jaccard")
-        )
+        verified = verify_jaccard(
+            idx_sets.join(F.broadcast(cand), "corpus_doc_id").join(F.broadcast(new_sets), "new_doc_id"),
+            "new_doc_id",
+            "corpus_doc_id",
+            "hs_n",
+            "hs_c",
+            jaccard_threshold,
+        ).select("new_doc_id", "corpus_doc_id", "jaccard")
         # materialize before unpersisting the batch features the plan reads
         verified = verified.localCheckpoint(eager=True)
     finally:
@@ -217,11 +209,12 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the result non-trivial without synthetic perturbation."""
     import hashlib
 
-    from hbasewd_spark.sources.loaders import ensure_min_parallelism, load_table
+    from hbasewd_spark.sources.loaders import load_table
 
-    docs = ensure_min_parallelism(
-        load_table(spark, sf_dir, "documents"), spark
-    ).select("doc_id", "text")
+    # no repartition here: features_of_docs spreads each side over the
+    # cores itself, and a shuffled input would make its partition check
+    # run the shuffle at build time
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.where(F.pmod("doc_id", F.lit(INC_BATCH_MOD)) != 0)
     batch = docs.where(F.pmod("doc_id", F.lit(INC_BATCH_MOD)) == 0)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]

@@ -90,8 +90,17 @@ def ensure_min_parallelism(df: DataFrame, spark: SparkSession, target: int | Non
     one task and a 32-core session runs regex pipelines single-threaded
     without this. At 100 TB the condition is false (scans produce
     thousands of splits) and the repartition — which there would be a
-    catastrophic full-text shuffle — is skipped entirely."""
-    target = target or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min(target, 32):
-        return df.repartition(min(target, 32))
-    return df
+    catastrophic full-text shuffle — is skipped entirely.
+
+    The partition count is read without running anything. Building
+    the RDD of an adaptive plan (one with an Exchange) would run its
+    shuffle stages, so such a plan is asked for the output partitioning
+    it was planned with instead (0 when unknown, which repartitions);
+    any other plan builds its RDD, which runs no job."""
+    target = min(target or spark.sparkContext.defaultParallelism, 32)
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        n = plan.inputPlan().outputPartitioning().numPartitions()
+    else:
+        n = plan.execute().getNumPartitions()
+    return df.repartition(target) if n < target else df

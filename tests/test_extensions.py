@@ -25,7 +25,9 @@ def test_minhash_lsh_recall(spark, sf_dir, docs):
         (r.doc_a, r.doc_b)
         for r in DD.minhash_dedup_pairs(spark, sf_dir).collect()
     }
-    sh = docs.select("doc_id", DD._shingles_expr().alias("sh"))
+    sh = docs.selectExpr("doc_id", f"{TX.sql_tokens('text', 'spark')} AS toks").selectExpr(
+        "doc_id", f"{DD.sql_shingles_over_toks('spark')} AS sh"
+    )
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     brute = (
