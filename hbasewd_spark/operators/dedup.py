@@ -134,7 +134,7 @@ def features_of_docs(docs: DataFrame) -> DataFrame:
 def sql_shingles_over_toks(dialect: str) -> str:
     """Word 3-shingles of a column named ``toks`` (the staged token
     array), as a deduped array. The Spark text guards short inputs as
-    :func:`_gram_positions` does; DuckDB oracles use it
+    :func:`_gram_positions` does; the DuckDB oracles use their twin
     inside a CTE that computed the token array (no correlated
     subqueries)."""
     k = SHINGLE_K
@@ -156,10 +156,10 @@ def sql_shingles_over_toks(dialect: str) -> str:
 def sql_minhash_min(dialect: str, j: int) -> str:
     """Permutation ``j``'s min over a column named ``hs`` (the
     per-shingle hash array); ``MH_PRIME`` for a doc without shingles."""
-    x = f"({MH_A[j]} * x + {MH_B[j]}) % {MH_PRIME}"
+    perm = f"x -> ({MH_A[j]} * x + {MH_B[j]}) % {MH_PRIME}"
     if dialect == "duckdb":
-        return f"coalesce(list_min(list_transform(hs, x -> {x})), {MH_PRIME})"
-    return f"coalesce(array_min(transform(hs, x -> {x})), {MH_PRIME})"
+        return f"coalesce(list_min(list_transform(hs, {perm})), {MH_PRIME})"
+    return f"coalesce(array_min(transform(hs, {perm})), {MH_PRIME})"
 
 
 def sql_minhash_band_hash(dialect: str, band: int) -> str:
@@ -174,15 +174,11 @@ def _bands_of(sig: DataFrame) -> DataFrame:
     """(doc_id, band, band_hash) from a signature frame — one pass,
     posexplode of the per-band hash array (no union-of-reprojections,
     which would recompute the signature once per band)."""
-    band_hashes = ", ".join(
-        sql_md5_long(
-            "concat_ws('_', "
-            + ", ".join(f"CAST(mh{j} AS STRING)" for j in range(b * MH_ROWS, (b + 1) * MH_ROWS))
-            + ")",
-            "spark",
-        )
-        for b in range(MH_BANDS)
-    )
+    def band_key(b: int) -> str:
+        mins = ", ".join(f"CAST(mh{j} AS STRING)" for j in range(b * MH_ROWS, (b + 1) * MH_ROWS))
+        return f"concat_ws('_', {mins})"
+
+    band_hashes = ", ".join(sql_md5_long(band_key(b), "spark") for b in range(MH_BANDS))
     return sig.selectExpr("doc_id", f"posexplode(array({band_hashes})) AS (band, band_hash)")
 
 

@@ -211,9 +211,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hbasewd_spark.sources.loaders import load_table
 
-    # no repartition here: features_of_docs spreads each side over the
-    # cores itself, and a shuffled input would make its partition check
-    # run the shuffle at build time
+    # features_of_docs spreads each side over the cores itself
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.where(F.pmod("doc_id", F.lit(INC_BATCH_MOD)) != 0)
     batch = docs.where(F.pmod("doc_id", F.lit(INC_BATCH_MOD)) == 0)

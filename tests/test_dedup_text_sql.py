@@ -210,17 +210,6 @@ def test_spark_marker_pattern_counts_words(spark):
     assert spark.sql(f"SELECT {text} AS n").first().n == 3
 
 
-def test_spark_minhash_texts_match_the_column_forms(spark, docs):
-    toks = docs.selectExpr("doc_id", f"{TX.sql_tokens('text', 'spark')} AS toks")
-    got = toks.selectExpr("doc_id", f"{DD.sql_shingles_over_toks('spark')} AS sh")
-    want = toks.select("doc_id", col_shingles(F.col("toks")).alias("sh"))
-    assert sorted(got.collect()) == sorted(want.collect())
-    hs = DD.features_of_docs(docs).select("doc_id", "hs")
-    got = hs.selectExpr("doc_id", *(f"{DD.sql_minhash_min('spark', j)} AS m{j}" for j in range(DD.MH_PERMS)))
-    want = hs.select("doc_id", *(col_minhash_min(F.col("hs"), j).alias(f"m{j}") for j in range(DD.MH_PERMS)))
-    assert sorted(got.collect()) == sorted(want.collect())
-
-
 def _py4j_commands(spark, fn) -> int:
     """Commands fn sends to the JVM. Garbage is collected first and the
     collector is paused while fn runs, so proxy releases of earlier
