@@ -43,6 +43,12 @@ def _sql_str(s: str, dialect: str) -> str:
     return f"'{s}'"
 
 
+def _ident(name: str) -> str:
+    """Column ``name`` as a quoted Spark SQL identifier, so any name
+    (spaces, hyphens, dots, reserved words) refers to that column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _dbl(x: float, dialect: str) -> str:
     """A DOUBLE literal (Spark reads a bare ``0.4`` as a DECIMAL)."""
     return f"{x!r}D" if dialect == "spark" else repr(x)
@@ -50,7 +56,7 @@ def _dbl(x: float, dialect: str) -> str:
 
 def tokens(col: str) -> Column:
     """Lowercased alphanumeric tokens (the whitespace+punct tokenizer)."""
-    return F.expr(sql_tokens(col, "spark"))
+    return F.expr(sql_tokens(_ident(col), "spark"))
 
 
 def sql_tokens(expr: str, dialect: str) -> str:
@@ -60,7 +66,7 @@ def sql_tokens(expr: str, dialect: str) -> str:
 
 
 def token_count(col: str) -> Column:
-    return F.expr(sql_token_count(col, "spark"))
+    return F.expr(sql_token_count(_ident(col), "spark"))
 
 
 def sql_token_count(expr: str, dialect: str) -> str:
@@ -77,7 +83,7 @@ def bpe_ish_token_count(col: str) -> Column:
     each count as a token (a cheap, deterministic stand-in for a real
     tokenizer's token count; the regex mirrors GPT-2's coarse classes).
     """
-    return F.expr(sql_bpe_ish_token_count(col, "spark"))
+    return F.expr(sql_bpe_ish_token_count(_ident(col), "spark"))
 
 
 def sql_bpe_ish_token_count(expr: str, dialect: str) -> str:
@@ -89,7 +95,7 @@ def sql_bpe_ish_token_count(expr: str, dialect: str) -> str:
 
 def alpha_ratio(col: str) -> Column:
     """Fraction of characters that are ASCII letters (0 for empty)."""
-    return F.expr(sql_alpha_ratio(col, "spark"))
+    return F.expr(sql_alpha_ratio(_ident(col), "spark"))
 
 
 def _sql_n_alpha(expr: str, dialect: str) -> str:
@@ -116,7 +122,7 @@ def lang_id(col: str) -> Column:
     """Stopword-marker language heuristic: argmax of per-language marker
     counts; 'und' (undetermined) when no marker fires. Ties break by
     language code order (deterministic)."""
-    return F.expr(sql_lang_id(col, "spark"))
+    return F.expr(sql_lang_id(_ident(col), "spark"))
 
 
 def sql_lang_id(expr: str, dialect: str) -> str:
@@ -135,7 +141,7 @@ def quality_score(col: str) -> Column:
     """Deterministic [0,1] quality heuristic:
     0.4·min(1, tokens/100) + 0.4·alpha_ratio + 0.2·[5 ≤ mean_word_len·10 ≤ 120].
     Pure double arithmetic with a fixed op order (oracle-identical)."""
-    return F.expr(sql_quality_score(col, "spark"))
+    return F.expr(sql_quality_score(_ident(col), "spark"))
 
 
 def sql_quality_score(expr: str, dialect: str) -> str:
@@ -167,7 +173,7 @@ def fingerprint(col: str) -> Column:
     content fingerprint stable under trailing-whitespace noise.
     Collision needs agreement mod both primes, so corpus-scale exact
     dedup doesn't silently merge distinct documents."""
-    return F.expr(sql_fingerprint(col, "spark"))
+    return F.expr(sql_fingerprint(_ident(col), "spark"))
 
 
 def sql_fingerprint(expr: str, dialect: str) -> str:
