@@ -41,6 +41,12 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 
 def q(name: str, oracle: str | None, doc: str = ""):
+    """Register ``fn(spark, sf_dir)`` under ``name``: as a decorator,
+    or called as ``q(name, oracle, doc)(fn)`` for a function defined
+    elsewhere. A name registers once."""
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn):
         REGISTRY[name] = QuerySpec(fn, oracle, doc)
         return fn
@@ -477,42 +483,30 @@ def p8_key_codec_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
 from hbasewd_spark.operators import relational as R  # noqa: E402
 
 
-def _rel(name: str, fn, oracle: str, doc: str = "") -> None:
-    REGISTRY[name] = QuerySpec(
-        lambda spark, sf_dir, _fn=fn: _fn(spark, sf_dir), oracle, doc
-    )
-
-
-_rel("rel_q1_pricing_summary", R.q1_pricing_summary, R.Q1_ORACLE,
-     "TPC-H Q1: grouped 8-aggregate scan, decimal-exact sums")
-_rel("rel_join_broadcast", R.join_broadcast_revenue, R.JOIN_BROADCAST_ORACLE,
-     "fact⋈dim broadcast hash join + countDistinct")
-_rel("rel_join_multiway", R.join_multiway_region_revenue, R.JOIN_MULTIWAY_ORACLE,
-     "TPC-H Q5 shape: 5-table star join, all dims broadcast")
-_rel("rel_join_semi_anti", R.join_semi_anti, R.JOIN_SEMI_ANTI_ORACLE,
-     "left_semi/left_anti (EXISTS / NOT EXISTS)")
-_rel("rel_window_running", R.window_running_total, R.WINDOW_RUNNING_ORACLE,
-     "running sum + row_number + lag per customer")
-_rel("rel_topk_per_group", R.topk_per_group, R.TOPK_ORACLE,
-     "windowed top-k per group")
-_rel("rel_rollup", R.rollup_lineitem, R.ROLLUP_ORACLE, "ROLLUP + grouping()")
-_rel("rel_cube", R.cube_orders, R.CUBE_ORACLE, "CUBE + grouping()")
-_rel("rel_set_ops", R.set_ops_nations, R.SET_OPS_ORACLE,
-     "union/intersect/except")
-_rel("rel_scalar_gallery", R.scalar_gallery, R.SCALAR_ORACLE,
-     "string/math scalar built-ins")
-_rel("rel_date_gallery", R.date_gallery, R.DATE_ORACLE,
-     "date part extraction + date_trunc rollup")
-_rel("rel_pivot", R.pivot_event_counts, R.PIVOT_ORACLE,
-     "pivot event_type -> columns")
-_rel("rel_range_join", R.range_join_order_events, R.RANGE_JOIN_ORACLE,
-     "non-equi interval join with broadcast build side")
-_rel("rel_asof_lag", R.asof_prev_event, R.ASOF_ORACLE,
-     "as-of previous-event join via lag window")
-_rel("rel_sessionization", R.sessionize, R.SESSIONIZE_ORACLE,
-     "gap-based sessionization via lag+cumsum")
-_rel("rel_window_tumbling", R.tumbling_window_agg, R.TUMBLING_ORACLE,
-     "tumbling event-time windows (batch twin of streaming agg)")
+q("rel_q1_pricing_summary", R.Q1_ORACLE,
+  "TPC-H Q1: grouped 8-aggregate scan, decimal-exact sums")(R.q1_pricing_summary)
+q("rel_join_broadcast", R.JOIN_BROADCAST_ORACLE,
+  "fact⋈dim broadcast hash join + countDistinct")(R.join_broadcast_revenue)
+q("rel_join_multiway", R.JOIN_MULTIWAY_ORACLE,
+  "TPC-H Q5 shape: 5-table star join, all dims broadcast")(R.join_multiway_region_revenue)
+q("rel_join_semi_anti", R.JOIN_SEMI_ANTI_ORACLE,
+  "left_semi/left_anti (EXISTS / NOT EXISTS)")(R.join_semi_anti)
+q("rel_window_running", R.WINDOW_RUNNING_ORACLE,
+  "running sum + row_number + lag per customer")(R.window_running_total)
+q("rel_topk_per_group", R.TOPK_ORACLE, "windowed top-k per group")(R.topk_per_group)
+q("rel_rollup", R.ROLLUP_ORACLE, "ROLLUP + grouping()")(R.rollup_lineitem)
+q("rel_cube", R.CUBE_ORACLE, "CUBE + grouping()")(R.cube_orders)
+q("rel_set_ops", R.SET_OPS_ORACLE, "union/intersect/except")(R.set_ops_nations)
+q("rel_scalar_gallery", R.SCALAR_ORACLE, "string/math scalar built-ins")(R.scalar_gallery)
+q("rel_date_gallery", R.DATE_ORACLE, "date part extraction + date_trunc rollup")(R.date_gallery)
+q("rel_pivot", R.PIVOT_ORACLE, "pivot event_type -> columns")(R.pivot_event_counts)
+q("rel_range_join", R.RANGE_JOIN_ORACLE,
+  "non-equi interval join with broadcast build side")(R.range_join_order_events)
+q("rel_asof_lag", R.ASOF_ORACLE, "as-of previous-event join via lag window")(R.asof_prev_event)
+q("rel_sessionization", R.SESSIONIZE_ORACLE,
+  "gap-based sessionization via lag+cumsum")(R.sessionize)
+q("rel_window_tumbling", R.TUMBLING_ORACLE,
+  "tumbling event-time windows (batch twin of streaming agg)")(R.tumbling_window_agg)
 
 
 @q(
@@ -543,8 +537,6 @@ def rel_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 from hbasewd_spark.operators import skew as SK  # noqa: E402
-
-_rel2 = _rel  # same registration helper
 
 
 @q(
@@ -577,113 +569,117 @@ def p8_bytecompat_salted_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_rel("rel_json_extract", R.json_extract_stats, R.JSON_ORACLE,
-     "JSON scalar extraction + agg over events.props")
-_rel("rel_window_analytics", R.window_analytics, R.WINDOW_ANALYTICS_ORACLE,
-     "rank/dense_rank/ntile/percent_rank/cume_dist/first/last/lead")
-_rel("rel_range_frame", R.range_frame_window, R.RANGE_FRAME_ORACLE,
-     "RANGE BETWEEN value-window frames")
-_rel("rel_subqueries", R.subquery_battery, R.SUBQUERY_ORACLE,
-     "EXISTS / IN / scalar subqueries (identical SQL both engines)")
-_rel("rel_string_agg", R.string_agg_per_nation, R.STRING_AGG_ORACLE,
-     "order-stable string aggregation")
-_rel("rel_unpivot", R.unpivot_part_measures, R.UNPIVOT_ORACLE,
-     "unpivot wide->long via stack()")
-REGISTRY["rel_approx_stats"] = QuerySpec(
-    R.approx_stats, None,
-    "HLL++ approx distinct + quantile sketch (rows-only: sketches are "
-    "engine-specific by design; error bounds asserted in tests)",
-)
-_rel("rel_exact_stats", R.exact_stats, R.EXACT_STATS_SQL,
-     "hash-checkable companion to rel_approx_stats: exact "
-     "count(DISTINCT) + percentile_disc (identical SQL both engines; "
-     "discrete quantiles pick data elements, so no cross-engine float "
-     "interpolation drift)")
-_rel("perf_skew_salted_rollup", SK.skewed_user_rollup, SK.SKEWED_ROLLUP_ORACLE,
-     "two-phase salt-split aggregation (skew-immune groupBy)")
-_rel("rel_cdc_upsert", R.cdc_upsert_orders, R.CDC_UPSERT_ORACLE,
-     "MERGE-style upsert (anti-join + union) with post-merge rollup")
-_rel("rel_q4_order_priority", R.q4_order_priority, R.Q4_ORACLE,
-     "TPC-H Q4 shape: EXISTS via left_semi")
-_rel("rel_q6_forecast", R.q6_forecast_revenue, R.Q6_ORACLE,
-     "TPC-H Q6 shape: pure pushdown filter + aggregate")
-_rel("rel_q3_shipping_priority", R.q3_shipping_priority, R.Q3_ORACLE,
-     "TPC-H Q3 shape: join + grouped revenue + deterministic top-10")
-_rel("rel_collections", R.collection_functions, R.COLLECTION_ORACLE,
-     "array/map/struct + higher-order function gallery")
-_rel("rel_q14_promo_revenue", R.q14_promo_revenue, R.Q14_ORACLE,
-     "TPC-H Q14 shape: broadcast fact-dim join + conditional agg")
-_rel("rel_time_weighted_avg", R.time_weighted_avg, R.TWA_ORACLE,
-     "time-weighted average over irregular series (lead window + "
-     "exact integer-microsecond weights)")
-_rel("rel_event_funnel", R.event_funnel, R.FUNNEL_ORACLE,
-     "ordered view->click->purchase funnel via sequential conditional "
-     "mins (no per-user sort); identical SQL both engines")
-_rel("rel_rolling_anomaly", R.rolling_anomaly, R.ANOMALY_SQL,
-     "trailing-48h z-score anomaly counts per event type; decimal frame "
-     "sums make the rolling moments fold-order-independent")
-_rel("rel_q7_volume_shipping", R.q7_volume_shipping, R.Q7_ORACLE,
-     "TPC-H Q7 shape: bilateral nation trade volume by ship year")
-_rel("rel_q10_returned_items", R.q10_returned_items, R.Q10_ORACLE,
-     "TPC-H Q10 shape: returned-revenue per customer, deterministic top-20")
-_rel("rel_q15_top_supplier", R.q15_top_supplier, R.Q15_ORACLE,
-     "TPC-H Q15 shape: scalar-subquery-on-aggregate (max quarterly revenue)")
-_rel("rel_q18_large_orders", R.q18_large_orders, R.Q18_ORACLE,
-     "TPC-H Q18 shape: HAVING-filtered order volumes, aggregate reused")
-_rel("rel_q19_disjunctive", R.q19_disjunctive_revenue, R.Q19_ORACLE,
-     "TPC-H Q19 shape: 3-way disjunctive join predicate, single scan")
-_rel("rel_lateral_topn", R.lateral_topn, R.LATERAL_ORACLE,
-     "correlated LATERAL subquery: top-3 orders per customer")
-_rel("rel_join_full_outer", R.join_full_outer, R.JOIN_FULL_OUTER_ORACLE,
-     "FULL OUTER join with nulls on both sides")
-_rel("rel_table_stats", R.table_stats, R.TABLE_STATS_ORACLE,
-     "ANALYZE-style column statistics in one aggregation pass")
-_rel("rel_time_range_frame", R.time_range_frame, R.TIME_RANGE_FRAME_ORACLE,
-     "sliding event-time RANGE frame (trailing-hour activity per event)")
+q("rel_json_extract", R.JSON_ORACLE,
+  "JSON scalar extraction + agg over events.props")(R.json_extract_stats)
+q("rel_window_analytics", R.WINDOW_ANALYTICS_ORACLE,
+  "rank/dense_rank/ntile/percent_rank/cume_dist/first/last/lead")(R.window_analytics)
+q("rel_range_frame", R.RANGE_FRAME_ORACLE,
+  "RANGE BETWEEN value-window frames")(R.range_frame_window)
+q("rel_subqueries", R.SUBQUERY_ORACLE,
+  "EXISTS / IN / scalar subqueries (identical SQL both engines)")(R.subquery_battery)
+q("rel_string_agg", R.STRING_AGG_ORACLE, "order-stable string aggregation")(R.string_agg_per_nation)
+q("rel_unpivot", R.UNPIVOT_ORACLE, "unpivot wide->long via stack()")(R.unpivot_part_measures)
+q("rel_approx_stats", None,
+  "HLL++ approx distinct + quantile sketch (rows-only: sketches are "
+  "engine-specific by design; error bounds asserted in tests)")(R.approx_stats)
+q("rel_exact_stats", R.EXACT_STATS_SQL,
+  "hash-checkable companion to rel_approx_stats: exact "
+  "count(DISTINCT) + percentile_disc (identical SQL both engines; "
+  "discrete quantiles pick data elements, so no cross-engine float "
+  "interpolation drift)")(R.exact_stats)
+q("perf_skew_salted_rollup", SK.SKEWED_ROLLUP_ORACLE,
+  "two-phase salt-split aggregation (skew-immune groupBy)")(SK.skewed_user_rollup)
+q("rel_cdc_upsert", R.CDC_UPSERT_ORACLE,
+  "MERGE-style upsert (anti-join + union) with post-merge rollup")(R.cdc_upsert_orders)
+q("rel_q4_order_priority", R.Q4_ORACLE, "TPC-H Q4 shape: EXISTS via left_semi")(R.q4_order_priority)
+q("rel_q6_forecast", R.Q6_ORACLE,
+  "TPC-H Q6 shape: pure pushdown filter + aggregate")(R.q6_forecast_revenue)
+q("rel_q3_shipping_priority", R.Q3_ORACLE,
+  "TPC-H Q3 shape: join + grouped revenue + deterministic top-10")(R.q3_shipping_priority)
+q("rel_collections", R.COLLECTION_ORACLE,
+  "array/map/struct + higher-order function gallery")(R.collection_functions)
+q("rel_q14_promo_revenue", R.Q14_ORACLE,
+  "TPC-H Q14 shape: broadcast fact-dim join + conditional agg")(R.q14_promo_revenue)
+q("rel_time_weighted_avg", R.TWA_ORACLE,
+  "time-weighted average over irregular series (lead window + "
+  "exact integer-microsecond weights)")(R.time_weighted_avg)
+q("rel_event_funnel", R.FUNNEL_ORACLE,
+  "ordered view->click->purchase funnel via sequential conditional "
+  "mins (no per-user sort); identical SQL both engines")(R.event_funnel)
+q("rel_rolling_anomaly", R.ANOMALY_SQL,
+  "trailing-48h z-score anomaly counts per event type; decimal frame "
+  "sums make the rolling moments fold-order-independent")(R.rolling_anomaly)
+q("rel_q7_volume_shipping", R.Q7_ORACLE,
+  "TPC-H Q7 shape: bilateral nation trade volume by ship year")(R.q7_volume_shipping)
+q("rel_q10_returned_items", R.Q10_ORACLE,
+  "TPC-H Q10 shape: returned-revenue per customer, deterministic top-20")(R.q10_returned_items)
+q("rel_q15_top_supplier", R.Q15_ORACLE,
+  "TPC-H Q15 shape: scalar-subquery-on-aggregate (max quarterly revenue)")(R.q15_top_supplier)
+q("rel_q18_large_orders", R.Q18_ORACLE,
+  "TPC-H Q18 shape: HAVING-filtered order volumes, aggregate reused")(R.q18_large_orders)
+q("rel_q19_disjunctive", R.Q19_ORACLE,
+  "TPC-H Q19 shape: 3-way disjunctive join predicate, single scan")(R.q19_disjunctive_revenue)
+q("rel_lateral_topn", R.LATERAL_ORACLE,
+  "correlated LATERAL subquery: top-3 orders per customer")(R.lateral_topn)
+q("rel_join_full_outer", R.JOIN_FULL_OUTER_ORACLE,
+  "FULL OUTER join with nulls on both sides")(R.join_full_outer)
+q("rel_table_stats", R.TABLE_STATS_ORACLE,
+  "ANALYZE-style column statistics in one aggregation pass")(R.table_stats)
+q("rel_time_range_frame", R.TIME_RANGE_FRAME_ORACLE,
+  "sliding event-time RANGE frame (trailing-hour activity per event)")(R.time_range_frame)
 
 from hbasewd_spark.operators import tpch2 as T2  # noqa: E402
 
-_rel("rel_q8_market_share", T2.q8_market_share, T2.Q8_ORACLE,
-     "TPC-H Q8 shape: regional market share per year (2 fact shuffles, 4 broadcast dims)")
-_rel("rel_q13_order_distribution", T2.q13_order_distribution, T2.Q13_ORACLE,
-     "TPC-H Q13 shape: histogram of per-customer order counts (outer join + double agg)")
-_rel("rel_q16_supplier_variety", T2.q16_supplier_variety, T2.Q16_ORACLE,
-     "TPC-H Q16 shape: distinct-supplier variety per part sliver (bridge + anti-join)")
-_rel("rel_q17_small_qty_revenue", T2.q17_small_qty_revenue, T2.Q17_ORACLE,
-     "TPC-H Q17 shape: below-20%-of-part-average revenue (window threshold, no self-join)")
-_rel("rel_q21_waiting_suppliers", T2.q21_waiting_suppliers, T2.Q21_ORACLE,
-     "TPC-H Q21 shape: sole-late supplier (EXISTS/NOT EXISTS vs one-aggregate reformulation)")
-_rel("rel_q22_sales_opportunity", T2.q22_sales_opportunity, T2.Q22_ORACLE,
-     "TPC-H Q22 shape: dormant high-balance customers (scalar-subquery threshold + anti-join)")
-_rel("rel_q2_min_cost_supplier", T2.q2_min_cost_supplier, T2.Q2_ORACLE,
-     "TPC-H Q2 shape: argmin-per-group window vs textbook correlated-min oracle")
-_rel("rel_q11_important_parts", T2.q11_important_parts, T2.Q11_ORACLE,
-     "TPC-H Q11 shape: grouped HAVING against a global scalar (one fact pass)")
-_rel("rel_q20_dominant_suppliers", T2.q20_dominant_suppliers, T2.Q20_ORACLE,
-     "TPC-H Q20 shape: nested semi-join chain vs correlated-HAVING oracle")
-_rel("rel_q5_local_supplier", T2.q5_local_supplier_volume, T2.Q5_ORACLE,
-     "TPC-H Q5 exact: local-supplier volume (c_nationkey=s_nationkey twist, dims broadcast)")
-_rel("rel_q9_product_profit", T2.q9_product_profit, T2.Q9_ORACLE,
-     "TPC-H Q9 shape: profit per nation per year (retailprice cost proxy; part semi-filter first)")
-_rel("rel_q12_priority_shipping", T2.q12_priority_shipping, T2.Q12_ORACLE,
-     "TPC-H Q12 shape: CASE-sum priority histogram by shipping-lag bucket")
+q("rel_q8_market_share", T2.Q8_ORACLE,
+  "TPC-H Q8 shape: regional market share per year (2 fact shuffles, 4 broadcast dims)",
+)(T2.q8_market_share)
+q("rel_q13_order_distribution", T2.Q13_ORACLE,
+  "TPC-H Q13 shape: histogram of per-customer order counts (outer join + double agg)",
+)(T2.q13_order_distribution)
+q("rel_q16_supplier_variety", T2.Q16_ORACLE,
+  "TPC-H Q16 shape: distinct-supplier variety per part sliver (bridge + anti-join)",
+)(T2.q16_supplier_variety)
+q("rel_q17_small_qty_revenue", T2.Q17_ORACLE,
+  "TPC-H Q17 shape: below-20%-of-part-average revenue (window threshold, no self-join)",
+)(T2.q17_small_qty_revenue)
+q("rel_q21_waiting_suppliers", T2.Q21_ORACLE,
+  "TPC-H Q21 shape: sole-late supplier (EXISTS/NOT EXISTS vs one-aggregate reformulation)",
+)(T2.q21_waiting_suppliers)
+q("rel_q22_sales_opportunity", T2.Q22_ORACLE,
+  "TPC-H Q22 shape: dormant high-balance customers (scalar-subquery threshold + anti-join)",
+)(T2.q22_sales_opportunity)
+q("rel_q2_min_cost_supplier", T2.Q2_ORACLE,
+  "TPC-H Q2 shape: argmin-per-group window vs textbook correlated-min oracle",
+)(T2.q2_min_cost_supplier)
+q("rel_q11_important_parts", T2.Q11_ORACLE,
+  "TPC-H Q11 shape: grouped HAVING against a global scalar (one fact pass)")(T2.q11_important_parts)
+q("rel_q20_dominant_suppliers", T2.Q20_ORACLE,
+  "TPC-H Q20 shape: nested semi-join chain vs correlated-HAVING oracle")(T2.q20_dominant_suppliers)
+q("rel_q5_local_supplier", T2.Q5_ORACLE,
+  "TPC-H Q5 exact: local-supplier volume (c_nationkey=s_nationkey twist, dims broadcast)",
+)(T2.q5_local_supplier_volume)
+q("rel_q9_product_profit", T2.Q9_ORACLE,
+  "TPC-H Q9 shape: profit per nation per year (retailprice cost proxy; part semi-filter first)",
+)(T2.q9_product_profit)
+q("rel_q12_priority_shipping", T2.Q12_ORACLE,
+  "TPC-H Q12 shape: CASE-sum priority histogram by shipping-lag bucket")(T2.q12_priority_shipping)
 
 from hbasewd_spark.operators import chunking as CH  # noqa: E402
 
-_rel("ext_text_chunking", CH.chunk_documents, CH.chunking_oracle(),
-     "context-window chunking: overlapping 64-token windows, stride 48")
-_rel("ext_pack_sequences", CH.pack_sequences, CH.packing_oracle(),
-     "sequence packing: sharded prefix-sum assignment to token-budget bins")
-_rel("ext_length_buckets", CH.length_buckets, CH.length_buckets_oracle(),
-     "quartile length-bucketing for batching: exact percentile_disc "
-     "cutoffs (one broadcast row) -> per-bucket doc/token profile")
+q("ext_text_chunking", CH.chunking_oracle(),
+  "context-window chunking: overlapping 64-token windows, stride 48")(CH.chunk_documents)
+q("ext_pack_sequences", CH.packing_oracle(),
+  "sequence packing: sharded prefix-sum assignment to token-budget bins")(CH.pack_sequences)
+q("ext_length_buckets", CH.length_buckets_oracle(),
+  "quartile length-bucketing for batching: exact percentile_disc "
+  "cutoffs (one broadcast row) -> per-bucket doc/token profile")(CH.length_buckets)
 
 from hbasewd_spark.operators import ranking as RK  # noqa: E402
 
-_rel("ext_text_bm25", RK.bm25_rank, RK.bm25_oracle(),
-     "BM25 top-20 retrieval: term-filtered tf, broadcast stats, fixed fold order")
-_rel("ext_hybrid_retrieval", RK.hybrid_retrieval, RK.hybrid_oracle(),
-     "hybrid search: BM25 candidates + embedding cosine rerank (two-tower blend)")
+q("ext_text_bm25", RK.bm25_oracle(),
+  "BM25 top-20 retrieval: term-filtered tf, broadcast stats, fixed fold order")(RK.bm25_rank)
+q("ext_hybrid_retrieval", RK.hybrid_oracle(),
+  "hybrid search: BM25 candidates + embedding cosine rerank (two-tower blend)")(RK.hybrid_retrieval)
 
 
 # ===========================================================================
@@ -695,8 +691,8 @@ from hbasewd_spark.operators import dedup as DD  # noqa: E402
 from hbasewd_spark.operators import multimodal as MM  # noqa: E402
 from hbasewd_spark.operators import similarity as SIM  # noqa: E402
 
-_rel("ext_multimodal_audio_segments", MM.audio_segments, MM.AUDIO_SEGMENTS_ORACLE,
-     "pure-Catalyst audio byte-segmentation, md5-verified bytes")
+q("ext_multimodal_audio_segments", MM.AUDIO_SEGMENTS_ORACLE,
+  "pure-Catalyst audio byte-segmentation, md5-verified bytes")(MM.audio_segments)
 
 
 @q(
@@ -767,186 +763,109 @@ def ext_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", TX.fingerprint("text").alias("fp"))
 
 
-REGISTRY["ext_dedup_exact"] = QuerySpec(
-    DD.exact_dedup, DD.exact_dedup_oracle(), "exact dedup via fingerprint groupBy"
-)
-REGISTRY["ext_dedup_minhash_pairs"] = QuerySpec(
-    DD.minhash_dedup_pairs,
-    DD.minhash_pairs_oracle(),
-    "MinHash(16 perms, 4 bands)+LSH candidates, exact-Jaccard verified",
-)
-REGISTRY["ext_dedup_simhash"] = QuerySpec(
-    DD.simhash_df, DD.simhash_oracle(), "32-bit SimHash fingerprints (bit-sliced agg)"
-)
-REGISTRY["ext_dedup_simhash_pairs"] = QuerySpec(
-    DD.simhash_neardup_pairs,
-    DD.simhash_pairs_oracle(),
-    "SimHash near-dups: 8-bit-block LSH + Hamming<=3 verify",
-)
-REGISTRY["ext_dedup_ngram_jaccard"] = QuerySpec(
-    DD.ngram_jaccard_pairs,
-    DD.ngram_jaccard_oracle(),
-    "char-4-gram Jaccard pairs, lang-blocked",
-)
-REGISTRY["ext_dedup_substring"] = QuerySpec(
-    DD.substring_dup_coverage,
-    DD.substring_dup_oracle(),
-    "exact-substring dedup (Lee et al. ACL'22 re-expressed): per-doc "
-    "duplicated 20-gram coverage at full density — hash-before-explode, "
-    "only (doc_id, hash) ever shuffles",
-)
-REGISTRY["ext_dedup_substring_spans"] = QuerySpec(
-    DD.substring_dup_spans,
-    DD.substring_spans_oracle(),
-    "the removal step of exact-substring dedup: non-canonical "
-    "duplicated-gram occurrences merged into spans (gaps-and-islands), "
-    "per-doc span count / removed chars / kept chars — a full rewrite "
-    "plan, every document present",
-)
-REGISTRY["ext_dedup_substring_rewrite"] = QuerySpec(
-    DD.substring_dup_rewrite,
-    DD.substring_rewrite_oracle(),
-    "the REWRITE completing Lee et al. exact-substring dedup: emit the "
-    "cleaned text itself — non-canonical duplicated spans cut by a "
-    "row-local Catalyst fold over the collected span array; clean docs "
-    "pass through byte-identical (round-trip property: kept_chars == "
-    "length(rewritten_text) == the spans accounting's kept_chars)",
-)
-REGISTRY["ext_dedup_winnow"] = QuerySpec(
-    DD.winnow_neardup_pairs,
-    DD.winnow_pairs_oracle(),
-    "winnowing fingerprints (Schleimer/MOSS SIGMOD'03): window-min "
-    "selected k-grams, stop-gram capped, pair join blocked on the "
-    "fingerprint — the ~4.5x-sparser scale path beside ext_dedup_substring",
-)
-REGISTRY["ext_sim_brute_topk"] = QuerySpec(
-    SIM.brute_topk, SIM.brute_topk_oracle(), "exact cosine top-k (broadcast queries)"
-)
-REGISTRY["ext_sim_ivf_topk"] = QuerySpec(
-    SIM.ivf_topk, SIM.ivf_topk_oracle(), "IVF ANN: cell assignment + probe + re-rank"
-)
-REGISTRY["ext_sim_quantized_topk"] = QuerySpec(
-    SIM.quantized_topk,
-    SIM.quantized_topk_oracle(),
-    "int8-quantized cosine top-k: symmetric per-vector quantization "
-    "(scale cancels in cosine, so scoring is pure integer dots + one "
-    "sqrt — bit-exact cross-engine); 4x smaller vectors, the "
-    "memory-bound ANN path",
-)
-REGISTRY["ext_embed_lsh_neardup"] = QuerySpec(
-    SIM.lsh_bucketed_neardup,
-    SIM.lsh_bucketed_neardup_oracle(),
-    "signed-random-projection LSH bucketing + exact same-bucket cosine "
-    "- the scale path for embedding near-dup",
-)
-REGISTRY["ext_embed_neardup_pairs"] = QuerySpec(
-    SIM.embedding_neardup_pairs,
-    SIM.embedding_neardup_oracle(),
-    "embedding cosine near-dup pairs, label-blocked",
-)
-REGISTRY["ext_multimodal_stats"] = QuerySpec(
-    MM.media_stats,
-    MM.MEDIA_STATS_ORACLE,
-    "binary media columns: mapInPandas fake-decode -> per-format rollup",
-)
-REGISTRY["ext_embed_gram"] = QuerySpec(
-    SIM.embed_gram_matrix,
-    SIM.embed_gram_oracle(),
-    "exact-integer Gram matrix over quantized embeddings (covariance/"
-    "PCA building blocks): mapInPandas d x d int64 partial per Arrow "
-    "batch, 2080-row shuffle per partition regardless of corpus size",
-)
-REGISTRY["ext_semdedup"] = QuerySpec(
-    SIM.semdedup_summary,
-    SIM.semdedup_oracle(),
-    "SemDeDup: k-means-cell blocking + within-cell cosine dedup "
-    "(cluster count scales with corpus - the principled blocking key)",
-)
+q("ext_dedup_exact", DD.exact_dedup_oracle(), "exact dedup via fingerprint groupBy")(DD.exact_dedup)
+q("ext_dedup_minhash_pairs", DD.minhash_pairs_oracle(),
+  "MinHash(16 perms, 4 bands)+LSH candidates, exact-Jaccard verified")(DD.minhash_dedup_pairs)
+q("ext_dedup_simhash", DD.simhash_oracle(),
+  "32-bit SimHash fingerprints (bit-sliced agg)")(DD.simhash_df)
+q("ext_dedup_simhash_pairs", DD.simhash_pairs_oracle(),
+  "SimHash near-dups: 8-bit-block LSH + Hamming<=3 verify")(DD.simhash_neardup_pairs)
+q("ext_dedup_ngram_jaccard", DD.ngram_jaccard_oracle(),
+  "char-4-gram Jaccard pairs, lang-blocked")(DD.ngram_jaccard_pairs)
+q("ext_dedup_substring", DD.substring_dup_oracle(),
+  "exact-substring dedup (Lee et al. ACL'22 re-expressed): per-doc "
+  "duplicated 20-gram coverage at full density — hash-before-explode, "
+  "only (doc_id, hash) ever shuffles")(DD.substring_dup_coverage)
+q("ext_dedup_substring_spans", DD.substring_spans_oracle(),
+  "the removal step of exact-substring dedup: non-canonical "
+  "duplicated-gram occurrences merged into spans (gaps-and-islands), "
+  "per-doc span count / removed chars / kept chars — a full rewrite "
+  "plan, every document present")(DD.substring_dup_spans)
+q("ext_dedup_substring_rewrite", DD.substring_rewrite_oracle(),
+  "the REWRITE completing Lee et al. exact-substring dedup: emit the "
+  "cleaned text itself — non-canonical duplicated spans cut by a "
+  "row-local Catalyst fold over the collected span array; clean docs "
+  "pass through byte-identical (round-trip property: kept_chars == "
+  "length(rewritten_text) == the spans accounting's kept_chars)")(DD.substring_dup_rewrite)
+q("ext_dedup_winnow", DD.winnow_pairs_oracle(),
+  "winnowing fingerprints (Schleimer/MOSS SIGMOD'03): window-min "
+  "selected k-grams, stop-gram capped, pair join blocked on the "
+  "fingerprint — the ~4.5x-sparser scale path beside ext_dedup_substring")(DD.winnow_neardup_pairs)
+q("ext_sim_brute_topk", SIM.brute_topk_oracle(),
+  "exact cosine top-k (broadcast queries)")(SIM.brute_topk)
+q("ext_sim_ivf_topk", SIM.ivf_topk_oracle(),
+  "IVF ANN: cell assignment + probe + re-rank")(SIM.ivf_topk)
+q("ext_sim_quantized_topk", SIM.quantized_topk_oracle(),
+  "int8-quantized cosine top-k: symmetric per-vector quantization "
+  "(scale cancels in cosine, so scoring is pure integer dots + one "
+  "sqrt — bit-exact cross-engine); 4x smaller vectors, the "
+  "memory-bound ANN path")(SIM.quantized_topk)
+q("ext_embed_lsh_neardup", SIM.lsh_bucketed_neardup_oracle(),
+  "signed-random-projection LSH bucketing + exact same-bucket cosine "
+  "- the scale path for embedding near-dup")(SIM.lsh_bucketed_neardup)
+q("ext_embed_neardup_pairs", SIM.embedding_neardup_oracle(),
+  "embedding cosine near-dup pairs, label-blocked")(SIM.embedding_neardup_pairs)
+q("ext_multimodal_stats", MM.MEDIA_STATS_ORACLE,
+  "binary media columns: mapInPandas fake-decode -> per-format rollup")(MM.media_stats)
+q("ext_embed_gram", SIM.embed_gram_oracle(),
+  "exact-integer Gram matrix over quantized embeddings (covariance/"
+  "PCA building blocks): mapInPandas d x d int64 partial per Arrow "
+  "batch, 2080-row shuffle per partition regardless of corpus size")(SIM.embed_gram_matrix)
+q("ext_semdedup", SIM.semdedup_oracle(),
+  "SemDeDup: k-means-cell blocking + within-cell cosine dedup "
+  "(cluster count scales with corpus - the principled blocking key)")(SIM.semdedup_summary)
 
 from hbasewd_spark.operators import curation as CU  # noqa: E402
 
-REGISTRY["ext_passage_dedup"] = QuerySpec(
-    CU.passage_dedup,
-    CU.passage_dedup_oracle(),
-    "repeated-passage removal: 20-token segment fingerprints, "
-    "skew-immune min-agg first-occurrence resolution",
-)
-REGISTRY["ext_domain_mixture"] = QuerySpec(
-    CU.domain_mixture,
-    CU.domain_mixture_oracle(),
-    "mixture reweighting: per-source sampling rates realizing a "
-    "target token mixture without upsampling",
-)
-REGISTRY["ext_temperature_mixture"] = QuerySpec(
-    CU.temperature_mixture,
-    CU.temperature_mixture_oracle(),
-    "temperature-scaled (alpha=0.5) language resampling with "
-    "deterministic hash-bucket draws (sqrt is IEEE-exact cross-engine)",
-)
+q("ext_passage_dedup", CU.passage_dedup_oracle(),
+  "repeated-passage removal: 20-token segment fingerprints, "
+  "skew-immune min-agg first-occurrence resolution")(CU.passage_dedup)
+q("ext_domain_mixture", CU.domain_mixture_oracle(),
+  "mixture reweighting: per-source sampling rates realizing a "
+  "target token mixture without upsampling")(CU.domain_mixture)
+q("ext_temperature_mixture", CU.temperature_mixture_oracle(),
+  "temperature-scaled (alpha=0.5) language resampling with "
+  "deterministic hash-bucket draws (sqrt is IEEE-exact cross-engine)")(CU.temperature_mixture)
 from hbasewd_spark.operators import training as TR  # noqa: E402
 
-REGISTRY["ext_token_budget_sample"] = QuerySpec(
-    TR.token_budget_sample,
-    TR.token_budget_oracle(),
-    "hard token-budget selection per language in seeded-hash order; "
-    "two-phase hash-bucket prefix sum (bounded offsets relation "
-    "broadcast back) — no language ever funnels through one window "
-    "partition",
-)
-REGISTRY["ext_shard_plan"] = QuerySpec(
-    TR.shard_plan,
-    TR.shard_plan_oracle(),
-    "deterministic 64-way training-shard layout audit: per-shard "
-    "doc/token mass + overflow-closed membership checksum; one scan, "
-    "one map-side-combinable agg, reproducible on any engine",
-)
-REGISTRY["ext_unigram_familiarity"] = QuerySpec(
-    TR.unigram_familiarity,
-    TR.unigram_familiarity_oracle(),
-    "corpus-frequency familiarity score (CCNet-perplexity stand-in): "
-    "vocabulary equi-joined back by token (never pinned broadcast — "
-    "Catalyst stats pick; 100-TB vocabularies degrade to an AQE "
-    "skew-split shuffle join), integer-division scoring for "
-    "bit-identical cross-engine results",
-)
+q("ext_token_budget_sample", TR.token_budget_oracle(),
+  "hard token-budget selection per language in seeded-hash order; "
+  "two-phase hash-bucket prefix sum (bounded offsets relation "
+  "broadcast back) — no language ever funnels through one window "
+  "partition")(TR.token_budget_sample)
+q("ext_shard_plan", TR.shard_plan_oracle(),
+  "deterministic 64-way training-shard layout audit: per-shard "
+  "doc/token mass + overflow-closed membership checksum; one scan, "
+  "one map-side-combinable agg, reproducible on any engine")(TR.shard_plan)
+q("ext_unigram_familiarity", TR.unigram_familiarity_oracle(),
+  "corpus-frequency familiarity score (CCNet-perplexity stand-in): "
+  "vocabulary equi-joined back by token (never pinned broadcast — "
+  "Catalyst stats pick; 100-TB vocabularies degrade to an AQE "
+  "skew-split shuffle join), integer-division scoring for "
+  "bit-identical cross-engine results")(TR.unigram_familiarity)
 from hbasewd_spark.operators import minhash_index as MHI
 
-REGISTRY["ext_dedup_incremental"] = QuerySpec(
-    MHI.incremental_dedup,
-    MHI.incremental_dedup_oracle(),
-    "incremental near-dup detection against a PERSISTED MinHash/LSH "
-    "band index: corpus indexed once, new batch probed via "
-    "batch-broadcast map-side joins — no corpus recompute or shuffle "
-    "(the 100-TB daily-ingest shape)",
-)
-REGISTRY["ext_quality_calibration"] = QuerySpec(
-    CU.quality_calibration,
-    CU.quality_calibration_oracle(),
-    "per-language percentile_disc quality cutoffs hitting a target "
-    "keep rate + surviving-doc counts (threshold calibration before "
-    "a quality filter)",
-)
-REGISTRY["ext_embed_outliers"] = QuerySpec(
-    SIM.embed_outliers,
-    SIM.embed_outliers_oracle(),
-    "semantic outlier filter: top-k farthest vectors from their own "
-    "label centroid (decimal-mean centroid + exact-fold distances)",
-)
-REGISTRY["ext_centroid_drift"] = QuerySpec(
-    SIM.centroid_drift,
-    SIM.centroid_drift_oracle(),
-    "corpus-mixture monitoring: pairwise cosine between per-label "
-    "embedding centroids (quantized-integer means, fixed-fold dots; "
-    "the pair join is a bounded |labels|² nested loop over a "
-    "broadcast centroid relation, never corpus-sized)",
-)
-REGISTRY["ext_passage_scrub"] = QuerySpec(
-    CU.passage_scrub,
-    CU.passage_scrub_oracle(),
-    "rewrite twin of passage_dedup: documents reassembled from only "
-    "their first-occurrence 20-token segments (array_sort reassembly, "
-    "no windows; output carries length+md5 of the cleaned text)",
-)
+q("ext_dedup_incremental", MHI.incremental_dedup_oracle(),
+  "incremental near-dup detection against a PERSISTED MinHash/LSH "
+  "band index: corpus indexed once, new batch probed via "
+  "batch-broadcast map-side joins — no corpus recompute or shuffle "
+  "(the 100-TB daily-ingest shape)")(MHI.incremental_dedup)
+q("ext_quality_calibration", CU.quality_calibration_oracle(),
+  "per-language percentile_disc quality cutoffs hitting a target "
+  "keep rate + surviving-doc counts (threshold calibration before "
+  "a quality filter)")(CU.quality_calibration)
+q("ext_embed_outliers", SIM.embed_outliers_oracle(),
+  "semantic outlier filter: top-k farthest vectors from their own "
+  "label centroid (decimal-mean centroid + exact-fold distances)")(SIM.embed_outliers)
+q("ext_centroid_drift", SIM.centroid_drift_oracle(),
+  "corpus-mixture monitoring: pairwise cosine between per-label "
+  "embedding centroids (quantized-integer means, fixed-fold dots; "
+  "the pair join is a bounded |labels|² nested loop over a "
+  "broadcast centroid relation, never corpus-sized)")(SIM.centroid_drift)
+q("ext_passage_scrub", CU.passage_scrub_oracle(),
+  "rewrite twin of passage_dedup: documents reassembled from only "
+  "their first-occurrence 20-token segments (array_sort reassembly, "
+  "no windows; output carries length+md5 of the cleaned text)")(CU.passage_scrub)
 
 
 TX_TOKENS_DUCK = TX.sql_tokens("text", "duckdb")
@@ -1117,9 +1036,36 @@ def ext_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 CURATION_QUALITY_MIN = 0.7
 
 
+def _curation_oracle() -> str:
+    quality = TX.sql_quality_score("text", "duckdb")
+    lang = TX.sql_lang_id("text", "duckdb")
+    fp = TX.sql_fingerprint("text", "duckdb")
+    ntok = TX.sql_token_count("text", "duckdb")
+    pairs = DD.minhash_pairs_oracle()
+    return f"""
+    WITH enriched AS (
+      SELECT doc_id, source, {quality} AS quality, {lang} AS lang_pred,
+             {fp} AS fp, {ntok} AS n_tokens
+      FROM documents
+    ),
+    alive AS (
+      SELECT * FROM (
+        SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
+        FROM enriched
+        WHERE quality >= {CURATION_QUALITY_MIN} AND lang_pred = 'en'
+      ) WHERE rk = 1
+    ),
+    removed AS (SELECT DISTINCT doc_b AS doc_id FROM ({pairs})),
+    kept AS (SELECT * FROM alive WHERE doc_id NOT IN (SELECT doc_id FROM removed))
+    SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+           CAST(sum(CAST(quality AS DECIMAL(18,12))) AS DOUBLE) AS sum_quality
+    FROM kept GROUP BY source
+    """
+
+
 @q(
     "ext_pipeline_corpus_curation",
-    None,  # oracle assembled below (needs the minhash CTE chain)
+    _curation_oracle(),
     "END-TO-END training-data curation: quality gate -> language gate "
     "-> exact dedup -> MinHash near-dup removal -> per-source corpus "
     "stats. Composes the proven pieces; greedy keep-lowest-doc_id.",
@@ -1179,44 +1125,11 @@ def ext_pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("quality").cast("decimal(18,12)")).cast("double").alias("sum_quality"),
     )
 
-
-def _curation_oracle() -> str:
-    quality = TX.sql_quality_score("text", "duckdb")
-    lang = TX.sql_lang_id("text", "duckdb")
-    fp = TX.sql_fingerprint("text", "duckdb")
-    ntok = TX.sql_token_count("text", "duckdb")
-    pairs = DD.minhash_pairs_oracle()
-    return f"""
-    WITH enriched AS (
-      SELECT doc_id, source, {quality} AS quality, {lang} AS lang_pred,
-             {fp} AS fp, {ntok} AS n_tokens
-      FROM documents
-    ),
-    alive AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
-        FROM enriched
-        WHERE quality >= {CURATION_QUALITY_MIN} AND lang_pred = 'en'
-      ) WHERE rk = 1
-    ),
-    removed AS (SELECT DISTINCT doc_b AS doc_id FROM ({pairs})),
-    kept AS (SELECT * FROM alive WHERE doc_id NOT IN (SELECT doc_id FROM removed))
-    SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(sum(CAST(quality AS DECIMAL(18,12))) AS DOUBLE) AS sum_quality
-    FROM kept GROUP BY source
-    """
-
-
-REGISTRY["ext_pipeline_corpus_curation"].oracle = _curation_oracle()
-
-REGISTRY["ext_kmeans_clusters"] = QuerySpec(
-    SIM.kmeans_one_iter_summary,
-    SIM.kmeans_one_iter_oracle(),
-    "one closed-form Lloyd iteration (assign -> decimal-mean centroid "
-    "update -> reassign), hash-checked against DuckDB; the "
-    "multi-iteration descent (SIM.kmeans_clusters) stays under "
-    "property tests",
-)
+q("ext_kmeans_clusters", SIM.kmeans_one_iter_oracle(),
+  "one closed-form Lloyd iteration (assign -> decimal-mean centroid "
+  "update -> reassign), hash-checked against DuckDB; the "
+  "multi-iteration descent (SIM.kmeans_clusters) stays under "
+  "property tests")(SIM.kmeans_one_iter_summary)
 
 
 @q(
@@ -1352,7 +1265,7 @@ def _stream_dedup_duck() -> str:
 
 @q(
     "stream_dedup_ingest",
-    None,  # oracle assigned below (needs the helper above)
+    _stream_dedup_duck(),
     "ACTUAL Structured Streaming cross-batch exact dedup: the document "
     "corpus is re-staged as 4 doc_id-range slices (ascending mtimes -> "
     "deterministic micro-batch order), streamed one file per batch "
@@ -1430,9 +1343,6 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(dest).select("doc_id", "fp")
 
 
-REGISTRY["stream_dedup_ingest"].oracle = _stream_dedup_duck()
-
-
 # ===========================================================================
 # Round-2 operators: as-of join, hierarchical time rollup, deterministic
 # sampling, PII scrubbing, benchmark contamination, z-order clustering
@@ -1497,20 +1407,14 @@ def _register_rollup() -> None:
         time_rollup,
     )
 
-    REGISTRY["rel_incremental_mv"] = QuerySpec(
-        incremental_mv_merge,
-        INCREMENTAL_MV_ORACLE,
-        "incremental materialized-view maintenance: base + delta "
-        "partial aggregates merged by re-aggregation, hash-checked "
-        "against full recompute (merge algebra == recompute)",
-    )
-    REGISTRY["rel_time_rollup"] = QuerySpec(
-        time_rollup,
-        TIME_ROLLUP_ORACLE,
-        "hypertable-style multi-resolution rollup (minute/hour/day) — "
-        "hierarchical re-aggregation: ONE full-data shuffle, coarser "
-        "levels re-agg the previous level's composable measures",
-    )
+    q("rel_incremental_mv", INCREMENTAL_MV_ORACLE,
+      "incremental materialized-view maintenance: base + delta "
+      "partial aggregates merged by re-aggregation, hash-checked "
+      "against full recompute (merge algebra == recompute)")(incremental_mv_merge)
+    q("rel_time_rollup", TIME_ROLLUP_ORACLE,
+      "hypertable-style multi-resolution rollup (minute/hour/day) — "
+      "hierarchical re-aggregation: ONE full-data shuffle, coarser "
+      "levels re-agg the previous level's composable measures")(time_rollup)
 
 
 _register_rollup()
@@ -1615,13 +1519,10 @@ def ext_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_contamination() -> None:
     from hbasewd_spark.operators.dedup import contamination_check, contamination_oracle
 
-    REGISTRY["ext_text_contamination"] = QuerySpec(
-        contamination_check,
-        contamination_oracle(),
-        "benchmark decontamination: distinct token-8-gram overlap "
-        "between each training doc and the held-out eval slice — "
-        "hash-equi-join against the (tiny, broadcastable) eval gram set",
-    )
+    q("ext_text_contamination", contamination_oracle(),
+      "benchmark decontamination: distinct token-8-gram overlap "
+      "between each training doc and the held-out eval slice — "
+      "hash-equi-join against the (tiny, broadcastable) eval gram set")(contamination_check)
 
 
 _register_contamination()
@@ -1688,7 +1589,7 @@ def _manifest_duck() -> str:
 
 @q(
     "ext_dataset_manifest",
-    None,
+    _manifest_duck(),
     "dataset manifest for drift detection: per-table row count + "
     "order-free key checksum (sum of md5-longs taken mod 2^32 — "
     "partitioning- and engine-independent, and overflow-CLOSED: "
@@ -1721,9 +1622,6 @@ def ext_dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(t).alias("table_name"), "n_rows", "key_checksum")
         )
     return reduce(lambda a, b: a.unionByName(b), parts)
-
-
-REGISTRY["ext_dataset_manifest"].oracle = _manifest_duck()
 
 
 @q(
@@ -1811,7 +1709,7 @@ def _keywords_duck() -> str:
 
 @q(
     "ext_text_keywords",
-    None,
+    _keywords_duck(),
     "TF-IDF keyword extraction with RATIONAL scoring (tf * N / df — "
     "one integer product + one IEEE divide, no log, so doubles are "
     "bit-exact cross-engine): top-3 terms >= 4 chars per document. At "
@@ -1859,9 +1757,6 @@ def ext_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["ext_text_keywords"].oracle = _keywords_duck()
-
-
 # ---------------------------------------------------------------------------
 # Gopher-style repetition signals (training-data quality filtering)
 # ---------------------------------------------------------------------------
@@ -1902,7 +1797,7 @@ def _gopher_duck() -> str:
 
 @q(
     "ext_text_gopher_repetition",
-    None,  # oracle assigned below (needs the builder above)
+    _gopher_duck(),
     "Gopher-style repetition quality signals: duplicate-word fraction "
     "and top-bigram fraction per document, plus the keep/drop verdict "
     "at the published thresholds. Pure per-row Catalyst array "
@@ -1947,9 +1842,6 @@ def ext_text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-REGISTRY["ext_text_gopher_repetition"].oracle = _gopher_duck()
-
-
 # ---------------------------------------------------------------------------
 # Stratified per-source capped sampling (corpus mixing)
 # ---------------------------------------------------------------------------
@@ -1957,9 +1849,23 @@ REGISTRY["ext_text_gopher_repetition"].oracle = _gopher_duck()
 STRATUM_CAP = 20
 
 
+def _stratified_duck() -> str:
+    from hbasewd_spark.functions.codec import sql_md5_long
+
+    h = sql_md5_long("concat('strat-', CAST(doc_id AS VARCHAR))", "duckdb")
+    return f"""
+    SELECT source, rk, doc_id FROM (
+      SELECT source, doc_id,
+             row_number() OVER (PARTITION BY source
+                                ORDER BY {h} ASC, doc_id ASC) AS rk
+      FROM documents
+    ) t WHERE rk <= {STRATUM_CAP}
+    """
+
+
 @q(
     "ext_sample_stratified",
-    None,  # oracle assigned below
+    _stratified_duck(),
     "stratified deterministic sample: at most STRATUM_CAP docs per "
     "source, chosen by a seeded key hash (engine-independent, "
     "reproducible). The window is PARTITIONED by the stratum — per-"
@@ -1982,23 +1888,6 @@ def ext_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stratified_duck() -> str:
-    from hbasewd_spark.functions.codec import sql_md5_long
-
-    h = sql_md5_long("concat('strat-', CAST(doc_id AS VARCHAR))", "duckdb")
-    return f"""
-    SELECT source, rk, doc_id FROM (
-      SELECT source, doc_id,
-             row_number() OVER (PARTITION BY source
-                                ORDER BY {h} ASC, doc_id ASC) AS rk
-      FROM documents
-    ) t WHERE rk <= {STRATUM_CAP}
-    """
-
-
-REGISTRY["ext_sample_stratified"].oracle = _stratified_duck()
-
-
 # ---------------------------------------------------------------------------
 # OOV rate vs corpus vocabulary (tokenizer-coverage analysis)
 # ---------------------------------------------------------------------------
@@ -2006,9 +1895,38 @@ REGISTRY["ext_sample_stratified"].oracle = _stratified_duck()
 VOCAB_TOP_K = 100
 
 
+def _oov_duck() -> str:
+    from hbasewd_spark.functions.text import sql_tokens
+
+    toks = sql_tokens("text", "duckdb")
+    return f"""
+    WITH tk AS (
+      SELECT doc_id, unnest({toks}) AS tok FROM documents
+    ),
+    vocab AS (
+      SELECT tok FROM (
+        SELECT tok, count(*) AS n,
+               row_number() OVER (ORDER BY count(*) DESC, tok ASC) AS rk
+        FROM tk GROUP BY tok
+      ) t WHERE rk <= {VOCAB_TOP_K}
+    ),
+    per_doc AS (
+      SELECT tk.doc_id,
+             CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
+               / CAST(count(*) AS DOUBLE) AS oov_frac
+      FROM tk LEFT JOIN vocab v ON tk.tok = v.tok
+      GROUP BY tk.doc_id
+    )
+    SELECT d.lang, d.source, count(*) AS n_docs,
+           CAST(sum(CAST(oov_frac AS DECIMAL(18,12))) AS DOUBLE) AS sum_oov_frac
+    FROM documents d JOIN per_doc p ON d.doc_id = p.doc_id
+    GROUP BY d.lang, d.source
+    """
+
+
 @q(
     "ext_text_oov_rate",
-    None,  # oracle assigned below
+    _oov_duck(),
     "out-of-vocabulary analysis: the corpus' top-VOCAB_TOP_K tokens "
     "form the vocabulary (deterministic tie-break); per-(lang, source) "
     "mean OOV token fraction. Vocabulary is a broadcastable relation; "
@@ -2064,38 +1982,6 @@ def ext_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sum_oov_frac"),
     )
-
-
-def _oov_duck() -> str:
-    from hbasewd_spark.functions.text import sql_tokens
-
-    toks = sql_tokens("text", "duckdb")
-    return f"""
-    WITH tk AS (
-      SELECT doc_id, unnest({toks}) AS tok FROM documents
-    ),
-    vocab AS (
-      SELECT tok FROM (
-        SELECT tok, count(*) AS n,
-               row_number() OVER (ORDER BY count(*) DESC, tok ASC) AS rk
-        FROM tk GROUP BY tok
-      ) t WHERE rk <= {VOCAB_TOP_K}
-    ),
-    per_doc AS (
-      SELECT tk.doc_id,
-             CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-               / CAST(count(*) AS DOUBLE) AS oov_frac
-      FROM tk LEFT JOIN vocab v ON tk.tok = v.tok
-      GROUP BY tk.doc_id
-    )
-    SELECT d.lang, d.source, count(*) AS n_docs,
-           CAST(sum(CAST(oov_frac AS DECIMAL(18,12))) AS DOUBLE) AS sum_oov_frac
-    FROM documents d JOIN per_doc p ON d.doc_id = p.doc_id
-    GROUP BY d.lang, d.source
-    """
-
-
-REGISTRY["ext_text_oov_rate"].oracle = _oov_duck()
 
 
 # ===========================================================================
@@ -2183,7 +2069,7 @@ def _lang_confusion_duck() -> str:
 
 @q(
     "ext_lang_confusion",
-    None,  # assigned below
+    _lang_confusion_duck(),
     "language-ID confusion matrix: labeled vs detected language, doc "
     "counts per cell — the calibration artifact for any lang-ID gate "
     "(off-diagonal mass = routing error rate per language). Pure "
@@ -2196,9 +2082,6 @@ def ext_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "detected")
         .agg(F.count("*").alias("n_docs"))
     )
-
-
-REGISTRY["ext_lang_confusion"].oracle = _lang_confusion_duck()
 
 _DIM_QUANT = 1_000_000  # 1e-6 quantization: xq^2 sums stay in int64
 
@@ -2288,7 +2171,7 @@ def _bpe_duck() -> str:
 
 @q(
     "ext_bpe_merge_candidates",
-    None,  # assigned below
+    _bpe_duck(),
     "BPE vocabulary induction, step one: the top adjacent character "
     "pairs by corpus frequency — exactly the statistic a BPE trainer "
     "merges first. Pair extraction runs over the VOCABULARY relation "
@@ -2320,9 +2203,6 @@ def ext_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return global_topk(
         counts, [F.col("n").desc(), F.col("pair").asc()], _BPE_TOPK, rk_name=None
     ).select("pair", "n")
-
-
-REGISTRY["ext_bpe_merge_candidates"].oracle = _bpe_duck()
 
 
 def _zorder_sql(dialect: str) -> str:
@@ -2416,9 +2296,10 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = ST.stream_events(spark, sf_dir)
     joined = ST.stream_stream_join(stream)
-    return ST.run_stream_append_to_memory(
+    return ST.run_stream_to_memory(
         spark, joined, "stream_stream_join_out",
         state_partitions=ST.scaled_state_partitions(spark, sf_dir),
+        output_mode="append",
     )
 
 
@@ -2468,13 +2349,10 @@ def ext_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_multimodal_frames() -> None:
     from hbasewd_spark.operators.multimodal import FRAME_STATS_ORACLE, frame_stats
 
-    REGISTRY["ext_multimodal_frames"] = QuerySpec(
-        frame_stats,
-        FRAME_STATS_ORACLE,
-        "video-style frame sampling as a 1->N mapInPandas explode "
-        "(every 4th 256-byte frame per payload), rolled up per format; "
-        "frame lengths are arithmetic so the oracle needs no blob ops",
-    )
+    q("ext_multimodal_frames", FRAME_STATS_ORACLE,
+      "video-style frame sampling as a 1->N mapInPandas explode "
+      "(every 4th 256-byte frame per payload), rolled up per format; "
+      "frame lengths are arithmetic so the oracle needs no blob ops")(frame_stats)
 
 
 _register_multimodal_frames()
@@ -2483,14 +2361,11 @@ _register_multimodal_frames()
 def _register_dedup_clusters() -> None:
     from hbasewd_spark.operators.dedup import dedup_clusters, dedup_clusters_oracle
 
-    REGISTRY["ext_dedup_clusters"] = QuerySpec(
-        dedup_clusters,
-        dedup_clusters_oracle(),
-        "near-dup pairs -> connected components -> one canonical doc "
-        "per cluster (pairs alone over-delete transitive groups); "
-        "log-round min-label propagation over the (tiny) dup-pair edge "
-        "list; oracle is a DuckDB recursive CTE",
-    )
+    q("ext_dedup_clusters", dedup_clusters_oracle(),
+      "near-dup pairs -> connected components -> one canonical doc "
+      "per cluster (pairs alone over-delete transitive groups); "
+      "log-round min-label propagation over the (tiny) dup-pair edge "
+      "list; oracle is a DuckDB recursive CTE")(dedup_clusters)
 
 
 _register_dedup_clusters()
@@ -2504,21 +2379,15 @@ def _register_winnow_clusters() -> None:
         winnow_incremental_oracle,
     )
 
-    REGISTRY["ext_dedup_winnow_clusters"] = QuerySpec(
-        winnow_clusters,
-        winnow_clusters_oracle(),
-        "substring-level duplicate clusters: winnow pairs -> connected "
-        "components -> canonical pick (boilerplate families doc-level "
-        "MinHash never links); oracle is a DuckDB recursive CTE",
-    )
-    REGISTRY["ext_dedup_winnow_incremental"] = QuerySpec(
-        winnow_incremental,
-        winnow_incremental_oracle(),
-        "persisted winnow-fingerprint index probe: corpus fingerprints "
-        "(stop-gram-capped at build) on disk, batch joins by hash — "
-        "the substring twin of ext_dedup_incremental; corpus never "
-        "refingerprinted",
-    )
+    q("ext_dedup_winnow_clusters", winnow_clusters_oracle(),
+      "substring-level duplicate clusters: winnow pairs -> connected "
+      "components -> canonical pick (boilerplate families doc-level "
+      "MinHash never links); oracle is a DuckDB recursive CTE")(winnow_clusters)
+    q("ext_dedup_winnow_incremental", winnow_incremental_oracle(),
+      "persisted winnow-fingerprint index probe: corpus fingerprints "
+      "(stop-gram-capped at build) on disk, batch joins by hash — "
+      "the substring twin of ext_dedup_incremental; corpus never "
+      "refingerprinted")(winnow_incremental)
 
 
 _register_winnow_clusters()
@@ -2527,14 +2396,11 @@ _register_winnow_clusters()
 def _register_pagerank() -> None:
     from hbasewd_spark.operators.graph import pagerank_event_transitions, pagerank_oracle
 
-    REGISTRY["ext_graph_pagerank"] = QuerySpec(
-        pagerank_event_transitions,
-        pagerank_oracle(),
-        "3-iteration damped PageRank over the event-property transition "
-        "digraph (lag-window edge extraction; fixed-point 1e-9 integer "
-        "arithmetic with explicit floors, so both engines agree "
-        "bit-for-bit — float PageRank is not order-independent)",
-    )
+    q("ext_graph_pagerank", pagerank_oracle(),
+      "3-iteration damped PageRank over the event-property transition "
+      "digraph (lag-window edge extraction; fixed-point 1e-9 integer "
+      "arithmetic with explicit floors, so both engines agree "
+      "bit-for-bit — float PageRank is not order-independent)")(pagerank_event_transitions)
 
 
 _register_pagerank()

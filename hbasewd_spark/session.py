@@ -66,7 +66,7 @@ def get_spark(app_name: str = "hbasewd_spark", cpus: int | None = None) -> Spark
         # long and convert at the loader (sources/loaders.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # INT96 (Spark's legacy default) carries NO parquet statistics:
-        # footer-based zone maps (SaltedTable._footer_zone_map) and
+        # footer-based zone maps (SaltedTable._footer_stats_local) and
         # row-group pruning on timestamp keys both need the modern
         # annotated INT64 — which is also the cross-engine-readable
         # production choice (INT96 is deprecated in the format spec)

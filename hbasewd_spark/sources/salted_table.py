@@ -119,7 +119,7 @@ def salted(df: DataFrame, distributor: KeyDistributor, key_col: str) -> DataFram
 def _local_fs_path(p: str) -> str:
     """Strip a ``file:``/``file://`` scheme down to the plain local
     path non-JVM writers (pyarrow) understand. Callers only reach this
-    after the driver-route gate proved the table is local."""
+    for a table on the local filesystem."""
     if p.startswith("file://"):
         return p[7:]
     if p.startswith("file:"):
@@ -127,20 +127,24 @@ def _local_fs_path(p: str) -> str:
     return p
 
 
+class _NoFooterStats(Exception):
+    """A data file's parquet footer cannot speak for a column: pyarrow
+    cannot open the file, or the column's stats are missing or
+    undecodable. The message names the file and the reason."""
+
+
 def _footer_stats_batch(files: list, col_name: str, target):
-    """Per-file (lo, hi, n_rows, n_nulls, _stats_ok) parquet-footer
-    stats as one ``pa.RecordBatch`` in the ``target`` arrow schema —
-    the SINGLE extraction routine behind both footer zone-map routes
-    (driver-side for small local file sets, ``mapInArrow`` on
-    executors at scale), so the two produce identical sidecars by
-    construction. Any per-file failure records ``_stats_ok=False``
-    (the caller falls back to the column scan), never raises."""
-    import pyarrow as pa
+    """Per-file (lo, hi, n_rows, n_nulls) parquet-footer stats of
+    ``col_name`` as one ``pa.RecordBatch`` in the ``target`` arrow
+    schema. Opens each file with pyarrow, so any URI pyarrow resolves
+    works. Raises :class:`_NoFooterStats` at the first file it cannot
+    open or whose stats are unusable; the caller then takes the column
+    scan."""
     import pyarrow.parquet as pq
 
-    def one_file(path):
-        """(lo, hi, n_rows, n_nulls, ok) from the footer."""
-        md = pq.ParquetFile(path).metadata
+    def one_file(md):
+        """(lo, hi, n_rows, n_nulls) from the footer, or ``None`` when
+        some row group's stats cannot speak for the column."""
         n_rows = md.num_rows
         idx = None
         if md.num_row_groups:
@@ -150,7 +154,7 @@ def _footer_stats_batch(files: list, col_name: str, target):
                     idx = i
                     break
         if idx is None:
-            return None, None, n_rows, 0, n_rows == 0
+            return (None, None, 0, 0) if n_rows == 0 else None
         mins, maxs, nulls = [], [], 0
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
@@ -158,7 +162,7 @@ def _footer_stats_batch(files: list, col_name: str, target):
                 continue
             st = rg.column(idx).statistics
             if st is None or not st.has_null_count:
-                return None, None, n_rows, 0, False
+                return None
             nulls += st.null_count
             if st.has_min_max:
                 # .min/.max raise ArrowNotImplementedError for
@@ -166,10 +170,10 @@ def _footer_stats_batch(files: list, col_name: str, target):
                 mins.append(st.min)
                 maxs.append(st.max)
             elif st.null_count != rg.num_rows:
-                return None, None, n_rows, 0, False
+                return None
         lo = min(mins) if mins else None
         hi = max(maxs) if maxs else None
-        return lo, hi, n_rows, nulls, True
+        return lo, hi, n_rows, nulls
 
     def typed(vals, field):
         a = pa.array(vals)
@@ -178,9 +182,19 @@ def _footer_stats_batch(files: list, col_name: str, target):
     rows = []
     for path in files:
         try:
-            rows.append(one_file(path))
+            md = pq.ParquetFile(path).metadata
+        except Exception as e:
+            first = (str(e).strip().splitlines() or [""])[0]
+            raise _NoFooterStats(
+                f"pyarrow cannot open {path} ({type(e).__name__}: {first})"
+            ) from e
+        try:
+            row = one_file(md)
         except Exception:
-            rows.append((None, None, 0, 0, False))
+            row = None
+        if row is None:
+            raise _NoFooterStats(f"{path} has no usable {col_name!r} stats")
+        rows.append(row)
     return pa.RecordBatch.from_arrays(
         [
             pa.array(list(files), pa.string()),
@@ -188,7 +202,6 @@ def _footer_stats_batch(files: list, col_name: str, target):
             typed([r[1] for r in rows], target.field("hi")),
             pa.array([r[2] for r in rows], pa.int64()),
             pa.array([r[3] for r in rows], pa.int64()),
-            pa.array([r[4] for r in rows], pa.bool_()),
         ],
         schema=target,
     )
@@ -693,11 +706,6 @@ class SaltedTable:
     # deserves a metastore — warn so the operator knows (SCALE.md §
     # driver-side metadata)
     ZONE_MAP_DRIVER_WARN_FILES = 100_000
-    # below this many files (and only for local file: paths), footer
-    # zone maps are read driver-side with zero Spark jobs — the job
-    # launch + Arrow-worker round trip (~1-2 s) dwarfs reading a few
-    # hundred footers; past it, the mapInArrow executor route runs
-    FOOTER_DRIVER_MAX_FILES = 256
 
     def build_zone_map(self, col: str) -> None:
         """Persist the per-file zone map for ``col`` into the table
@@ -710,143 +718,72 @@ class SaltedTable:
         planning. Stale maps (any append/compact/expire since the
         build) are detected via the watermark and silently bypassed.
 
-        The stats come from parquet FOOTERS when every file's column
-        chunk carries them (:meth:`_footer_zone_map` — O(#files ×
-        footer), a metadata pass), falling back to one column-pruned
-        scan for formats/types without usable footer stats (VERDICT r7
-        #1: the scan made every ``write(zone_map_cols=…)`` and verb
-        rebuild re-read a full column of the table)."""
+        The stats come from parquet FOOTERS, read on the driver by
+        :meth:`_footer_stats_local` (O(#files × footer), no Spark
+        job), and are written by :meth:`_write_zone_rows`. Where the
+        footers cannot speak for the column (unopenable path,
+        unusable stats, non-parquet format) one column-pruned scan
+        (:meth:`zone_map`) writes the sidecar instead. The watermark
+        is the listing the footers were read from."""
         zm_dir = self._zone_dir(col)
         fs = Fs(self.spark, self.path)
-        status, local = self._footer_stats_local(col)
-        if local is not None:
-            # driver route end-to-end: footers read on the driver and
-            # the O(#files)-row sidecar written with pyarrow — ZERO
-            # Spark jobs for a small local table's zone-map build
-            # (each job costs ~0.3-1 s of launch latency, which was
-            # the whole salted_write bench regression, VERDICT r9)
-            import pyarrow.parquet as pq
-
-            fs.delete(zm_dir, recursive=True)
-            fs.mkdirs(zm_dir)
-            pq.write_table(
-                local, _local_fs_path(zm_dir) + "/part-00000.parquet"
-            )
+        sig = self._data_signature(fs)
+        tbl = self._footer_stats_local(col, [t[0] for t in sig])
+        fs.delete(zm_dir, recursive=True)
+        if tbl is None:
+            self.zone_map(col).write.mode("overwrite").parquet(zm_dir)
         else:
-            # thread the already-known driver-route verdict through so
-            # the fallback never re-reads the same footers (ADVICE r9:
-            # the bad-stats path read every footer 3x — once here, once
-            # in _zone_source's own probe, once in _footer_zone_map's
-            # driver branch — before finally falling back to the scan)
-            src, done = self._zone_source(col, _local_status=status)
-            try:
-                src.write.mode("overwrite").parquet(zm_dir)
-            finally:
-                done()
+            self._write_zone_rows(fs, zm_dir, col, tbl)
         fs.write_text(
-            zm_dir + "/" + self.ZONE_META_FILE,
-            json.dumps({"data_sig": self._data_signature(fs)}),
+            zm_dir + "/" + self.ZONE_META_FILE, json.dumps({"data_sig": sig})
         )
         if isinstance(getattr(self, "_zone_maps", None), dict):
             self._zone_maps.pop(col, None)
 
     def _footer_stats_local(self, col: str, paths: list[str] | None = None):
-        """The ONE driver footer reader, as ``(status, table)`` over
-        ``paths`` (default: every data file):
+        """The one reader of parquet footer stats: ``(file, lo, hi,
+        n_rows, n_nulls)`` for ``col`` over ``paths`` (default: every
+        data file) as one ``pa.Table``, read on the driver with no
+        Spark job and no file-count cap. Files open through pyarrow,
+        so any URI it resolves works (local, ``hdfs://`` where libhdfs
+        loads, ...).
 
-        - ``("ok", pa.Table)`` — route applies and EVERY file's stats
-          are usable (``_stats_ok`` verified driver-side and dropped);
-        - ``("bad_stats", None)`` — route applies but some file's
-          stats are missing/un-decodable. The executor footer route
-          would re-read the SAME footers and reach the same verdict,
-          so callers branch on the status instead of re-reading
-          (ADVICE r9);
-        - ``("na", None)`` — route does not apply (non-parquet,
-          unmappable column/type, no files, remote or more than
-          FOOTER_DRIVER_MAX_FILES files)."""
-        if self.fmt != "parquet":
-            return "na", None
-        resolved = self._zone_stats_schemas(col)
-        if resolved is None:
-            return "na", None
-        _, target = resolved
-        if paths is None:
-            paths = [t[0] for t in self._data_signature(Fs(self.spark, self.path))]
-        paths = [self._canon_file_uri(p) for p in paths]
-        if not paths or len(paths) > self.FOOTER_DRIVER_MAX_FILES or not all(
-            p.startswith("file:") for p in paths
-        ):
-            return "na", None
-        import pyarrow as pa
-
-        batch = _footer_stats_batch(paths, col, target)
-        if not all(batch.column("_stats_ok").to_pylist()):
-            return "bad_stats", None
-        tbl = pa.Table.from_batches([batch])
-        return "ok", tbl.drop_columns(["_stats_ok"])
-
-    def _footer_source(
-        self,
-        col: str,
-        paths: list[str] | None = None,
-        _local_status: str | None = None,
-    ):
-        """Footer-stats zone relation for ``paths`` (default: every data
-        file) as ``(df, done)``, or ``None`` when some file's footer
-        stats are unusable. The all-or-nothing rule keeps footer and
-        scan sources interchangeable (equivalence-tested): a mixed
-        sidecar would hold scan-exact rows next to possibly-
+        ``None`` for a non-parquet table, and for a parquet table
+        whose column has no Arrow type or at the first file pyarrow
+        cannot open or whose stats are unusable; the caller then takes
+        the column scan (:meth:`zone_map`), and the parquet case warns
+        once per handle and column, naming the reason. Footer rows are
+        all-or-nothing: a mixed set would hold scan-exact rows next to
         conservative footer rows with no record of which is which.
 
-        On the driver route the rows are already materialized (a
-        LocalRelation — single-pass and job-free by construction); on
-        the executor route the relation is ``persist()``-ed so the
-        ``_stats_ok`` probe and the caller's write/collect share ONE
-        footer pass (VERDICT r8 #1). The caller MUST invoke ``done()``
-        once finished consuming ``df``.
-
-        ``_local_status``: a caller that already ran
-        :meth:`_footer_stats_local` and got no table passes its status
-        so the driver footers are never re-read (ADVICE r9)."""
-        local = None
-        if _local_status is None:
-            _local_status, local = self._footer_stats_local(col, paths)
-        if local is not None:
-            from pyspark.sql.types import StructType
-
-            out_schema, _ = self._zone_stats_schemas(col)
-            df = self.spark.createDataFrame(local).to(
-                StructType(out_schema.fields[:-1])  # minus _stats_ok
-            )
-            return df, lambda: None
-        if _local_status == "bad_stats":
+        Parquet writers may TRUNCATE long binary min/max (parquet-mr
+        increments the truncated max), so footer lo/hi are
+        conservative OUTWARD bounds — the contract every consumer
+        already holds (pruned_scan/expire/fast_count re-check
+        straddling files); the equivalence tests pin exactness at
+        fixture scale."""
+        if self.fmt != "parquet":
             return None
-        fdf = self._footer_zone_map(col, paths)
-        if fdf is None:
-            return None
-        fdf = fdf.persist()
+        schemas = self._zone_stats_schemas(col)
         try:
-            all_ok = fdf.where(~F.col("_stats_ok")).limit(1).count() == 0
-        except Exception:
-            fdf.unpersist()
-            raise
-        if all_ok:
-            return fdf.drop("_stats_ok"), fdf.unpersist
-        fdf.unpersist()
-        return None
+            if schemas is None:
+                raise _NoFooterStats("the column is unknown or has no Arrow type")
+            if paths is None:
+                paths = [t[0] for t in self._data_signature(Fs(self.spark, self.path))]
+            paths = [self._canon_file_uri(p) for p in paths]
+            return pa.Table.from_batches([_footer_stats_batch(paths, col, schemas[1])])
+        except _NoFooterStats as e:
+            warned = self.__dict__.setdefault("_scan_fallback_warned", set())
+            if col not in warned:
+                import warnings
 
-    def _zone_source(
-        self, col: str, _local_status: str | None = None
-    ) -> tuple[DataFrame, "Callable[[], None]"]:
-        """Best available zone-map source for ``col`` as ``(df, done)``:
-        the footer-stats relation (:meth:`_footer_source`) when EVERY
-        file's column chunk has usable stats, else the column-pruned
-        scan (:meth:`zone_map`). Same ``done()`` contract as
-        :meth:`_footer_source`."""
-        return self._footer_source(col, _local_status=_local_status) or (
-            self.zone_map(col),
-            lambda: None,
-        )
+                warned.add(col)
+                warnings.warn(
+                    f"zone metadata for {col!r} of {self.path} falls back "
+                    f"to a column scan: {e}",
+                    stacklevel=2,
+                )
+            return None
 
     @staticmethod
     def _canon_file_uri(p: str) -> str:
@@ -861,18 +798,11 @@ class SaltedTable:
         return p
 
     def _zone_stats_schemas(self, col: str):
-        """``(out_schema, arrow_target)`` for ``col``'s zone-stats rows
-        (``out_schema`` carries the trailing ``_stats_ok`` flag), or
-        ``None`` when the column is unknown or its type has no arrow
-        mapping — shared by the driver and executor footer routes so
-        both produce identically-typed relations."""
-        from pyspark.sql.types import (
-            BooleanType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
+        """``(out_schema, arrow_target)`` of ``col``'s zone rows — the
+        Spark schema of a sidecar and the Arrow schema the footer
+        reader builds — or ``None`` when the column is unknown or its
+        type has no arrow mapping."""
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
         from pyspark.sql.pandas.types import to_arrow_schema
 
         try:
@@ -891,7 +821,6 @@ class SaltedTable:
                 StructField("hi", col_type),
                 StructField("n_rows", LongType()),
                 StructField("n_nulls", LongType()),
-                StructField("_stats_ok", BooleanType()),
             ]
         )
         try:
@@ -900,63 +829,27 @@ class SaltedTable:
             return None  # no arrow mapping for this key type
         return out_schema, target
 
-    def _footer_zone_map(
-        self, col: str, paths: list[str] | None = None
-    ) -> DataFrame | None:
-        """Per-file (lo, hi, n_rows, n_nulls) for ``col`` read from
-        parquet FOOTER statistics — O(#files × footer bytes) instead of
-        O(column bytes): at 100 TB the difference between a metadata
-        pass and re-reading a full column of the table (VERDICT r7 #1).
+    def _zone_rows_df(self, col: str, tbl) -> DataFrame:
+        """Footer zone rows as a Spark relation in the sidecar schema
+        (a LocalRelation: building it runs no job)."""
+        out_schema, _ = self._zone_stats_schemas(col)
+        return self.spark.createDataFrame(tbl).to(out_schema)
 
-        The executor route: the driver holds only the file list (the
-        same listing `_data_signature` already does); footers are read
-        on executors via ``mapInArrow`` over the path relation, with
-        the extraction code the driver reader
-        (:meth:`_footer_stats_local`) uses, so both produce identical
-        sidecars. Each row carries ``_stats_ok`` — False when any row
-        group's stats are missing, un-decodable (pyarrow cannot
-        extract e.g. FLBA decimal stats), or lack a null count; the
-        caller falls back to the scan path when any file is not ok.
+    def _write_zone_rows(self, fs: Fs, zm_dir: str, col: str, tbl) -> None:
+        """Add footer zone rows to the sidecar ``zm_dir`` as one more
+        part file: written by pyarrow when the table is on the local
+        filesystem (no Spark job), else by a Spark append."""
+        if fs.fs.getUri().getScheme() != "file":
+            self._zone_rows_df(col, tbl).write.mode("append").parquet(zm_dir)
+            return
+        import uuid
 
-        Returns ``None`` for non-parquet formats. Stats semantics:
-        parquet writers may TRUNCATE long binary min/max (parquet-mr
-        increments the truncated max), so footer lo/hi are conservative
-        OUTWARD bounds — exactly the contract every consumer already
-        holds (pruned_scan/expire/fast_count re-check straddling files;
-        wholly-inside classification stays correct under outward
-        bounds); the equivalence tests pin exactness at fixture scale.
+        import pyarrow.parquet as pq
 
-        ``paths``: explicit file list (e.g. one epoch's files) instead
-        of the full table listing — the incremental-maintenance entry
-        point."""
-        if self.fmt != "parquet":
-            return None
-        resolved = self._zone_stats_schemas(col)
-        if resolved is None:
-            return None  # unknown column / no arrow mapping
-        out_schema, target = resolved
-        if paths is None:
-            fs = Fs(self.spark, self.path)
-            paths = [t[0] for t in self._data_signature(fs)]
-        paths = [self._canon_file_uri(p) for p in paths]
-        spark = self.spark
-        if not paths:
-            return spark.createDataFrame([], out_schema)
-        col_name = col
-        n_tasks = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
-        paths_df = spark.createDataFrame(
-            [(p,) for p in paths], "file string"
-        ).repartition(n_tasks)
-
-        def read_footers(batches):
-            from hbasewd_spark.sources.salted_table import _footer_stats_batch
-
-            for b in batches:
-                yield _footer_stats_batch(
-                    b.column(0).to_pylist(), col_name, target
-                )
-
-        return paths_df.mapInArrow(read_footers, out_schema)
+        fs.mkdirs(zm_dir)
+        pq.write_table(
+            tbl, f"{_local_fs_path(zm_dir)}/part-{uuid.uuid4().hex}.parquet"
+        )
 
     def _zone_dir(self, col: str) -> str:
         return f"{self.path.rstrip('/')}/{self.ZONE_MAP_DIR}/{col}"
@@ -968,8 +861,8 @@ class SaltedTable:
         stale sidecar SAFE (it is bypassed, never trusted), but bypass
         means every later scan pays a live zone scan of the column —
         silent O(data) planning where the operator had paid for
-        O(index). One column-pruned scan per sidecar, the same cost the
-        original build paid."""
+        O(index). One :meth:`build_zone_map` per sidecar, the same
+        cost the original build paid."""
         fs = Fs(self.spark, self.path)
         zm_root = f"{self.path.rstrip('/')}/{self.ZONE_MAP_DIR}"
         cols = [
@@ -996,29 +889,27 @@ class SaltedTable:
 
         For each persisted sidecar that was FRESH against ``pre_sig``
         (the signature before the mutation — freshness is what proves
-        the sidecar covers exactly the pre-mutation files): drop the
-        rows of ``removed_files``, append footer stats
-        (:meth:`_footer_zone_map`) for ``added_files``, and restamp the
-        watermark with the post-mutation signature. Cost is O(new files
-        × footer) — metadata, never a table scan. Sidecars that were
-        already stale, or whose column stats footers cannot supply,
-        are left stale (the watermark keeps them safely bypassed).
+        the sidecar covers exactly the pre-mutation files), read the
+        footer stats of ``added_files`` (:meth:`_footer_stats_local`)
+        and restamp the watermark with the post-mutation signature:
 
-        A pure append (no removed file) on a local table whose added
-        footers the driver reads (:meth:`_footer_stats_local`) writes
-        its rows as one more pyarrow part file, so an epoch commit runs
-        no Spark job for its sidecars; replays (files removed), remote
-        tables and unusable driver-side stats take the Spark route.
+        - a pure append adds the new rows as one more part file
+          (:meth:`_write_zone_rows`: pyarrow on a local table, so an
+          epoch commit runs no Spark job for its sidecars);
+        - a replay (files removed) rewrites the sidecar as its old
+          rows minus ``removed_files`` plus the new rows, written to a
+          tmp dir and renamed over the old one.
+
+        Cost is O(new files × footer) — metadata, never a table scan.
+        Sidecars that were already stale, or whose column stats the
+        footers cannot supply, are left stale (the watermark keeps
+        them safely bypassed).
 
         Caller must hold the table lock: the read-modify-write of the
         sidecar and the restamp are not atomic against a concurrent
         verb. Returns the updated column names."""
         if not removed_files and not added_files:
             return []  # the file set, and so every watermark, is unchanged
-        import uuid
-
-        import pyarrow.parquet as pq
-
         fs = Fs(self.spark, self.path)
         zm_root = f"{self.path.rstrip('/')}/{self.ZONE_MAP_DIR}"
         removed = {self._canon_file_uri(p) for p in removed_files}
@@ -1034,43 +925,26 @@ class SaltedTable:
                 continue  # unstamped/corrupt: leave for rebuild
             if meta.get("data_sig") != pre_sig:
                 continue  # was already stale before this mutation
-            status, local = None, None
-            if not removed:
-                status, local = self._footer_stats_local(col, added_files)
-            if local is not None:
-                # a pure append whose footers the driver reads: the new
-                # rows become one more pyarrow part file, as in
-                # build_zone_map's driver route — no Spark job
-                pq.write_table(
-                    local, f"{_local_fs_path(zm_dir)}/part-{uuid.uuid4().hex}.parquet"
+            new_rows = self._footer_stats_local(col, added_files)
+            if new_rows is None:
+                continue  # footers can't speak for this column
+            if removed:
+                tmp = zm_dir + ".tmp"
+                fs.delete(tmp, recursive=True)
+                (
+                    self.spark.read.parquet(zm_dir)
+                    .where(~F.col("file").isin(list(removed)))
+                    .unionByName(self._zone_rows_df(col, new_rows))
+                    .write.mode("overwrite")
+                    .parquet(tmp)
                 )
+                fs.delete(zm_dir, recursive=True)
+                if not fs.rename(tmp, zm_dir):
+                    # sidecar now missing -> safe bypass, rebuilt
+                    # by the next lifecycle verb or build_zone_map
+                    continue
             else:
-                src = self._footer_source(
-                    col, paths=added_files, _local_status=status
-                )
-                if src is None:
-                    continue  # footer can't speak for this column type
-                new_rows, done = src
-                try:
-                    if removed:
-                        tmp = zm_dir + ".tmp"
-                        fs.delete(tmp, recursive=True)
-                        (
-                            self.spark.read.parquet(zm_dir)
-                            .where(~F.col("file").isin(list(removed)))
-                            .unionByName(new_rows)
-                            .write.mode("overwrite")
-                            .parquet(tmp)
-                        )
-                        fs.delete(zm_dir, recursive=True)
-                        if not fs.rename(tmp, zm_dir):
-                            # sidecar now missing -> safe bypass, rebuilt
-                            # by the next lifecycle verb or build_zone_map
-                            continue
-                    else:
-                        new_rows.write.mode("append").parquet(zm_dir)
-                finally:
-                    done()
+                self._write_zone_rows(fs, zm_dir, col, new_rows)
             if post_sig is None:
                 post_sig = self._data_signature(fs)
             fs.write_text(
@@ -1104,8 +978,9 @@ class SaltedTable:
     def _zone_table(self, col: str):
         """Zone metadata for ``col`` as ONE columnar ``pa.Table`` —
         ``(file, lo, hi, n_rows, n_nulls)``, one row per data file —
-        from the persisted sidecar when present and fresh, else
-        computed (footers first, column scan last); memoized per table
+        from the persisted sidecar when present and fresh, else from
+        the parquet footers (:meth:`_footer_stats_local`), else one
+        column scan (:meth:`zone_map`); memoized per table
         handle (refresh() clears). Every zone consumer reads this one
         representation: scan_merged's shard planner, fast_count,
         pruned_scan, expire, scanner chunking and :meth:`manifest`.
@@ -1124,13 +999,9 @@ class SaltedTable:
             if zdf is not None:
                 tbl = zdf.toArrow()
             else:
-                status, tbl = self._footer_stats_local(col)
+                tbl = self._footer_stats_local(col)
                 if tbl is None:
-                    src, done = self._zone_source(col, _local_status=status)
-                    try:
-                        tbl = src.toArrow()
-                    finally:
-                        done()
+                    tbl = self.zone_map(col).toArrow()
             key_type = tbl.schema.field("lo").type
             if pa.types.is_timestamp(key_type) and key_type.tz:
                 key_type = pa.timestamp("us", tz="UTC")

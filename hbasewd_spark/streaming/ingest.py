@@ -455,19 +455,21 @@ def _stream_shuffle_partitions(spark: SparkSession, n: int | None):
 
 def run_stream_to_memory(
     spark: SparkSession,
-    agg: DataFrame,
+    df: DataFrame,
     name: str,
     state_partitions: int | None = None,
+    output_mode: str = "complete",
 ) -> DataFrame:
-    """Drain an availableNow streaming aggregation into a memory sink
-    and return the result table (batch-queryable).
+    """Drain an availableNow stream into a memory sink and return the
+    result table (batch-queryable). ``output_mode`` is ``"complete"``
+    for an aggregation, ``"append"`` for e.g. a stream-stream join.
 
     ``state_partitions`` (see :func:`scaled_state_partitions`) sizes
     the query's state-store count from input volume; None keeps the
     session default."""
     with _stream_shuffle_partitions(spark, state_partitions):
         q = (
-            agg.writeStream.outputMode("complete")
+            df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
             .trigger(availableNow=True)
@@ -511,27 +513,6 @@ def stream_stream_join(stream: DataFrame) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
     )
     return joined.select("user_id", "p_id", "c_id", "p_ts", "c_ts")
-
-
-def run_stream_append_to_memory(
-    spark: SparkSession,
-    df: DataFrame,
-    name: str,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain an append-mode stream (e.g. a stream-stream join) into a
-    memory sink and return the result table. ``state_partitions`` as
-    in :func:`run_stream_to_memory`."""
-    with _stream_shuffle_partitions(spark, state_partitions):
-        q = (
-            df.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
 
 
 def stateful_user_counter(stream: DataFrame) -> DataFrame:

@@ -10,10 +10,10 @@
    metadata file landed at the top level, un-nest if it did not, and
    never delete the aside copy until a flat loadable table exists at
    ``base``.
-2. ``_footer_stats_local`` status threading: the bad-stats fallback
-   used to re-read every parquet footer three times (build → source
-   probe → footer relation) before reaching the column scan. The
-   status tuple lets callers branch without re-reading.
+2. ``_footer_stats_local`` single pass: the bad-stats fallback used
+   to re-read every parquet footer three times (build → source probe
+   → footer relation) before reaching the column scan. The reader now
+   returns a table or ``None``, and ``None`` goes straight to the scan.
 3. ``create_atomic`` classifies lost-the-race by Java exception CLASS;
    a non-race failure whose message merely contains "already exists"
    must propagate, not map to "lock held".
@@ -195,9 +195,9 @@ def test_restore_aside_verifies_and_unnests(spark, kv, tmp_path, monkeypatch):
 
 
 def test_footer_stats_local_status_tuple(spark, tmp_path):
-    """(status, table) contract: 'ok' carries the table; a decimal
-    column whose footer stats pyarrow cannot decode reports
-    'bad_stats' with no table; a non-parquet table reports 'na'."""
+    """Return contract: a table when every file's footer stats are
+    usable; ``None`` for a decimal column whose footer stats pyarrow
+    cannot decode (the caller then takes the column scan)."""
     df = spark.range(100).select(
         F.col("id").alias("k"),
         # decimal(18,4): parquet FLBA-backed, stats undecodable by
@@ -207,10 +207,10 @@ def test_footer_stats_local_status_tuple(spark, tmp_path):
     t = SaltedTable.write(
         df, str(tmp_path / "st"), HashDistributor(4), "k"
     )
-    status, tbl = t._footer_stats_local("k")
-    assert status == "ok" and tbl is not None
-    status, tbl = t._footer_stats_local("dec")
-    assert status == "bad_stats" and tbl is None
+    tbl = t._footer_stats_local("k")
+    assert tbl is not None and tbl.num_rows == 4
+    with pytest.warns(UserWarning, match="no usable 'dec' stats"):
+        assert t._footer_stats_local("dec") is None
 
 
 def test_bad_stats_fallback_reads_footers_once(spark, tmp_path, monkeypatch):

@@ -1,24 +1,32 @@
 """Footer-statistics zone maps (VERDICT r7 #1).
 
-``build_zone_map`` now reads per-file lo/hi/n_rows/n_nulls from parquet
-FOOTERS (a metadata pass) instead of scanning the column. Pins:
+``build_zone_map`` reads per-file lo/hi/n_rows/n_nulls from parquet
+FOOTERS (a metadata pass, on the driver) instead of scanning the
+column. Pins:
 
 1. footer-derived zones are IDENTICAL to scan-derived zones on every
    fixture key type (long, timestamp, date, string, double, nullable);
-2. types whose stats pyarrow cannot decode (FLBA decimal) flip
-   ``_stats_ok`` and ``_zone_source`` falls back to the column scan —
-   the sidecar is right either way;
+2. types whose stats pyarrow cannot decode (FLBA decimal) make the
+   footer reader return ``None`` with one warning, and the zone
+   metadata falls back to the column scan — right either way;
 3. the consumers (fast_count / pruned_scan / expire / scan_merged)
    produce exact results on a footer-built sidecar;
 4. the footer path is the one actually taken on a plain salted write
-   (booby-trap: the scan-based ``zone_map`` raises).
+   (booby-trap: the scan-based ``zone_map`` raises), with no Spark job
+   and no file-count cap;
+5. a path scheme pyarrow cannot open (``viewfs://``) falls back to the
+   column scan with a warning that names it, and the answers stay
+   those of the same table read through its local path.
 """
 
 import datetime
+import uuid
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
+from hbasewd_spark.fsutil import Fs
 from hbasewd_spark.plans.distributor import HashDistributor
 from hbasewd_spark.sources.salted_table import SaltedTable
 
@@ -48,22 +56,24 @@ def typed_table(spark, tmp_path_factory):
 @pytest.mark.parametrize("col", ["k", "ts", "d", "s", "x", "nullable"])
 def test_footer_zones_equal_scan_zones(spark, typed_table, col):
     t = typed_table
-    fdf = t._footer_zone_map(col)
-    assert fdf.where(~F.col("_stats_ok")).count() == 0
-    assert _canon(fdf.drop("_stats_ok")) == _canon(t.zone_map(col))
+    tbl = t._footer_stats_local(col)
+    assert tbl is not None
+    assert _canon(t._zone_rows_df(col, tbl)) == _canon(t.zone_map(col))
 
 
 def test_undecodable_stats_fall_back_to_scan(spark, typed_table):
-    """pyarrow cannot extract FLBA decimal stats: every file flips
-    ``_stats_ok`` and ``_zone_source`` returns the scan relation."""
-    t = typed_table
-    fdf = t._footer_zone_map("dec")
-    assert fdf.where(~F.col("_stats_ok")).count() == fdf.count() > 0
-    src, done = t._zone_source("dec")
-    try:
-        assert _canon(src) == _canon(t.zone_map("dec"))
-    finally:
-        done()
+    """pyarrow cannot extract FLBA decimal stats: the footer reader
+    returns ``None``, warning once per handle and column with the file
+    it stopped at, and the zone table comes from the column scan."""
+    t = SaltedTable.load(spark, typed_table.path)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert t._footer_stats_local("dec") is None
+        assert t._footer_stats_local("dec") is None
+    msgs = [str(w.message) for w in caught]
+    assert len(msgs) == 1 and "'dec'" in msgs[0] and ".parquet" in msgs[0], msgs
+    zt = t._zone_table("dec")
+    assert _canon(spark.createDataFrame(zt)) == _canon(t.zone_map("dec"))
     # and a built sidecar (scan-backed) still serves pruning correctly
     t.build_zone_map("dec")
     assert t._zone_sidecar_df("dec") is not None
@@ -123,9 +133,9 @@ def test_footer_zones_with_all_null_file(spark, tmp_path):
     )
     # one file per salt; salt on k so some files get the all-null slice
     t = SaltedTable.write(df, str(tmp_path / "t"), HashDistributor(2), "k")
-    fdf = t._footer_zone_map("maybe")
-    assert fdf.where(~F.col("_stats_ok")).count() == 0
-    assert _canon(fdf.drop("_stats_ok")) == _canon(t.zone_map("maybe"))
+    tbl = t._footer_stats_local("maybe")
+    assert tbl is not None
+    assert _canon(t._zone_rows_df("maybe", tbl)) == _canon(t.zone_map("maybe"))
 
 
 def test_streaming_epochs_keep_sidecar_alive(spark, tmp_path, monkeypatch):
@@ -203,62 +213,101 @@ def test_epoch_on_stale_sidecar_leaves_it_stale(spark, tmp_path):
 
 
 def test_zone_source_footer_branch_is_single_pass(spark, typed_table, monkeypatch):
-    """VERDICT r8 #1: the footer pass must run ONCE per build. On the
-    default (driver) route the rows are already materialized in a
-    LocalRelation — single-pass and job-free by construction. On the
-    executor route (forced here) the relation must be persist()-ed so
-    the ``_stats_ok`` probe and the caller's write/collect share ONE
-    O(#files x footer) job, and ``done()`` releases it."""
-    t = typed_table
-    src, done = t._zone_source("k")
-    try:
-        plan = src._jdf.queryExecution().optimizedPlan().toString()
-        assert "LocalRelation" in plan, plan
-    finally:
-        done()
-    monkeypatch.setattr(SaltedTable, "FOOTER_DRIVER_MAX_FILES", 0)
-    src, done = t._zone_source("k")
-    try:
-        plan = src._jdf.queryExecution().optimizedPlan().toString()
-        assert "InMemoryRelation" in plan, plan
-        # consuming it twice hits the cache, not two footer jobs
-        assert src.count() == src.count() > 0
-    finally:
-        done()
-    # done() unpersisted the backing relation: a fresh plan of the same
-    # lineage no longer reads from cache
-    fdf = t._footer_zone_map("k")
-    assert "InMemoryRelation" not in fdf._jdf.queryExecution().optimizedPlan().toString()
+    """VERDICT r8 #1: the footer pass must run ONCE per build. A cold
+    zone table reads every footer in one pass, and a warm one (memoized
+    on the handle) reads none."""
+    import hbasewd_spark.sources.salted_table as st
 
+    t = SaltedTable.load(spark, typed_table.path)
+    calls = []
+    real = st._footer_stats_batch
 
-@pytest.mark.parametrize("col", ["k", "ts", "s", "nullable"])
-def test_driver_and_executor_footer_routes_identical(
-    spark, typed_table, col, monkeypatch
-):
-    """r9: small local file sets read footers ON THE DRIVER (zero
-    Spark jobs — the job launch dominated salted_write at bench
-    scale); large/remote sets take the mapInArrow executor route. Both
-    call the same `_footer_stats_batch`, and must yield identical
-    rows AND identical Spark schemas (the sidecar parquet files they
-    write are interchangeable)."""
-    t = typed_table
-    drv, done = t._zone_source(col)
-    monkeypatch.setattr(SaltedTable, "FOOTER_DRIVER_MAX_FILES", 0)
-    exe = t._footer_zone_map(col).drop("_stats_ok")
-    assert "mapInArrow" not in drv._jdf.queryExecution().analyzed().toString()
-    assert drv.schema == exe.schema
-    assert _canon(drv) == _canon(exe)
+    def counting(paths, col, target):
+        calls.append(len(paths))
+        return real(paths, col, target)
+
+    monkeypatch.setattr(st, "_footer_stats_batch", counting)
+    zt = t._zone_table("k")
+    assert calls == [zt.num_rows] and zt.num_rows > 0
+    t._zone_table("k")
+    assert calls == [zt.num_rows]
 
 
 def test_driver_footer_route_launches_no_jobs(spark, typed_table):
-    """The whole point of the driver route: building the footer
-    relation and collecting it must not run a single Spark job (a
+    """The footer reader runs on the driver: reading the footers and
+    collecting their relation must not run a single Spark job (a
     LocalRelation collect is driver-side in classic mode)."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     before = tracker.getJobIdsForGroup(None)
-    fdf, done = typed_table._zone_source("k")
-    rows = fdf.collect()
+    t = typed_table
+    rows = t._zone_rows_df("k", t._footer_stats_local("k")).collect()
     assert len(rows) > 0
     after = tracker.getJobIdsForGroup(None)
     assert before == after, "driver footer route launched Spark jobs"
+
+
+def _jobs_under_group(spark, group, fn):
+    """``(fn(), ids of the Spark jobs fn ran)``, read from the status
+    tracker once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_footer_reader_has_no_file_count_cap(spark, tmp_path):
+    """300 data files: a cold zone table and build_zone_map both read
+    the footers on the driver, with no Spark job, and their rows are
+    the column scan's."""
+    df = spark.range(30000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    t = SaltedTable.write(df, str(tmp_path / "t"), HashDistributor(300), "k")
+    t = SaltedTable.load(spark, t.path)
+    assert len(t._data_signature(Fs(spark, t.path))) == 300
+    zt, cold_jobs = _jobs_under_group(spark, "zones-cold", lambda: t._zone_table("k"))
+    _, build_jobs = _jobs_under_group(spark, "zones-build", lambda: t.build_zone_map("k"))
+    assert cold_jobs == [] and build_jobs == []
+    scan = _canon(t.zone_map("k"))
+    assert len(scan) == 300
+    assert _canon(spark.createDataFrame(zt)) == scan
+    assert _canon(t._zone_sidecar_df("k")) == scan
+
+
+def test_viewfs_table_warns_and_falls_back_to_scan(spark, tmp_path):
+    """pyarrow cannot open ``viewfs://`` files, so the footer reader
+    stops at the first one: ``build_zone_map`` warns, naming the
+    scheme, and the sidecar comes from the column scan. Its rows are
+    those of the same files read through the local path, and
+    ``fast_count`` agrees with the local table."""
+    mount = f"vf{uuid.uuid4().hex[:12]}"
+    spark._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./data", f"file://{tmp_path}"
+    )
+    ts0 = datetime.datetime(2024, 1, 1)
+    df = spark.range(2000).select(
+        (F.to_timestamp(F.lit("2024-01-01")) + F.make_interval(secs=F.col("id") * 61)).alias("ts"),
+        F.col("id").alias("v"),
+    )
+    SaltedTable.write(df, str(tmp_path / "t"), HashDistributor(4), "ts")
+    local = SaltedTable.load(spark, str(tmp_path / "t"))
+    lo = ts0 + datetime.timedelta(hours=3)
+    hi = ts0 + datetime.timedelta(hours=20)
+    want_rows = sorted(r[1:] for r in _canon(local.zone_map("ts")))
+    want_counts = (local.fast_count(lo, hi), local.fast_count())
+
+    remote = SaltedTable.load(spark, f"viewfs://{mount}/data/t")
+    with pytest.warns(UserWarning, match="viewfs"):
+        remote.build_zone_map("ts")
+    remote.refresh()
+    assert remote._zone_sidecar_df("ts") is not None
+    zt = remote._zone_table("ts")
+    assert all(f.startswith("viewfs://") for f in zt["file"].to_pylist())
+    got_rows = sorted(r[1:] for r in _canon(spark.createDataFrame(zt)))
+    assert got_rows == want_rows and len(got_rows) == 4
+    assert (remote.fast_count(lo, hi), remote.fast_count()) == want_counts
+    assert want_counts[0] > 0
