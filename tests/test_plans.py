@@ -612,3 +612,14 @@ def test_every_registry_query_attested_within_one_round():
         f"(latest driver round r{latest}): {stale} — run "
         f"tools/check_oracles.py --json SELFCHECK_r{latest}.json and commit it"
     )
+
+
+def test_q_rejects_a_duplicate_name():
+    """Registering a taken name raises instead of silently replacing
+    the earlier entry."""
+    from hbasewd_spark.queries import REGISTRY, q
+
+    name, spec = next(iter(REGISTRY.items()))
+    with pytest.raises(ValueError, match=name):
+        q(name, None)(lambda spark, sf_dir: None)
+    assert REGISTRY[name] is spec
