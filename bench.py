@@ -155,12 +155,14 @@ def main() -> None:
     tbl_holder = {}
 
     def do_write():
-        # zone_map_cols builds the key zone-map sidecar at write time —
-        # that is the production layout (SaltedTable.write docs), and it
-        # makes merged_scan's number the steady-state one: without the
-        # sidecar the first scan_merged pays a one-off full-column zone
-        # scan that r5's bench misread as a 2.8x regression
-        # (BENCH_HISTORY.md, round-6 definition change).
+        # zone_map_cols reads the key's zone metadata from the parquet
+        # footers at write time (nothing persisted; a column the footers
+        # cannot serve gets a scan-built sidecar) — the production
+        # layout (SaltedTable.write docs), and it makes merged_scan's
+        # number the steady-state one: without it the first
+        # scan_merged once paid a full-column zone scan that r5's bench
+        # misread as a 2.8x regression (BENCH_HISTORY.md, round-6
+        # definition change).
         # row_group_bytes: keep ~8 row groups per bucket file at ANY
         # bench SF so intra-file pruning engages like it does on
         # production GB-class files (128 MB groups). Estimated off the

@@ -393,7 +393,7 @@ FROM events WHERE ts >= {_TS_LO} AND ts < {_TS_HI}
     "p6b_metadata_count_range",
     _P6B_SQL,
     "P6 count served from zone-map METADATA (SaltedTable.fast_count): "
-    "files wholly inside the range contribute their sidecar row count "
+    "files wholly inside the range contribute their footer row count "
     "with zero I/O — the reference's lean on per-region metadata — and "
     "only boundary-straddling files are scanned. The oracle counts the "
     "same range the slow way; the two must agree exactly.",

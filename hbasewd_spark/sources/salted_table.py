@@ -116,17 +116,6 @@ def salted(df: DataFrame, distributor: KeyDistributor, key_col: str) -> DataFram
     return df.withColumn(SALT_COL, distributor.salt_expr(key_col))
 
 
-def _local_fs_path(p: str) -> str:
-    """Strip a ``file:``/``file://`` scheme down to the plain local
-    path non-JVM writers (pyarrow) understand. Callers only reach this
-    for a table on the local filesystem."""
-    if p.startswith("file://"):
-        return p[7:]
-    if p.startswith("file:"):
-        return p[5:]
-    return p
-
-
 class _NoFooterStats(Exception):
     """A data file's parquet footer cannot speak for a column: pyarrow
     cannot open the file, or the column's stats are missing or
@@ -264,6 +253,11 @@ class SaltedTable:
         right (GB-class bucket files -> ~8+ groups each); at bench
         scale the miniature-faithful move is shrinking the group so the
         file:group ratio matches production (SCALE.md, file geometry).
+
+        ``zone_map_cols`` runs :meth:`build_zone_map` per listed column:
+        parquet footers serve the column's zone metadata with nothing
+        persisted; a column they cannot serve gets a watermarked
+        ``_zone_maps/<col>/`` sidecar from one column scan.
         """
         salted_df = salted(df, distributor, key_col)
         n = distributor.buckets
@@ -290,9 +284,6 @@ class SaltedTable:
             path.rstrip("/") + "/" + META_FILE, json.dumps(meta)
         )
         t = cls(df.sparkSession, path, distributor, key_col, fmt, data_schema_json)
-        # write-time zone maps: pay one column-pruned scan per listed
-        # column now so later pruned_scan/expire planning reads the
-        # tiny sidecar instead of re-scanning the table
         for c in zone_map_cols or []:
             t.build_zone_map(c)
         return t
@@ -597,15 +588,16 @@ class SaltedTable:
                 salted_changes.select(self.key_col), self.key_col, "left_anti"
             )
             merged = keep.unionByName(salted_changes.select(*keep.columns))
-            # dynamic mode: overwrite replaces only the partitions present
-            # in the written data — untouched buckets stay as-is on disk
-            prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            # dynamic mode, for this write only: overwrite replaces only
+            # the partitions present in the written data — untouched
+            # buckets stay as-is on disk, and the session conf is never
+            # changed (a failed write cannot leave it dynamic)
             self._writer(
                 merged.repartition(max(len(touched), 1), F.col(SALT_COL))
                 .sortWithinPartitions(SALT_COL, self.key_col)
-            ).mode("overwrite").save(self.path)
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            ).option("partitionOverwriteMode", "dynamic").mode("overwrite").save(
+                self.path
+            )
             self.refresh()
             self.rebuild_zone_maps()
             return self
@@ -708,32 +700,33 @@ class SaltedTable:
     ZONE_MAP_DRIVER_WARN_FILES = 100_000
 
     def build_zone_map(self, col: str) -> None:
-        """Persist the per-file zone map for ``col`` into the table
-        sidecar (``_zone_maps/<col>/``, underscore-prefixed so scans
-        never list it), watermarked with the data-file signature like
-        the key index. A fresh persisted map turns every later
-        :meth:`pruned_scan` / :meth:`expire` planning step into one
-        tiny parquet read instead of a full column scan of the table —
-        at 100 TB that is the difference between O(index) and O(data)
-        planning. Stale maps (any append/compact/expire since the
-        build) are detected via the watermark and silently bypassed.
+        """Make planning on ``col`` read O(index) zone metadata, and
+        warm this handle's memo of it.
 
-        The stats come from parquet FOOTERS, read on the driver by
-        :meth:`_footer_stats_local` (O(#files × footer), no Spark
-        job), and are written by :meth:`_write_zone_rows`. Where the
-        footers cannot speak for the column (unopenable path,
-        unusable stats, non-parquet format) one column-pruned scan
-        (:meth:`zone_map`) writes the sidecar instead. The watermark
-        is the listing the footers were read from."""
+        Where the parquet footers serve the column
+        (:meth:`_footer_stats_local`: one driver-side read, no Spark
+        job), they ARE the persisted source: nothing is written, and an
+        older ``_zone_maps/<col>/`` copy is removed. Where they cannot
+        (ORC/CSV/JSON tables, unusable stats, a path pyarrow cannot
+        open), one column-pruned scan (:meth:`zone_map`) persists the
+        rows into the sidecar ``_zone_maps/<col>/`` (underscore-
+        prefixed so scans never list it), watermarked with the
+        data-file listing like the key index — at 100 TB the
+        difference between O(index) and O(data) planning. Any later
+        append/compact/expire leaves that sidecar stale; the watermark
+        bypasses it, never trusts it."""
         zm_dir = self._zone_dir(col)
         fs = Fs(self.spark, self.path)
         sig = self._data_signature(fs)
         tbl = self._footer_stats_local(col, [t[0] for t in sig])
         fs.delete(zm_dir, recursive=True)
-        if tbl is None:
-            self.zone_map(col).write.mode("overwrite").parquet(zm_dir)
-        else:
-            self._write_zone_rows(fs, zm_dir, col, tbl)
+        if tbl is not None:
+            root = zm_dir.rsplit("/", 1)[0]
+            if not fs.glob(root + "/*"):
+                fs.delete(root, recursive=True)
+            self._memo_zones(col, tbl)
+            return
+        self.zone_map(col).write.mode("overwrite").parquet(zm_dir)
         fs.write_text(
             zm_dir + "/" + self.ZONE_META_FILE, json.dumps({"data_sig": sig})
         )
@@ -751,10 +744,11 @@ class SaltedTable:
         ``None`` for a non-parquet table, and for a parquet table
         whose column has no Arrow type or at the first file pyarrow
         cannot open or whose stats are unusable; the caller then takes
-        the column scan (:meth:`zone_map`), and the parquet case warns
-        once per handle and column, naming the reason. Footer rows are
-        all-or-nothing: a mixed set would hold scan-exact rows next to
-        conservative footer rows with no record of which is which.
+        the fresh sidecar or the column scan (:meth:`_zone_table`),
+        and the parquet case warns once per handle and column, naming
+        the reason. Footer rows are all-or-nothing: a mixed set would
+        hold scan-exact rows next to conservative footer rows with no
+        record of which is which.
 
         Parquet writers may TRUNCATE long binary min/max (parquet-mr
         increments the truncated max), so footer lo/hi are
@@ -764,14 +758,14 @@ class SaltedTable:
         fixture scale."""
         if self.fmt != "parquet":
             return None
-        schemas = self._zone_stats_schemas(col)
+        target = self._zone_arrow_schema(col)
         try:
-            if schemas is None:
+            if target is None:
                 raise _NoFooterStats("the column is unknown or has no Arrow type")
             if paths is None:
                 paths = [t[0] for t in self._data_signature(Fs(self.spark, self.path))]
             paths = [self._canon_file_uri(p) for p in paths]
-            return pa.Table.from_batches([_footer_stats_batch(paths, col, schemas[1])])
+            return pa.Table.from_batches([_footer_stats_batch(paths, col, target)])
         except _NoFooterStats as e:
             warned = self.__dict__.setdefault("_scan_fallback_warned", set())
             if col not in warned:
@@ -779,8 +773,10 @@ class SaltedTable:
 
                 warned.add(col)
                 warnings.warn(
-                    f"zone metadata for {col!r} of {self.path} falls back "
-                    f"to a column scan: {e}",
+                    f"zone metadata for {col!r} of {self.path} cannot come "
+                    f"from its parquet footers ({e}): it comes from the "
+                    f"column's zone-map sidecar while that is fresh, else "
+                    f"from a column scan",
                     stacklevel=2,
                 )
             return None
@@ -789,19 +785,17 @@ class SaltedTable:
     def _canon_file_uri(p: str) -> str:
         """One canonical spelling per file: Hadoop's globStatus renders
         local paths as ``file:/x`` while Spark's ``input_file_name``
-        renders ``file:///x`` — same file, different strings. Zone-map
-        rows store (and incremental maintenance compares) the
-        triple-slash form so footer-built and scan-built sidecars are
-        byte-interchangeable."""
+        renders ``file:///x`` — same file, different strings. Footer
+        zone rows store the triple-slash form so they name files as
+        the scan-built rows do."""
         if p.startswith("file:/") and not p.startswith("file://"):
             return "file://" + p[5:]
         return p
 
-    def _zone_stats_schemas(self, col: str):
-        """``(out_schema, arrow_target)`` of ``col``'s zone rows — the
-        Spark schema of a sidecar and the Arrow schema the footer
-        reader builds — or ``None`` when the column is unknown or its
-        type has no arrow mapping."""
+    def _zone_arrow_schema(self, col: str):
+        """The Arrow schema of ``col``'s zone rows ``(file, lo, hi,
+        n_rows, n_nulls)``, or ``None`` when the column is unknown or
+        its type has no Arrow mapping."""
         from pyspark.sql.types import LongType, StringType, StructField, StructType
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -814,42 +808,20 @@ class SaltedTable:
             col_type = data_schema[col].dataType
         except Exception:
             return None  # unknown column/schema: let the scan path speak
-        out_schema = StructType(
-            [
-                StructField("file", StringType()),
-                StructField("lo", col_type),
-                StructField("hi", col_type),
-                StructField("n_rows", LongType()),
-                StructField("n_nulls", LongType()),
-            ]
-        )
         try:
-            target = to_arrow_schema(out_schema)
+            return to_arrow_schema(
+                StructType(
+                    [
+                        StructField("file", StringType()),
+                        StructField("lo", col_type),
+                        StructField("hi", col_type),
+                        StructField("n_rows", LongType()),
+                        StructField("n_nulls", LongType()),
+                    ]
+                )
+            )
         except Exception:
             return None  # no arrow mapping for this key type
-        return out_schema, target
-
-    def _zone_rows_df(self, col: str, tbl) -> DataFrame:
-        """Footer zone rows as a Spark relation in the sidecar schema
-        (a LocalRelation: building it runs no job)."""
-        out_schema, _ = self._zone_stats_schemas(col)
-        return self.spark.createDataFrame(tbl).to(out_schema)
-
-    def _write_zone_rows(self, fs: Fs, zm_dir: str, col: str, tbl) -> None:
-        """Add footer zone rows to the sidecar ``zm_dir`` as one more
-        part file: written by pyarrow when the table is on the local
-        filesystem (no Spark job), else by a Spark append."""
-        if fs.fs.getUri().getScheme() != "file":
-            self._zone_rows_df(col, tbl).write.mode("append").parquet(zm_dir)
-            return
-        import uuid
-
-        import pyarrow.parquet as pq
-
-        fs.mkdirs(zm_dir)
-        pq.write_table(
-            tbl, f"{_local_fs_path(zm_dir)}/part-{uuid.uuid4().hex}.parquet"
-        )
 
     def _zone_dir(self, col: str) -> str:
         return f"{self.path.rstrip('/')}/{self.ZONE_MAP_DIR}/{col}"
@@ -862,7 +834,9 @@ class SaltedTable:
         means every later scan pays a live zone scan of the column —
         silent O(data) planning where the operator had paid for
         O(index). One :meth:`build_zone_map` per sidecar, the same
-        cost the original build paid."""
+        cost the original build paid; a column the parquet footers
+        serve loses its sidecar instead (a footer copy left by an older
+        build goes at the first verb)."""
         fs = Fs(self.spark, self.path)
         zm_root = f"{self.path.rstrip('/')}/{self.ZONE_MAP_DIR}"
         cols = [
@@ -874,101 +848,20 @@ class SaltedTable:
             self.build_zone_map(c)
         return cols
 
-    def maintain_sidecars_incremental(
-        self,
-        pre_sig: list,
-        removed_files: list[str],
-        added_files: list[str],
-    ) -> list[str]:
-        """Keep zone-map sidecars ALIVE across an in-place append or
-        file replacement — the streaming epoch commit (VERDICT r7 #2):
-        without this, every epoch restamps ``_data_signature`` and the
-        watermark silently bypasses the sidecar forever, so a
-        continuously-streaming table loses the fast_count / scan_merged
-        metadata path until someone runs a lifecycle verb.
-
-        For each persisted sidecar that was FRESH against ``pre_sig``
-        (the signature before the mutation — freshness is what proves
-        the sidecar covers exactly the pre-mutation files), read the
-        footer stats of ``added_files`` (:meth:`_footer_stats_local`)
-        and restamp the watermark with the post-mutation signature:
-
-        - a pure append adds the new rows as one more part file
-          (:meth:`_write_zone_rows`: pyarrow on a local table, so an
-          epoch commit runs no Spark job for its sidecars);
-        - a replay (files removed) rewrites the sidecar as its old
-          rows minus ``removed_files`` plus the new rows, written to a
-          tmp dir and renamed over the old one.
-
-        Cost is O(new files × footer) — metadata, never a table scan.
-        Sidecars that were already stale, or whose column stats the
-        footers cannot supply, are left stale (the watermark keeps
-        them safely bypassed).
-
-        Caller must hold the table lock: the read-modify-write of the
-        sidecar and the restamp are not atomic against a concurrent
-        verb. Returns the updated column names."""
-        if not removed_files and not added_files:
-            return []  # the file set, and so every watermark, is unchanged
-        fs = Fs(self.spark, self.path)
-        zm_root = f"{self.path.rstrip('/')}/{self.ZONE_MAP_DIR}"
-        removed = {self._canon_file_uri(p) for p in removed_files}
-        post_sig = None
-        updated: list[str] = []
-        for zm_dir in fs.glob(f"{zm_root}/*"):
-            if not fs.is_dir(zm_dir):
-                continue
-            col = zm_dir.rsplit("/", 1)[1]
-            try:
-                meta = json.loads(fs.read_text(zm_dir + "/" + self.ZONE_META_FILE))
-            except Exception:
-                continue  # unstamped/corrupt: leave for rebuild
-            if meta.get("data_sig") != pre_sig:
-                continue  # was already stale before this mutation
-            new_rows = self._footer_stats_local(col, added_files)
-            if new_rows is None:
-                continue  # footers can't speak for this column
-            if removed:
-                tmp = zm_dir + ".tmp"
-                fs.delete(tmp, recursive=True)
-                (
-                    self.spark.read.parquet(zm_dir)
-                    .where(~F.col("file").isin(list(removed)))
-                    .unionByName(self._zone_rows_df(col, new_rows))
-                    .write.mode("overwrite")
-                    .parquet(tmp)
-                )
-                fs.delete(zm_dir, recursive=True)
-                if not fs.rename(tmp, zm_dir):
-                    # sidecar now missing -> safe bypass, rebuilt
-                    # by the next lifecycle verb or build_zone_map
-                    continue
-            else:
-                self._write_zone_rows(fs, zm_dir, col, new_rows)
-            if post_sig is None:
-                post_sig = self._data_signature(fs)
-            fs.write_text(
-                zm_dir + "/" + self.ZONE_META_FILE,
-                json.dumps({"data_sig": post_sig}),
-            )
-            updated.append(col)
-        if updated:
-            self._zone_maps = None
-        return updated
-
-    def _zone_sidecar_df(self, col: str) -> DataFrame | None:
+    def _zone_sidecar_df(self, col: str, sig: list | None = None) -> DataFrame | None:
         """The persisted zone-map sidecar for ``col`` as a (lazy)
-        DataFrame — only when present, watermark-fresh, and
-        schema-current (sidecars written before the n_nulls column
-        existed are schema-stale: recompute rather than hand expire()
-        rows missing the field). ``None`` otherwise."""
+        DataFrame — only when present, watermark-fresh against ``sig``
+        (the data-file listing; default: list now), and schema-current
+        (sidecars written before the n_nulls column existed are
+        schema-stale: recompute rather than hand expire() rows missing
+        the field). ``None`` otherwise."""
         zm_dir = self._zone_dir(col)
         fs = Fs(self.spark, self.path)
         if not fs.is_dir(zm_dir):
             return None
         try:
             meta = json.loads(fs.read_text(zm_dir + "/" + self.ZONE_META_FILE))
-            if meta.get("data_sig") != self._data_signature(fs):
+            if meta.get("data_sig") != (self._data_signature(fs) if sig is None else sig):
                 return None
             zdf = self.spark.read.parquet(zm_dir)
             return zdf if "n_nulls" in zdf.columns else None
@@ -978,53 +871,56 @@ class SaltedTable:
     def _zone_table(self, col: str):
         """Zone metadata for ``col`` as ONE columnar ``pa.Table`` —
         ``(file, lo, hi, n_rows, n_nulls)``, one row per data file —
-        from the persisted sidecar when present and fresh, else from
-        the parquet footers (:meth:`_footer_stats_local`), else one
-        column scan (:meth:`zone_map`); memoized per table
-        handle (refresh() clears). Every zone consumer reads this one
-        representation: scan_merged's shard planner, fast_count,
-        pruned_scan, expire, scanner chunking and :meth:`manifest`.
+        from the first source that can serve it: the parquet footers
+        (:meth:`_footer_stats_local`, no Spark job), else the fresh
+        sidecar :meth:`build_zone_map` persists where footers cannot
+        serve, else one column scan (:meth:`zone_map`). One data-file
+        listing feeds both the footer read and the sidecar watermark.
+        Memoized per table handle (refresh() clears). Every zone
+        consumer reads this one representation: scan_merged's shard
+        planner, fast_count, pruned_scan, expire, scanner chunking and
+        :meth:`manifest`."""
+        if col not in (getattr(self, "_zone_maps", None) or {}):
+            sig = self._data_signature(Fs(self.spark, self.path))
+            tbl = self._footer_stats_local(col, [t[0] for t in sig])
+            if tbl is None:
+                zdf = self._zone_sidecar_df(col, sig)
+                tbl = (self.zone_map(col) if zdf is None else zdf).toArrow()
+            self._memo_zones(col, tbl)
+        return self._zone_maps[col]
 
-        Instant (TimestampType) zones are normalized to
-        ``timestamp[us, tz=UTC]`` and ``n_nulls`` is 0-filled.
-        O(#files) driver memory by design (SCALE.md, driver-side
-        metadata); warns past ZONE_MAP_DRIVER_WARN_FILES."""
+    def _memo_zones(self, col: str, tbl) -> None:
+        """Memoize ``tbl`` as ``col``'s zone table: instant
+        (TimestampType) zones normalized to ``timestamp[us, tz=UTC]``,
+        ``n_nulls`` 0-filled. O(#files) driver memory by design
+        (SCALE.md, driver-side metadata); warns past
+        ZONE_MAP_DRIVER_WARN_FILES."""
         import warnings
 
-        zm_cache = getattr(self, "_zone_maps", None)
-        if zm_cache is None:
-            zm_cache = self._zone_maps = {}
-        if col not in zm_cache:
-            zdf = self._zone_sidecar_df(col)
-            if zdf is not None:
-                tbl = zdf.toArrow()
-            else:
-                tbl = self._footer_stats_local(col)
-                if tbl is None:
-                    tbl = self.zone_map(col).toArrow()
-            key_type = tbl.schema.field("lo").type
-            if pa.types.is_timestamp(key_type) and key_type.tz:
-                key_type = pa.timestamp("us", tz="UTC")
-            tbl = pa.table(
-                {
-                    "file": tbl["file"].cast(pa.string()),
-                    "lo": tbl["lo"].cast(key_type),
-                    "hi": tbl["hi"].cast(key_type),
-                    "n_rows": pc.fill_null(tbl["n_rows"].cast(pa.int64()), 0),
-                    "n_nulls": pc.fill_null(tbl["n_nulls"].cast(pa.int64()), 0),
-                }
-            ).combine_chunks()
-            if tbl.num_rows > self.ZONE_MAP_DRIVER_WARN_FILES:
-                warnings.warn(
-                    f"zone map for {col!r} holds {tbl.num_rows} file entries "
-                    f"on the driver (past the "
-                    f"{self.ZONE_MAP_DRIVER_WARN_FILES}-file planning "
-                    f"threshold); compact() the table to cut its file "
-                    f"count (SCALE.md, driver-side metadata)",
-                    stacklevel=3,
-                )
-            zm_cache[col] = tbl
-        return zm_cache[col]
+        key_type = tbl.schema.field("lo").type
+        if pa.types.is_timestamp(key_type) and key_type.tz:
+            key_type = pa.timestamp("us", tz="UTC")
+        tbl = pa.table(
+            {
+                "file": tbl["file"].cast(pa.string()),
+                "lo": tbl["lo"].cast(key_type),
+                "hi": tbl["hi"].cast(key_type),
+                "n_rows": pc.fill_null(tbl["n_rows"].cast(pa.int64()), 0),
+                "n_nulls": pc.fill_null(tbl["n_nulls"].cast(pa.int64()), 0),
+            }
+        ).combine_chunks()
+        if tbl.num_rows > self.ZONE_MAP_DRIVER_WARN_FILES:
+            warnings.warn(
+                f"zone map for {col!r} holds {tbl.num_rows} file entries "
+                f"on the driver (past the "
+                f"{self.ZONE_MAP_DRIVER_WARN_FILES}-file planning "
+                f"threshold); compact() the table to cut its file "
+                f"count (SCALE.md, driver-side metadata)",
+                stacklevel=4,
+            )
+        if getattr(self, "_zone_maps", None) is None:
+            self._zone_maps = {}
+        self._zone_maps[col] = tbl
 
     def _zone_bound(self, v: Any, key_type):
         """A range bound as an Arrow scalar comparable with zone columns
@@ -1096,10 +992,11 @@ class SaltedTable:
         n_rows, n_nulls)``, one row per data file — readable AS a
         DataFrame (VERDICT r11 #4; SCALE.md "driver-side metadata"):
         the DataFrame view of the same zone metadata every planner
-        reads (:meth:`_zone_table` — the fresh sidecar, else footer
-        stats, else one column-pruned scan; run
-        ``build_zone_map(col)`` / ``write(zone_map_cols=…)`` to make it
-        metadata-cheap). For per-salt file audits and ad-hoc SQL over
+        reads (:meth:`_zone_table` — parquet footer stats, else the
+        fresh sidecar, else one column-pruned scan; where the footers
+        cannot serve ``col``, ``build_zone_map(col)`` /
+        ``write(zone_map_cols=…)`` keeps it metadata-cheap). For
+        per-salt file audits and ad-hoc SQL over
         the table's layout. ``salt`` is parsed from the Hive-style
         ``salt=N/`` path segment (NULL for files outside a salt
         directory)."""
@@ -1954,8 +1851,9 @@ class SaltedTable:
 
         At 100 TB with key-sorted salted files, a retention-window
         count touches ~2 files per bucket for real I/O; everything else
-        is sidecar metadata. An unbounded ``fast_count()`` is pure
-        metadata. Exact-equal to ``scan(start, stop).count()`` by
+        is zone metadata (:meth:`_zone_table`: the parquet footers, or
+        the fresh sidecar where they cannot serve the key). An
+        unbounded ``fast_count()`` is pure metadata. Exact-equal to ``scan(start, stop).count()`` by
         construction (oracle-gated in tests). The classification is
         array work over the handle's memoized columnar zone table —
         no Spark job before the boundary-file count."""

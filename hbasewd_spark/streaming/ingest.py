@@ -238,34 +238,17 @@ def idempotent_salted_batch_write(
                 f"swapped the table dir between stage and commit; raising "
                 f"so the epoch replays"
             )
-        # sidecar continuity (VERDICT r7 #2): capture the pre-commit
-        # data signature so fresh zone-map sidecars can be maintained
-        # incrementally after the renames instead of going stale on
-        # every epoch (which would cost a continuously-streaming table
-        # its fast_count/scan_merged metadata path permanently)
-        tbl = None
-        pre_sig = None
-        try:
-            tbl = SaltedTable.load(batch_df.sparkSession, dest_path)
-            pre_sig = tbl._data_signature(fs)
-        except Exception:
-            tbl = None  # bare sink / unreadable meta: nothing to maintain
-        purged: list[str] = []
         for stale in fs.glob(
             f"{dest_path.rstrip('/')}/{SALT_COL}=*/epoch-{epoch_id:010d}-*.parquet"
         ):
             fs.delete(stale)
-            purged.append(stale)
         # rename from the manifest, grouped by salt dir: the listed
         # paths are sorted and in the filesystem's own URI form, so
         # each dir's files come in name order (the seq order) and the
-        # destinations are spelled as the purge glob and the
-        # data-signature listing spell them, which keeps sidecar rows
-        # matching across replays
+        # destinations are spelled as the purge glob spells them
         by_dir: dict[str, list[str]] = {}
         for f in manifest["files"]:
             by_dir.setdefault(f.rsplit("/", 1)[0], []).append(f)
-        landed: list[str] = []
         for salt_dir, files in by_dir.items():
             stage_uri, salt_part = salt_dir.rsplit("/", 1)
             target_dir = stage_uri.rsplit("/", 1)[0] + "/" + salt_part
@@ -280,21 +263,7 @@ def idempotent_salted_batch_write(
                         f"epoch {epoch_id}: rename {f} -> {dest} failed; "
                         f"stage {stage} preserved for the retry"
                     )
-                landed.append(dest)
         fs.delete(stage, recursive=True)
-        if tbl is not None:
-            import warnings
-
-            try:
-                tbl.maintain_sidecars_incremental(pre_sig, purged, landed)
-            except Exception as e:
-                # a failed maintenance leaves the sidecar stale -> the
-                # watermark bypasses it (safe, just slower); say so
-                warnings.warn(
-                    f"epoch {epoch_id}: zone-map sidecar maintenance "
-                    f"failed ({e}); sidecars go stale until the next "
-                    f"lifecycle verb rebuilds them"
-                )
 
 
 def salted_stream_ingest(

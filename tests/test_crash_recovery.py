@@ -836,14 +836,15 @@ def test_zone_sidecar_build_crash_never_corrupts_query_results(
     watermark), subsequent fast_count / pruned_scan / scan answers
     must be EXACT — a partial sidecar may cost the fallback compute,
     never a wrong number. This is the worst failure class: the other
-    crash tests protect data files; this one protects answers."""
+    crash tests protect data files; this one protects answers. ORC:
+    a parquet table's footers serve its zones, so it persists none."""
     df = spark.range(1000).select(
         F.col("id").alias("key_long"), (F.col("id") * 3).alias("v")
     )
 
     def build(name):
         return SaltedTable.write(
-            df, str(tmp_path / name), HashDistributor(4), "key_long"
+            df, str(tmp_path / name), HashDistributor(4), "key_long", fmt="orc"
         )
 
     t = build("zm_probe")

@@ -1,7 +1,8 @@
 """The streaming epoch commit at metadata cost: a Hadoop path is one
-py4j command, a pure-append epoch maintains its zone sidecars without
-a Spark job, and a stage that loses a file between the stage write and
-the commit still raises so the epoch replays exactly once."""
+py4j command, an epoch commit lists no data files and loads no table
+(the parquet footers are the zone metadata, so nothing needs
+maintaining), and a stage that loses a file between the stage write
+and the commit still raises so the epoch replays exactly once."""
 
 import contextlib
 
@@ -21,20 +22,6 @@ def _rows(spark, lo, hi):
         F.timestamp_micros(F.lit(T0_US) + F.col("id") * 1000).alias("ts"),
         F.col("id").alias("v"),
     )
-
-
-def _jobs_under_group(spark, group, fn):
-    """``(fn(), ids of the Spark jobs fn ran)``, read from the status
-    tracker once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_fs_path_is_one_py4j_command(spark, tmp_path):
@@ -57,7 +44,11 @@ def test_fs_path_is_one_py4j_command(spark, tmp_path):
     assert str(p).endswith("/x")
 
 
-def test_epoch_sidecar_maintenance_runs_no_spark_job(spark, tmp_path, monkeypatch):
+def test_epoch_commit_lists_and_loads_nothing(spark, tmp_path, monkeypatch):
+    """An epoch onto a table written with ``zone_map_cols`` commits with
+    no data-file listing and no table load: the parquet footers are its
+    zone metadata, so there is no zone copy to keep fresh. The zones
+    afterwards are the column scan's, and the count is exactly-once."""
     t = SaltedTable.write(
         _rows(spark, 0, 2000),
         str(tmp_path / "t"),
@@ -65,31 +56,29 @@ def test_epoch_sidecar_maintenance_runs_no_spark_job(spark, tmp_path, monkeypatc
         "ts",
         zone_map_cols=["ts"],
     )
-    assert t._zone_sidecar_df("ts") is not None
-    real = SaltedTable.maintain_sidecars_incremental
-    seen = {}
+    fs = Fs(spark, t.path)
+    calls = {"sig": 0, "load": 0}
+    real_sig, real_load = SaltedTable._data_signature, SaltedTable.load.__func__
 
-    def grouped(self, pre_sig, removed, added):
-        seen["updated"], seen["jobs"] = _jobs_under_group(
-            spark,
-            "epoch-sidecars",
-            lambda: real(self, pre_sig, removed, added),
-        )
-        return seen["updated"]
+    def counting_sig(self, fs_):
+        calls["sig"] += 1
+        return real_sig(self, fs_)
 
-    monkeypatch.setattr(SaltedTable, "maintain_sidecars_incremental", grouped)
+    def counting_load(cls, spark_, path):
+        calls["load"] += 1
+        return real_load(cls, spark_, path)
+
+    monkeypatch.setattr(SaltedTable, "_data_signature", counting_sig)
+    monkeypatch.setattr(SaltedTable, "load", classmethod(counting_load))
     ing.idempotent_salted_batch_write(_rows(spark, 2000, 2500), 1, t.path, t.distributor, "ts")
-    assert seen["updated"] == ["ts"]
-    assert seen["jobs"] == []
+    assert calls == {"sig": 0, "load": 0}
     monkeypatch.undo()
 
+    assert not fs.exists(f"{t.path}/_zone_maps")
     t.refresh()
-    assert t._zone_sidecar_df("ts") is not None  # restamped fresh
-    maintained = sorted(t._zone_table("ts").to_pylist(), key=lambda r: r["file"])
-    t.build_zone_map("ts")
-    t.refresh()
-    rebuilt = sorted(t._zone_table("ts").to_pylist(), key=lambda r: r["file"])
-    assert maintained == rebuilt and len(rebuilt) > 4
+    zones = sorted(tuple(r) for r in spark.createDataFrame(t._zone_table("ts")).collect())
+    assert zones == sorted(tuple(r) for r in t.zone_map("ts").collect())
+    assert len(zones) > 4
     assert t.fast_count() == 2500
 
 

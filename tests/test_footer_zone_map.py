@@ -10,10 +10,13 @@ column. Pins:
    footer reader return ``None`` with one warning, and the zone
    metadata falls back to the column scan — right either way;
 3. the consumers (fast_count / pruned_scan / expire / scan_merged)
-   produce exact results on a footer-built sidecar;
+   produce exact results on footer zones;
 4. the footer path is the one actually taken on a plain salted write
-   (booby-trap: the scan-based ``zone_map`` raises), with no Spark job
-   and no file-count cap;
+   (booby-trap: the scan-based ``zone_map`` raises), with no Spark job,
+   no file-count cap and nothing persisted: the footers are the
+   table's zone metadata, so ``_zone_maps/`` never appears, a streaming
+   epoch has nothing to maintain, and a footer copy an older build left
+   behind is read past and then removed;
 5. a path scheme pyarrow cannot open (``viewfs://``) falls back to the
    column scan with a warning that names it, and the answers stay
    those of the same table read through its local path.
@@ -58,7 +61,7 @@ def test_footer_zones_equal_scan_zones(spark, typed_table, col):
     t = typed_table
     tbl = t._footer_stats_local(col)
     assert tbl is not None
-    assert _canon(t._zone_rows_df(col, tbl)) == _canon(t.zone_map(col))
+    assert _canon(spark.createDataFrame(tbl)) == _canon(t.zone_map(col))
 
 
 def test_undecodable_stats_fall_back_to_scan(spark, typed_table):
@@ -79,12 +82,16 @@ def test_undecodable_stats_fall_back_to_scan(spark, typed_table):
     assert t._zone_sidecar_df("dec") is not None
 
 
-def test_write_builds_sidecar_from_footers_not_scan(spark, tmp_path, monkeypatch):
+def test_write_serves_zones_from_footers_not_scan(spark, tmp_path, monkeypatch):
     """The plain salted-write path (``zone_map_cols=[key]``) must take
-    the footer route: booby-trap the scan-based zone_map so any
-    column-scan fallback explodes."""
+    the footer route, with the scan-based zone_map booby-trapped so any
+    column-scan fallback explodes, and persist nothing: no
+    ``_zone_maps/`` directory, and a cold handle's zone table runs no
+    Spark job (reading a persisted copy back ran two)."""
+    ts0 = datetime.datetime(2024, 1, 1)
     df = spark.range(500).select(
-        F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v")
+        (F.to_timestamp(F.lit("2024-01-01")) + F.make_interval(secs=F.col("id"))).alias("ts"),
+        F.col("id").alias("v"),
     )
 
     def boom(self, col):
@@ -92,11 +99,16 @@ def test_write_builds_sidecar_from_footers_not_scan(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(SaltedTable, "zone_map", boom)
     t = SaltedTable.write(
-        df, str(tmp_path / "t"), HashDistributor(4), "k", zone_map_cols=["k"]
+        df, str(tmp_path / "t"), HashDistributor(4), "ts", zone_map_cols=["ts"]
     )
-    assert t._zone_sidecar_df("k") is not None
-    assert t.fast_count(100, 400) == 300
-    assert t.pruned_scan("k", 100, 400).count() == 300
+    assert not Fs(spark, t.path).exists(f"{t.path}/_zone_maps")
+    cold = SaltedTable.load(spark, t.path)
+    zt, jobs = _jobs_under_group(spark, "zones-cold-after-write", lambda: cold._zone_table("ts"))
+    assert jobs == [] and zt.num_rows == 4
+    lo = ts0 + datetime.timedelta(seconds=100)
+    hi = ts0 + datetime.timedelta(seconds=400)
+    assert t.fast_count(lo, hi) == 300
+    assert t.pruned_scan("ts", lo, hi).count() == 300
 
 
 def test_footer_sidecar_serves_all_consumers_exactly(spark, tmp_path):
@@ -135,16 +147,16 @@ def test_footer_zones_with_all_null_file(spark, tmp_path):
     t = SaltedTable.write(df, str(tmp_path / "t"), HashDistributor(2), "k")
     tbl = t._footer_stats_local("maybe")
     assert tbl is not None
-    assert _canon(t._zone_rows_df("maybe", tbl)) == _canon(t.zone_map("maybe"))
+    assert _canon(spark.createDataFrame(tbl)) == _canon(t.zone_map("maybe"))
 
 
 def test_streaming_epochs_keep_sidecar_alive(spark, tmp_path, monkeypatch):
-    """VERDICT r7 #2: the epoch commit maintains fresh zone-map
-    sidecars incrementally (footer stats of the epoch's files appended
-    under the commit lock), so a continuously-streaming table keeps
-    its metadata path. Three epochs land, then an epoch REPLAY (purge
-    + re-append); after each, fast_count and scan_merged must run with
-    the live column scan booby-trapped."""
+    """VERDICT r7 #2: a continuously-streaming table keeps its
+    metadata path — the footers of every landed file serve the zones,
+    so the epoch commit has no copy to maintain and none appears.
+    Three epochs land, then an epoch REPLAY (purge + re-append); after
+    each, fast_count and scan_merged must run with the live column
+    scan booby-trapped."""
     from hbasewd_spark.streaming.ingest import idempotent_salted_batch_write
 
     base = spark.range(1000).select(
@@ -153,9 +165,10 @@ def test_streaming_epochs_keep_sidecar_alive(spark, tmp_path, monkeypatch):
     t = SaltedTable.write(
         base, str(tmp_path / "t"), HashDistributor(4), "k", zone_map_cols=["k"]
     )
+    fs = Fs(spark, t.path)
 
     def boom(self, col):
-        raise AssertionError("sidecar went stale: live zone scan invoked")
+        raise AssertionError("live zone scan invoked")
 
     monkeypatch.setattr(SaltedTable, "zone_map", boom)
 
@@ -167,7 +180,7 @@ def test_streaming_epochs_keep_sidecar_alive(spark, tmp_path, monkeypatch):
         idempotent_salted_batch_write(batch, epoch, t.path, t.distributor, "k")
         hi += 500
         t.refresh()
-        assert t._zone_sidecar_df("k") is not None, f"stale after epoch {epoch}"
+        assert not fs.exists(f"{t.path}/_zone_maps"), f"zone copy after epoch {epoch}"
         assert t.fast_count(0, hi) == hi
         assert t.fast_count(700, 1600) == min(hi, 1600) - 700
     # replay epoch 2: purge (sidecar rows dropped) + re-append, exact
@@ -176,7 +189,7 @@ def test_streaming_epochs_keep_sidecar_alive(spark, tmp_path, monkeypatch):
     )
     idempotent_salted_batch_write(batch2, 2, t.path, t.distributor, "k")
     t.refresh()
-    assert t._zone_sidecar_df("k") is not None
+    assert not fs.exists(f"{t.path}/_zone_maps")
     assert t.fast_count(0, 10**9) == 2500  # exactly-once after replay
     merged = t.scan_merged(start=900, stop=1800).toPandas()
     assert len(merged) == 900
@@ -187,29 +200,36 @@ def test_epoch_on_stale_sidecar_leaves_it_stale(spark, tmp_path):
     """An epoch landing on a sidecar that was ALREADY stale must not
     restamp it fresh — that would vouch for files the sidecar never
     saw. The watermark keeps it bypassed; results stay exact via the
-    live path."""
-    from hbasewd_spark.fsutil import Fs
+    live path. The sidecar is the scan-built one of a column whose
+    footer stats are unusable (decimal(18,4))."""
     from hbasewd_spark.streaming.ingest import idempotent_salted_batch_write
 
-    base = spark.range(500).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.col("id").cast("decimal(18,4)").alias("dec")
+        )
+
     t = SaltedTable.write(
-        base, str(tmp_path / "t"), HashDistributor(4), "k", zone_map_cols=["k"]
+        rows(0, 500), str(tmp_path / "t"), HashDistributor(4), "k",
+        zone_map_cols=["dec"],
     )
+    assert t._zone_sidecar_df("dec") is not None
     # out-of-band append (no sidecar maintenance) -> sidecar goes stale
-    extra = spark.range(500, 600).select(F.col("id").alias("k"), F.col("id").alias("v"))
     from hbasewd_spark.sources.salted_table import salted
 
-    salted(extra, t.distributor, "k").write.mode("append").partitionBy(
+    salted(rows(500, 600), t.distributor, "k").write.mode("append").partitionBy(
         "salt"
     ).parquet(t.path)
     t.refresh()
-    assert t._zone_sidecar_df("k") is None  # stale as expected
-    # epoch commit on top: maintenance must SKIP (pre_sig mismatch)
-    batch = spark.range(600, 700).select(F.col("id").alias("k"), F.col("id").alias("v"))
-    idempotent_salted_batch_write(batch, 1, t.path, t.distributor, "k")
+    assert t._zone_sidecar_df("dec") is None  # stale as expected
+    # epoch commit on top must not restamp it
+    idempotent_salted_batch_write(rows(600, 700), 1, t.path, t.distributor, "k")
     t.refresh()
-    assert t._zone_sidecar_df("k") is None  # still stale, never lied
-    assert t.fast_count(0, 10**9) == 700  # live path stays exact
+    assert t._zone_sidecar_df("dec") is None  # still stale, never lied
+    # the live path stays exact
+    assert _canon(spark.createDataFrame(t._zone_table("dec"))) == _canon(t.zone_map("dec"))
+    assert t.pruned_scan("dec", 450, 650).count() == 200
+    assert t.fast_count(0, 10**9) == 700
 
 
 def test_zone_source_footer_branch_is_single_pass(spark, typed_table, monkeypatch):
@@ -241,7 +261,7 @@ def test_driver_footer_route_launches_no_jobs(spark, typed_table):
     tracker = sc.statusTracker()
     before = tracker.getJobIdsForGroup(None)
     t = typed_table
-    rows = t._zone_rows_df("k", t._footer_stats_local("k")).collect()
+    rows = spark.createDataFrame(t._footer_stats_local("k")).collect()
     assert len(rows) > 0
     after = tracker.getJobIdsForGroup(None)
     assert before == after, "driver footer route launched Spark jobs"
@@ -264,7 +284,7 @@ def _jobs_under_group(spark, group, fn):
 def test_footer_reader_has_no_file_count_cap(spark, tmp_path):
     """300 data files: a cold zone table and build_zone_map both read
     the footers on the driver, with no Spark job, and their rows are
-    the column scan's."""
+    the column scan's; the build persists nothing."""
     df = spark.range(30000).select(F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
     t = SaltedTable.write(df, str(tmp_path / "t"), HashDistributor(300), "k")
     t = SaltedTable.load(spark, t.path)
@@ -275,7 +295,8 @@ def test_footer_reader_has_no_file_count_cap(spark, tmp_path):
     scan = _canon(t.zone_map("k"))
     assert len(scan) == 300
     assert _canon(spark.createDataFrame(zt)) == scan
-    assert _canon(t._zone_sidecar_df("k")) == scan
+    assert _canon(spark.createDataFrame(t._zone_table("k"))) == scan
+    assert not Fs(spark, t.path).exists(f"{t.path}/_zone_maps")
 
 
 def test_viewfs_table_warns_and_falls_back_to_scan(spark, tmp_path):
@@ -311,3 +332,59 @@ def test_viewfs_table_warns_and_falls_back_to_scan(spark, tmp_path):
     assert got_rows == want_rows and len(got_rows) == 4
     assert (remote.fast_count(lo, hi), remote.fast_count()) == want_counts
     assert want_counts[0] > 0
+
+
+def test_older_footer_copy_is_read_past_then_removed(spark, tmp_path, monkeypatch):
+    """A parquet table that still carries a fresh footer copy in
+    ``_zone_maps/<col>/`` (rows plus ``_zone_meta.json``, as builds
+    before the footers became the persisted source left it) answers
+    from its footers with the same rows and never reads the copy. The
+    first build_zone_map, or the first lifecycle verb, removes it, so
+    the next verb's staged rewrite has nothing to carry."""
+    import json
+
+    from hbasewd_spark.sources.salted_table import compact
+
+    df = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+
+    def with_copy(name):
+        t = SaltedTable.write(df, str(tmp_path / name), HashDistributor(4), "k")
+        fs = Fs(spark, t.path)
+        zm = f"{t.path}/_zone_maps/k"
+        spark.createDataFrame(t._footer_stats_local("k")).write.parquet(zm)
+        fs.write_text(
+            zm + "/_zone_meta.json", json.dumps({"data_sig": t._data_signature(fs)})
+        )
+        return t, fs, sorted(tuple(r) for r in spark.read.parquet(zm).collect())
+
+    t, fs, copy_rows = with_copy("built")
+    cold = SaltedTable.load(spark, t.path)
+    assert cold._zone_sidecar_df("k") is not None  # fresh by its watermark
+
+    def boom(self, *a):
+        raise AssertionError("zones read from the footer copy or a column scan")
+
+    monkeypatch.setattr(SaltedTable, "_zone_sidecar_df", boom)
+    monkeypatch.setattr(SaltedTable, "zone_map", boom)
+    got = sorted(tuple(r.values()) for r in cold._zone_table("k").to_pylist())
+    assert got == copy_rows and len(got) == 4
+    cold.build_zone_map("k")
+    assert not fs.exists(f"{t.path}/_zone_maps")
+    monkeypatch.undo()
+
+    t, fs, _ = with_copy("verb")
+    copied = []
+    real_copy = Fs.copy
+
+    def counting_copy(self, src, dst):
+        copied.append(src)
+        return real_copy(self, src, dst)
+
+    monkeypatch.setattr(Fs, "copy", counting_copy)
+    compact(t)
+    assert not fs.exists(f"{t.path}/_zone_maps")
+    assert any(c.endswith("/_zone_maps") for c in copied)
+    copied.clear()
+    compact(t)
+    assert copied and not any("_zone_maps" in c for c in copied)
+    assert t.fast_count() == 1000

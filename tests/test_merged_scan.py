@@ -223,7 +223,7 @@ def _synthetic_table(spark, key_ddl, zone):
         spark, "/tmp/__no_such_table__", HashDistributor(8), "k", "parquet",
         spark.range(1).selectExpr(f"CAST(NULL AS {key_ddl}) AS k").schema.json(),
     )
-    t._zone_sidecar_df = lambda col: zone
+    t._footer_stats_local = lambda col, paths=None: zone.toArrow()
     return t
 
 

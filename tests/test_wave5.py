@@ -249,6 +249,33 @@ def test_upsert_rows_partition_scoped(spark, sf_dir, tmp_path):
         rr.upsert_rows(changes)
 
 
+def test_failed_upsert_leaves_partition_overwrite_mode_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """upsert_rows makes only its own write dynamic: when that write
+    fails, the session's partitionOverwriteMode is what it was, and a
+    later overwrite still replaces every salt directory."""
+    from hbasewd_spark.plans.distributor import HashDistributor
+    from hbasewd_spark.sources.salted_table import SaltedTable
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    df = spark.range(400).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    path = str(tmp_path / "t")
+    t = SaltedTable.write(df, path, HashDistributor(8), "k")
+
+    def failing_writer(self, frame):
+        raise IOError("injected writer failure")
+
+    monkeypatch.setattr(SaltedTable, "_writer", failing_writer)
+    with pytest.raises(IOError, match="injected"):
+        t.upsert_rows(df.where("k < 3").withColumn("v", F.lit(-1)))
+    monkeypatch.undo()
+    assert spark.conf.get(key) == before
+    one = SaltedTable.write(df.where("k = 7"), path, HashDistributor(8), "k")
+    assert one.df().count() == 1
+
+
 def test_expire_drops_old_files_without_rewriting_them(spark, kv, tmp_path):
     """Retention expiry: rows below the cutoff disappear (count vs the
     generator oracle), files wholly below the cutoff are deleted as a

@@ -1,6 +1,9 @@
 """Round-5 lock for the persisted zone-map sidecar (VERDICT r4 item 6):
 pruned_scan/expire planning can run off a watermarked parquet sidecar
-instead of re-scanning the table, and a stale sidecar is bypassed."""
+instead of re-scanning the table, and a stale sidecar is bypassed.
+
+A parquet table's footers are its zone metadata, so the sidecar only
+persists where they cannot serve: the sidecar pins run on ORC tables."""
 
 from pyspark.sql import functions as F
 
@@ -19,12 +22,17 @@ def test_persisted_zone_map_serves_pruned_scan(spark, kv, tmp_path):
         str(tmp_path / "zm"),
         HashDistributor(8),
         "key_long",
+        fmt="orc",
         zone_map_cols=["key_long", "val"],
     )
     fs = Fs(spark, t.path)
     assert fs.is_dir(f"{t.path}/_zone_maps/key_long")
     assert fs.is_dir(f"{t.path}/_zone_maps/val")
 
+    def boom(col):
+        raise AssertionError("planning scanned the column despite a fresh sidecar")
+
+    t.zone_map = boom
     lo, hi = KEY_PREFIX + 200, KEY_PREFIX + 700
     got = t.pruned_scan("key_long", lo, hi).count()
     assert got == expected_in_range(200, 699)
@@ -48,8 +56,9 @@ def test_stale_zone_sidecar_is_bypassed_after_append(spark, kv, tmp_path):
     map would silently drop them)."""
     t = SaltedTable.write(
         kv, str(tmp_path / "zmstale"), HashDistributor(4), "key_long",
-        zone_map_cols=["key_long"],
+        fmt="orc", zone_map_cols=["key_long"],
     )
+    assert t._zone_sidecar_df("key_long") is not None
     extra = kv.withColumn("key_long", F.col("key_long") + 100_000)
     t._writer(
         extra.withColumn("salt", t.distributor.salt_expr("key_long"))
@@ -71,7 +80,7 @@ def test_expire_uses_and_survives_zone_sidecar(spark, kv, tmp_path):
 
     t = SaltedTable.write(
         kv, str(tmp_path / "zmexp"), HashDistributor(8), "key_long",
-        zone_map_cols=["key_long"],
+        fmt="orc", zone_map_cols=["key_long"],
     )
     stats = t.expire(KEY_PREFIX + 500)
     want = expected_in_range(500, 10**9)
@@ -97,7 +106,7 @@ def test_compact_and_upsert_keep_sidecars_fresh(spark, kv, tmp_path):
 
     t = SaltedTable.write(
         kv, str(tmp_path / "zmlc"), HashDistributor(4), "key_long",
-        zone_map_cols=["key_long", "val"],
+        fmt="orc", zone_map_cols=["key_long", "val"],
     )
     fs = Fs(spark, t.path)
 
@@ -126,7 +135,7 @@ def test_build_zone_map_refreshes_after_change(spark, kv, tmp_path):
     again."""
     t = SaltedTable.write(
         kv, str(tmp_path / "zmre"), HashDistributor(4), "key_long",
-        zone_map_cols=["key_long"],
+        fmt="orc", zone_map_cols=["key_long"],
     )
     t.expire(KEY_PREFIX + 300)
     t.build_zone_map("key_long")
@@ -178,7 +187,7 @@ def test_manifest_relation_from_sidecar(spark, kv, tmp_path):
 
     t = SaltedTable.write(
         kv, str(tmp_path / "mf"), HashDistributor(8), "key_long",
-        zone_map_cols=["key_long"],
+        fmt="orc", zone_map_cols=["key_long"],
     )
 
     def boom(col):
@@ -218,8 +227,8 @@ def test_manifest_live_fallback_without_sidecar(spark, kv, tmp_path, monkeypatch
 
 
 def test_fast_count_150k_synthetic_files(spark):
-    """fast_count at 150k files: with a synthetic 150k-file zone
-    relation, a range covering only wholly-inside files is answered
+    """fast_count at 150k files: with synthetic footers describing 150k
+    files, a range covering only wholly-inside files is answered
     from zone metadata alone (exact n_rows - n_nulls, no data I/O —
     the files do not exist), and the unbounded count is pure
     metadata."""
@@ -238,8 +247,40 @@ def test_fast_count_150k_synthetic_files(spark):
         SF.lit(200).alias("n_rows"),
         SF.lit(10).alias("n_nulls"),
     )
-    t._zone_sidecar_df = lambda col: zone
+    t._footer_stats_local = lambda col, paths=None: zone.toArrow()
     # files 10..19 wholly inside [1000, 2000): 10 files x 190 keyed rows
     assert t.fast_count(1000, 2000) == 10 * 190
     # unbounded: metadata-only, nulls count (scan applies no predicate)
     assert t.fast_count() == n_files * 200
+
+
+def test_unusable_stats_column_plans_from_fresh_sidecar(spark, tmp_path):
+    """A parquet column whose footer stats pyarrow cannot decode
+    (decimal(18,4)) persists a watermarked sidecar, and a cold handle
+    plans from it with the column scan trapped: zone rows and
+    pruned_scan equal the scan's."""
+    import decimal
+    import json as _json
+
+    df = spark.range(2000).select(
+        F.col("id").alias("k"), F.col("id").cast("decimal(18,4)").alias("dec")
+    )
+    t = SaltedTable.write(
+        df, str(tmp_path / "dec"), HashDistributor(4), "k", zone_map_cols=["dec"]
+    )
+    fs = Fs(spark, t.path)
+    meta = _json.loads(fs.read_text(f"{t.path}/_zone_maps/dec/_zone_meta.json"))
+    assert meta["data_sig"] == t._data_signature(fs)
+    cold = SaltedTable.load(spark, t.path)
+    want = sorted(tuple(r) for r in cold.zone_map("dec").collect())
+
+    def boom(col):
+        raise AssertionError("planning scanned the column despite a fresh sidecar")
+
+    cold.zone_map = boom
+    got = sorted(
+        tuple(r.values()) for r in cold._zone_table("dec").to_pylist()
+    )
+    assert got == want and len(got) == 4
+    lo, hi = decimal.Decimal(300), decimal.Decimal(1100)
+    assert cold.pruned_scan("dec", lo, hi).count() == 800
