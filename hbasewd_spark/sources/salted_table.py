@@ -848,7 +848,9 @@ class SaltedTable:
             self.build_zone_map(c)
         return cols
 
-    def _zone_sidecar_df(self, col: str, sig: list | None = None) -> DataFrame | None:
+    def _zone_sidecar_df(
+        self, col: str, sig: list | None = None
+    ) -> DataFrame | None:
         """The persisted zone-map sidecar for ``col`` as a (lazy)
         DataFrame — only when present, watermark-fresh against ``sig``
         (the data-file listing; default: list now), and schema-current
@@ -861,7 +863,9 @@ class SaltedTable:
             return None
         try:
             meta = json.loads(fs.read_text(zm_dir + "/" + self.ZONE_META_FILE))
-            if meta.get("data_sig") != (self._data_signature(fs) if sig is None else sig):
+            if sig is None:
+                sig = self._data_signature(fs)
+            if meta.get("data_sig") != sig:
                 return None
             zdf = self.spark.read.parquet(zm_dir)
             return zdf if "n_nulls" in zdf.columns else None

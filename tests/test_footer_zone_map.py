@@ -103,7 +103,9 @@ def test_write_serves_zones_from_footers_not_scan(spark, tmp_path, monkeypatch):
     )
     assert not Fs(spark, t.path).exists(f"{t.path}/_zone_maps")
     cold = SaltedTable.load(spark, t.path)
-    zt, jobs = _jobs_under_group(spark, "zones-cold-after-write", lambda: cold._zone_table("ts"))
+    zt, jobs = _jobs_under_group(
+        spark, "zones-cold-after-write", lambda: cold._zone_table("ts")
+    )
     assert jobs == [] and zt.num_rows == 4
     lo = ts0 + datetime.timedelta(seconds=100)
     hi = ts0 + datetime.timedelta(seconds=400)

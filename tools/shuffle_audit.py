@@ -57,7 +57,7 @@ def main() -> None:
     }
     results = {}
     for name, fn in paths.items():
-        fn()  # warm: sidecar load + codegen, untimed/unmeasured
+        fn()  # warm: zone metadata load + codegen, untimed/unmeasured
         rows, m = audit.measure(fn)
         results[name] = dict(m, rows=rows)
         print(json.dumps({"path": name, "sf_dir": SF_DIR, **results[name]}))
