@@ -18,6 +18,11 @@ class costs one command per constructor call.
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import socket
+import time
 import weakref
 from types import SimpleNamespace
 
@@ -124,12 +129,35 @@ class Fs:
             src_fs, src_p, dst_fs, dst_p, False, True, self._conf
         )
 
+    def _local_file(self, p: str) -> "str | None":
+        """The driver-local path of ``p`` when it lives on the ``file:``
+        filesystem, else ``None``."""
+        jp = self.path(p)
+        fs = jp.getFileSystem(self._conf)
+        if fs.getScheme() != "file":
+            return None
+        return str(fs.makeQualified(jp).toUri().getPath())
+
     def create_atomic(self, p: str, text: str) -> bool:
-        """Create-if-absent (``overwrite=False``): returns False when
-        the file already exists — the primitive under lock sentinels.
-        Atomic on HDFS and local; object stores without conditional
-        create degrade to best-effort, which still catches every
-        non-racing double-invocation."""
+        """Create-if-absent: returns False when the file already exists
+        — the primitive under lock sentinels. On ``file:`` paths it is
+        an ``O_CREAT|O_EXCL`` open on the driver: Hadoop's local
+        ``create(overwrite=False)`` checks ``exists`` and then opens,
+        so two racing callers can both win. Atomic on HDFS too; object
+        stores without conditional create degrade to best-effort, which
+        still catches every non-racing double-invocation."""
+        local = self._local_file(p)
+        if local is not None:
+            # missing parents are created, as Hadoop's create does; a
+            # parent that is a file raises here, not as "lock held"
+            os.makedirs(os.path.dirname(local), exist_ok=True)
+            try:
+                fd = os.open(local, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+            except FileExistsError:
+                return False
+            with os.fdopen(fd, "wb") as out:
+                out.write(text.encode("utf-8"))
+            return True
         try:
             out = self.fs.create(self.path(p), False)
         except Exception as e:
@@ -150,9 +178,9 @@ class Fs:
             # unrelated failure's message must not be read as "lock
             # held" (that misreport sends the epoch poll loop into a
             # full-timeout wait). The one message check kept is for
-            # pre-FileAlreadyExistsException Hadoop local-FS builds
-            # that raise bare IOException — anchored to Hadoop's exact
-            # create-failure phrasing at the START of the message.
+            # Hadoop builds that raise a bare IOException — anchored
+            # to Hadoop's exact create-failure phrasing at the START
+            # of the message.
             already = jexc is not None and (
                 "AlreadyExists" in cls.rsplit(".", 1)[-1]
                 or cls.endswith(".PathExistsException")
@@ -240,23 +268,20 @@ def try_break_dead_lock(fs: Fs, lock: str) -> bool:
     documented manual path (verify the claim's recorded holder is
     dead, delete ``<lock>.break``, retry) — the caller's error
     message names the file."""
-    import json as _json
-    import os as _os
-    import socket as _socket
 
     def _read_holder(p):
         try:
             txt = fs.read_text(p)
-            h = _json.loads(txt)
+            h = json.loads(txt)
             return txt, int(h["pid"]), h["host"]
         except Exception:
             return None  # unreadable/old-format: require the manual path
 
     def _provably_dead(pid, host):
-        if host != _socket.gethostname() or pid == _os.getpid():
+        if host != socket.gethostname() or pid == os.getpid():
             return False
         try:
-            _os.kill(pid, 0)
+            os.kill(pid, 0)
             return False  # alive
         except ProcessLookupError:
             return True  # provably dead on this host
@@ -267,7 +292,7 @@ def try_break_dead_lock(fs: Fs, lock: str) -> bool:
     if holder is None or not _provably_dead(holder[1], holder[2]):
         return False
     claim = lock + ".break"
-    me = _json.dumps({"pid": _os.getpid(), "host": _socket.gethostname()})
+    me = json.dumps({"pid": os.getpid(), "host": socket.gethostname()})
     # create_atomic classifies lost-the-race (False) apart from real
     # FS failures (raise) — let the latter PROPAGATE (ADVICE r6/r9:
     # mapping a permission/store error to "holder alive" sends the
@@ -291,3 +316,42 @@ def try_break_dead_lock(fs: Fs, lock: str) -> bool:
             fs.delete(claim)
         except Exception:
             pass
+
+
+@contextlib.contextmanager
+def held_lock(
+    fs: Fs, lock: str, verb: str, wait_s: float, refusal, poll_s: float = 0.2
+):
+    """Hold the lock sentinel ``lock`` for the body: create it if absent
+    (recording ``verb``, pid and host), and delete it on the way out.
+
+    A sentinel left by a provably dead holder is broken
+    (:func:`try_break_dead_lock`) and the create is raced again. Any
+    other holder keeps the lock: the caller polls every ``poll_s``
+    seconds for up to ``wait_s`` (0 fails at once), then gets a
+    ``RuntimeError`` whose message is ``refusal(holder_text)``, plus a
+    note when a takeover claim ``<lock>.break`` is also left behind."""
+    holder = json.dumps(
+        {"verb": verb, "pid": os.getpid(), "host": socket.gethostname()}
+    )
+    deadline = time.monotonic() + wait_s
+    while not fs.create_atomic(lock, holder):
+        if try_break_dead_lock(fs, lock):
+            continue
+        if time.monotonic() >= deadline:
+            try:
+                who = fs.read_text(lock)
+            except Exception:
+                who = "<unreadable>"
+            claim_note = (
+                f"; a takeover claim also exists at {lock}.break — if "
+                f"ITS recorded holder is dead too, delete the claim first"
+                if fs.exists(lock + ".break")
+                else ""
+            )
+            raise RuntimeError(refusal(who) + claim_note)
+        time.sleep(poll_s)
+    try:
+        yield
+    finally:
+        fs.delete(lock)

@@ -24,6 +24,7 @@ AbstractRowKeyDistributor.java:83-89, as self-describing data).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -34,7 +35,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 
-from hbasewd_spark.fsutil import Fs
+from hbasewd_spark.fsutil import Fs, held_lock
 from hbasewd_spark.plans.distributor import KeyDistributor, distributor_from_meta
 from hbasewd_spark.plans.intervals import range_predicate
 
@@ -616,9 +617,13 @@ class SaltedTable:
         semantics), stranding the table one level deep. A sibling file
         cannot resurrect ``base``, and the swap's renames never touch
         it — so the lock is held continuously from acquire to the
-        verb's finally-block with no carry step."""
+        verb's finally-block with no carry step. Streaming epoch
+        stages (``<base>.staging-epoch-<id>``) sit beside it for the
+        same reason: no engine code writes under ``base`` without
+        holding this lock."""
         return base.rstrip("/") + SaltedTable.LOCK_SUFFIX
 
+    @contextlib.contextmanager
     def _lifecycle_lock(self, verb: str):
         """Mutual exclusion between lifecycle verbs (expire / compact /
         rebucket / cluster / upsert_rows): each acquires the sibling
@@ -638,57 +643,28 @@ class SaltedTable:
         from scans), so a compact()/cluster()/rebucket() that rewrote
         the table from ``df()`` first would silently drop those rows
         and then delete the stage with the old table dir."""
-        import contextlib
-
-        table = self
-
-        @contextlib.contextmanager
-        def _lock():
-            import socket
-
-            from hbasewd_spark.fsutil import try_break_dead_lock
-
-            fs = Fs(table.spark, table.path)
-            base = table.path.rstrip("/")
-            lock = table.lock_path(base)
-            holder = json.dumps(
-                {"verb": verb, "pid": os.getpid(), "host": socket.gethostname()}
-            )
-            # one takeover attempt for a PROVABLY dead same-host holder
-            # (crashed predecessor on this machine) before failing fast;
-            # alive/unprovable holders still raise — no auto-expiry
-            if not fs.create_atomic(lock, holder) and not (
-                try_break_dead_lock(fs, lock) and fs.create_atomic(lock, holder)
+        fs = Fs(self.spark, self.path)
+        base = self.path.rstrip("/")
+        lock = self.lock_path(base)
+        # verbs fail fast (no wait): a provably dead same-host holder
+        # is broken, any other holder raises — no auto-expiry
+        with held_lock(
+            fs,
+            lock,
+            verb,
+            0.0,
+            lambda who: f"{verb}(): another lifecycle operation holds "
+            f"{lock} ({who}); if that holder crashed, verify it is dead "
+            f"and delete the sentinel",
+        ):
+            # under the lock, before the verb plans anything: merge
+            # back a crashed expire()'s staged survivors so no verb
+            # ever rewrites from a file set that is missing them
+            if self._recover_expire_stage(
+                fs, base + "/" + SaltedTable.EXPIRE_STAGE_DIR, verb=verb
             ):
-                try:
-                    who = fs.read_text(lock)
-                except Exception:
-                    who = "<unreadable>"
-                claim_note = (
-                    f"; a takeover claim also exists at {lock}.break — if "
-                    f"ITS recorded holder is dead too, delete the claim "
-                    f"first"
-                    if fs.exists(lock + ".break")
-                    else ""
-                )
-                raise RuntimeError(
-                    f"{verb}(): another lifecycle operation holds {lock} "
-                    f"({who}); if that holder crashed, verify it is dead "
-                    f"and delete the sentinel" + claim_note
-                )
-            try:
-                # under the lock, before the verb plans anything: merge
-                # back a crashed expire()'s staged survivors so no verb
-                # ever rewrites from a file set that is missing them
-                if table._recover_expire_stage(
-                    fs, base + "/" + SaltedTable.EXPIRE_STAGE_DIR, verb=verb
-                ):
-                    table.refresh()
-                yield
-            finally:
-                fs.delete(lock)
-
-        return _lock()
+                self.refresh()
+            yield
 
     # ------------------------------------------------------- zone map index
     ZONE_MAP_DIR = "_zone_maps"
@@ -2057,14 +2033,15 @@ def vacuum(
       the table while tmp still exists — a successful swap-rename
       consumes it), reproducible by rerunning its verb. Deleted when
       a loadable table sits at ``base``.
-    - ``base.old`` / ``base.hoist``: these CAN be the only complete
-      copy, and on a non-atomic-rename store (S3A/GCS — see SCALE.md,
-      object-store table) ``base`` can hold a PARTIAL copy that still
-      has the metadata file at the top (the swap copies it early), so
-      "META exists" is NOT proof enough to delete them. The proof
-      used instead is row-count equivalence: every ``.old``/``.hoist``
-      writer (compact/cluster/rebucket) preserves the table's exact
-      row count, so ``count(base) == count(sibling)`` proves base is
+    - ``base.old`` / ``base.hoist`` (the latter only ever left by
+      older engine versions, whose swap repair staged through it):
+      these CAN be the only complete copy, and on a non-atomic-rename
+      store (S3A/GCS — see SCALE.md, object-store table) ``base`` can
+      hold a PARTIAL copy that still has the metadata file at the top
+      (the swap copies it early), so "META exists" is NOT proof enough
+      to delete them. The proof used instead is row-count equivalence:
+      every ``.old``/``.hoist`` writer (compact/cluster/rebucket)
+      preserves the table's exact row count, so ``count(base) == count(sibling)`` proves base is
       no less complete than the copy being deleted. Counts diverge →
       the sibling is KEPT with instructions (either base is a partial
       copy — restore the sibling — or base was legitimately mutated
@@ -2080,13 +2057,15 @@ def vacuum(
       that coincidence is the irreducible risk, and the SCALE.md
       deployment guidance (lifecycle verbs on rename-atomic stores)
       is the real fix.
-    - in-dir ``.staging-epoch-*`` dirs: the streaming stage WRITE runs
-      outside the lock by design (streaming/ingest.py), so a stage may
-      be mid-write right now. These are only deleted when
-      ``staging_older_than_s`` is given and the stage's newest
-      CONTENT is older — freshness is the max modification time over
-      the stage dir, its children, and its data files, because the
-      top-level dir mtime alone is meaningless on object stores
+    - ``base.staging-epoch-*`` siblings, and the in-dir
+      ``base/.staging-epoch-*`` stages older engine versions wrote: the
+      streaming stage WRITE runs outside the lock by design
+      (streaming/ingest.py), so a stage may be mid-write right now.
+      These are only deleted when ``staging_older_than_s`` is given
+      and the stage's newest CONTENT is older — freshness is the max
+      modification time over the stage dir, its children, and its
+      data files, because the top-level dir mtime alone is
+      meaningless on object stores
       (synthetic prefix listings report 0) and only tracks
       direct-child churn on HDFS, while a mid-write stage keeps
       gaining files and so keeps a fresh max. An unreadable/zero
@@ -2102,8 +2081,9 @@ def vacuum(
 
     Idempotent; every delete is independent, so a crash mid-vacuum
     just leaves fewer artifacts for the rerun — and no delete ever
-    targets a path under ``base`` except aged streaming stages, so the
-    live table is untouchable by construction.
+    targets a path under ``base`` except aged in-dir streaming stages
+    from older engine versions, so the live table is untouchable by
+    construction.
 
     ``dry_run=True`` is genuinely read-only: it classifies WITHOUT
     acquiring the lifecycle lock (acquisition itself mutates — dead-
@@ -2202,7 +2182,9 @@ def _vacuum_classify(
         if not dry_run:
             fs.delete(sib, recursive=True)
         deleted.append(sib)
-    for path, _len, dir_mtime in fs.glob_stats(base + "/.staging-epoch-*"):
+    stages = fs.glob_stats(base + ".staging-epoch-*")
+    stages += fs.glob_stats(base + "/.staging-epoch-*")
+    for path, _len, dir_mtime in stages:
         if staging_older_than_s is None:
             kept.append(
                 {
@@ -2268,13 +2250,11 @@ def _restore_aside(fs: Fs, old: str, base: str) -> str:
     """Move the aside copy back to ``base`` and VERIFY it landed flat;
     returns a human-accurate description of where the original lives
     now (used verbatim in the swap error messages). Never deletes
-    anything — callers clear a known-empty shell at ``base`` first
-    when that is safe. The verification matters because a racing epoch
-    stage can recreate ``base`` between the caller's shell-clear and
-    this rename — Hadoop then nests the original INSIDE the recreated
-    dir while returning True, and an unverified "restored at base"
-    message would point the operator at an unloadable shell with the
-    only copy stranded one level deep (r10 review)."""
+    anything: an occupied ``base`` is refused, because Hadoop's rename
+    onto an existing dir nests the source INSIDE it while returning
+    True, and a rename that still did not land the metadata file at the
+    top of ``base`` is reported with the nested path instead of as
+    "restored" (r10 review)."""
     if not fs.exists(old):
         # the swap path where ``base`` never existed skips the aside
         # rename entirely — pointing the operator at {old} would send
@@ -2288,19 +2268,11 @@ def _restore_aside(fs: Fs, old: str, base: str) -> str:
     if fs.exists(base.rstrip("/") + "/" + META_FILE):
         return f"restored at {base}"
     nested = base.rstrip("/") + "/" + old.rstrip("/").rsplit("/", 1)[-1]
-    if fs.exists(nested.rstrip("/") + "/" + META_FILE):
-        # the TOCTOU hit THIS rename: un-nest back to old (single
-        # attempt, no retry loop — the stream is clearly racing us)
-        if fs.rename(nested, old):
-            return (
-                f"preserved at {old} (a racing stage writer recreated "
-                f"{base} mid-restore)"
-            )
-        return (
-            f"NESTED at {nested} by a racing stage writer — move it up "
-            f"manually (rename {nested} -> {base} after clearing {base})"
-        )
-    return f"NOT restored — check {base} and {old} manually"
+    return (
+        f"NESTED at {nested}: {base} was recreated mid-restore and nothing "
+        f"was deleted — move it up manually (rename {nested} -> {base} "
+        f"after clearing {base})"
+    )
 
 
 def _refuse_orphaned_old(fs: Fs, base: str, op: str) -> None:
@@ -2326,24 +2298,22 @@ def _swap_table_dirs(fs: Fs, tmp: str, base: str, op: str) -> None:
     swap lands. Every failure mode leaves a complete, loadable table at
     a known path (``base`` or ``base.old`` or ``tmp``) — the previous
     delete-then-rename protocol had a window where a crash left NO
-    table at ``base`` and the only copy in a ``*_tmp`` sibling."""
+    table at ``base`` and the only copy in a ``*_tmp`` sibling.
+
+    Runs under the lifecycle lock, after :func:`_refuse_orphaned_old`
+    proved a live table sits at ``base``. No engine code writes under
+    ``base`` without that lock (epoch stages are written to the
+    ``<base>.staging-epoch-<id>`` sibling), so ``base`` stays absent
+    between the aside rename and the swap rename. A writer outside the
+    engine that recreates it anyway (Hadoop's rename onto an existing
+    dir would nest the rewrite one level deep while returning True)
+    gets a refusal that deletes nothing and names where the original
+    and the rewrite are."""
     old = base + ".old"
-    if fs.exists(old):
-        if fs.exists(base):
-            # true leftover: the prior swap landed (base is live) but
-            # crashed before clearing the aside copy — safe to clear
-            fs.delete(old, recursive=True)
-        else:
-            # the aside copy is the ONLY surviving table (a prior swap
-            # failed after base -> old and the restore also failed).
-            # Deleting it here — or letting the rewrite land — would
-            # destroy the last copy, and the rewrite that was just
-            # staged came from an EMPTY df() fallback in this state.
-            raise IOError(
-                f"{op}(): found {old} but no live table at {base} — a "
-                f"previous swap failed mid-flight and {old} holds the only "
-                f"copy; restore it (rename {old} -> {base}) before rerunning"
-            )
+    # base is live (checked by the caller under this lock), so an aside
+    # copy is the leftover of a swap that landed but crashed before
+    # clearing it
+    fs.delete(old, recursive=True)
     if fs.exists(base) and not fs.rename(base, old):
         raise IOError(
             f"{op}(): could not move the live table aside "
@@ -2351,111 +2321,25 @@ def _swap_table_dirs(fs: Fs, tmp: str, base: str, op: str) -> None:
             f"intact at {base} and the rewrite is intact at {tmp}"
         )
     if fs.exists(base):
-        # a concurrent streaming epoch STAGED into base between our
-        # aside-rename and this point (the stage write runs outside
-        # the lifecycle lock by design): the resurrected dir holds
-        # only .staging-* dirs — the real table is safe at `old` — but
-        # renaming tmp onto an existing dir would move the staged
-        # table INSIDE it (Hadoop rename-into-dir semantics), one
-        # level deep. Delete the resurrected dir: the epoch's
-        # stage-manifest check sees its stage vanished and REPLAYS —
-        # the exact contract the manifest was added for (ADVICE r7).
-        fs.delete(base, recursive=True)
+        raise IOError(
+            f"{op}(): {base} was recreated after the live table was moved "
+            f"aside — a writer outside the lifecycle lock is active; "
+            f"nothing was deleted: the original table is at {old} and the "
+            f"rewrite at {tmp}"
+        )
     if not fs.rename(tmp, base):
-        # roll the original back so `base` stays loadable (same
-        # resurrected-base guard: never nest the original into a
-        # stager-recreated dir)
-        if fs.exists(base):
-            fs.delete(base, recursive=True)
         raise IOError(
             f"{op}(): swap rename {tmp} -> {base} failed; the rewrite is "
             f"intact at {tmp} and the original table is "
             + _restore_aside(fs, old, base)
         )
-    # ADVICE r9 (TOCTOU): a racing epoch stage can recreate `base`
-    # BETWEEN the resurrected-base delete above and the rename — Hadoop
-    # rename onto an existing dir then nests tmp INSIDE base and still
-    # returns True. Verify the swap actually landed flat (the table
-    # metadata file must sit directly under base) before touching the
-    # aside copy; if it nested, un-nest and only then proceed.
     if not fs.exists(base.rstrip("/") + "/" + META_FILE):
         nested = base.rstrip("/") + "/" + tmp.rstrip("/").rsplit("/", 1)[-1]
-        if fs.exists(nested.rstrip("/") + "/" + META_FILE):
-            # the rewrite is intact one level deep: lift it to a
-            # sibling, clear the stager-recreated shell, rename flat.
-            hoist = base + ".hoist"
-            if fs.exists(hoist):
-                fs.delete(hoist, recursive=True)
-            if not fs.rename(nested, hoist):
-                # un-nest to the fresh sibling failed — before giving
-                # up, try moving the rewrite back to the tmp slot (the
-                # swap rename freed it): that both preserves the
-                # rewrite AND clears base for restoring the original.
-                if fs.rename(nested, tmp):
-                    fs.delete(base, recursive=True)  # shell only now
-                    raise IOError(
-                        f"{op}(): swap rename nested the rewrite inside"
-                        f" a stager-recreated {base}; the rewrite was "
-                        f"moved back to {tmp} and the original table is "
-                        + _restore_aside(fs, old, base)
-                        + " — quiesce the stream and rerun"
-                    )
-                # the rewrite cannot be moved OUT of the shell at all
-                # (object-store rename quirk): touch NOTHING — deleting
-                # base here would erase the only copy of a possibly
-                # multi-hour rewrite. Both copies survive for a manual
-                # or retried recovery.
-                raise IOError(
-                    f"{op}(): swap rename nested the rewrite inside a "
-                    f"stager-recreated {base} and the rewrite could "
-                    f"not be moved out; NOTHING was deleted — the "
-                    f"complete rewrite is preserved at {nested} and "
-                    f"the original table at {old}; move the rewrite to "
-                    f"a sibling path and rerun, or restore the original"
-                    f" (rename {old} -> {base} after clearing {base})"
-                )
-            fs.delete(base, recursive=True)  # shell only — rewrite is at hoist
-            if fs.rename(hoist, base) and fs.exists(
-                base.rstrip("/") + "/" + META_FILE
-            ):
-                fs.delete(old, recursive=True)
-                return
-            # hoist -> base failed (a stager recreated base YET again)
-            # or nested once more: the rewrite still exists in full —
-            # say exactly where instead of discarding it.
-            hoist_name = hoist.rstrip("/").rsplit("/", 1)[-1]
-            renested = base.rstrip("/") + "/" + hoist_name
-            if fs.exists(hoist.rstrip("/") + "/" + META_FILE):
-                rewrite_at = hoist
-            elif fs.exists(renested.rstrip("/") + "/" + META_FILE):
-                rewrite_at = renested
-            else:
-                rewrite_at = "<not found — check " + hoist + ">"
-            where = _restore_aside(fs, old, base)
-            raise IOError(
-                f"{op}(): un-nesting the rewrite failed against a "
-                f"racing stage writer; the complete rewrite is "
-                f"preserved at {rewrite_at} and the original table is "
-                f"{where} — quiesce the stream, then "
-                + (
-                    "rerun"
-                    if where.startswith("restored")
-                    else f"move the rewrite out of the way (rename "
-                    f"{rewrite_at} -> {tmp}), restore the original "
-                    f"(rename {old} -> {base} after clearing {base}), "
-                    f"and rerun"
-                )
-            )
-        # no rewrite found at the top level OR nested (the staged dir
-        # carried no metadata file — an incomplete/corrupt rewrite):
-        # restoring the aside copy is the priority; the shell holds at
-        # most replayable .staging-* epoch data.
-        if fs.exists(base):
-            fs.delete(base, recursive=True)
         raise IOError(
-            f"{op}(): swap rename left no loadable table at {base} (no "
-            f"{META_FILE} at the top level or one level deep) — the "
-            f"staged rewrite was incomplete; the original table is "
-            + _restore_aside(fs, old, base)
+            f"{op}(): the rewrite did not land flat at {base} (no "
+            f"{META_FILE} at its top level) — a writer outside the "
+            f"lifecycle lock recreated {base} mid-swap; nothing was "
+            f"deleted: the original table is at {old} and the rewrite at "
+            f"{nested if fs.exists(nested) else base}"
         )
     fs.delete(old, recursive=True)

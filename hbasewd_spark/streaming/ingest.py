@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from hbasewd_spark.fsutil import Fs as _Fs
+from hbasewd_spark.fsutil import Fs as _Fs, held_lock
 from hbasewd_spark.plans.distributor import KeyDistributor
 from hbasewd_spark.sources.salted_table import (
     META_FILE,
@@ -46,86 +46,37 @@ def _epoch_commit_lock(
 ):
     """Serialize an epoch's COMMIT phase (purge + renames) against the
     table lifecycle verbs (VERDICT r6 #7): a ``compact()`` racing a
-    live micro-batch commit was the one remaining unserialized writer
-    pair — the verb's swap could strand this epoch's just-renamed files
-    in ``base.old`` or stamp a sidecar watermark over them mid-flight.
+    live micro-batch commit could strand this epoch's just-renamed
+    files in ``base.old``.
 
-    Contract: the expensive staging WRITE happens outside the lock;
-    only the cheap rename phase holds it (milliseconds), so a verb
-    waiting on the sink sees a short critical section. The commit
-    WAITS (bounded) for a running verb rather than failing the query on
-    every nightly compaction; past ``timeout_s`` it raises — the stage
-    dir is preserved and foreachBatch's replay makes the retry safe.
-    A dest without table metadata (bare salt-dir sink, nothing a
-    lifecycle verb could target) runs unlocked, same rule as
-    ``SaltedTable._lifecycle_lock``.
+    The expensive staging WRITE happens outside the lock, into the
+    sibling ``<base>.staging-epoch-<id>`` that no verb touches; only
+    the cheap rename phase holds the lock (milliseconds). The commit
+    WAITS (bounded, polling every ``poll_s``) for a running verb rather
+    than failing the query on every nightly compaction; past
+    ``timeout_s`` it raises — the stage is preserved and foreachBatch's
+    replay makes the retry safe. The lock is the verbs' own sibling
+    ``<base>.wd_lock`` sentinel (``SaltedTable.lock_path``), taken
+    through the same :func:`hbasewd_spark.fsutil.held_lock`.
 
-    The lock sentinel is the SIBLING ``<base>.wd_lock`` file
-    (``SaltedTable.lock_path``, ADVICE r8): it lives outside the
-    directory the verbs swap, so acquiring it can never resurrect an
-    empty ``base`` under a mid-swap verb's feet (the in-dir sentinel
-    had an exists-then-create window where exactly that happened,
-    stranding the staged table one level deep). A verb holds the
-    sibling lock continuously across its swap, so an epoch arriving
-    mid-swap simply waits on create_atomic until the verb's
-    finally-block releases — no metadata re-checking needed.
-
-    Bare-sink classification (no table metadata and no aside copy —
-    nothing a lifecycle verb could target) happens ONCE up front and
-    runs unlocked."""
-    import json as _json
-    import socket as _socket
-    import time as _time
-
-    from hbasewd_spark.fsutil import try_break_dead_lock
-
+    A dest with neither table metadata nor an aside copy (a bare
+    salt-dir sink, nothing a lifecycle verb could target) is
+    classified once up front and runs unlocked."""
     base = dest_path.rstrip("/")
-    meta = base + "/" + META_FILE
-    aside = base + ".old"
-    if not fs.exists(meta) and not fs.exists(aside):
+    if not fs.exists(base + "/" + META_FILE) and not fs.exists(base + ".old"):
         yield
         return
-    lock = SaltedTable.lock_path(base)
-    holder = _json.dumps(
-        {
-            "verb": f"stream-epoch-{epoch_id}",
-            "pid": os.getpid(),
-            "host": _socket.gethostname(),
-        }
-    )
-    deadline = _time.monotonic() + timeout_s
-
-    while not fs.create_atomic(lock, holder):
-        # a crashed predecessor (driver restart replaying its own
-        # epoch) leaves the sentinel behind with a dead pid — the ONE
-        # case provable from here; break it and re-race create_atomic.
-        # Alive or unprovable holders keep the normal wait-then-raise
-        # path (no auto-expiry: a stalled-but-alive verb keeps its
-        # lock).
-        if try_break_dead_lock(fs, lock):
-            continue
-        if _time.monotonic() >= deadline:
-            try:
-                who = fs.read_text(lock)
-            except Exception:
-                who = "<unreadable>"
-            claim_note = (
-                f" (a takeover claim also exists at {lock}.break — a "
-                f"crashed breaker's claim must be deleted manually after "
-                f"verifying its holder is dead)"
-                if fs.exists(lock + ".break")
-                else ""
-            )
-            raise RuntimeError(
-                f"epoch {epoch_id}: lifecycle lock still held after "
-                f"{timeout_s}s ({who}){claim_note}; stage preserved — the "
-                f"epoch replay will retry after the verb releases it"
-            )
-        _time.sleep(poll_s)
-    try:
+    with held_lock(
+        fs,
+        SaltedTable.lock_path(base),
+        f"stream-epoch-{epoch_id}",
+        timeout_s,
+        lambda who: f"epoch {epoch_id}: lifecycle lock still held after "
+        f"{timeout_s}s ({who}); stage preserved — the epoch replay will "
+        f"retry after the verb releases it",
+        poll_s,
+    ):
         yield
-    finally:
-        fs.delete(lock)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,9 +122,9 @@ def idempotent_salted_batch_write(
     key_col: str,
     lock_timeout_s: float = 300.0,
 ) -> None:
-    """Exactly-once per-epoch salted write: the batch lands in a hidden
-    staging dir, then every file moves into its salt partition under a
-    name DERIVED FROM THE EPOCH (``epoch-<id>-<seq>.parquet``). A
+    """Exactly-once per-epoch salted write: the batch lands in a staging
+    dir beside the table, then every file moves into its salt partition
+    under a name DERIVED FROM THE EPOCH (``epoch-<id>-<seq>.parquet``). A
     replayed epoch (foreachBatch re-delivery after a crash — Spark's
     contract is at-least-once per epoch_id) first purges this epoch's
     previous files (under round-robin salting a replay may salt rows
@@ -182,19 +133,28 @@ def idempotent_salted_batch_write(
     exactly-once end-to-end.
 
     All path operations go through Hadoop's FileSystem (works on any
-    scheme Spark can write to, not just the local disk). Staging dirs
-    start with '.' so Spark's file listing never sees partial output.
+    scheme Spark can write to, not just the local disk).
 
-    The stage dir lives INSIDE the table dir, and the staging write
-    runs OUTSIDE the lifecycle lock — so a lifecycle verb (compact /
-    expire / rebucket) that wins the lock between the stage write and
-    this commit can swap ``base -> base.old`` and delete the aside
-    copy, destroying the stage (ADVICE r7, medium). The commit
-    therefore verifies a stage MANIFEST (written at stage time, listing
-    every staged file) after acquiring the lock: if the stage or any
-    staged file is gone, it raises so foreachBatch REPLAYS the epoch —
-    a silent zero-file commit would lose the epoch's data with no
-    replay, since Spark's checkpoint considers the epoch done."""
+    The stage is the SIBLING dir ``<base>.staging-epoch-<id>``, beside
+    the ``<base>.wd_lock`` sentinel: the staging write runs OUTSIDE the
+    lifecycle lock, so it must never write under ``base``, where a
+    verb's aside-rename swap could meet it. A lifecycle verb (compact /
+    cluster / expire / rebucket) that wins the lock between the stage
+    write and this commit leaves the stage alone, and the epoch commits
+    into the rewritten table. Under the lock the commit then checks:
+
+    - the table's persisted distributor (``_wd_distributor.json``, read
+      as text) equals ``distributor``: a ``rebucket`` in between
+      changed the salting, and files salted the old way would put keys
+      in buckets point gets never read. It raises and keeps the stage;
+      the epoch commits once the stream is restarted with the table's
+      distributor.
+    - the stage MANIFEST (written at stage time, listing every staged
+      file) and every file it lists still exist: if not (a stage
+      reclaimed by ``vacuum(staging_older_than_s=…)``), it raises so
+      foreachBatch REPLAYS the epoch — a silent zero-file commit would
+      lose the epoch's data with no replay, since Spark's checkpoint
+      considers the epoch done."""
     out = (
         salted(batch_df, distributor, key_col)
         .repartition(distributor.buckets, F.col(SALT_COL))
@@ -203,7 +163,8 @@ def idempotent_salted_batch_write(
     import json as _json
 
     fs = _Fs(batch_df.sparkSession, dest_path)
-    stage = dest_path.rstrip("/") + f"/.staging-epoch-{epoch_id}"
+    base = dest_path.rstrip("/")
+    stage = f"{base}.staging-epoch-{epoch_id}"
     fs.delete(stage, recursive=True)
     out.write.mode("overwrite").partitionBy(SALT_COL).parquet(stage)
     staged_files = sorted(fs.glob(f"{stage}/{SALT_COL}=*/*.parquet"))
@@ -214,18 +175,36 @@ def idempotent_salted_batch_write(
     # all-metadata (milliseconds) — the expensive write above stays
     # outside the critical section
     with _epoch_commit_lock(fs, dest_path, epoch_id, lock_timeout_s):
-        # the lock is held NOW — but a verb may have held it first and
-        # swapped the table dir (taking the stage with it): verify the
-        # manifest and every staged file survived before touching the
-        # live tree, else raise so the epoch replays
+        try:
+            meta = _json.loads(fs.read_text(base + "/" + META_FILE))
+        except Exception:
+            meta = None  # a bare salt-dir sink, or no table at base
+        if meta is None:
+            if fs.exists(base + ".old"):
+                raise RuntimeError(
+                    f"epoch {epoch_id}: no table metadata at {base} but an "
+                    f"aside copy at {base}.old — a lifecycle swap failed "
+                    f"mid-flight; restore it (rename {base}.old -> {base}); "
+                    f"stage {stage} preserved for the replay"
+                )
+        else:
+            want = _json.loads(_json.dumps(distributor.to_meta()))
+            have = {k: meta.get(k) for k in want}
+            if have != want:
+                raise RuntimeError(
+                    f"epoch {epoch_id}: the table at {base} is salted by "
+                    f"{have} but this epoch by {want} (the table was "
+                    f"rebucketed since the stream started); nothing "
+                    f"committed, stage {stage} preserved — restart the "
+                    f"stream with the table's distributor to commit it"
+                )
         try:
             manifest = _json.loads(fs.read_text(stage + "/" + STAGE_MANIFEST))
         except Exception:
             raise RuntimeError(
                 f"epoch {epoch_id}: stage manifest {stage}/{STAGE_MANIFEST} "
-                f"is missing or unreadable — a lifecycle verb swapped the "
-                f"table dir between stage and commit; raising so the epoch "
-                f"replays"
+                f"is missing or unreadable — the stage was removed between "
+                f"stage and commit; raising so the epoch replays"
             )
         # one listing of the stage against the manifest, not one exists()
         # per staged file
@@ -234,12 +213,11 @@ def idempotent_salted_batch_write(
         if gone:
             raise RuntimeError(
                 f"epoch {epoch_id}: {len(gone)} staged file(s) vanished "
-                f"before commit (first: {gone[0]}) — a lifecycle verb "
-                f"swapped the table dir between stage and commit; raising "
-                f"so the epoch replays"
+                f"before commit (first: {gone[0]}); raising so the epoch "
+                f"replays"
             )
         for stale in fs.glob(
-            f"{dest_path.rstrip('/')}/{SALT_COL}=*/epoch-{epoch_id:010d}-*.parquet"
+            f"{base}/{SALT_COL}=*/epoch-{epoch_id:010d}-*.parquet"
         ):
             fs.delete(stale)
         # rename from the manifest, grouped by salt dir: the listed
@@ -249,9 +227,10 @@ def idempotent_salted_batch_write(
         by_dir: dict[str, list[str]] = {}
         for f in manifest["files"]:
             by_dir.setdefault(f.rsplit("/", 1)[0], []).append(f)
+        stage_suffix = f".staging-epoch-{epoch_id}"
         for salt_dir, files in by_dir.items():
             stage_uri, salt_part = salt_dir.rsplit("/", 1)
-            target_dir = stage_uri.rsplit("/", 1)[0] + "/" + salt_part
+            target_dir = stage_uri[: -len(stage_suffix)] + "/" + salt_part
             fs.mkdirs(target_dir)
             for seq, f in enumerate(files):
                 dest = f"{target_dir}/epoch-{epoch_id:010d}-{seq:05d}.parquet"

@@ -1,15 +1,13 @@
 """Round-10 regression locks for the ADVICE.md r9 findings.
 
-1. ``_swap_table_dirs`` TOCTOU: a racing epoch stage write (which runs
-   outside the lifecycle lock by design) can recreate ``base`` between
-   the swap's resurrected-base delete and ``rename(tmp, base)``.
-   Hadoop's rename onto an existing dir NESTS tmp inside base and
-   returns True (empirically confirmed on the local FS), after which
-   the old protocol deleted the aside copy and stranded the table one
-   level deep with no error. The swap must now verify the table
-   metadata file landed at the top level, un-nest if it did not, and
-   never delete the aside copy until a flat loadable table exists at
-   ``base``.
+1. ``_swap_table_dirs`` TOCTOU: Hadoop's rename onto an existing dir
+   NESTS the source inside it and returns True (empirically confirmed
+   on the local FS). Epoch stages now sit beside the table
+   (``<base>.staging-epoch-<id>``), so no engine code recreates
+   ``base`` mid-swap; a writer outside the engine that does gets a
+   refusal that deletes nothing and names where the original and the
+   rewrite are. ``_restore_aside`` verifies the metadata file landed
+   at the top level and never reports an unverified restore.
 2. ``_footer_stats_local`` single pass: the bad-stats fallback used
    to re-read every parquet footer three times (build → source probe
    → footer relation) before reaching the column scan. The reader now
@@ -24,131 +22,59 @@ from pyspark.sql import functions as F
 
 from hbasewd_spark.fsutil import Fs
 from hbasewd_spark.plans.distributor import HashDistributor
-from hbasewd_spark.sources.salted_table import SaltedTable, compact, rebucket
+from hbasewd_spark.sources.salted_table import SaltedTable, cluster, compact, rebucket
 
 
-def _race_stage_recreation(monkeypatch, tmp_suffix, base):
-    """Patch Fs.rename so the tmp->base swap rename finds base
-    resurrected by a concurrent stage write (a lone .staging-* dir),
-    reproducing the nest-and-return-True TOCTOU."""
+@pytest.mark.parametrize("verb", ["compact", "rebucket", "cluster"])
+def test_swap_refuses_base_recreated_mid_swap(spark, tmp_path, monkeypatch, verb):
+    """A writer outside the lifecycle lock recreates ``base`` between
+    the swap's aside rename and its swap rename. The verb raises and
+    deletes nothing: the racer's dir stays, and ``base.old`` and the
+    rewrite at the path the error names each load with every row."""
+    import re
+
+    path = str(tmp_path / f"{verb}_race")
+    df = spark.range(300).select(
+        F.col("id").alias("key_long"), (F.col("id") * 3).alias("v")
+    )
+    t = SaltedTable.write(df, path, HashDistributor(4), "key_long")
     real = Fs.rename
-    fired = {"n": 0}
+    fired = []
 
     def racing(self, src, dst):
-        if src.rstrip("/").endswith(tmp_suffix) and dst.rstrip("/") == base:
-            if fired["n"] == 0:  # race once; repair renames run clean
-                fired["n"] += 1
-                self.mkdirs(dst + "/.staging-racer")
-        return real(self, src, dst)
+        ok = real(self, src, dst)
+        if dst.rstrip("/") == path + ".old" and not fired:
+            fired.append(1)
+            self.mkdirs(path + "/.staging-racer")
+        return ok
 
     monkeypatch.setattr(Fs, "rename", racing)
-    return fired
-
-
-def test_compact_swap_survives_stage_resurrection_race(
-    spark, kv, tmp_path, monkeypatch
-):
-    path = str(tmp_path / "swapnest")
-    t = SaltedTable.write(kv, path, HashDistributor(4), "key_long")
-    n = t.df().count()
-    fired = _race_stage_recreation(monkeypatch, ".compact_tmp", path)
-    compact(t)
-    assert fired["n"] == 1  # the race actually happened
+    with pytest.raises(IOError, match="nothing was deleted") as err:
+        if verb == "compact":
+            compact(t)
+        elif verb == "rebucket":
+            rebucket(t, HashDistributor(8))
+        else:
+            cluster(t, "key_long", "v")
+    monkeypatch.undo()
+    assert fired
     fs = Fs(spark, path)
-    # flat, loadable, complete — and no stranded copies anywhere
-    reloaded = SaltedTable.load(spark, path)
-    assert reloaded.df().count() == n
-    assert not fs.exists(path + ".old")
-    assert not fs.exists(path + ".hoist")
-    assert not fs.exists(path + "/swapnest.compact_tmp")
-
-
-def test_rebucket_swap_survives_stage_resurrection_race(
-    spark, kv, tmp_path, monkeypatch
-):
-    path = str(tmp_path / "rbnest")
-    t = SaltedTable.write(kv, path, HashDistributor(4), "key_long")
-    n = t.df().count()
-    fired = _race_stage_recreation(monkeypatch, ".rebucket_tmp", path)
-    rebucket(t, HashDistributor(8))
-    assert fired["n"] == 1
-    reloaded = SaltedTable.load(spark, path)
-    assert reloaded.df().count() == n
-    assert reloaded.distributor.buckets == 8
-
-
-def test_nested_swap_with_failed_hoist_restores_original(
-    spark, kv, tmp_path, monkeypatch
-):
-    """If the un-nest itself cannot land (hoist rename fails), the
-    aside copy must be RESTORED to base — never deleted — and the
-    failure must raise instead of silently stranding the rewrite.
-    r10 review refinement: the rewrite must ALSO survive (moved back
-    to the freed tmp slot), not be deleted with the shell — at scale
-    it is hours of work."""
-    path = str(tmp_path / "hoistfail")
-    t = SaltedTable.write(kv, path, HashDistributor(4), "key_long")
-    n = t.df().count()
-    real = Fs.rename
-
-    def racing(self, src, dst):
-        if src.rstrip("/").endswith(".compact_tmp") and dst.rstrip("/") == path:
-            self.mkdirs(dst + "/.staging-racer")
-        if dst.rstrip("/").endswith(".hoist"):
-            return False  # the repair's first rename fails
-        return real(self, src, dst)
-
-    monkeypatch.setattr(Fs, "rename", racing)
-    with pytest.raises(IOError, match="nested"):
-        compact(t)
-    reloaded = SaltedTable.load(spark, path)
-    assert reloaded.df().count() == n
-    # the rewrite survived in the tmp sibling for a cheap retry
-    fs = Fs(spark, path)
-    tmp = path.rstrip("/") + ".compact_tmp"
-    assert fs.exists(tmp.rstrip("/") + "/_wd_distributor.json")
-    assert SaltedTable.load(spark, tmp).df().count() == n
-
-
-def test_nested_swap_with_all_repair_renames_failing_preserves_both(
-    spark, kv, tmp_path, monkeypatch
-):
-    """Worst repair case: the rewrite can be moved NEITHER to the
-    hoist sibling NOR back to the tmp slot. The old code deleted base
-    recursively — erasing the only copy of the rewrite nested inside
-    it (r10 review). Now: nothing is deleted; the nested rewrite and
-    the aside original both survive, and the error says where."""
-    path = str(tmp_path / "norepair")
-    t = SaltedTable.write(kv, path, HashDistributor(4), "key_long")
-    n = t.df().count()
-    real = Fs.rename
-
-    def racing(self, src, dst):
-        if src.rstrip("/").endswith(".compact_tmp") and dst.rstrip("/") == path:
-            self.mkdirs(dst + "/.staging-racer")
-        if src.rstrip("/").endswith("/norepair/norepair.compact_tmp"):
-            return False  # every attempt to move the NESTED rewrite fails
-        return real(self, src, dst)
-
-    monkeypatch.setattr(Fs, "rename", racing)
-    with pytest.raises(IOError, match="NOTHING was deleted"):
-        compact(t)
-    fs = Fs(spark, path)
-    nested = path.rstrip("/") + "/norepair.compact_tmp"
-    assert fs.exists(nested + "/_wd_distributor.json"), "rewrite destroyed"
-    assert SaltedTable.load(spark, nested).df().count() == n
-    old = path.rstrip("/") + ".old"
-    assert fs.exists(old + "/_wd_distributor.json"), "original destroyed"
-    assert SaltedTable.load(spark, old).df().count() == n
+    assert fs.exists(path + "/.staging-racer"), "the racer's dir was deleted"
+    m = re.search(r"original table is at (\S+) and the rewrite at (\S+)$", str(err.value))
+    assert m, str(err.value)
+    original, rewrite = m.groups()
+    assert original == path + ".old"
+    assert SaltedTable.load(spark, original).df().count() == 300
+    assert SaltedTable.load(spark, rewrite).df().count() == 300
 
 
 def test_restore_aside_verifies_and_unnests(spark, kv, tmp_path, monkeypatch):
     """_restore_aside contract (r10 follow-up review): the restore
-    rename is itself TOCTOU-prone — a racing stage writer can recreate
-    base between the helper's guard and the rename, nesting the only
-    original copy while rename returns True. The helper must detect
-    the nesting via the META check, un-nest back to the aside path,
-    and never report 'restored' unverified."""
+    rename is itself TOCTOU-prone — a writer can recreate base between
+    the helper's guard and the rename, nesting the only original copy
+    while rename returns True. The helper must detect the nesting via
+    the META check, name the nested path, delete nothing, and never
+    report 'restored' unverified."""
     from hbasewd_spark.sources.salted_table import _restore_aside
 
     base = str(tmp_path / "ra")
@@ -173,8 +99,8 @@ def test_restore_aside_verifies_and_unnests(spark, kv, tmp_path, monkeypatch):
 
     # nested case: the guard misses a shell recreated mid-restore
     # (simulated by blinding ONE exists(base) probe); local-FS rename
-    # into the existing dir then really nests — the helper must detect
-    # it and un-nest back to old
+    # into the existing dir then really nests — the helper must say
+    # where the original is and leave it there
     real_exists = Fs.exists
     blinded = []
 
@@ -188,10 +114,11 @@ def test_restore_aside_verifies_and_unnests(spark, kv, tmp_path, monkeypatch):
     monkeypatch.setattr(Fs, "exists", racing_exists)
     msg = _restore_aside(fs, old, base)
     monkeypatch.undo()
-    assert "mid-restore" in msg, f"nesting not detected: {msg}"
-    assert fs.exists(old + meta), "original must be back at the aside path"
-    assert SaltedTable.load(spark, old).df().count() == n
-    assert not fs.exists(base + "/ra.old"), "nested copy must be moved out"
+    nested = base + "/ra.old"
+    assert msg.startswith(f"NESTED at {nested}"), f"nesting not reported: {msg}"
+    assert "nothing was deleted" in msg
+    assert SaltedTable.load(spark, nested).df().count() == n
+    assert fs.exists(base + "/.staging-racer2"), "the racer's dir was deleted"
 
 
 def test_footer_stats_local_status_tuple(spark, tmp_path):
@@ -266,6 +193,9 @@ def test_create_atomic_propagates_nonrace_already_exists_message(
     def boom(*a, **k):
         raise FakeErr("wrapped")
 
+    # a file: path takes the exclusive local create; force the Hadoop
+    # create path every other scheme uses
+    monkeypatch.setattr(Fs, "_local_file", lambda self, p: None)
     monkeypatch.setattr(type(fs.fs), "create", boom, raising=False)
     with pytest.raises(FakeErr):
         fs.create_atomic(target, "x")

@@ -2,9 +2,9 @@
 
 The swap's documented invariant (``_swap_table_dirs`` docstring):
 EVERY failure mode leaves a complete, loadable copy of the table at a
-known path — ``base``, ``base.old``, ``base.hoist``, or the staged
-``*_tmp`` sibling. The existing tests check hand-picked failure points
-(aside-rename fails, swap-rename fails, hoist fails); this suite
+known path — ``base``, ``base.old``, or the staged ``*_tmp`` sibling.
+The other tests check hand-picked failure points (aside-rename fails,
+swap-rename fails, base recreated mid-swap); this suite
 checks ALL of them mechanically: it crashes the verb at the k-th
 MUTATING filesystem operation for every k the verb performs, and after
 each crash asserts that some location still holds every row.
@@ -77,9 +77,8 @@ def _rows_at(spark, path):
 def _assert_survivable(spark, base, n_expected, crash_op):
     """The invariant: at least one of the candidate locations holds
     every row."""
-    candidates = [base, base + ".old", base + ".hoist",
-                  base + ".compact_tmp", base + ".rebucket_tmp",
-                  base + ".cluster_tmp"]
+    candidates = [base, base + ".old", base + ".compact_tmp",
+                  base + ".rebucket_tmp", base + ".cluster_tmp"]
     counts = {p: _rows_at(spark, p) for p in candidates}
     survivors = [p for p, n in counts.items() if n == n_expected]
     assert survivors, (

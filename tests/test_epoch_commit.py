@@ -89,7 +89,7 @@ def test_staged_file_lost_before_commit_raises_then_replays_once(
         _rows(spark, 0, 300), str(tmp_path / "t"), HashDistributor(4), "ts"
     )
     fs = Fs(spark, t.path)
-    stage = t.path.rstrip("/") + "/.staging-epoch-5"
+    stage = t.path.rstrip("/") + ".staging-epoch-5"
     batch = _rows(spark, 300, 400)
     real_lock = ing._epoch_commit_lock
     lost = []
@@ -114,4 +114,4 @@ def test_staged_file_lost_before_commit_raises_then_replays_once(
     t.refresh()
     got = sorted(r.v for r in t.df().select("v").collect())
     assert got == list(range(400))
-    assert not fs.glob(t.path.rstrip("/") + "/.staging-epoch-*")
+    assert not fs.glob(t.path.rstrip("/") + ".staging-epoch-*")

@@ -73,6 +73,48 @@ def test_create_atomic_is_create_if_absent(spark, tmp_path):
     assert fs.read_text(p) == "a"  # loser never overwrites
 
 
+def test_create_atomic_has_one_winner_under_contention(spark, tmp_path):
+    """The lifecycle lock is mutual exclusion only if create_atomic is:
+    6 threads race to create one fresh path per round, and each round
+    must have exactly one winner. Hadoop's local create(overwrite=False)
+    checks exists and then opens, which let several threads win the
+    same round on a 4-core host (more threads than cores). py4j serves
+    each Python thread over its own connection, so the calls overlap
+    for real."""
+    import sys
+    import threading
+
+    N, ROUNDS = 6, 60
+    barrier = threading.Barrier(N, timeout=60)
+    wins = [[] for _ in range(ROUNDS)]
+    lk = threading.Lock()
+
+    def contend(i):
+        fs = Fs(spark, str(tmp_path))
+        for rnd in range(ROUNDS):
+            barrier.wait()
+            if fs.create_atomic(str(tmp_path / f"round-{rnd}"), str(i)):
+                with lk:
+                    wins[rnd].append(i)
+
+    threads = [threading.Thread(target=contend, args=(i,)) for i in range(N)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    multi = {rnd: w for rnd, w in enumerate(wins) if len(w) != 1}
+    assert not multi, f"rounds without exactly one winner: {multi}"
+    fs = Fs(spark, str(tmp_path))
+    for rnd, w in enumerate(wins):
+        assert fs.read_text(str(tmp_path / f"round-{rnd}")) == str(w[0])
+
+
 def test_create_atomic_propagates_non_exists_failures(spark, tmp_path):
     """ADVICE r6: only the lost-the-race outcome maps to False. A
     create that fails for any other reason (here: the parent path is a
@@ -182,7 +224,7 @@ def test_epoch_commit_respects_and_holds_the_lifecycle_lock(spark, tmp_path):
         idempotent_salted_batch_write(
             batch, 7, t.path, t.distributor, "k", lock_timeout_s=0.6
         )
-    stage = t.path.rstrip("/") + "/.staging-epoch-7"
+    stage = t.path.rstrip("/") + ".staging-epoch-7"
     assert fs.is_dir(stage)  # this epoch's data survives for the replay
     assert t.scan().count() == 100  # nothing committed under the race
 
@@ -227,6 +269,29 @@ def test_epoch_commit_unlocked_on_bare_sink_dir(spark, tmp_path):
     fs = Fs(spark, dest)
     assert not fs.exists(SaltedTable.lock_path(dest))
     assert spark.read.parquet(dest).count() == 10
+
+
+def test_epoch_commit_refuses_a_table_left_aside(spark, tmp_path):
+    """A swap that failed mid-flight leaves the table only at
+    ``base.old``. An epoch commit then raises and keeps its stage
+    instead of creating a table-less ``base`` from its own files (a
+    later verb's swap would delete ``base.old``, the only copy)."""
+    from hbasewd_spark.streaming.ingest import idempotent_salted_batch_write
+
+    t = _table(spark, str(tmp_path / "t_aside"), n=100)
+    fs = Fs(spark, t.path)
+    base = t.path.rstrip("/")
+    assert fs.rename(base, base + ".old")
+    batch = spark.createDataFrame([(900, "a")], "k long, v string")
+    with pytest.raises(RuntimeError, match="swap failed mid-flight"):
+        idempotent_salted_batch_write(batch, 2, t.path, t.distributor, "k")
+    assert not fs.exists(base)
+    assert fs.is_dir(base + ".staging-epoch-2")
+    assert not fs.exists(_lock_path(t))
+    assert fs.rename(base + ".old", base)
+    idempotent_salted_batch_write(batch, 2, t.path, t.distributor, "k")
+    t.refresh()
+    assert t.scan().count() == 101
 
 
 def test_lock_acquisition_cannot_resurrect_mid_swap_base(spark, tmp_path):
@@ -277,58 +342,25 @@ def test_lock_acquisition_cannot_resurrect_mid_swap_base(spark, tmp_path):
     assert t.scan().count() == 100  # table intact at base, not nested
 
 
-def test_swap_clears_base_resurrected_by_racing_stage_write(spark, tmp_path):
-    """The dual hazard: a streaming epoch's STAGE write (outside the
-    lock by design) recreates ``base`` while a verb is mid-swap. The
-    verb's rename onto the existing dir would nest the staged table
-    one level deep. Pin the defense: the swap deletes the resurrected
-    (staging-only) dir — forcing the epoch's manifest-replay — and the
-    compacted table lands AT base, not inside it."""
-    import unittest.mock as mock
-
-    t = _table(spark, str(tmp_path / "t_stager"), n=400)
-    fs = Fs(spark, t.path)
-    base = t.path.rstrip("/")
-    real_rename = Fs.rename
-    state = {"injected": False}
-
-    def inject(self, src, dst):
-        r = real_rename(self, src, dst)
-        if dst.endswith(".old") and not state["injected"]:
-            state["injected"] = True
-            # the racing stager lands its stage inside a fresh base
-            fs.mkdirs(base + "/.staging-epoch-9/salt=0")
-            fs.write_text(
-                base + "/.staging-epoch-9/salt=0/part-0.parquet", "x"
-            )
-        return r
-
-    with mock.patch.object(Fs, "rename", inject):
-        compact(t)
-    assert state["injected"]
-    t2 = SaltedTable.load(spark, base)
-    assert t2.scan().count() == 400  # table AT base, nothing nested
-    assert not fs.glob(base + "/*/.staging-epoch-*")  # no nesting
-    assert not fs.glob(base + "/.staging-epoch-*")  # stage cleared -> replay
-    assert not fs.exists(base + ".old")
-
-
-def test_verb_destroying_stage_forces_epoch_replay(spark, tmp_path, monkeypatch):
-    """ADVICE r7 (medium): the epoch staging dir lives inside the table
-    dir and is written OUTSIDE the lock — a lifecycle verb that wins
-    the lock between stage and commit swaps ``base -> base.old`` and
-    deletes the aside copy, destroying the stage. The commit must then
-    RAISE (so foreachBatch replays the epoch), never return success
-    with zero files renamed. Simulated by running compact() at the top
-    of the commit's lock acquisition — exactly the winning-verb
-    interleaving."""
+@pytest.mark.parametrize("verb", ["compact", "rebucket"])
+def test_epoch_staged_across_a_verb(spark, tmp_path, monkeypatch, verb):
+    """A lifecycle verb that wins the lock between an epoch's stage
+    write and its commit no longer touches the stage (it sits beside
+    the table, not inside it). After a compact the epoch commits into
+    the rewritten table exactly once, with no raise and no replay.
+    After a rebucket the epoch's files are salted by the old
+    distributor: the commit raises, keeps the stage and commits
+    nothing; the same epoch committed with the table's distributor is
+    then exactly-once."""
     import contextlib
 
     import hbasewd_spark.streaming.ingest as ing
+    from hbasewd_spark.sources.salted_table import rebucket
     from hbasewd_spark.streaming.ingest import idempotent_salted_batch_write
 
     t = _table(spark, str(tmp_path / "t_race"), n=100)
     fs = Fs(spark, t.path)
+    stage = t.path.rstrip("/") + ".staging-epoch-3"
     batch = spark.createDataFrame(
         [(2000 + i, f"r{i}") for i in range(15)], "k long, v string"
     )
@@ -337,25 +369,71 @@ def test_verb_destroying_stage_forces_epoch_replay(spark, tmp_path, monkeypatch)
 
     @contextlib.contextmanager
     def racing_lock(lfs, dest_path, epoch_id, timeout_s, poll_s=0.2):
-        compact(t)  # the verb wins the race window; stage dies with base.old
+        # the verb wins the window between stage and commit
+        if verb == "compact":
+            compact(t)
+        else:
+            rebucket(t, HashDistributor(8))
+        assert fs.exists(stage + "/" + ing.STAGE_MANIFEST)
         with real_lock(lfs, dest_path, epoch_id, timeout_s, poll_s):
             yield
 
     monkeypatch.setattr(ing, "_epoch_commit_lock", racing_lock)
-    with pytest.raises(RuntimeError, match="swapped the table dir"):
+    if verb == "compact":
         idempotent_salted_batch_write(batch, 3, t.path, t.distributor, "k")
-    # nothing committed, nothing lost, lock released
-    t.refresh()
-    assert t.scan().count() == 100
-    assert not fs.exists(_lock_path(t))
-
-    # the replay (same epoch id, no race) commits exactly-once
-    monkeypatch.setattr(ing, "_epoch_commit_lock", real_lock)
-    idempotent_salted_batch_write(batch, 3, t.path, t.distributor, "k")
+    else:
+        with pytest.raises(RuntimeError, match="rebucketed"):
+            idempotent_salted_batch_write(batch, 3, t.path, t.distributor, "k")
+        monkeypatch.setattr(ing, "_epoch_commit_lock", real_lock)
+        assert fs.exists(stage + "/" + ing.STAGE_MANIFEST)  # stage kept
+        t = SaltedTable.load(spark, t.path)
+        assert t.distributor.buckets == 8
+        assert t.scan().count() == 100  # 0 rows committed
+        assert not fs.glob(t.path.rstrip("/") + "/salt=*/epoch-*.parquet")
+        assert not fs.exists(_lock_path(t))
+        idempotent_salted_batch_write(batch, 3, t.path, t.distributor, "k")
     t.refresh()
     assert t.scan().count() == 115
     assert t.scan().where("k >= 2000").count() == 15
-    assert not fs.glob(t.path.rstrip("/") + "/.staging-epoch-*")
+    assert t.validate().count() == 0  # every row in its key's bucket
+    for k in (2000, 2007, 2014):
+        assert t.point_get(k).count() == 1
+    assert not fs.exists(stage)
+    assert not fs.exists(_lock_path(t))
+
+
+def test_epoch_stage_is_never_under_the_table_dir(spark, tmp_path, monkeypatch):
+    """While an epoch sits between its stage write and its commit, the
+    table dir holds no ``.staging-*`` entry: the stage is the sibling
+    ``<base>.staging-epoch-<id>``, so only code holding the lifecycle
+    lock writes under ``base``."""
+    import contextlib
+
+    import hbasewd_spark.streaming.ingest as ing
+
+    t = _table(spark, str(tmp_path / "t_sib"), n=100)
+    fs = Fs(spark, t.path)
+    base = t.path.rstrip("/")
+    batch = spark.createDataFrame(
+        [(5000 + i, f"s{i}") for i in range(10)], "k long, v string"
+    )
+    real_lock = ing._epoch_commit_lock
+    seen = {}
+
+    @contextlib.contextmanager
+    def peeking_lock(lfs, dest_path, epoch_id, timeout_s, poll_s=0.2):
+        seen["in_base"] = fs.glob(base + "/.staging-*") + fs.glob(base + "/*/.staging-*")
+        seen["beside"] = fs.glob(base + ".staging-epoch-*")
+        with real_lock(lfs, dest_path, epoch_id, timeout_s, poll_s):
+            yield
+
+    monkeypatch.setattr(ing, "_epoch_commit_lock", peeking_lock)
+    ing.idempotent_salted_batch_write(batch, 4, t.path, t.distributor, "k")
+    assert seen["in_base"] == []
+    assert [p.rsplit("/", 1)[-1] for p in seen["beside"]] == ["t_sib.staging-epoch-4"]
+    t.refresh()
+    assert t.scan().count() == 110
+    assert not fs.glob(base + ".staging-epoch-*")
 
 
 def test_epoch_commit_crash_mid_rename_replays_exactly_once(spark, tmp_path):
@@ -392,7 +470,7 @@ def test_epoch_commit_crash_mid_rename_replays_exactly_once(spark, tmp_path):
                 batch, 9, t.path, t.distributor, "k"
             )
     assert state["epoch_renames"] == 2  # crashed exactly where injected
-    stage = t.path.rstrip("/") + "/.staging-epoch-9"
+    stage = t.path.rstrip("/") + ".staging-epoch-9"
     assert fs.is_dir(stage)  # preserved for the replay
     assert not fs.exists(_lock_path(t))  # lock released on the error path
     # one file DID land before the crash — the replay must purge it
@@ -404,5 +482,5 @@ def test_epoch_commit_crash_mid_rename_replays_exactly_once(spark, tmp_path):
     t.refresh()
     assert t.scan().count() == 140  # exactly-once: no dupes, no loss
     assert t.scan().where("k >= 3000").count() == 40
-    assert not fs.glob(t.path.rstrip("/") + "/.staging-epoch-*")
+    assert not fs.glob(t.path.rstrip("/") + ".staging-epoch-*")
     assert not fs.exists(_lock_path(t))

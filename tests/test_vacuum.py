@@ -22,14 +22,15 @@ from hbasewd_spark.sources.salted_table import (
 
 def _plant_artifacts(spark, t):
     """Fabricate the full leftover taxonomy around a live table:
-    aside copy, hoist, two verb tmp stages, one streaming stage."""
+    aside copy, hoist (left by older engine versions), two verb tmp
+    stages, one streaming stage."""
     fs = Fs(spark, t.path)
     base = t.path.rstrip("/")
     for sib in (base + ".old", base + ".hoist", base + ".compact_tmp"):
         fs.copy(base, sib)
     fs.mkdirs(base + ".rebucket_tmp/salt=0")
-    fs.mkdirs(base + "/.staging-epoch-42/salt=0")
-    fs.write_text(base + "/.staging-epoch-42/_stage_manifest.json", "{}")
+    fs.mkdirs(base + ".staging-epoch-42/salt=0")
+    fs.write_text(base + ".staging-epoch-42/_stage_manifest.json", "{}")
     return fs, base
 
 
@@ -51,7 +52,7 @@ def test_vacuum_reclaims_all_sibling_artifacts(spark, kv, tmp_path):
     for sib in (".old", ".hoist", ".compact_tmp", ".rebucket_tmp"):
         assert not fs.exists(base + sib)
     # streaming stage kept by default, with the opt-in hint
-    assert fs.exists(base + "/.staging-epoch-42")
+    assert fs.exists(base + ".staging-epoch-42")
     assert any(
         "staging_older_than_s" in k["reason"] for k in report["kept"]
     )
@@ -61,8 +62,8 @@ def test_vacuum_reclaims_all_sibling_artifacts(spark, kv, tmp_path):
 
     # second pass with a zero retention window reclaims the aged stage
     report2 = vacuum(t, staging_older_than_s=0)
-    assert any(p.endswith(".staging-epoch-42") for p in report2["deleted"])
-    assert not fs.exists(base + "/.staging-epoch-42")
+    assert any(p.endswith("vac.staging-epoch-42") for p in report2["deleted"])
+    assert not fs.exists(base + ".staging-epoch-42")
 
     # idempotent: nothing left to do
     report3 = vacuum(t, staging_older_than_s=0)
@@ -165,7 +166,7 @@ def test_vacuum_stage_freshness_uses_newest_content(spark, kv, tmp_path, monkeyp
     )
     fs = Fs(spark, t.path)
     base = t.path.rstrip("/")
-    stage = base + "/.staging-epoch-9"
+    stage = base + ".staging-epoch-9"
     fs.mkdirs(stage + "/salt=0")
     fs.write_text(stage + "/salt=0/part-0.parquet", "x")
     # the stage dir itself looks old but a file inside is brand new:
@@ -200,12 +201,12 @@ def test_vacuum_dry_run_deletes_nothing(spark, kv, tmp_path):
         "vacdry.hoist",
         "vacdry.compact_tmp",
         "vacdry.rebucket_tmp",
-        ".staging-epoch-42",
+        "vacdry.staging-epoch-42",
     }, report
     # ...but everything is still on disk
     for sib in (".old", ".hoist", ".compact_tmp", ".rebucket_tmp"):
         assert fs.exists(base + sib)
-    assert fs.exists(base + "/.staging-epoch-42")
+    assert fs.exists(base + ".staging-epoch-42")
 
 
 def test_vacuum_crash_at_any_delete_leaves_table_intact(
@@ -234,7 +235,7 @@ def test_vacuum_crash_at_any_delete_leaves_table_intact(
             base + ".hoist",
             base + ".compact_tmp",
             base + ".rebucket_tmp",
-            base + "/.staging-epoch-42",
+            base + ".staging-epoch-42",
         ):
             real_delete(fs, leftover, recursive=True)
         _plant_artifacts(spark, t)
@@ -273,12 +274,57 @@ def test_vacuum_keeps_fresh_streaming_stage(spark, kv, tmp_path):
     )
     fs = Fs(spark, t.path)
     base = t.path.rstrip("/")
-    fs.mkdirs(base + "/.staging-epoch-7/salt=1")
+    fs.mkdirs(base + ".staging-epoch-7/salt=1")
     # a just-written stage is inside any sane retention window
     report = vacuum(t, staging_older_than_s=3600)
     assert report["deleted"] == []
-    assert fs.exists(base + "/.staging-epoch-7")
+    assert fs.exists(base + ".staging-epoch-7")
     assert any("retention" in k["reason"] for k in report["kept"])
+
+
+def test_vacuum_reclaims_parent_era_in_dir_stage_and_hoist(spark, kv, tmp_path):
+    """Tables written by older engine versions can carry an in-dir
+    ``base/.staging-epoch-*`` stage and a ``base.hoist`` sibling. The
+    in-dir stage gets the same retention rule as a sibling stage (kept
+    by default and while fresh, reclaimed once aged); the hoist copy
+    gets the aside copy's row-count proof."""
+    t = SaltedTable.write(
+        kv, str(tmp_path / "vacold"), HashDistributor(4), "key_long"
+    )
+    n = t.df().count()
+    fs = Fs(spark, t.path)
+    base = t.path.rstrip("/")
+    stage = base + "/.staging-epoch-3"
+    fs.mkdirs(stage + "/salt=0")
+    fs.write_text(stage + "/salt=0/part-0.parquet", "x")
+    # a hoist copy that is not complete (one data file short) is kept
+    fs.copy(base, base + ".hoist")
+    victim = next(
+        p
+        for p in fs.glob(base + ".hoist/salt=*/*")
+        if not p.rsplit("/", 1)[1].startswith((".", "_"))
+    )
+    fs.delete(victim)
+
+    report = vacuum(t)
+    assert report["deleted"] == []
+    reasons = {k["path"].rsplit("/", 1)[-1]: k["reason"] for k in report["kept"]}
+    assert "staging_older_than_s" in reasons[".staging-epoch-3"]
+    assert "row counts diverge" in reasons["vacold.hoist"]
+    report = vacuum(t, staging_older_than_s=3600)
+    assert not any(p.endswith(".staging-epoch-3") for p in report["deleted"])
+    assert fs.exists(stage)
+
+    # aged stage and a complete hoist copy: both reclaimed
+    fs.delete(base + ".hoist", recursive=True)
+    fs.copy(base, base + ".hoist")
+    report = vacuum(t, staging_older_than_s=0)
+    assert sorted(p.rsplit("/", 1)[-1] for p in report["deleted"]) == [
+        ".staging-epoch-3",
+        "vacold.hoist",
+    ], report
+    assert not fs.exists(stage) and not fs.exists(base + ".hoist")
+    assert SaltedTable.load(spark, base).df().count() == n
 
 
 def test_vacuum_refuses_when_base_is_not_loadable(spark, kv, tmp_path):
@@ -376,7 +422,7 @@ def test_concurrent_vacuums_serialize_on_the_lock(spark, kv, tmp_path):
             "vacrace.hoist",
             "vacrace.compact_tmp",
             "vacrace.rebucket_tmp",
-            ".staging-epoch-42",
+            "vacrace.staging-epoch-42",
         ]
     ), all_deleted
     assert SaltedTable.load(spark, base).df().count() == n
