@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import contextlib
 import json
-import os
 import time
 from typing import Any, Iterator
 

@@ -175,11 +175,9 @@ def idempotent_salted_batch_write(
     # all-metadata (milliseconds) — the expensive write above stays
     # outside the critical section
     with _epoch_commit_lock(fs, dest_path, epoch_id, lock_timeout_s):
-        try:
-            meta = _json.loads(fs.read_text(base + "/" + META_FILE))
-        except Exception:
-            meta = None  # a bare salt-dir sink, or no table at base
-        if meta is None:
+        meta_path = base + "/" + META_FILE
+        if not fs.exists(meta_path):
+            # a bare salt-dir sink, or a table left aside by a failed swap
             if fs.exists(base + ".old"):
                 raise RuntimeError(
                     f"epoch {epoch_id}: no table metadata at {base} but an "
@@ -188,15 +186,16 @@ def idempotent_salted_batch_write(
                     f"stage {stage} preserved for the replay"
                 )
         else:
+            meta = _json.loads(fs.read_text(meta_path))
             want = _json.loads(_json.dumps(distributor.to_meta()))
             have = {k: meta.get(k) for k in want}
             if have != want:
                 raise RuntimeError(
                     f"epoch {epoch_id}: the table at {base} is salted by "
-                    f"{have} but this epoch by {want} (the table was "
-                    f"rebucketed since the stream started); nothing "
-                    f"committed, stage {stage} preserved — restart the "
-                    f"stream with the table's distributor to commit it"
+                    f"{have} but this epoch by {want} (a rebucket since the "
+                    f"stream started changes it); nothing committed, stage "
+                    f"{stage} preserved — restart the stream with the "
+                    f"table's distributor to commit it"
                 )
         try:
             manifest = _json.loads(fs.read_text(stage + "/" + STAGE_MANIFEST))

@@ -382,7 +382,7 @@ def test_epoch_staged_across_a_verb(spark, tmp_path, monkeypatch, verb):
     if verb == "compact":
         idempotent_salted_batch_write(batch, 3, t.path, t.distributor, "k")
     else:
-        with pytest.raises(RuntimeError, match="rebucketed"):
+        with pytest.raises(RuntimeError, match="a rebucket since the stream started"):
             idempotent_salted_batch_write(batch, 3, t.path, t.distributor, "k")
         monkeypatch.setattr(ing, "_epoch_commit_lock", real_lock)
         assert fs.exists(stage + "/" + ing.STAGE_MANIFEST)  # stage kept
