@@ -68,6 +68,41 @@ def test_swap_refuses_base_recreated_mid_swap(spark, tmp_path, monkeypatch, verb
     assert SaltedTable.load(spark, rewrite).df().count() == 300
 
 
+def test_swap_refuses_rewrite_nested_by_a_late_writer(spark, tmp_path, monkeypatch):
+    """The writer recreates ``base`` after the swap's occupied check and
+    before its swap rename, which then nests the rewrite inside it
+    while returning True. The post-condition (no metadata file at the
+    top of ``base``) raises, deletes nothing, and names the nested
+    rewrite and the aside original."""
+    path = str(tmp_path / "late")
+    df = spark.range(300).select(
+        F.col("id").alias("key_long"), (F.col("id") * 3).alias("v")
+    )
+    t = SaltedTable.write(df, path, HashDistributor(4), "key_long")
+    real_exists = Fs.exists
+    fired = []
+
+    def racing_exists(self, p, _real=real_exists):
+        if p == path and not fired and _real(self, path + ".old"):
+            fired.append(1)  # blind the occupied check, then recreate base
+            self.mkdirs(path + "/.staging-racer")
+            return False
+        return _real(self, p)
+
+    monkeypatch.setattr(Fs, "exists", racing_exists)
+    with pytest.raises(IOError, match="did not land flat") as err:
+        compact(t)
+    monkeypatch.undo()
+    assert fired
+    nested = path + "/late.compact_tmp"
+    msg = str(err.value)
+    assert msg.endswith(f"the original table is at {path}.old and the rewrite at {nested}"), msg
+    fs = Fs(spark, path)
+    assert fs.exists(path + "/.staging-racer"), "the racer's dir was deleted"
+    assert SaltedTable.load(spark, path + ".old").df().count() == 300
+    assert SaltedTable.load(spark, nested).df().count() == 300
+
+
 def test_restore_aside_verifies_and_unnests(spark, kv, tmp_path, monkeypatch):
     """_restore_aside contract (r10 follow-up review): the restore
     rename is itself TOCTOU-prone — a writer can recreate base between
