@@ -551,7 +551,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (registry walks, test_plans and .explain() construct without
     # executing; a full plan-only registry walk dropped from minutes to
     # seconds). The RDD materializes inside the first action, exactly
-    # where bench/time_registry already account for it.
+    # where bench.py (headline and --registry) already accounts for it.
     g = _gram_sets(spark, sf_dir).localCheckpoint(eager=False)
     # the df ceiling is a 1-row broadcast relation, not an eager
     # .count() at plan-construction time (ADVICE r5: building the

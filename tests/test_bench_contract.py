@@ -6,7 +6,8 @@ past the driver's ~2,000-char tail-capture window — and the round's
 bench was recorded as ``parsed: null``. The contract pinned here:
 ``bench.build_payload`` stays under 1800 serialized chars for a
 full-sized suite, with or without errors, and ``shuffle_bytes`` never
-appears on the line (it goes to the per-scale SHUFFLE_sf<sf>.json sidecar).
+appears on the line (per-call bytes go to the per-scale PROFILE_sf<sf>.json
+sidecar).
 
 No Spark session needed — these are pure payload-shape tests.
 """
