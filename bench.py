@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Benchmark harness: the one instrumented runner, on a warm session at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+"""Benchmark harness: the one instrumented runner, on a warm session
+over the test data at $SPARK_GRAFT_SF_DIR (default: sf0.1) on
 local[$SPARK_GRAFT_CPUS].
 
 Headline mode, ``python bench.py``, prints ONE JSON line:
