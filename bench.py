@@ -238,7 +238,6 @@ def registry(run: Runner, names: list[str], reps: int, plans: str | None) -> int
     exit status, 1 if any query failed."""
     from hbasewd_spark import queries as Q
     from hbasewd_spark.operators.dedup import clear_dedup_caches
-    from hbasewd_spark.operators.graph import clear_graph_caches
 
     run.warm_up()
     if plans:
@@ -255,10 +254,9 @@ def registry(run: Runner, names: list[str], reps: int, plans: str | None) -> int
 
         rows = []
         for _ in range(max(reps, 1)):
-            # the dedup/graph session caches would turn every rep after
-            # the first into a cache hit
+            # the MinHash pairs cache would turn every rep after the
+            # first into a cache hit
             clear_dedup_caches()
-            clear_graph_caches()
             rows.append(run.timed(name, call))
         if None in rows:
             print(json.dumps({"query": name, "err": run.errors[name]}), flush=True)

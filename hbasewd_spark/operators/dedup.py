@@ -23,7 +23,12 @@ kept-row choices are min(doc_id), pair outputs are (a < b) ordered.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import math
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -170,86 +175,77 @@ def sql_minhash_band_hash(dialect: str, band: int) -> str:
     return sql_md5_long(f"({concat})", dialect)
 
 
-def _bands_of(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, band_hash) from a signature frame — one pass,
-    posexplode of the per-band hash array (no union-of-reprojections,
-    which would recompute the signature once per band)."""
+def _bands_of(sig: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, band, band_hash) from a signature frame — one
+    pass, posexplode of the per-band hash array (no
+    union-of-reprojections, which would recompute the signature once
+    per band). ``keep`` are extra SQL projections carried onto every
+    band row."""
     def band_key(b: int) -> str:
         mins = ", ".join(f"CAST(mh{j} AS STRING)" for j in range(b * MH_ROWS, (b + 1) * MH_ROWS))
         return f"concat_ws('_', {mins})"
 
     band_hashes = ", ".join(sql_md5_long(band_key(b), "spark") for b in range(MH_BANDS))
-    return sig.selectExpr("doc_id", f"posexplode(array({band_hashes})) AS (band, band_hash)")
+    return sig.selectExpr("doc_id", *keep, f"posexplode(array({band_hashes})) AS (band, band_hash)")
 
 
-def minhash_band_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, band, band_hash) — the LSH bucketing relation."""
-    return _bands_of(_cached_features(spark, sf_dir))
-
-
-# the signature frame is tiny (one row per doc) but referenced four
-# times per query (both band-join sides + both verify sides) and by
-# several queries (pairs, clusters, curation); a LAZY persist lets the
-# first job materialize it in-passing (an eager localCheckpoint costs a
-# separate serialize pass ~4x the compute) and later references hit the
-# in-memory columnar cache.
-#
-# Keyed on the session's applicationId (stable, never reused across
-# sessions — id(spark) can be, after GC) + sf_dir; one entry per key,
-# evicted/unpersisted via clear_dedup_caches() or on key turnover.
-_FEATS_CACHE: dict = {}
+# The one module-global frame: the verified pairs of the last
+# (session, sf_dir) asked for, lazily persisted. A curation pipeline
+# asks for pairs, clusters and curation over one corpus in turn, and
+# the two later queries build on the first one's pairs (seed-1 traced
+# corpus_dedup: clusters p50 0.51 s against minhash_pairs 1.30 s). The
+# key is the path, not the data: a corpus rewritten under the same
+# path is served the earlier pairs until clear_dedup_caches(). A new
+# key unpersists the old frame, so at most one is ever held.
 _PAIRS_CACHE: dict = {}
 
 
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
+def _drop_pairs() -> None:
+    for df in _PAIRS_CACHE.values():
+        try:
+            df.unpersist()
+        except Exception:
+            pass
+    _PAIRS_CACHE.clear()
 
 
 def clear_dedup_caches() -> None:
-    """Unpersist and drop every cached dedup frame, and remove any
-    on-disk winnow index dirs (safe to call with the owning sessions
+    """Unpersist and drop the cached pairs frame, and remove the
+    tracked index scratch dirs (safe to call with the owning sessions
     already stopped)."""
-    for cache in (_FEATS_CACHE, _PAIRS_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    _clear_winnow_index_dirs()
+    _drop_pairs()
+    _clear_scratch_dirs()
 
 
-def _cached(cache: dict, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    key = _cache_key(spark, sf_dir)
-    df = cache.get(key)
-    if df is None:
-        # evict-on-rekey (VERDICT r11 #2): at most ONE cached frame per
-        # cache — a new session OR a new sf_dir unpersists everything
-        # else, so a long-lived session sweeping many tables never
-        # accretes executor storage (the old rule only dropped frames
-        # from DEAD sessions)
-        for stale in [k for k in cache if k != key]:
-            try:
-                cache.pop(stale).unpersist()
-            except Exception:
-                pass
-        df = build(spark, sf_dir).persist()
-        cache[key] = df
-    return df
+# the per-application dirs the index-building registry queries write
+# under: removed by clear_dedup_caches() and at interpreter exit (an
+# untracked /tmp path kept one parquet tree per application forever)
+_SCRATCH_DIRS: set = set()
 
 
-def _cached_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached(_FEATS_CACHE, spark, sf_dir, minhash_features)
+def _clear_scratch_dirs() -> None:
+    for d in list(_SCRATCH_DIRS):
+        shutil.rmtree(d, ignore_errors=True)
+        _SCRATCH_DIRS.discard(d)
 
 
-# the verified pairs frame is even smaller than the features (a few
-# hundred rows at bench scale) and consumed by three queries (pairs,
-# clusters, curation) — lazy-persist it like the features so the band
-# join + Jaccard verification runs once per (session, sf)
+atexit.register(_clear_scratch_dirs)
+
+
+def scratch_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """``<tmp>/<kind>/<applicationId>/<md5(sf_dir)[:12]>``, with its
+    application dir tracked for removal."""
+    root = os.path.join(tempfile.gettempdir(), kind, spark.sparkContext.applicationId)
+    _SCRATCH_DIRS.add(root)
+    return f"{root}/{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
 
 
 def minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached(_PAIRS_CACHE, spark, sf_dir, _minhash_dedup_pairs_uncached)
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _PAIRS_CACHE:
+        _drop_pairs()
+        _PAIRS_CACHE[key] = _minhash_dedup_pairs_uncached(spark, sf_dir).persist()
+    return _PAIRS_CACHE[key]
 
 
 def _expand_bucket_pairs(grouped: DataFrame) -> DataFrame:
@@ -281,7 +277,11 @@ def _minhash_dedup_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame
     ~2e-5, and both the Spark side and the DuckDB oracle use the same
     hashes, so parity is exact). Verifying on the 8-byte hashes instead
     of the shingle strings keeps the verify-join shuffle ~2.5× smaller."""
-    feats = _cached_features(spark, sf_dir)
+    # read three times (both verify sides, the bands): a lazy
+    # checkpoint computes the signatures once, in the first job that
+    # reads them (AQE runs the spreading exchange below it at build),
+    # and its blocks go with the pairs frame
+    feats = minhash_features(spark, sf_dir).localCheckpoint(eager=False)
     sh = feats.select("doc_id", F.array_distinct("hs").alias("hset"))
     bands = _bands_of(feats)
     # Candidate generation (r12): ONE aggregation per LSH bucket, not a
@@ -1536,50 +1536,19 @@ def probe_winnow_index(spark: SparkSession, batch_docs: DataFrame, path: str) ->
     )
 
 
-# on-disk winnow index dirs created by winnow_incremental, removed by
-# clear_dedup_caches() and at interpreter exit (ADVICE r11: the fixed
-# /tmp path was never cleaned, so repeated attestation sweeps in
-# long-lived applications accumulated parquet dirs on local disk)
-_WNIDX_DIRS: set = set()
-_WNIDX_ATEXIT_ARMED = False
-
-
-def _clear_winnow_index_dirs() -> None:
-    import shutil
-
-    for d in list(_WNIDX_DIRS):
-        shutil.rmtree(d, ignore_errors=True)
-        _WNIDX_DIRS.discard(d)
-
-
 def winnow_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: split documents into corpus (doc_id % 10 != 0)
     and batch (doc_id % 10 == 0), build the persisted index from the
     corpus, probe the batch — the substring-level admission decision a
-    streaming ingest would make. The index dir is tracked and removed
-    by :func:`clear_dedup_caches` / interpreter exit; the REBUILD on
-    every invocation is deliberate (the build is the measured
-    operator)."""
-    import atexit
-    import hashlib
-    import tempfile
-
-    global _WNIDX_ATEXIT_ARMED
-
+    streaming ingest would make. The index lives in a
+    :func:`scratch_dir`; the REBUILD on every invocation is deliberate
+    (the build is the measured operator)."""
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"), spark).select(
         "doc_id", "text"
     )
     corpus = docs.where(F.pmod("doc_id", F.lit(WINNOW_INC_BATCH_MOD)) != 0)
     batch = docs.where(F.pmod("doc_id", F.lit(WINNOW_INC_BATCH_MOD)) == 0)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = (
-        f"{tempfile.gettempdir()}/hbasewd_wnidx/{spark.sparkContext.applicationId}"
-    )
-    path = f"{root}/{tag}"
-    _WNIDX_DIRS.add(root)
-    if not _WNIDX_ATEXIT_ARMED:
-        atexit.register(_clear_winnow_index_dirs)
-        _WNIDX_ATEXIT_ARMED = True
+    path = scratch_dir(spark, "hbasewd_wnidx", sf_dir)
     build_winnow_index(spark, corpus, path)
     return probe_winnow_index(spark, batch, path)
 

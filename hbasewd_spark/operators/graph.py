@@ -351,8 +351,9 @@ def pagerank(
     shuffle hash join against the src-pre-partitioned edge relation —
     same integer semantics, no |V|-sized broadcast (see
     :func:`_pr_iteration`). The normalized edge relation is referenced
-    once per iteration — at scale, persist ``edges`` before calling, as
-    the query wrapper does. Lineage is CUT per iteration
+    once per iteration — at scale, materialize ``edges`` before calling
+    (the query wrapper checkpoints them lazily). Lineage is CUT per
+    iteration
     (localCheckpoint of the N-row rank frame, same discipline as
     connected_components): each iteration references the previous rank
     twice (contribution join + dangling aggregate), so a lazy plan
@@ -440,71 +441,48 @@ def pagerank(
     return r.select("node", F.col("r").alias("rank_e9"))
 
 
-# session-keyed lazy persist of the extracted edge relation, mirroring
-# dedup._FEATS_CACHE: the extraction (full events scan + per-user
-# window) is the expensive stage at scale, and three power iterations
-# reference it three times — the first job materializes the cache
-# in-passing, later references hit columnar memory. SELF-EVICTING
-# (VERDICT r11 #2: the cache only released via clear_graph_caches, so
-# a long-lived session scanning many tables accreted executor
-# storage): at most one entry lives at a time — inserting a new
-# (applicationId, sf_dir) key unpersists and drops every other entry.
-_EDGE_CACHE: dict = {}
-
-
-def clear_graph_caches() -> None:
-    for df, _nodes in _EDGE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _EDGE_CACHE.clear()
-
-
 def _event_transition_graph(spark, sf_dir: str):
     """(edges, nodes) of the event-property transition digraph: an
     edge src->dst for every pair of CONSECUTIVE events of one user
     (ordered by ts, event_id — a total order), where src/dst are the
     events' props.$.k values; weight = transition count. The node set
-    is every observed k (isolated nodes keep rank mass)."""
+    is every observed k (isolated nodes keep rank mass).
+
+    The edge relation is lazily checkpointed: the extraction (full
+    events scan + per-user window) is the expensive stage at scale and
+    pagerank reads the edges more than once, so they are computed once
+    per query and released with it."""
     from pyspark.sql import Window
 
     from hbasewd_spark.sources.loaders import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
-        # evict-on-rekey: keep at most ONE persisted edge relation per
-        # process (a sweep over many sf_dirs would otherwise pin one
-        # frame per table in executor storage until session death)
-        clear_graph_caches()
-        ev = (
-            load_table(spark, sf_dir, "events")
-            .select(
-                "user_id",
-                "ts",
-                "event_id",
-                F.get_json_object("props", "$.k").cast("int").alias("k"),
-            )
-            # node contract is non-null ints: an events row whose props
-            # lacks $.k would otherwise put NULL in the node set (the
-            # driver path crashed on it, the distributed path silently
-            # dropped its transitions — two failure modes for the same
-            # data, ADVICE r11). The row is dropped from the SEQUENCE,
-            # so its neighbors become consecutive — mirrored in
-            # pagerank_oracle's seq CTE.
-            .where(F.col("k").isNotNull())
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .select(
+            "user_id",
+            "ts",
+            "event_id",
+            F.get_json_object("props", "$.k").cast("int").alias("k"),
         )
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        edges = (
-            ev.select(F.lag("k").over(w).alias("src"), F.col("k").alias("dst"))
-            .where(F.col("src").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.count("*").alias("w"))
-            .persist()
-        )
-        nodes = ev.select(F.col("k").alias("node")).distinct()
-        _EDGE_CACHE[key] = (edges, nodes)
-    return _EDGE_CACHE[key]
+        # node contract is non-null ints: an events row whose props
+        # lacks $.k would otherwise put NULL in the node set (the
+        # driver path crashed on it, the distributed path silently
+        # dropped its transitions — two failure modes for the same
+        # data, ADVICE r11). The row is dropped from the SEQUENCE,
+        # so its neighbors become consecutive — mirrored in
+        # pagerank_oracle's seq CTE.
+        .where(F.col("k").isNotNull())
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    edges = (
+        ev.select(F.lag("k").over(w).alias("src"), F.col("k").alias("dst"))
+        .where(F.col("src").isNotNull())
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("w"))
+        .localCheckpoint(eager=False)
+    )
+    nodes = ev.select(F.col("k").alias("node")).distinct()
+    return edges, nodes
 
 
 def pagerank_event_transitions(spark, sf_dir: str) -> DataFrame:

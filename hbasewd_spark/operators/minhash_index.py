@@ -38,6 +38,7 @@ from hbasewd_spark.operators.dedup import (
     MH_BANDS,
     _bands_of,
     features_of_docs,
+    scratch_dir,
     verify_jaccard,
 )
 
@@ -80,15 +81,21 @@ def build_minhash_index(spark: SparkSession, docs: DataFrame, path: str) -> None
     finally:
         feats.unpersist()
     fs = Fs(spark, path)
-    fs.write_text(
-        f"{path}/{INDEX_META}",
-        json.dumps({"n_docs": n_docs, "bands": MH_BANDS, "format": 1}),
-    )
+    meta = {
+        "n_docs": n_docs,
+        "bands": MH_BANDS,
+        "doc_id_type": feats.schema["doc_id"].dataType.simpleString(),
+        "format": 2,
+    }
+    fs.write_text(f"{path}/{INDEX_META}", json.dumps(meta))
+
+
+def _index_meta(spark: SparkSession, path: str) -> dict:
+    return json.loads(Fs(spark, path).read_text(f"{path}/{INDEX_META}"))
 
 
 def index_doc_count(spark: SparkSession, path: str) -> int:
-    fs = Fs(spark, path)
-    return int(json.loads(fs.read_text(f"{path}/{INDEX_META}"))["n_docs"])
+    return int(_index_meta(spark, path)["n_docs"])
 
 
 def dedup_against_index(
@@ -108,12 +115,17 @@ def dedup_against_index(
     same-id pairs — correct when batch and corpus id spaces are
     disjoint by construction; an ADMISSION gate must pass False, or an
     at-least-once redelivery of an already-admitted (id, text) would
-    mask its own jaccard=1.0 collision and re-enter the corpus."""
+    mask its own jaccard=1.0 collision and re-enter the corpus.
+
+    The index relations are read with the schema the metadata records
+    (a parquet schema inference is a Spark job), so building the
+    result runs none."""
+    t = _index_meta(spark, path)["doc_id_type"]
     return probe_index(
         spark,
         new_docs,
-        spark.read.parquet(f"{path}/bands"),
-        spark.read.parquet(f"{path}/hsets"),
+        spark.read.schema(f"doc_id {t}, band_hash bigint, band int").parquet(f"{path}/bands"),
+        spark.read.schema(f"doc_id {t}, hset array<bigint>").parquet(f"{path}/hsets"),
         jaccard_threshold,
         exclude_self=exclude_self,
     )
@@ -133,47 +145,40 @@ def probe_index(
     streaming ingest reading only PRIOR epochs' index partitions).
     Extra columns on the index relations (epoch, band partitions) ride
     along harmlessly; only (doc_id, band, band_hash) / (doc_id, hset)
-    are consumed. Pass ``new_feats`` (a persisted
-    :func:`features_of_docs` frame for ``new_docs``) to reuse features
-    the caller also needs elsewhere — the signature pipeline is the
-    dominant batch-side cost and must not run twice per epoch; a
-    caller-provided frame is left persisted (caller owns its
-    lifecycle)."""
-    owned = new_feats is None
-    if owned:
-        new_feats = features_of_docs(new_docs).persist()
-    try:
-        new_bands = _bands_of(new_feats).select(
-            F.col("doc_id").alias("new_doc_id"), "band", "band_hash"
-        )
-        cand = idx_bands.join(F.broadcast(new_bands), ["band", "band_hash"])
-        if exclude_self:
-            cand = cand.where(F.col("doc_id") != F.col("new_doc_id"))
-        cand = cand.select(
-            "new_doc_id", F.col("doc_id").alias("corpus_doc_id")
-        ).distinct()
-        idx_sets = idx_sets.select(
-            F.col("doc_id").alias("corpus_doc_id"), F.col("hset").alias("hs_c")
-        )
-        new_sets = new_feats.select(
-            F.col("doc_id").alias("new_doc_id"), F.array_distinct("hs").alias("hs_n")
-        )
-        # candidates are tiny (LSH-selected); broadcast them onto the
-        # big hsets relation, then attach the batch's sets (broadcast)
-        verified = verify_jaccard(
-            idx_sets.join(F.broadcast(cand), "corpus_doc_id").join(F.broadcast(new_sets), "new_doc_id"),
-            "new_doc_id",
-            "corpus_doc_id",
-            "hs_n",
-            "hs_c",
-            jaccard_threshold,
-        ).select("new_doc_id", "corpus_doc_id", "jaccard")
-        # materialize before unpersisting the batch features the plan reads
-        verified = verified.localCheckpoint(eager=True)
-    finally:
-        if owned:
-            new_feats.unpersist()
-    return verified
+    are consumed. Pass ``new_feats`` (the :func:`features_of_docs`
+    frame for ``new_docs``) to reuse features the caller also needs
+    elsewhere — the signature pipeline is the dominant batch-side cost
+    and must not run twice per epoch.
+
+    The batch features are read once: each band row carries its doc's
+    hash set through the candidate join, so verification needs no
+    second read of the batch, nothing is materialized, and building the
+    probe runs no Spark job."""
+    feats = features_of_docs(new_docs) if new_feats is None else new_feats
+    new_bands = _bands_of(feats, "array_distinct(hs) AS hs_n").select(
+        F.col("doc_id").alias("new_doc_id"), "hs_n", "band", "band_hash"
+    )
+    cand = idx_bands.join(F.broadcast(new_bands), ["band", "band_hash"])
+    if exclude_self:
+        cand = cand.where(F.col("doc_id") != F.col("new_doc_id"))
+    # one row per (batch doc, corpus doc): hs_n is a function of the
+    # batch doc, so which duplicate survives does not matter
+    cand = cand.select(
+        "new_doc_id", F.col("doc_id").alias("corpus_doc_id"), "hs_n"
+    ).dropDuplicates(["new_doc_id", "corpus_doc_id"])
+    idx_sets = idx_sets.select(
+        F.col("doc_id").alias("corpus_doc_id"), F.col("hset").alias("hs_c")
+    )
+    # candidates are tiny (LSH-selected): broadcast them onto the big
+    # hsets relation
+    return verify_jaccard(
+        idx_sets.join(F.broadcast(cand), "corpus_doc_id"),
+        "new_doc_id",
+        "corpus_doc_id",
+        "hs_n",
+        "hs_c",
+        jaccard_threshold,
+    ).select("new_doc_id", "corpus_doc_id", "jaccard")
 
 
 def append_to_index(spark: SparkSession, new_docs: DataFrame, path: str) -> None:
@@ -187,10 +192,9 @@ def append_to_index(spark: SparkSession, new_docs: DataFrame, path: str) -> None
         n_new = feats.count()
     finally:
         feats.unpersist()
-    fs = Fs(spark, path)
-    meta = json.loads(fs.read_text(f"{path}/{INDEX_META}"))
+    meta = _index_meta(spark, path)
     meta["n_docs"] = int(meta["n_docs"]) + n_new
-    fs.write_text(f"{path}/{INDEX_META}", json.dumps(meta))
+    Fs(spark, path).write_text(f"{path}/{INDEX_META}", json.dumps(meta))
 
 
 # ---------------------------------------------------------------------------
@@ -207,16 +211,13 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch — (new_doc_id, corpus_doc_id, jaccard) near-dup pairs the
     ingest would hold back. The natural near-dups across the split
     make the result non-trivial without synthetic perturbation."""
-    import hashlib
-
     from hbasewd_spark.sources.loaders import load_table
 
     # features_of_docs spreads each side over the cores itself
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.where(F.pmod("doc_id", F.lit(INC_BATCH_MOD)) != 0)
     batch = docs.where(F.pmod("doc_id", F.lit(INC_BATCH_MOD)) == 0)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = f"/tmp/hbasewd_mhidx/{spark.sparkContext.applicationId}/{tag}"
+    path = scratch_dir(spark, "hbasewd_mhidx", sf_dir)
     build_minhash_index(spark, corpus, path)
     return dedup_against_index(spark, batch, path)
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from hbasewd_spark.operators.topk import global_topk
-from hbasewd_spark.sources.loaders import load_table
+from hbasewd_spark.sources.loaders import load_table, sql_on_tables
 
 MONEY = "decimal(18,4)"
 
@@ -630,10 +630,7 @@ WINDOW w AS (PARTITION BY p_brand ORDER BY p_size RANGE BETWEEN 2 PRECEDING AND 
 def subquery_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS / IN / scalar subqueries via SQL (Catalyst rewrites them
     into semi joins — same plan family the DataFrame API produces)."""
-    from hbasewd_spark.sources.loaders import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(SUBQUERY_SQL_SPARK)
+    return sql_on_tables(spark, sf_dir, SUBQUERY_SQL_SPARK)
 
 
 SUBQUERY_SQL_SPARK = """
@@ -764,10 +761,7 @@ def exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in both dialects. At scale: count(distinct) is a
     two-level hash agg; percentile_disc is a sort-based agg per group —
     both shuffle only (flag, value) pairs, never whole rows."""
-    from hbasewd_spark.sources.loaders import load_table
-
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(EXACT_STATS_SQL)
+    return sql_on_tables(spark, sf_dir, EXACT_STATS_SQL)
 
 
 # ===========================================================================
@@ -1335,10 +1329,7 @@ def lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correlated limit into a window-ranked join — same plan family
     as rel_topk_per_group, exposed through the SQL surface the way a
     migrating user would write it."""
-    from hbasewd_spark.sources.loaders import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(LATERAL_SQL)
+    return sql_on_tables(spark, sf_dir, LATERAL_SQL)
 
 
 LATERAL_ORACLE = LATERAL_SQL  # identical text runs on DuckDB
@@ -1438,10 +1429,7 @@ def time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     user); the frame is evaluated by a running two-pointer pass over
     each sorted partition, never a self-join. The time-series twin of
     rel_range_frame's numeric RANGE."""
-    from hbasewd_spark.sources.loaders import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(TIME_RANGE_FRAME_SQL)
+    return sql_on_tables(spark, sf_dir, TIME_RANGE_FRAME_SQL)
 
 
 # DuckDB reads the nanos timestamp natively; cast to micros TIMESTAMP so
@@ -1621,7 +1609,4 @@ def rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     of either engine's sliding-window fold order); mean/variance/
     threshold are then deterministic double arithmetic on exact
     inputs. Identical SQL both engines."""
-    from hbasewd_spark.sources.loaders import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(ANOMALY_SQL)
+    return sql_on_tables(spark, sf_dir, ANOMALY_SQL)

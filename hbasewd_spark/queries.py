@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hbasewd_spark.functions.codec import sql_hash31_of_long, sql_md5_long
-from hbasewd_spark.sources.loaders import ensure_min_parallelism, load_table, register_views
+from hbasewd_spark.sources.loaders import ensure_min_parallelism, load_table, sql_on_tables
 
 
 @dataclass
@@ -52,11 +52,6 @@ def q(name: str, oracle: str | None, doc: str = ""):
         return fn
 
     return deco
-
-
-def _sql(spark: SparkSession, sf_dir: str, text: str, tables=None) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(text)
 
 
 # ===========================================================================
@@ -85,7 +80,7 @@ GROUP BY salt
     "(RowKeyDistributorByOneBytePrefix.java:47-53).",
 )
 def o1_roundrobin_salt_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _O1_SQL)
+    return sql_on_tables(spark, sf_dir, _O1_SQL)
 
 
 _H31_SALT = sql_hash31_of_long("event_id", H31_BUCKETS)
@@ -104,7 +99,7 @@ GROUP BY salt
     "(RowKeyDistributorByHashPrefix.java:102-114), bucket histogram.",
 )
 def o2_hash31_salt_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _O2_SQL)
+    return sql_on_tables(spark, sf_dir, _O2_SQL)
 
 
 @q(
@@ -169,14 +164,15 @@ def o4_point_get_roundrobin_fanout(spark: SparkSession, sf_dir: str) -> DataFram
     "(RowKeyDistributorByHashPrefix.java:67-74).",
 )
 def o6_prefix_domain_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         f"""
         SELECT d.salt, count(e.event_id) AS n
         FROM (SELECT explode(sequence(0, {H31_BUCKETS - 1})) AS salt) d
         LEFT JOIN (SELECT {_H31_SALT} AS salt, event_id FROM events) e USING (salt)
         GROUP BY d.salt
-        """
+        """,
     )
 
 
@@ -202,7 +198,7 @@ GROUP BY 1
     "(AbstractRowKeyDistributor.java:47-81).",
 )
 def o7_interval_fanout_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _O7_SQL)
+    return sql_on_tables(spark, sf_dir, _O7_SQL)
 
 
 _O9_SQL = f"""
@@ -326,7 +322,7 @@ FROM events WHERE event_id IN {_POINT_KEYS}
     "(README:75-78); output includes the pruned-to salt.",
 )
 def p2_point_get_hash_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _P2_SQL)
+    return sql_on_tables(spark, sf_dir, _P2_SQL)
 
 
 _P5_SQL = f"""
@@ -380,7 +376,7 @@ FROM events WHERE ts >= {_TS_LO} AND ts < {_TS_HI}
     "unordered parallel read path (RowKeyDistributorTestBase.java:210-223).",
 )
 def p6_count_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _P6_SQL)
+    return sql_on_tables(spark, sf_dir, _P6_SQL)
 
 
 _P6B_SQL = f"""
@@ -520,7 +516,7 @@ q("rel_window_tumbling", R.TUMBLING_ORACLE,
     "GROUPING SETS via SQL (identical text both engines)",
 )
 def rel_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(
+    return sql_on_tables(
         spark,
         sf_dir,
         """
@@ -1026,10 +1022,11 @@ def ext_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i + 1, t
 
     spark.udtf.register("wd_tokenize", Tokenize)
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         "SELECT doc_id, t.tok, t.pos FROM documents, "
-        "LATERAL wd_tokenize(text) t WHERE doc_id < 50"
+        "LATERAL wd_tokenize(text) t WHERE doc_id < 50",
     )
 
 
@@ -1440,7 +1437,7 @@ def _split_sql(dialect: str) -> str:
     "partitioning-independent, engine-reproducible, join-consistent",
 )
 def ext_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sql(spark, sf_dir, _split_sql("spark"))
+    return sql_on_tables(spark, sf_dir, _split_sql("spark"))
 
 
 def _sample_sql(dialect: str) -> str:
@@ -1512,8 +1509,7 @@ def _pii_sql(dialect: str) -> str:
     "totals per source over deterministically synthesized PII",
 )
 def ext_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_pii_sql("spark"))
+    return sql_on_tables(spark, sf_dir, _pii_sql("spark"))
 
 
 def _register_contamination() -> None:
@@ -2342,8 +2338,7 @@ def _inverted_index_sql(dialect: str) -> str:
     "be WRITTEN as a token-hash-salted table and probed per token",
 )
 def ext_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_inverted_index_sql("spark"))
+    return sql_on_tables(spark, sf_dir, _inverted_index_sql("spark"))
 
 
 def _register_multimodal_frames() -> None:

@@ -10,6 +10,7 @@ comparisons line up.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -75,10 +76,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_timestamps(df)
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register every test table as a temp view for spark.sql queries."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def sql_on_tables(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """``spark.sql(text)`` over the test tables: each table the text
+    names as a whole word is registered as a temp view first. Loading a
+    table infers its parquet schema, a Spark job, so a text pays only
+    for the tables it names; an extra view is harmless, and a missing
+    one fails analysis loudly."""
+    for name in TABLES:
+        if re.search(rf"\b{name}\b", text, re.IGNORECASE):
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.sql(text)
 
 
 def ensure_min_parallelism(df: DataFrame, spark: SparkSession, target: int | None = None) -> DataFrame:

@@ -776,7 +776,8 @@ def neardup_corpus_ingest(
                 # exclude_self=False: an at-least-once redelivery of an
                 # already-admitted (id, text) must match its own prior
                 # signature and be held back, not slip past a same-id
-                # exclusion
+                # exclusion. The three writes below all read the held-
+                # back ids, so the probe runs once, here.
                 dupes = (
                     probe_index(
                         spark,
@@ -788,6 +789,7 @@ def neardup_corpus_ingest(
                     )
                     .select(F.col("new_doc_id").alias("doc_id"))
                     .distinct()
+                    .localCheckpoint()
                 )
                 batch = batch.join(F.broadcast(dupes), "doc_id", "left_anti")
                 feats_admitted = feats.join(F.broadcast(dupes), "doc_id", "left_anti")

@@ -24,3 +24,23 @@ def kv(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``run(group, fn) -> (fn(), ids of the Spark jobs fn ran)``,
+    read from the status tracker once the listener bus has delivered
+    every job event."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

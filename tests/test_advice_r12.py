@@ -6,22 +6,24 @@ accumulator."""
 
 import os
 
-from pyspark.sql import functions as F
-
 
 def test_winnow_incremental_dirs_are_tracked_and_cleaned(spark, sf_dir):
     """ADVICE r11: winnow_incremental used to write under a fixed /tmp
     path and never clean up — attestation sweeps accumulated parquet
-    dirs. The dirs are now tracked and removed by clear_dedup_caches
-    (and at interpreter exit)."""
+    dirs; incremental_dedup did the same with its MinHash index. Both
+    now write under tracked scratch dirs, removed by
+    clear_dedup_caches (and at interpreter exit)."""
     from hbasewd_spark.operators import dedup as DD
+    from hbasewd_spark.operators import minhash_index as MI
 
+    DD.clear_dedup_caches()
     assert DD.winnow_incremental(spark, sf_dir).count() >= 0
-    assert DD._WNIDX_DIRS, "index dir was not tracked"
-    roots = list(DD._WNIDX_DIRS)
+    assert MI.incremental_dedup(spark, sf_dir).count() >= 0
+    roots = sorted(DD._SCRATCH_DIRS)
+    assert [os.path.basename(os.path.dirname(r)) for r in roots] == ["hbasewd_mhidx", "hbasewd_wnidx"]
     assert all(os.path.isdir(r) for r in roots)
     DD.clear_dedup_caches()
-    assert not DD._WNIDX_DIRS
+    assert not DD._SCRATCH_DIRS
     assert not any(os.path.isdir(r) for r in roots), "index dirs survived cleanup"
 
 
@@ -39,29 +41,3 @@ def test_gram_cross_partition_sum_is_decimal_widened(spark, sf_dir):
     assert dict(out.dtypes)["sum_qq"] == "bigint"
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "decimal(38,0)" in plan, plan
-
-
-def test_dedup_feature_cache_evicts_on_new_sf_dir(spark, sf_dir, tmp_path):
-    """VERDICT r11 #2 (dedup side): a second sf_dir through the cached
-    feature pipeline must leave at most ONE persisted frame per cache,
-    with the evicted frame actually unpersisted."""
-    from hbasewd_spark.operators import dedup as DD
-
-    DD.clear_dedup_caches()
-    try:
-        first = DD._cached_features(spark, sf_dir)
-        assert first.storageLevel.useMemory
-        # a second corpus under a different sf_dir path
-        sf2 = str(tmp_path / "sf_alt")
-        os.makedirs(sf2, exist_ok=True)
-        spark.createDataFrame(
-            [(i, f"doc text number {i} alpha beta gamma", "en", "web")
-             for i in range(30)],
-            "doc_id bigint, text string, lang string, source string",
-        ).write.mode("overwrite").parquet(f"{sf2}/documents.parquet")
-        DD._cached_features(spark, sf2)
-        assert len(DD._FEATS_CACHE) == 1
-        assert list(DD._FEATS_CACHE) == [(spark.sparkContext.applicationId, sf2)]
-        assert not first.storageLevel.useMemory
-    finally:
-        DD.clear_dedup_caches()

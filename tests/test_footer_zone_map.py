@@ -82,7 +82,7 @@ def test_undecodable_stats_fall_back_to_scan(spark, typed_table):
     assert t._zone_sidecar_df("dec") is not None
 
 
-def test_write_serves_zones_from_footers_not_scan(spark, tmp_path, monkeypatch):
+def test_write_serves_zones_from_footers_not_scan(spark, tmp_path, monkeypatch, spark_jobs):
     """The plain salted-write path (``zone_map_cols=[key]``) must take
     the footer route, with the scan-based zone_map booby-trapped so any
     column-scan fallback explodes, and persist nothing: no
@@ -103,8 +103,8 @@ def test_write_serves_zones_from_footers_not_scan(spark, tmp_path, monkeypatch):
     )
     assert not Fs(spark, t.path).exists(f"{t.path}/_zone_maps")
     cold = SaltedTable.load(spark, t.path)
-    zt, jobs = _jobs_under_group(
-        spark, "zones-cold-after-write", lambda: cold._zone_table("ts")
+    zt, jobs = spark_jobs(
+        "zones-cold-after-write", lambda: cold._zone_table("ts")
     )
     assert jobs == [] and zt.num_rows == 4
     lo = ts0 + datetime.timedelta(seconds=100)
@@ -269,21 +269,7 @@ def test_driver_footer_route_launches_no_jobs(spark, typed_table):
     assert before == after, "driver footer route launched Spark jobs"
 
 
-def _jobs_under_group(spark, group, fn):
-    """``(fn(), ids of the Spark jobs fn ran)``, read from the status
-    tracker once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_footer_reader_has_no_file_count_cap(spark, tmp_path):
+def test_footer_reader_has_no_file_count_cap(spark, tmp_path, spark_jobs):
     """300 data files: a cold zone table and build_zone_map both read
     the footers on the driver, with no Spark job, and their rows are
     the column scan's; the build persists nothing."""
@@ -291,8 +277,8 @@ def test_footer_reader_has_no_file_count_cap(spark, tmp_path):
     t = SaltedTable.write(df, str(tmp_path / "t"), HashDistributor(300), "k")
     t = SaltedTable.load(spark, t.path)
     assert len(t._data_signature(Fs(spark, t.path))) == 300
-    zt, cold_jobs = _jobs_under_group(spark, "zones-cold", lambda: t._zone_table("k"))
-    _, build_jobs = _jobs_under_group(spark, "zones-build", lambda: t.build_zone_map("k"))
+    zt, cold_jobs = spark_jobs("zones-cold", lambda: t._zone_table("k"))
+    _, build_jobs = spark_jobs("zones-build", lambda: t.build_zone_map("k"))
     assert cold_jobs == [] and build_jobs == []
     scan = _canon(t.zone_map("k"))
     assert len(scan) == 300

@@ -271,8 +271,6 @@ def test_null_k_events_are_filtered(spark, tmp_path):
     # the sequence; the graph and ranks come out NULL-free.
     import datetime
 
-    from hbasewd_spark.operators.graph import _EDGE_CACHE, clear_graph_caches
-
     t0 = datetime.datetime(2024, 1, 1)
     rows = [
         (1, t0 + datetime.timedelta(minutes=m), m, f'{{"k": {m % 3}}}' if m % 4 else "{}")
@@ -283,41 +281,51 @@ def test_null_k_events_are_filtered(spark, tmp_path):
     )
     sf = str(tmp_path / "nullk")
     ev.write.parquet(f"{sf}/events.parquet")
-    clear_graph_caches()
-    try:
-        edges, nodes = _event_transition_graph(spark, sf)
-        node_vals = [r["node"] for r in nodes.collect()]
-        assert None not in node_vals and sorted(node_vals) == [0, 1, 2]
-        assert edges.where(F.col("src").isNull() | F.col("dst").isNull()).count() == 0
-        ranks = _ranks(pagerank_event_transitions(spark, sf))
-        assert None not in ranks
-        assert PR_SCALE - 100 <= sum(ranks.values()) <= PR_SCALE
-    finally:
-        clear_graph_caches()
+    edges, nodes = _event_transition_graph(spark, sf)
+    node_vals = [r["node"] for r in nodes.collect()]
+    assert None not in node_vals and sorted(node_vals) == [0, 1, 2]
+    assert edges.where(F.col("src").isNull() | F.col("dst").isNull()).count() == 0
+    ranks = _ranks(pagerank_event_transitions(spark, sf))
+    assert None not in ranks
+    assert PR_SCALE - 100 <= sum(ranks.values()) <= PR_SCALE
 
 
-def test_edge_cache_evicts_on_rekey(spark, sf_dir, tmp_path):
-    # VERDICT r11 #2: two sf_dirs through the extraction must leave at
-    # most ONE persisted edge relation — the evicted frame is actually
-    # unpersisted, not just dropped from the dict
+def test_rewritten_events_change_pagerank_ranks(spark, tmp_path):
+    # the edge relation lives and dies with the query: rewriting
+    # events.parquet under the same path must change the ranks (a
+    # process-global edge cache keyed on the path served the old ones;
+    # the file is written outside Spark, which refreshes its own cached
+    # plans on an overwrite)
     import datetime
+    import os
 
-    from hbasewd_spark.operators.graph import _EDGE_CACHE, clear_graph_caches
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbasewd_spark import queries as Q
 
     t0 = datetime.datetime(2024, 1, 1)
-    ev = spark.createDataFrame(
-        [(1, t0 + datetime.timedelta(minutes=m), m, f'{{"k": {m % 2}}}') for m in range(10)],
-        "user_id long, ts timestamp, event_id long, props string",
-    )
-    sf2 = str(tmp_path / "evicted")
-    ev.write.parquet(f"{sf2}/events.parquet")
-    clear_graph_caches()
-    try:
-        first_edges, _ = _event_transition_graph(spark, sf_dir)
-        assert first_edges.storageLevel.useMemory  # persisted
-        _event_transition_graph(spark, sf2)
-        assert len(_EDGE_CACHE) == 1
-        assert list(_EDGE_CACHE) == [(spark.sparkContext.applicationId, sf2)]
-        assert not first_edges.storageLevel.useMemory  # evicted AND unpersisted
-    finally:
-        clear_graph_caches()
+
+    def write_events(sf, ks):
+        os.makedirs(sf, exist_ok=True)
+        pq.write_table(
+            pa.table({
+                "user_id": pa.array([1] * len(ks), pa.int64()),
+                "ts": pa.array([t0 + datetime.timedelta(minutes=m) for m in range(len(ks))], pa.timestamp("us")),
+                "event_id": pa.array(range(len(ks)), pa.int64()),
+                "props": [f'{{"k": {k}}}' for k in ks],
+            }),
+            os.path.join(sf, "events.parquet"),
+        )
+
+    query = Q.REGISTRY["ext_graph_pagerank"].fn
+    sf, fresh = str(tmp_path / "events_sf"), str(tmp_path / "fresh_sf")
+    write_events(sf, [m % 3 for m in range(30)])  # a 3-cycle: uniform ranks
+    before = _ranks(query(spark, sf))
+    star = [0 if m % 2 else 1 + (m // 2) % 2 for m in range(30)]  # every hop passes node 0
+    write_events(sf, star)
+    write_events(fresh, star)
+    after = _ranks(query(spark, sf))
+    assert after == _ranks(query(spark, fresh))
+    assert after != before
+    assert after[0] > after[1]

@@ -9,20 +9,6 @@ from hbasewd_spark.sources.kv_fixture import KEY_PREFIX, kv_df
 from hbasewd_spark.sources.salted_table import SaltedTable
 
 
-def _jobs_under_group(spark, group, fn):
-    """``(fn(), ids of the Spark jobs fn ran)``, read from the status
-    tracker once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture(scope="module")
 def null_key_table(spark, tmp_path_factory):
     df = spark.range(1_000).select(
@@ -53,7 +39,7 @@ def test_unbounded_scanner_yields_null_keys_first(null_key_table, cap):
     ]
 
 
-def test_scanner_runs_one_job_per_chunk(spark, tmp_path):
+def test_scanner_runs_one_job_per_chunk(spark, tmp_path, spark_jobs):
     """A narrow uncapped scanner is ONE Spark job over all buckets; a
     capped one runs one job per chunk; no chunk plan has an Exchange."""
     t = SaltedTable.write(
@@ -63,8 +49,8 @@ def test_scanner_runs_one_job_per_chunk(spark, tmp_path):
     lo, hi = KEY_PREFIX + 100, KEY_PREFIX + 900
     want = [tuple(r) for r in t.scan(lo, hi).collect()]
 
-    got, jobs = _jobs_under_group(
-        spark, "scanner-uncapped", lambda: [tuple(r) for r in t.scanner(lo, hi)]
+    got, jobs = spark_jobs(
+        "scanner-uncapped", lambda: [tuple(r) for r in t.scanner(lo, hi)]
     )
     assert got == want
     assert len(jobs) == 1, jobs
@@ -72,8 +58,7 @@ def test_scanner_runs_one_job_per_chunk(spark, tmp_path):
     cap = 20
     bounds = t._scanner_chunk_bounds(lo, hi, cap * t.distributor.buckets)
     assert len(bounds) >= 1
-    got, jobs = _jobs_under_group(
-        spark,
+    got, jobs = spark_jobs(
         "scanner-capped",
         lambda: [tuple(r) for r in t.scanner(lo, hi, max_buffer_rows=cap)],
     )
