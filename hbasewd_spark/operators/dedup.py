@@ -192,8 +192,9 @@ def _bands_of(sig: DataFrame, *keep: str) -> DataFrame:
 # The one module-global frame: the verified pairs of the last
 # (session, sf_dir) asked for, lazily persisted. A curation pipeline
 # asks for pairs, clusters and curation over one corpus in turn, and
-# the two later queries build on the first one's pairs (seed-1 traced
-# corpus_dedup: clusters p50 0.51 s against minhash_pairs 1.30 s). The
+# the two later queries build on the first one's pairs (traced
+# corpus_dedup, seed 1, 4 cores: clusters p50 0.51 s against
+# minhash_pairs 1.30 s). The
 # key is the path, not the data: a corpus rewritten under the same
 # path is served the earlier pairs until clear_dedup_caches(). A new
 # key unpersists the old frame, so at most one is ever held.
@@ -218,8 +219,8 @@ def clear_dedup_caches() -> None:
 
 
 # the per-application dirs the index-building registry queries write
-# under: removed by clear_dedup_caches() and at interpreter exit (an
-# untracked /tmp path kept one parquet tree per application forever)
+# under, removed by clear_dedup_caches() and at interpreter exit so
+# that repeated runs leave no index trees behind
 _SCRATCH_DIRS: set = set()
 
 

@@ -450,8 +450,8 @@ def _event_transition_graph(spark, sf_dir: str):
 
     The edge relation is lazily checkpointed: the extraction (full
     events scan + per-user window) is the expensive stage at scale and
-    pagerank reads the edges more than once, so they are computed once
-    per query and released with it."""
+    pagerank's distributed path reads the edges once per iteration, so
+    they are computed once per query and released with it."""
     from pyspark.sql import Window
 
     from hbasewd_spark.sources.loaders import load_table

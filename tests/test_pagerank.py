@@ -291,11 +291,10 @@ def test_null_k_events_are_filtered(spark, tmp_path):
 
 
 def test_rewritten_events_change_pagerank_ranks(spark, tmp_path):
-    # the edge relation lives and dies with the query: rewriting
-    # events.parquet under the same path must change the ranks (a
-    # process-global edge cache keyed on the path served the old ones;
-    # the file is written outside Spark, which refreshes its own cached
-    # plans on an overwrite)
+    # the edge relation lives and dies with the query, so rewriting
+    # events.parquet under the same path changes the ranks. The file is
+    # written outside Spark: a Spark overwrite would refresh any cached
+    # plan that reads the path and hide a path-keyed cache.
     import datetime
     import os
 
