@@ -17,9 +17,10 @@ from the scan so scan latency reflects the pruned read path.
 
 Registry mode, ``python bench.py --registry a,b|all [--reps N]
 [--plans DIR]``, times registry queries with the DataFrame build inside
-the timed call: building may run jobs (bounds collects, salted writes,
-stream drains, lazy checkpoints over a shuffle under AQE), so leaving
-it out would flatter any rewrite that moves work there. The build and
+the timed call: a build only plans, but the few that must run jobs
+(salted writes, stream drains, iterations; the list is
+``BUILD_RUNS_JOBS`` in tests/test_build_jobs.py) would flatter any
+rewrite that moves work there if it were left out. The build and
 its noop-sink execution are the call's ``build`` and ``exec`` child
 spans. It prints one JSON row per query, the fastest of N reps.
 ``--plans DIR`` writes each query's ``explain('formatted')`` to

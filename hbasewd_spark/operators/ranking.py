@@ -176,22 +176,12 @@ def hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hbasewd_spark.operators.similarity import _dvec, cosine
 
     scores = bm25_scores(spark, sf_dir)
-    # r12 optimization (guide §3.3): cand feeds BOTH the max-score
-    # aggregate and the rerank join, and Catalyst inlined it into each
-    # consumer — the entire BM25 pipeline (two corpus scans post-r12)
-    # executed twice. The candidate set is <= HYBRID_CANDIDATES rows
-    # by construction, so pinning it costs one tiny serialize and the
-    # lexical pass runs exactly once.
-    cand = (
-        global_topk(
-            scores,
-            [F.col("score").desc(), F.col("doc_id").asc()],
-            HYBRID_CANDIDATES,
-            rk_name=None,
-        )
-        .select("doc_id", "score")
-        .localCheckpoint(eager=False)
-    )
+    cand = global_topk(
+        scores,
+        [F.col("score").desc(), F.col("doc_id").asc()],
+        HYBRID_CANDIDATES,
+        rk_name=None,
+    ).select("doc_id", "score")
     mx = cand.agg(F.max("score").alias("max_score"))
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec("embedding").alias("v")

@@ -1200,8 +1200,10 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r12 optimization (guide §3.3): the docstring's "computed
         # ONCE" was only lazily true — rev feeds the max subquery AND
         # the equality join, and Catalyst inlined the quarterly
-        # lineitem aggregation into both (2 fact scans). Pinning the
-        # |suppliers|-row aggregate makes it literal.
+        # lineitem aggregation into both (2 fact scans; their filters
+        # differ, so the exchanges are not reused). Pinning the
+        # |suppliers|-row aggregate makes it literal: without it the
+        # query took 0.94 s instead of 0.60 s at sf1 (4 cores).
         .localCheckpoint(eager=False)
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
@@ -1495,15 +1497,12 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r12 optimization (guide §2.4/§3.3): the previous shape ran
     FUNNEL_ORACLE's CTE chain on Spark too, and Catalyst inlines every
-    CTE reference — s1 feeds s2 AND the stage rollup, s2 feeds s3 AND
-    the rollup, so the plan re-executed the shared subtrees and
-    scanned events SEVEN times. The DataFrame form pins each bounded
-    per-user aggregate (one row per user) with a localCheckpoint, so
-    the three stage passes each scan events exactly once (view-min;
-    clicks joined to s1; purchases joined to s2) and the final stage
-    CASE joins three slim checkpointed relations. The per-user
-    aggregate doubles as the DISTINCT user set, removing the oracle's
-    fourth scan. DuckDB keeps the CTE text (oracle only needs to be
+    CTE reference, so the plan scanned events SEVEN times. The
+    DataFrame form has three stage passes (view-min; clicks joined to
+    s1; purchases joined to s2), each a per-user aggregate (one row per
+    user), and the final stage CASE joins the three slim relations. The
+    per-user aggregate doubles as the DISTINCT user set, removing the
+    oracle's fourth scan. DuckDB keeps the CTE text (oracle only needs to be
     correct, not fast); min-of-timestamp semantics are exact on both
     engines."""
     ev = load_table(spark, sf_dir, "events").select(
@@ -1527,7 +1526,6 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t1"),
             F.max(F.col("event_type") == "view").alias("has_view"),
         )
-        .localCheckpoint(eager=False)
     )
     s1 = users.where(F.col("t1").isNotNull() & F.col("user_id").isNotNull()).select(
         "user_id", "t1"
@@ -1538,7 +1536,6 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("ts") >= F.col("t1")) & (F.col("ts") <= F.col("t1") + day))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=False)
     )
     s3 = (
         ev.where(F.col("event_type") == "purchase")

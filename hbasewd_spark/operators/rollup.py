@@ -39,17 +39,10 @@ def time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("value").alias("min_value"),
             F.max("value").alias("max_value"),
         )
-        # r12 optimization: materialize the finest level ONCE. The
-        # docstring's one-pass promise was only lazily true — `minute`
-        # is referenced by the union AND by hour (which day references
-        # again), so Catalyst expanded three full scans+aggregations
-        # of the raw table (3 "Scan parquet" in the plan). The minute
-        # aggregate is bounded (time buckets x event types), so a
-        # localCheckpoint (filled by the first job that reads it)
-        # costs one tiny serialize and every coarser level now truly
-        # re-aggregates it: one full-data pass, 3 scans -> 1.
-        .localCheckpoint(eager=False)
     )
+    # `minute` is referenced by the union AND by hour (which day
+    # references again): the three references plan one exchange, which
+    # the later two reuse, so the raw table is still aggregated once
 
     def _up(child: DataFrame, unit: str) -> DataFrame:
         # re-aggregate the previous level: counts and decimal sums add,

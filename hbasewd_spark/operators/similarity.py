@@ -476,9 +476,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled the corpus twice before any pairing; the band list
     derives from the planes actually present (floor(pid/BB) over the
     collected array), so missing planes degrade exactly like the old
-    per-pid grouping. (2) The per-band feature relation is pinned once
-    (the self-join's sides previously re-executed the whole signature
-    pipeline — 6 parquet scans). (3) Exact cosine is computed on the
+    per-pid grouping. (2) Exact cosine is computed on the
     band match and the τ filter applied BEFORE the cross-band dedup,
     so the distinct exchange carries slim (label, ids, one double)
     rows instead of both 64-dim vectors; duplicates of a pair carry a
@@ -507,7 +505,6 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bs"),
         )
         .select("vec_id", "label", "v", "nv", "bs.band", "bs.band_sig")
-        .localCheckpoint(eager=False)
     )
     a = feat.select(
         "label", "band", "band_sig",
@@ -653,13 +650,7 @@ def kmeans_one_iter_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
-    # r12 optimization (guide §3.3): corpus feeds both assignment
-    # rounds (a1 inside the centroid-update broadcast build, then a2),
-    # so the scan + float->double conversion ran twice, behind two
-    # separate round-robin ensure_min_parallelism exchanges. Pinning it
-    # matches the multi-iteration kmeans_clusters, which already
-    # checkpoints its corpus.
-    corpus = emb.select("vec_id", _dvec("embedding").alias("v")).localCheckpoint(eager=False)
+    corpus = emb.select("vec_id", _dvec("embedding").alias("v"))
     cents0 = emb.where(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").cast("int").alias("cid"), _dvec("embedding").alias("cv")
     )
@@ -809,6 +800,8 @@ def lsh_bucketed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "v", _lsh_bucket(F.col("v")).alias("bucket"),
             _norm(F.col("v")).alias("nv"),
         )
+        # read by both self-join sides (without it: 5.00 s instead of
+        # 3.88 s at sf1, 4 cores)
         .localCheckpoint(eager=False)
     )
     a = bucketed.select(

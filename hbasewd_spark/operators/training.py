@@ -228,17 +228,14 @@ def unigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"), spark)
     tk = docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
     # r12 optimization: tk fed both the vocabulary count and the join's
-    # probe side, so the corpus tokenized+exploded twice. Pre-reducing
-    # to per-(doc, tok) occurrence counts (map-side combinable) and
-    # checkpointing that slim relation tokenizes ONCE, and the freq
-    # join now moves one row per distinct (doc, tok) instead of one per
-    # token occurrence — strictly fewer shuffle bytes. Values are
-    # identical: n_tok = sum(nn), sum_freq = sum(nn * freq) with the
-    # multiply in decimal so the overflow envelope matches the old
-    # per-occurrence decimal sum.
-    tkc = (
-        tk.groupBy("doc_id", "tok").agg(F.count("*").alias("nn")).localCheckpoint(eager=False)
-    )
+    # probe side. Pre-reducing to per-(doc, tok) occurrence counts
+    # (map-side combinable) makes the freq join move one row per
+    # distinct (doc, tok) instead of one per token occurrence —
+    # strictly fewer shuffle bytes. Values are identical: n_tok =
+    # sum(nn), sum_freq = sum(nn * freq) with the multiply in decimal
+    # so the overflow envelope matches the old per-occurrence decimal
+    # sum.
+    tkc = tk.groupBy("doc_id", "tok").agg(F.count("*").alias("nn"))
     counts = tkc.groupBy("tok").agg(F.sum("nn").alias("freq"))
     return (
         tkc.join(counts, "tok")

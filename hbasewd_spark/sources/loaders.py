@@ -12,7 +12,11 @@ from __future__ import annotations
 import os
 import re
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLES = (
     "region",
@@ -40,9 +44,6 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # newer testdata writes TIMESTAMP(MICROS, no-tz); prefer plain
-        # TIMESTAMP at scan time so unix_micros/withWatermark accept it
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     except Exception:
         pass  # already set via session builder, or not supported
 
@@ -50,38 +51,46 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
 def normalize_timestamps(df: DataFrame) -> DataFrame:
     """Single source of truth for testdata timestamp normalization —
     used by both the batch loader and the streaming reader, so the
-    next encoding flip is fixed in exactly one place.
-
-    - ``ts`` stored as bigint: the original TIMESTAMP(NANOS) layout
-      read under nanosAsLong — truncate to micros (matches DuckDB's
-      ns->us cast).
-    - ANY timestamp_ntz column, any table: the round-3 regeneration
-      flipped events.ts to timestamp[us] no-tz, which
-      unix_micros/withWatermark reject — and the same flip could hit
-      o_orderdate/l_shipdate next. Session is pinned UTC, so the cast
-      is value-identical to the DuckDB oracle.
-      (inferTimestampNTZ=false usually prevents NTZ from surfacing;
-      this is the per-column backstop.)"""
+    next encoding flip is fixed in exactly one place: ``ts`` stored as
+    bigint (the original TIMESTAMP(NANOS) layout read under
+    nanosAsLong) is truncated to micros, matching DuckDB's ns->us cast.
+    No column is ever timestamp_ntz here: :func:`footer_schema` maps
+    every parquet timestamp (the round-3 regeneration wrote
+    timestamp[us] no-tz, which unix_micros/withWatermark reject) to
+    TIMESTAMP, value-identical to the DuckDB oracle under the pinned
+    UTC session."""
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    for col_name, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(col_name, F.col(col_name).cast("timestamp"))
     return df
+
+
+def footer_schema(path: str) -> StructType:
+    """The schema Spark infers for a local parquet table (a file, or a
+    tools/make_sf.py directory of part files), read from one footer on
+    the driver, since Spark's own inference is a job. INT64
+    TIMESTAMP(NANOS) is bigint (nanosAsLong), INT96 a timestamp."""
+    if os.path.isdir(path):
+        parts = [f for f in os.listdir(path) if f.endswith(".parquet") and f[0] not in "_."]
+        path = os.path.join(path, min(parts))
+    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+        fields = pf.schema_arrow
+    return StructType([
+        StructField(f.name, LongType() if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+                    else from_arrow_type(f.type))
+        for f in fields
+    ])
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_nanos_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    return normalize_timestamps(df)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return normalize_timestamps(spark.read.schema(footer_schema(path)).parquet(path))
 
 
 def sql_on_tables(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     """``spark.sql(text)`` over the test tables: each table the text
-    names as a whole word is registered as a temp view first. Loading a
-    table infers its parquet schema, a Spark job, so a text pays only
-    for the tables it names; an extra view is harmless, and a missing
-    one fails analysis loudly."""
+    names as a whole word is registered as a temp view first, so an
+    extra view is harmless and a missing one fails analysis loudly."""
     for name in TABLES:
         if re.search(rf"\b{name}\b", text, re.IGNORECASE):
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -454,24 +454,25 @@ class SaltedTable:
         the index is ~0.1% of table bytes; rebuild cost is one
         column-pruned scan + one range exchange of the slim pairs."""
         idx_path = self.path.rstrip("/") + "/" + self.KEY_INDEX_DIR
-        (
-            self.df()
-            .select(self.key_col, SALT_COL)
-            .repartitionByRange(index_buckets, F.col(self.key_col))
-            .sortWithinPartitions(self.key_col)
-            .write.mode("overwrite")
-            .parquet(idx_path)
-        )
-        # watermark: the data-file listing signature at build time.
-        # point_get_indexed compares it so an index that predates an
-        # append/compaction is detected and bypassed — a stale probe
-        # would silently DROP rows a key gained in another salt since
-        # the build (round-robin re-appends don't reuse the old salt).
-        fs = Fs(self.spark, self.path)
-        fs.write_text(
-            idx_path + "/" + self.INDEX_META_FILE,
-            json.dumps({"data_sig": self._data_signature(fs)}),
-        )
+        with self._lifecycle_lock("build_key_index"):
+            (
+                self.df()
+                .select(self.key_col, SALT_COL)
+                .repartitionByRange(index_buckets, F.col(self.key_col))
+                .sortWithinPartitions(self.key_col)
+                .write.mode("overwrite")
+                .parquet(idx_path)
+            )
+            # watermark: the data-file listing signature at build time.
+            # point_get_indexed compares it so an index that predates an
+            # append/compaction is detected and bypassed — a stale probe
+            # would silently DROP rows a key gained in another salt since
+            # the build (round-robin re-appends don't reuse the old salt).
+            fs = Fs(self.spark, self.path)
+            fs.write_text(
+                idx_path + "/" + self.INDEX_META_FILE,
+                json.dumps({"data_sig": self._data_signature(fs)}),
+            )
         self._key_index = None
 
     INDEX_META_FILE = "_index_meta.json"
@@ -689,11 +690,22 @@ class SaltedTable:
         data-file listing like the key index — at 100 TB the
         difference between O(index) and O(data) planning. Any later
         append/compact/expire leaves that sidecar stale; the watermark
-        bypasses it, never trusts it."""
+        bypasses it, never trusts it. Writing or removing a sidecar
+        holds the lifecycle lock."""
+        fs = Fs(self.spark, self.path)
+        tbl = self._footer_stats_local(col)
+        if tbl is not None and not fs.exists(self._zone_dir(col)):
+            self._memo_zones(col, tbl)
+            return
+        with self._lifecycle_lock("build_zone_map"):
+            self._persist_zone_map(col, tbl)
+
+    def _persist_zone_map(self, col: str, tbl) -> None:
+        """:meth:`build_zone_map`'s writes given ``col``'s footer zone
+        rows ``tbl`` (``None`` where footers cannot serve), for a caller
+        holding the lifecycle lock (the sentinel is not reentrant)."""
         zm_dir = self._zone_dir(col)
         fs = Fs(self.spark, self.path)
-        sig = self._data_signature(fs)
-        tbl = self._footer_stats_local(col, [t[0] for t in sig])
         fs.delete(zm_dir, recursive=True)
         if tbl is not None:
             root = zm_dir.rsplit("/", 1)[0]
@@ -701,6 +713,7 @@ class SaltedTable:
                 fs.delete(root, recursive=True)
             self._memo_zones(col, tbl)
             return
+        sig = self._data_signature(fs)
         self.zone_map(col).write.mode("overwrite").parquet(zm_dir)
         fs.write_text(
             zm_dir + "/" + self.ZONE_META_FILE, json.dumps({"data_sig": sig})
@@ -804,12 +817,13 @@ class SaltedTable:
     def rebuild_zone_maps(self) -> list[str]:
         """Rebuild every persisted zone-map sidecar against the current
         data files; returns the rebuilt column names. Lifecycle verbs
-        call this after mutating files: the watermark already makes a
-        stale sidecar SAFE (it is bypassed, never trusted), but bypass
-        means every later scan pays a live zone scan of the column —
-        silent O(data) planning where the operator had paid for
-        O(index). One :meth:`build_zone_map` per sidecar, the same
-        cost the original build paid; a column the parquet footers
+        call this under the lifecycle lock after mutating files: the
+        watermark already makes a stale sidecar SAFE (it is bypassed,
+        never trusted), but bypass means every later scan pays a live
+        zone scan of the column — silent O(data) planning where the
+        operator had paid for O(index). One :meth:`build_zone_map`'s
+        writes per sidecar, the same cost the original build paid; a
+        column the parquet footers
         serve loses its sidecar instead (a footer copy left by an older
         build goes at the first verb)."""
         fs = Fs(self.spark, self.path)
@@ -820,7 +834,7 @@ class SaltedTable:
             if fs.is_dir(d)
         ]
         for c in cols:
-            self.build_zone_map(c)
+            self._persist_zone_map(c, self._footer_stats_local(c))
         return cols
 
     def _zone_sidecar_df(
@@ -2002,12 +2016,16 @@ def rebucket(table: SaltedTable, new_distributor: KeyDistributor) -> SaltedTable
         tmp = base + ".rebucket_tmp"
         fs.delete(tmp, recursive=True)
         data = table.df().drop(SALT_COL)
-        staged = SaltedTable.write(
-            data, tmp, new_distributor, table.key_col, fmt=table.fmt
-        )
-        del staged  # metadata already written into tmp by write()
+        SaltedTable.write(data, tmp, new_distributor, table.key_col, fmt=table.fmt)
+        zm_src = base + "/" + SaltedTable.ZONE_MAP_DIR
+        if fs.is_dir(zm_src):
+            # carried stale to name the columns rebuilt below, as in
+            # _staged_rewrite
+            fs.copy(zm_src, tmp + "/" + SaltedTable.ZONE_MAP_DIR)
         _swap_table_dirs(fs, tmp, base, "rebucket")
-        return SaltedTable.load(table.spark, base)
+        out = SaltedTable.load(table.spark, base)
+        out.rebuild_zone_maps()
+        return out
 
 
 def vacuum(

@@ -82,11 +82,11 @@ def _epoch_commit_lock(
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events fixture (schema pinned; one file =
     one micro-batch under availableNow)."""
-    from hbasewd_spark.sources.loaders import ensure_nanos_conf
+    from hbasewd_spark.sources.loaders import ensure_nanos_conf, footer_schema, normalize_timestamps
 
     ensure_nanos_conf(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    batch = spark.read.parquet(path)
+    schema = footer_schema(path)
     if os.path.isdir(path):
         # derived scale dirs (tools/make_sf.py) write events.parquet as
         # a parquet DIRECTORY of part files; stream it directly and let
@@ -96,21 +96,18 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # later files' events and drop them — a layout artifact the
         # batch-SQL oracle can't mirror. Single-file driver layout
         # below keeps the one-file-one-batch shape (driver-attested).
-        stream = spark.readStream.schema(batch.schema).parquet(path)
+        stream = spark.readStream.schema(schema).parquet(path)
     else:
         # FileStreamSource wants a directory: stream sf_dir,
         # glob-filtered to the events file (one file -> one availableNow
         # micro-batch)
         stream = (
-            spark.readStream.schema(batch.schema)
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    from hbasewd_spark.sources.loaders import normalize_timestamps
-
-    # shared normalization with the batch loader (nanos-as-bigint and
-    # TIMESTAMP_NTZ -> TIMESTAMP; withWatermark rejects NTZ event time)
+    # shared normalization with the batch loader (nanos-as-bigint)
     return normalize_timestamps(stream)
 
 

@@ -862,6 +862,9 @@ def test_zone_sidecar_build_crash_never_corrupts_query_results(
             pass
         finally:
             monkeypatch.undo()
+        # the build holds the lifecycle lock: a crash at its release
+        # leaves the sentinel, whose holder a real crash leaves dead
+        _make_lock_holder_dead(spark, t.path)
         t2 = SaltedTable.load(spark, t.path)
         assert t2.fast_count(100, 600) == 500, f"crash at op#{k}: wrong fast_count"
         assert t2.pruned_scan("key_long", 100, 600).count() == 500
@@ -900,10 +903,10 @@ def test_key_index_build_crash_never_corrupts_point_gets(
     t.build_key_index(index_buckets=8)
     total_ops = probe.count
     monkeypatch.undo()
-    # the index parquet itself is written by Spark; the one Fs-level op
-    # is the watermark meta write — exactly the op whose absence must
-    # make the index debris invisible
-    assert total_ops >= 1
+    # the index parquet itself is written by Spark; the Fs-level ops
+    # are the lock take/release and the watermark meta write — the op
+    # whose absence must make the index debris invisible
+    assert total_ops >= 3
 
     for k in range(1, total_ops + 1):
         t = build(f"ki_k{k}")
@@ -914,6 +917,7 @@ def test_key_index_build_crash_never_corrupts_point_gets(
             pass
         finally:
             monkeypatch.undo()
+        _make_lock_holder_dead(spark, t.path)  # as for the zone sidecar
         t2 = SaltedTable.load(spark, t.path)
         for key in (0, 123, 499):
             got = t2.point_get_indexed(key).collect()

@@ -14,7 +14,11 @@ from hbasewd_spark.functions import text as TX
 def docs(spark, sf_dir):
     from hbasewd_spark.sources.loaders import load_table
 
-    return load_table(spark, sf_dir, "documents").cache()
+    # released after the module: a cached documents relation left
+    # behind changes the plans of every later test that loads it
+    df = load_table(spark, sf_dir, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 def test_minhash_lsh_recall(spark, sf_dir, docs):

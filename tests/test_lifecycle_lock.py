@@ -13,11 +13,13 @@ Two pins:
    from behavior.
 """
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
 from hbasewd_spark.fsutil import Fs
-from hbasewd_spark.plans.distributor import HashDistributor
+from hbasewd_spark.plans.distributor import HashDistributor, RoundRobinDistributor
 from hbasewd_spark.sources.salted_table import SaltedTable, compact
 
 
@@ -63,6 +65,42 @@ def test_lock_released_after_in_verb_failure(spark, tmp_path):
     assert not fs.exists(_lock_path(t))  # finally released it
     compact(t)  # and the next verb acquires cleanly
     assert t.scan().count() == 400
+
+
+@pytest.mark.parametrize("writer", ["build_key_index", "build_zone_map"])
+def test_index_writers_race_compact_under_the_lock(spark, tmp_path, writer):
+    """The writers under ``<base>/`` outside the verbs take the
+    lifecycle lock too: raced against compact(), both succeed or one is
+    refused with the holder named, and the table and whatever the
+    writer built stay consistent with the data files."""
+    df = spark.range(400).select(F.col("id").alias("k"), F.col("id").cast("int").alias("v"))
+    t = SaltedTable.write(df, str(tmp_path / "race"), RoundRobinDistributor(4), "k", fmt="orc")
+    fs = Fs(spark, t.path)
+    go, errors = threading.Barrier(2), []
+
+    def run(fn):
+        go.wait()
+        try:
+            fn()
+        except RuntimeError as e:
+            errors.append(str(e))
+
+    write = (lambda: t.build_key_index(4)) if writer == "build_key_index" else (
+        lambda: t.build_zone_map("v"))
+    threads = [threading.Thread(target=run, args=(fn,)) for fn in (write, lambda: compact(t))]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert len(errors) <= 1 and all("another lifecycle operation holds" in e for e in errors), errors
+    assert not fs.exists(_lock_path(t))
+    t.refresh()
+    assert t.scan().count() == 400
+    if writer == "build_key_index":
+        assert t.point_get_indexed(7).count() == 1
+    elif fs.is_dir(f"{t.path}/_zone_maps/v"):
+        assert t._zone_sidecar_df("v") is not None  # watermark-fresh
+        assert t.pruned_scan("v", 10, 19).count() == 10
 
 
 def test_create_atomic_is_create_if_absent(spark, tmp_path):

@@ -70,3 +70,51 @@ def test_load_table_normalizes_ntz_on_any_column(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "orders")
     assert dict(df.dtypes)["o_orderdate"] == "timestamp"
     assert df.where(F.year("o_orderdate") == 1997).count() == 1
+
+
+def _assert_footer_schema_is_inferred(spark, sf_dir):
+    from hbasewd_spark.sources.loaders import TABLES, footer_schema, normalize_timestamps
+
+    # inference as the loader ran it before it read footers: no-tz
+    # timestamps as TIMESTAMP
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    for name in TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        inferred = spark.read.parquet(path)
+        assert footer_schema(path) == inferred.schema, name
+        assert load_table(spark, sf_dir, name).schema == normalize_timestamps(inferred).schema, name
+
+
+def test_footer_schema_equals_the_inferred_one(spark, sf_dir):
+    _assert_footer_schema_is_inferred(spark, sf_dir)
+
+
+def test_footer_schema_of_part_file_directories(spark, sf_dir, tmp_path):
+    # the tools/make_sf.py layout: each table a Spark-written directory
+    # of part files (plus _SUCCESS and .crc side files)
+    from hbasewd_spark.sources.loaders import TABLES
+
+    for name in TABLES:
+        load_table(spark, sf_dir, name).repartition(2).write.parquet(
+            str(tmp_path / f"{name}.parquet")
+        )
+    _assert_footer_schema_is_inferred(spark, str(tmp_path))
+
+
+def test_footer_schema_keeps_nanos_as_bigint(spark, tmp_path):
+    # the original events layout: INT64 TIMESTAMP(NANOS) reads as
+    # bigint (nanosAsLong) and normalizes by truncation to micros
+    from hbasewd_spark.sources.loaders import footer_schema
+
+    ns = [1_700_000_000_123_456_789, 5_999]
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2], pa.int64()), "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    path = str(tmp_path / "events.parquet")
+    assert dict((f.name, f.dataType.simpleString()) for f in footer_schema(path))["ts"] == "bigint"
+    assert footer_schema(path) == spark.read.parquet(path).schema
+    df = load_table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = [r.us for r in df.select(F.unix_micros("ts").alias("us")).orderBy("event_id").collect()]
+    assert got == [v // 1000 for v in ns]

@@ -237,14 +237,16 @@ def test_training_layout_shapes(spark, sf_dir):
     assert "partial_count" in psh or "partial_sum" in psh
     assert "Join" not in psh and "Window" not in psh
 
-    puf = _plan(unigram_familiarity(spark, sf_dir))
+    uf = unigram_familiarity(spark, sf_dir)
+    puf = _plan(uf)
     # an equi-join on the token key, strategy chosen by statistics.
     # r12: the corpus pre-reduces to per-(doc, tok) occurrence counts
-    # and checkpoints once (tokenize runs once, the freq join moves
-    # one row per distinct pair), so the vocabulary aggregate is now a
-    # partial SUM of those counts over the checkpointed relation.
+    # (the freq join moves one row per distinct pair), so the
+    # vocabulary aggregate is a partial SUM of those counts; the join
+    # side reuses the counts' exchange, so tokenize runs once
     assert "Join" in puf and "partial_sum" in puf
-    assert "ExistingRDD" in puf  # the single-tokenize checkpoint
+    uf.collect()
+    assert uf._jdf.queryExecution().executedPlan().executedPlan().toString().count("Generate") == 1
 
 
 def test_drift_scrub_codedetect_shapes(spark, sf_dir):

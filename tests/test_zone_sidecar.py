@@ -284,3 +284,26 @@ def test_unusable_stats_column_plans_from_fresh_sidecar(spark, tmp_path):
     assert got == want and len(got) == 4
     lo, hi = decimal.Decimal(300), decimal.Decimal(1100)
     assert cold.pruned_scan("dec", lo, hi).count() == 800
+
+
+def test_rebucket_carries_and_rebuilds_zone_sidecars(spark, kv, tmp_path):
+    """rebucket() keeps a table's sidecar set, as compact() does: a
+    dropped sidecar turns every later zone read of its column into a
+    silent column scan."""
+    from hbasewd_spark.sources.salted_table import rebucket
+
+    t = SaltedTable.write(
+        kv, str(tmp_path / "zmrb"), HashDistributor(4), "key_long",
+        fmt="orc", zone_map_cols=["val"],
+    )
+    t = rebucket(t, HashDistributor(8))
+    fs = Fs(spark, t.path)
+    assert fs.is_dir(f"{t.path}/_zone_maps/val")
+    assert t._zone_sidecar_df("val") is not None  # watermark-fresh
+
+    def boom(col):
+        raise AssertionError("planning scanned the column despite a fresh sidecar")
+
+    t.zone_map = boom
+    want = kv.where(F.col("val").between(100, 300)).count()
+    assert t.pruned_scan("val", 100, 300).count() == want
