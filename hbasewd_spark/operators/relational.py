@@ -1502,9 +1502,9 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1; purchases joined to s2), each a per-user aggregate (one row per
     user), and the final stage CASE joins the three slim relations. The
     per-user aggregate doubles as the DISTINCT user set, removing the
-    oracle's fourth scan. DuckDB keeps the CTE text (oracle only needs to be
-    correct, not fast); min-of-timestamp semantics are exact on both
-    engines."""
+    oracle's fourth scan. DuckDB keeps the CTE text (oracle only needs
+    to be correct, not fast); min-of-timestamp semantics are exact on
+    both engines."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
     )

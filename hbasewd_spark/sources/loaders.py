@@ -73,12 +73,11 @@ def footer_schema(path: str) -> StructType:
         parts = [f for f in os.listdir(path) if f.endswith(".parquet") and f[0] not in "_."]
         path = os.path.join(path, min(parts))
     with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
-        fields = pf.schema_arrow
-    return StructType([
-        StructField(f.name, LongType() if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-                    else from_arrow_type(f.type))
-        for f in fields
-    ])
+        return StructType([
+            StructField(f.name, LongType() if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+                        else from_arrow_type(f.type))
+            for f in pf.schema_arrow
+        ])
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
