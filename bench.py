@@ -22,10 +22,12 @@ the timed call: a build only plans, but the few that must run jobs
 ``BUILD_RUNS_JOBS`` in tests/test_build_jobs.py) would flatter any
 rewrite that moves work there if it were left out. The build and
 its noop-sink execution are the call's ``build`` and ``exec`` child
-spans. It prints one JSON row per query, the fastest of N reps.
-``--plans DIR`` writes each query's ``explain('formatted')`` to
-DIR/<query>.txt and adds its structural counts to the row; ``--reps 0``
-builds without executing.
+spans. Each query first runs once untimed, so no rep carries its cold
+start; it then prints one JSON row per query, the fastest of N reps,
+with every rep's seconds. ``--plans DIR`` writes each query's
+``explain('formatted')`` to DIR/<query>.txt and adds its structural
+counts to the row; ``--reps 0`` builds once without executing (no
+untimed run).
 
 Every timed call is a perfbench span (perfbench/spans.py). Its row
 holds the wall seconds, Spark jobs, stage totals (tasks, executor
@@ -253,6 +255,14 @@ def registry(run: Runner, names: list[str], reps: int, plans: str | None) -> int
                 with run.span("exec"):
                     built["df"].write.format("noop").mode("overwrite").save()
 
+        if reps:
+            # untimed: the first run carries the query's cold start
+            # (class loading, codegen, file listings), which would
+            # otherwise be the spread of its reps. A failure here is
+            # reported by the timed reps.
+            clear_dedup_caches()
+            with contextlib.suppress(Exception):
+                spec.fn(run.spark, SF_DIR).write.format("noop").mode("overwrite").save()
         rows = []
         for _ in range(max(reps, 1)):
             # the MinHash pairs cache would turn every rep after the

@@ -375,28 +375,23 @@ def simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document via bit-sliced aggregation:
     explode(tokens) → md5-long → one majority-vote sum per bit →
     reassemble. One shuffle (groupBy doc_id); the 32 sums are a single
-    aggregate pass."""
+    aggregate pass.
+
+    The frame is the Spark SQL text the oracle shares
+    (:func:`_simhash_sql`), run over the documents frame, so building
+    it costs a few dozen py4j calls instead of one per Column node
+    (about 5,000 for 32 ``when`` sums and a 32-term ``when`` fold)."""
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"), spark)
-    tok = docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
-    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
-    tok = tok.select("doc_id", h.alias("h"))
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{i}")
-        for i in range(SIMHASH_BITS)
-    ]
-    agg = tok.groupBy("doc_id").agg(*bit_sums)
-    fp = None
-    for i in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"s{i}") > 0, F.lit(2**i).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-        fp = bit if fp is None else fp + bit
-    return agg.select("doc_id", fp.alias("simhash"))
+    return spark.sql(_simhash_sql("spark", "{docs}"), docs=docs)
 
 
-def simhash_oracle() -> str:
-    toks = sql_tokens("text", "duckdb")
-    h = sql_md5_long("tok", "duckdb")
+def _simhash_sql(dialect: str, docs: str) -> str:
+    """SimHash per (doc_id, text) row of the relation ``docs``, as
+    Spark SQL or DuckDB text: the bit-sliced sums and the fold are
+    written once for both engines."""
+    toks = sql_tokens("text", dialect)
+    h = sql_md5_long("tok", dialect)
+    unnest = "explode" if dialect == "spark" else "unnest"
     bit_sums = ", ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS s{i}"
         for i in range(SIMHASH_BITS)
@@ -408,11 +403,15 @@ def simhash_oracle() -> str:
     return f"""
     WITH tok AS (
       SELECT doc_id, {h} AS h
-      FROM (SELECT doc_id, unnest({toks}) AS tok FROM documents) _t
+      FROM (SELECT doc_id, {unnest}({toks}) AS tok FROM {docs}) _t
     ),
     agg AS (SELECT doc_id, {bit_sums} FROM tok GROUP BY doc_id)
     SELECT doc_id, {fp} AS simhash FROM agg
     """
+
+
+def simhash_oracle() -> str:
+    return _simhash_sql("duckdb", "documents")
 
 
 def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -817,16 +816,27 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_id, cluster_id, text_len, is_canonical) for every doc
     in some near-dup cluster. cluster_id = min doc_id of the component,
     so results are deterministic under any partitioning."""
+    return _canonical_clusters(spark, sf_dir, minhash_dedup_pairs(spark, sf_dir))
+
+
+def dedup_clusters_oracle() -> str:
+    return _canonical_clusters_oracle(minhash_pairs_oracle())
+
+
+def _canonical_clusters(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, text_len, is_canonical): the connected
+    components of the (doc_a, doc_b) ``pairs``, cluster_id = min
+    doc_id, with one canonical doc per cluster (longest text, doc_id
+    tie-break)."""
+    from pyspark.sql import Window
+
     from hbasewd_spark.operators.graph import connected_components
 
-    pairs = minhash_dedup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    cc = connected_components(pairs, "doc_a", "doc_b")
+    cc = connected_components(pairs.select("doc_a", "doc_b"), "doc_a", "doc_b")
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.length("text").alias("text_len"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("text_len").desc(), F.col("doc_id")
     )
@@ -837,8 +847,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_clusters_oracle() -> str:
-    pairs = minhash_pairs_oracle()
+def _canonical_clusters_oracle(pairs: str) -> str:
+    """DuckDB twin of :func:`_canonical_clusters` over the pairs query
+    ``pairs``: a recursive-CTE connected components."""
     return f"""
     WITH RECURSIVE
     pairs AS ({pairs}),
@@ -1434,49 +1445,11 @@ def winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (doc_id, cluster_id, text_len, is_canonical) for every doc
     in some cluster; cluster_id = min doc_id of the component."""
-    from pyspark.sql import Window
-
-    from hbasewd_spark.operators.graph import connected_components
-
-    pairs = winnow_neardup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    cc = connected_components(pairs, "doc_a", "doc_b")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.length("text").alias("text_len"),
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("text_len").desc(), F.col("doc_id")
-    )
-    return (
-        cc.join(docs, cc.id == docs.doc_id)
-        .select("doc_id", "cluster_id", "text_len")
-        .withColumn("is_canonical", F.row_number().over(w) == 1)
-    )
+    return _canonical_clusters(spark, sf_dir, winnow_neardup_pairs(spark, sf_dir))
 
 
 def winnow_clusters_oracle() -> str:
-    pairs = winnow_pairs_oracle()
-    return f"""
-    WITH RECURSIVE
-    pairs AS ({pairs}),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach AS (
-      SELECT id, id AS lbl FROM nodes
-      UNION
-      SELECT e.dst AS id, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-    ),
-    cc AS (SELECT id AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY id)
-    SELECT cc.doc_id, cc.cluster_id, length(d.text) AS text_len,
-           (row_number() OVER (PARTITION BY cc.cluster_id
-                               ORDER BY length(d.text) DESC, cc.doc_id) = 1)
-             AS is_canonical
-    FROM cc JOIN documents d ON d.doc_id = cc.doc_id
-    """
+    return _canonical_clusters_oracle(winnow_pairs_oracle())
 
 
 # ---------------------------------------------------------------------------

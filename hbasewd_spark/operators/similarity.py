@@ -86,16 +86,8 @@ def brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
-    corpus = emb.select("vec_id", _dvec("embedding").alias("v")).select(
-        "vec_id", "v", _norm(F.col("v")).alias("nv")
-    )
-    queries = (
-        emb.where(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), _dvec("embedding").alias("q"))
-        .select("query_id", "q", _norm(F.col("q")).alias("nq"))
-    )
     scored = (
-        corpus.crossJoin(F.broadcast(queries))
+        _corpus(emb).crossJoin(F.broadcast(_queries(emb)))
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -130,74 +122,62 @@ def brute_topk_oracle() -> str:
     """
 
 
-def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, cell): nearest-centroid assignment (argmin by
-    cosine, ties -> lower cent_id) against the deterministic seed
-    centroids (lowest vec_ids)."""
-    from pyspark.sql import Window
-
-    emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
-    corpus = emb.select("vec_id", _dvec("embedding").alias("v")).select(
+def _corpus(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, nv): every vector widened to double, norm staged."""
+    return emb.select("vec_id", _dvec("embedding").alias("v")).select(
         "vec_id", "v", _norm(F.col("v")).alias("nv")
     )
-    cents = (
-        emb.where(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cv"))
-        .select("cent_id", "cv", _norm(F.col("cv")).alias("ncv"))
-    )
-    ac = corpus.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "nv",
-        "cent_id",
-        _cos_staged(F.col("v"), F.col("cv"), F.col("nv"), F.col("ncv")).alias("sim"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cent_id").asc())
+
+
+def _queries(emb: DataFrame) -> DataFrame:
+    """(query_id, q, nq): the query vectors (vec_id < N_QUERIES)."""
     return (
-        ac.withColumn("rk", F.row_number().over(w_assign)).where(F.col("rk") == 1)
-        .select("vec_id", "v", "nv", F.col("cent_id").alias("cell"))
-    )
-
-
-def _ivf_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, q, cell): the NPROBE nearest centroids per query."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        emb.where(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cv"))
-        .select("cent_id", "cv", _norm(F.col("cv")).alias("ncv"))
-    )
-    queries = (
         emb.where(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("query_id"), _dvec("embedding").alias("q"))
         .select("query_id", "q", _norm(F.col("q")).alias("nq"))
     )
-    qc = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "q",
-        "nq",
-        "cent_id",
-        _cos_staged(F.col("q"), F.col("cv"), F.col("nq"), F.col("ncv")).alias("sim"),
+
+
+def _seed_cents(emb: DataFrame) -> DataFrame:
+    """(cent_id, cv): the deterministic seed centroids (lowest vec_ids)."""
+    return emb.where(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cv")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("cent_id").asc())
+
+
+def _nearest_cells(points: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """``points`` (id, vector, norm — the first three columns) plus
+    ``cell``: one row for each of a point's ``n`` nearest centroids by
+    cosine (ties -> lower cent_id), against a broadcast centroid
+    relation (cent_id, cv). ``n=1`` is the IVF cell assignment,
+    ``n=NPROBE`` the probe."""
+    from pyspark.sql import Window
+
+    pid, vec, norm = points.columns[:3]
+    cents = cents.select("cent_id", "cv", _norm(F.col("cv")).alias("ncv"))
+    scored = points.crossJoin(F.broadcast(cents)).select(
+        *points.columns,
+        "cent_id",
+        _cos_staged(F.col(vec), F.col("cv"), F.col(norm), F.col("ncv")).alias("sim"),
+    )
+    w = Window.partitionBy(pid).orderBy(F.col("sim").desc(), F.col("cent_id").asc())
+    rk = F.col("rk")
     return (
-        qc.withColumn("rk", F.row_number().over(w_probe)).where(F.col("rk") <= NPROBE)
-        .select("query_id", "q", "nq", F.col("cent_id").alias("cell"))
+        scored.withColumn("rk", F.row_number().over(w))
+        # an argmin filters rk = 1, the plan it has always had
+        .where(rk == 1 if n == 1 else rk <= n)
+        .select(*points.columns, F.col("cent_id").alias("cell"))
     )
 
 
 def _ivf_rerank(assigned: DataFrame, probes: DataFrame) -> DataFrame:
-    """Exact cosine re-rank over the probed cells only. Accepts inputs
-    with or without pre-staged norms (the persisted index carries none
-    — its on-disk layout is unchanged by the r12 norm staging)."""
+    """Exact cosine re-rank over the probed cells only. ``assigned``
+    may come without its staged norms: the persisted index carries
+    none (its on-disk layout is unchanged by the r12 norm staging)."""
     from pyspark.sql import Window
 
     if "nv" not in assigned.columns:
         assigned = assigned.select("*", _norm(F.col("v")).alias("nv"))
-    if "nq" not in probes.columns:
-        probes = probes.select("*", _norm(F.col("q")).alias("nq"))
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -223,10 +203,18 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     NPROBE nearest cells per query, exact cosine re-rank within probed
     cells. At 100 TB the assignment is a broadcast join + argmin (one
     scan), the probe prunes ~(1 - NPROBE/N_CENTROIDS) of the corpus,
-    and cells are the partition key so a probe touches few partitions
-    (the persisted form of that claim is build_ivf_index /
-    ivf_probe_indexed, plan-asserted in tests)."""
-    return _ivf_rerank(_ivf_assigned(spark, sf_dir), _ivf_probes(spark, sf_dir))
+    and cells are the partition key so a probe touches few partitions.
+
+    This is the persisted-index path (:func:`build_ivf_index` +
+    :func:`ivf_probe_indexed`, plan-asserted in tests) with the seed
+    centroids in memory: the same assignment, probe and re-rank, with
+    nothing written; the two return identical results."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = ensure_min_parallelism(emb, spark)
+    return _ivf_rerank(
+        _nearest_cells(_corpus(corpus), _seed_cents(corpus), 1),
+        _nearest_cells(_queries(emb), _seed_cents(emb), NPROBE),
+    )
 
 
 def build_ivf_index(
@@ -257,63 +245,17 @@ def build_ivf_index(
             (int(r.vec_id), [float(x) for x in r.embedding])
             for r in emb.where(F.col("vec_id") < N_CENTROIDS).collect()
         )
-    assigned = _assign_cells(spark, sf_dir, _cents_df(spark, cents))
+    emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
+    assigned = _nearest_cells(_corpus(emb), _cents_df(spark, cents), 1)
     (
-        assigned.repartition(N_CENTROIDS, F.col("cell"))
+        assigned.select("vec_id", "v", "cell")
+        .repartition(N_CENTROIDS, F.col("cell"))
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
     )
     Fs(spark, path).write_text(
         path.rstrip("/") + "/" + IVF_CENTROIDS_FILE, _json.dumps(cents)
-    )
-
-
-def _assign_cells(spark: SparkSession, sf_dir: str, cents: DataFrame) -> DataFrame:
-    """(vec_id, v, cell): cosine-argmin assignment against an explicit
-    centroid relation (broadcast; ties -> lower cent_id)."""
-    from pyspark.sql import Window
-
-    emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
-    corpus = emb.select("vec_id", _dvec("embedding").alias("v")).select(
-        "vec_id", "v", _norm(F.col("v")).alias("nv")
-    )
-    cents = cents.select("cent_id", "cv", _norm(F.col("cv")).alias("ncv"))
-    ac = corpus.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "cent_id",
-        _cos_staged(F.col("v"), F.col("cv"), F.col("nv"), F.col("ncv")).alias("sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cent_id").asc())
-    return (
-        ac.withColumn("rk", F.row_number().over(w)).where(F.col("rk") == 1)
-        .select("vec_id", "v", F.col("cent_id").alias("cell"))
-    )
-
-
-def _probes_against(spark: SparkSession, sf_dir: str, cents: DataFrame) -> DataFrame:
-    """(query_id, q, cell): NPROBE nearest centroids per query against
-    an explicit centroid relation."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = (
-        emb.where(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), _dvec("embedding").alias("q"))
-        .select("query_id", "q", _norm(F.col("q")).alias("nq"))
-    )
-    cents = cents.select("cent_id", "cv", _norm(F.col("cv")).alias("ncv"))
-    qc = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "q",
-        "cent_id",
-        _cos_staged(F.col("q"), F.col("cv"), F.col("nq"), F.col("ncv")).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("cent_id").asc())
-    return (
-        qc.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= NPROBE)
-        .select("query_id", "q", F.col("cent_id").alias("cell"))
     )
 
 
@@ -334,7 +276,7 @@ def ivf_probe_indexed(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
             Fs(spark, path).read_text(path.rstrip("/") + "/" + IVF_CENTROIDS_FILE)
         ),
     )
-    probes = _probes_against(spark, sf_dir, cents)
+    probes = _nearest_cells(_queries(load_table(spark, sf_dir, "embeddings")), cents, NPROBE)
     cells = [r.cell for r in probes.select("cell").distinct().collect()]
     assigned = spark.read.parquet(path).where(F.col("cell").isin(cells))
     return _ivf_rerank(assigned, probes)
@@ -372,40 +314,42 @@ def train_ivf_centroids(
     NPROBE/N_CENTROIDS buys geometrically (measured iters 1-6 at
     sf0.001/sf0.01). Corpora with genuine cluster structure benefit
     from more rounds — the parameter is the tuning knob."""
-    from pyspark.sql import Window
-
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
-    corpus = emb.select("vec_id", _dvec("embedding").alias("v")).select(
-        "vec_id", "v", _norm(F.col("v")).alias("nv")
-    )
+    corpus = _corpus(emb)
     cents = (
         emb.where(F.col("vec_id") < k)
         .select(F.col("vec_id").cast("int").alias("cent_id"), _dvec("embedding").alias("cv"))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cent_id").asc())
     for _ in range(iters):
-        staged_cents = cents.select("cent_id", "cv", _norm(F.col("cv")).alias("ncv"))
-        assigned = (
-            corpus.crossJoin(F.broadcast(staged_cents))
-            .select(
-                "vec_id",
-                "v",
-                "cent_id",
-                _cos_staged(F.col("v"), F.col("cv"), F.col("nv"), F.col("ncv")).alias("sim"),
-            )
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-        )
-        cents = (
-            assigned.select("cent_id", F.posexplode("v").alias("dim", "x"))
-            .groupBy("cent_id", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cent_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select("cent_id", F.transform("dm", lambda s: s["m"]).alias("cv"))
-            .localCheckpoint(eager=False)
-        )
+        assigned = _nearest_cells(corpus, cents, 1)
+        cents = _dim_means(
+            assigned.withColumnRenamed("cell", "cent_id"), "cent_id", "v", F.avg("x")
+        ).localCheckpoint(eager=False)
     return sorted((r.cent_id, list(r.cv)) for r in cents.collect())
+
+
+def _dim_means(vecs: DataFrame, key: str, vec, mean: Column) -> DataFrame:
+    """(key, cv): per ``key``, the mean of the ``vec`` arrays taken
+    one dimension at a time — ``mean`` aggregates a dimension's values
+    ``x`` — and collected back to a dimension-ordered array. A slim
+    (key, dim)-keyed aggregation: the vectors themselves never
+    shuffle."""
+    return (
+        vecs.select(key, F.posexplode(vec).alias("dim", "x"))
+        .groupBy(key, "dim")
+        .agg(mean.alias("m"))
+        .groupBy(key)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
+        .select(key, F.transform("dm", lambda s: s["m"]).alias("cv"))
+    )
+
+
+def _quantized_mean() -> Column:
+    """The cross-engine exact mean of ``x`` (see
+    :func:`embed_outliers`): an integer sum of ``floor(x*1e9 + 0.5)``,
+    then two divides."""
+    xq = F.floor(F.col("x") * OUTLIER_QUANT + F.lit(0.5)).cast("long")
+    return F.sum(xq).cast("double") / F.count("*") / F.lit(float(OUTLIER_QUANT))
 
 
 def ivf_topk_oracle() -> str:
@@ -582,43 +526,42 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cluster, dim)-keyed aggregation of slim rows; centroids stay tiny
     and the corpus is never shuffled.
     """
-    from pyspark.sql import Window
-
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
     corpus = emb.select("vec_id", _dvec("embedding").alias("v")).localCheckpoint(eager=False)
-    cents = (
-        emb.where(F.col("vec_id") < KMEANS_K)
-        .select(F.col("vec_id").cast("int").alias("cid"), _dvec("embedding").alias("cv"))
-    )
-
-    def assign(cents_df: DataFrame) -> DataFrame:
-        ac = corpus.crossJoin(F.broadcast(cents_df)).select(
-            "vec_id", "v", "cid",
-            _dot(F.zip_with("v", "cv", lambda a, b: a - b),
-                 F.zip_with("v", "cv", lambda a, b: a - b)).alias("dist2"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.col("dist2").asc(), F.col("cid").asc())
-        return (
-            ac.withColumn("rk", F.row_number().over(w)).where(F.col("rk") == 1)
-            .select("vec_id", "v", "cid", "dist2")
-        )
-
-    assigned = assign(cents)
+    assigned = _nearest_l2(corpus, _kmeans_seeds(emb))
     for _ in range(KMEANS_ITERS):
         # centroid update: mean per (cluster, dimension)
-        dims = assigned.select("cid", F.posexplode("v").alias("dim", "x"))
-        means = (
-            dims.groupBy("cid", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select("cid", F.transform("dm", lambda s: s["m"]).alias("cv"))
-        )
-        assigned = assign(means.localCheckpoint(eager=False))
+        means = _dim_means(assigned, "cid", "v", F.avg("x"))
+        assigned = _nearest_l2(corpus, means.localCheckpoint(eager=False))
 
     return assigned.groupBy("cid").agg(
         F.count("*").alias("n_members"),
         F.sum(F.col("dist2").cast("decimal(28,12)")).cast("double").alias("inertia"),
+    )
+
+
+def _kmeans_seeds(emb: DataFrame) -> DataFrame:
+    """(cid, cv): the deterministic k-means seeds (lowest vec_ids)."""
+    return emb.where(F.col("vec_id") < KMEANS_K).select(
+        F.col("vec_id").cast("int").alias("cid"), _dvec("embedding").alias("cv")
+    )
+
+
+def _nearest_l2(corpus: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, v, cid, dist2): each (vec_id, v) vector's nearest
+    centroid (cid, cv) by squared L2 (ties -> lower cid), against a
+    broadcast centroid relation — the k-means assignment step."""
+    from pyspark.sql import Window
+
+    diff = F.zip_with("v", "cv", lambda a, b: a - b)
+    ac = corpus.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "v", "cid", _dot(diff, diff).alias("dist2")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("dist2").asc(), F.col("cid").asc())
+    return (
+        ac.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") == 1)
+        .select("vec_id", "v", "cid", "dist2")
     )
 
 
@@ -647,41 +590,10 @@ def kmeans_one_iter_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant (:func:`kmeans_clusters`) keeps the descent property
     tests. Same plan shape at scale: broadcast-argmin assignment +
     slim (cid, dim) aggregation, corpus never shuffled."""
-    from pyspark.sql import Window
-
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
     corpus = emb.select("vec_id", _dvec("embedding").alias("v"))
-    cents0 = emb.where(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").cast("int").alias("cid"), _dvec("embedding").alias("cv")
-    )
-
-    def assign(cents_df: DataFrame) -> DataFrame:
-        diff = F.zip_with("v", "cv", lambda a, b: a - b)
-        ac = corpus.crossJoin(F.broadcast(cents_df)).select(
-            "vec_id", "v", "cid", _dot(diff, diff).alias("dist2")
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.col("dist2").asc(), F.col("cid").asc())
-        return (
-            ac.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .select("vec_id", "v", "cid", "dist2")
-        )
-
-    a1 = assign(cents0)
-    dims = a1.select("cid", F.posexplode("v").alias("dim", "x"))
-    xq = F.floor(F.col("x") * OUTLIER_QUANT + F.lit(0.5)).cast("long")
-    means = (
-        dims.groupBy("cid", "dim")
-        .agg(
-            (
-                F.sum(xq).cast("double") / F.count("*") / F.lit(float(OUTLIER_QUANT))
-            ).alias("m")
-        )
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-        .select("cid", F.transform("dm", lambda s: s["m"]).alias("cv"))
-    )
-    a2 = assign(means)
+    a1 = _nearest_l2(corpus, _kmeans_seeds(emb))
+    a2 = _nearest_l2(corpus, _dim_means(a1, "cid", "v", _quantized_mean()))
     dq = F.floor(F.col("dist2") * OUTLIER_QUANT + F.lit(0.5)).cast("long")
     return a2.groupBy("cid").agg(
         F.count("*").alias("n_members"),
@@ -919,20 +831,10 @@ def semdedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks), which this operator family replaced. Assignment is a
     broadcast argmin (corpus never shuffles for it); the pair join
     shuffles the slim (cid, vec_id, v) relation once."""
-    from pyspark.sql import Window
-
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
     corpus = emb.select("vec_id", _dvec("embedding").alias("v"))
-    cents = emb.where(F.col("vec_id") < KMEANS_K).select(
-        F.col("vec_id").cast("int").alias("cid"), _dvec("embedding").alias("cv")
-    )
-    diff = F.zip_with("v", "cv", lambda a, b: a - b)
-    w = Window.partitionBy("vec_id").orderBy(F.col("dist2").asc(), F.col("cid").asc())
     assigned = (
-        corpus.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "cid", _dot(diff, diff).alias("dist2"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
+        _nearest_l2(corpus, _kmeans_seeds(emb))
         # nv staged once per member: the pair test divides a single
         # dot by the two staged norms — the identical
         # dot/(sqrt(dot aa)*sqrt(dot bb)) tree `cosine` builds, minus
@@ -1054,19 +956,7 @@ def embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
     corpus = emb.select("vec_id", "label", _dvec("embedding").alias("v"))
-    dims = corpus.select("label", F.posexplode("v").alias("dim", "x"))
-    xq = F.floor(F.col("x") * OUTLIER_QUANT + F.lit(0.5)).cast("long")
-    cents = (
-        dims.groupBy("label", "dim")
-        .agg(
-            (
-                F.sum(xq).cast("double") / F.count("*") / F.lit(float(OUTLIER_QUANT))
-            ).alias("m")
-        )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-        .select("label", F.transform("dm", lambda s: s["m"]).alias("cv"))
-    )
+    cents = _dim_means(corpus, "label", "v", _quantized_mean())
     diff = F.zip_with("v", "cv", lambda a, b: a - b)
     scored = corpus.join(F.broadcast(cents), "label").select(
         "label", "vec_id", _dot(diff, diff).alias("dist2")
@@ -1260,19 +1150,7 @@ def centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     past ~4e9 vectors per label; swap the partial sums to
     DECIMAL(38,0) (the ext_dataset_manifest trick) beyond that."""
     emb = ensure_min_parallelism(load_table(spark, sf_dir, "embeddings"), spark)
-    dims = emb.select("label", F.posexplode(_dvec("embedding")).alias("dim", "x"))
-    xq = F.floor(F.col("x") * OUTLIER_QUANT + F.lit(0.5)).cast("long")
-    cents = (
-        dims.groupBy("label", "dim")
-        .agg(
-            (
-                F.sum(xq).cast("double") / F.count("*") / F.lit(float(OUTLIER_QUANT))
-            ).alias("m")
-        )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-        .select("label", F.transform("dm", lambda s: s["m"]).alias("cv"))
-    )
+    cents = _dim_means(emb, "label", _dvec("embedding"), _quantized_mean())
     a = cents.select(F.col("label").alias("label_a"), F.col("cv").alias("cva"))
     b = cents.select(F.col("label").alias("label_b"), F.col("cv").alias("cvb"))
     return (

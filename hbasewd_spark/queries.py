@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hbasewd_spark.functions.codec import sql_hash31_of_long, sql_md5_long
+from hbasewd_spark.plans.distributor import Hash31Distributor
 from hbasewd_spark.sources.loaders import ensure_min_parallelism, load_table, sql_on_tables
 
 
@@ -221,7 +222,37 @@ def o9_ordered_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salted_scan_events(spark, sf_dir)
 
 
-def salted_scan_events(spark: SparkSession, sf_dir: str, write: bool = True) -> DataFrame:
+class _EventDist(Hash31Distributor):
+    """Hash31 salting on the 8-BE-byte encoding of event_id (the
+    reference's key form), for the ts-keyed salted events tables."""
+
+    def salt_expr(self, key):
+        return self.salt_expr_long(key)
+
+
+def _salted_events(
+    spark: SparkSession, sf_dir: str, name: str, distributor=None,
+    zone_map_cols: list[str] | None = None,
+):
+    """``(table, bounds)`` for the salted-table queries: the events
+    table written salted by ``distributor`` (default ``_EventDist``)
+    under the per-SF cache dir ``name``, and ``bounds.lo``/
+    ``bounds.hi``, a 24-hour ts range inside events."""
+    from hbasewd_spark.sources.salted_table import SaltedTable
+
+    ev = load_table(spark, sf_dir, "events")
+    bounds = ev.agg(
+        (F.min("ts") + F.expr("INTERVAL '12' HOUR")).alias("lo"),
+        (F.min("ts") + F.expr("INTERVAL '36' HOUR")).alias("hi"),
+    ).collect()[0]
+    path = os.path.join(
+        tempfile.gettempdir(), "hbasewd_cache", os.path.basename(os.path.normpath(sf_dir)), name
+    )
+    dist = distributor or _EventDist(H31_BUCKETS)
+    return SaltedTable.write(ev, path, dist, "ts", zone_map_cols=zone_map_cols), bounds
+
+
+def salted_scan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The M1 end-to-end slice: salt events by hash31(event_id), write a
     salt-partitioned key-sorted table, then run the pruned ordered scan.
     The rn order-witness is stamped by global_rank (partition-offset
@@ -230,29 +261,8 @@ def salted_scan_events(spark: SparkSession, sf_dir: str, write: bool = True) -> 
     scale (round-4 verdict, what's-wrong #2).
     """
     from hbasewd_spark.operators.topk import global_rank
-    from hbasewd_spark.plans.distributor import Hash31Distributor
-    from hbasewd_spark.sources.salted_table import SaltedTable
 
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        (F.min("ts") + F.expr("INTERVAL '12' HOUR")).alias("lo"),
-        (F.min("ts") + F.expr("INTERVAL '36' HOUR")).alias("hi"),
-    ).collect()[0]
-
-    d = Hash31Distributor(H31_BUCKETS)
-    path = os.path.join(
-        tempfile.gettempdir(), "hbasewd_cache", os.path.basename(os.path.normpath(sf_dir)), "events_salted"
-    )
-    if write:
-        # salt on the 8-BE-byte encoding of event_id (the reference's key form)
-        class _EventDist(Hash31Distributor):
-            def salt_expr(self, key):
-                return self.salt_expr_long(key)
-
-        t = SaltedTable.write(ev, path, _EventDist(H31_BUCKETS), "ts")
-    else:
-        t = SaltedTable.load(spark, path)
-
+    t, bounds = _salted_events(spark, sf_dir, "events_salted")
     scanned = t.scan(
         start=bounds.lo,
         stop=bounds.hi,
@@ -277,26 +287,8 @@ def salted_scan_events(spark: SparkSession, sf_dir: str, write: bool = True) -> 
 )
 def o9b_merged_ordered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hbasewd_spark.operators.topk import global_rank
-    from hbasewd_spark.plans.distributor import Hash31Distributor
-    from hbasewd_spark.sources.salted_table import SaltedTable
 
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        (F.min("ts") + F.expr("INTERVAL '12' HOUR")).alias("lo"),
-        (F.min("ts") + F.expr("INTERVAL '36' HOUR")).alias("hi"),
-    ).collect()[0]
-
-    class _EventDist(Hash31Distributor):
-        def salt_expr(self, key):
-            return self.salt_expr_long(key)
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "hbasewd_cache",
-        os.path.basename(os.path.normpath(sf_dir)),
-        "events_salted_merged",
-    )
-    t = SaltedTable.write(ev, path, _EventDist(H31_BUCKETS), "ts")
+    t, bounds = _salted_events(spark, sf_dir, "events_salted_merged")
     merged = t.scan_merged(
         start=bounds.lo,
         stop=bounds.hi,
@@ -342,18 +334,8 @@ WHERE ts >= {_TS_LO} AND ts < {_TS_HI} AND event_type = 'click'
 )
 def p5_filter_projection_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hbasewd_spark.plans.distributor import HashDistributor
-    from hbasewd_spark.sources.salted_table import SaltedTable
 
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        (F.min("ts") + F.expr("INTERVAL '12' HOUR")).alias("lo"),
-        (F.min("ts") + F.expr("INTERVAL '36' HOUR")).alias("hi"),
-    ).collect()[0]
-    path = os.path.join(
-        tempfile.gettempdir(), "hbasewd_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "events_salted_p5",
-    )
-    t = SaltedTable.write(ev, path, HashDistributor(8), "ts")
+    t, bounds = _salted_events(spark, sf_dir, "events_salted_p5", HashDistributor(8))
     return t.scan(
         start=bounds.lo,
         stop=bounds.hi,
@@ -395,28 +377,7 @@ FROM events WHERE ts >= {_TS_LO} AND ts < {_TS_HI}
     "same range the slow way; the two must agree exactly.",
 )
 def p6b_metadata_count_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hbasewd_spark.plans.distributor import Hash31Distributor
-    from hbasewd_spark.sources.salted_table import SaltedTable
-
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        (F.min("ts") + F.expr("INTERVAL '12' HOUR")).alias("lo"),
-        (F.min("ts") + F.expr("INTERVAL '36' HOUR")).alias("hi"),
-    ).collect()[0]
-
-    class _EventDist(Hash31Distributor):
-        def salt_expr(self, key):
-            return self.salt_expr_long(key)
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "hbasewd_cache",
-        os.path.basename(os.path.normpath(sf_dir)),
-        "events_salted_fastcount",
-    )
-    t = SaltedTable.write(
-        ev, path, _EventDist(H31_BUCKETS), "ts", zone_map_cols=["ts"]
-    )
+    t, bounds = _salted_events(spark, sf_dir, "events_salted_fastcount", zone_map_cols=["ts"])
     n = t.fast_count(bounds.lo, bounds.hi)
     return spark.createDataFrame([(n,)], "n_range long")
 
@@ -549,7 +510,6 @@ from hbasewd_spark.operators import skew as SK  # noqa: E402
 )
 def p8_bytecompat_salted_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hbasewd_spark.functions import codec
-    from hbasewd_spark.plans.distributor import Hash31Distributor
 
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") < 200)
     d = Hash31Distributor(15)
@@ -2247,18 +2207,8 @@ WHERE ts >= {_TS_LO} AND ts < {_TS_HI}
 )
 def p9_zonemap_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hbasewd_spark.plans.distributor import HashDistributor
-    from hbasewd_spark.sources.salted_table import SaltedTable
 
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        (F.min("ts") + F.expr("INTERVAL '12' HOUR")).alias("lo"),
-        (F.min("ts") + F.expr("INTERVAL '36' HOUR")).alias("hi"),
-    ).collect()[0]
-    path = os.path.join(
-        tempfile.gettempdir(), "hbasewd_cache",
-        os.path.basename(os.path.normpath(sf_dir)), "events_zonemap",
-    )
-    t = SaltedTable.write(ev, path, HashDistributor(8), "ts")
+    t, bounds = _salted_events(spark, sf_dir, "events_zonemap", HashDistributor(8))
     pruned = t.pruned_scan("ts", bounds.lo, bounds.hi)
     return pruned.agg(
         F.count("*").alias("n"),

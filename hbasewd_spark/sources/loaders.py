@@ -96,10 +96,16 @@ def sql_on_tables(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     return spark.sql(text)
 
 
-def ensure_min_parallelism(df: DataFrame, spark: SparkSession, target: int | None = None) -> DataFrame:
+# an exchange node (shuffle or broadcast) or the adaptive wrapper AQE
+# puts around a plan with one, at the start of an executed-plan line
+_EXCHANGE_LINE = re.compile(r"^[\s:+\-*()0-9]*(AdaptiveSparkPlan|\w*Exchange)\b", re.M)
+
+
+def ensure_min_parallelism(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Round-robin repartition ONLY when the scan yields fewer
-    partitions than cores — decouples compute parallelism from input
-    file layout for CPU-heavy per-row stages (tokenize/md5/regex).
+    partitions than cores (at most 32) — decouples compute parallelism
+    from input file layout for CPU-heavy per-row stages
+    (tokenize/md5/regex).
 
     The driver testdata is one row group per table, so every scan is
     one task and a 32-core session runs regex pipelines single-threaded
@@ -108,8 +114,15 @@ def ensure_min_parallelism(df: DataFrame, spark: SparkSession, target: int | Non
     catastrophic full-text shuffle — is skipped entirely.
 
     The partitions are counted on the JVM side, on the RDD the executed
-    plan builds: wrapping it in a Python RDD first (``df.rdd``) costs
-    about 70 more py4j commands per call."""
-    target = min(target or spark.sparkContext.defaultParallelism, 32)
-    n = df._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+    plan builds (wrapping it in a Python RDD first, ``df.rdd``, costs
+    about 70 more py4j commands per call), and only for a plan with no
+    exchange, whose RDD is built without running a job. A plan with an
+    exchange is returned unchanged: building its RDD runs the stages
+    below the exchange (AQE plans its shuffle reads from them), and
+    its parallelism is set by the exchange, not by the file layout."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if _EXCHANGE_LINE.search(plan.toString()):
+        return df
+    target = min(spark.sparkContext.defaultParallelism, 32)
+    n = plan.execute().getNumPartitions()
     return df.repartition(target) if n < target else df

@@ -259,31 +259,13 @@ class SaltedTable:
         persisted; a column they cannot serve gets a watermarked
         ``_zone_maps/<col>/`` sidecar from one column scan.
         """
-        salted_df = salted(df, distributor, key_col)
-        n = distributor.buckets
-        writer = (
-            salted_df.repartition(n, F.col(SALT_COL))
-            .sortWithinPartitions(SALT_COL, key_col)
-            .write.mode(mode)
-            .partitionBy(SALT_COL)
-            .format(fmt)
-        )
-        if fmt == "csv":
-            writer = writer.option("header", "true")
+        t = cls(df.sparkSession, path, distributor, key_col, fmt, df.schema.json())
+        staged = _bucket_sorted(salted(df, distributor, key_col), distributor.buckets, key_col)
+        writer = t._writer(staged).mode(mode)
         if row_group_bytes and fmt == "parquet":
             writer = writer.option("parquet.block.size", int(row_group_bytes))
         writer.save(path)
-        data_schema_json = df.schema.json()
-        meta = {
-            "key_col": key_col,
-            "fmt": fmt,
-            "data_schema": data_schema_json,
-            **distributor.to_meta(),
-        }
-        Fs(df.sparkSession, path).write_text(
-            path.rstrip("/") + "/" + META_FILE, json.dumps(meta)
-        )
-        t = cls(df.sparkSession, path, distributor, key_col, fmt, data_schema_json)
+        _write_meta(t)
         for c in zone_map_cols or []:
             t.build_zone_map(c)
         return t
@@ -315,13 +297,19 @@ class SaltedTable:
         if base_path is not None:
             reader = reader.option("basePath", base_path)
         if self.data_schema_json:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(self.data_schema_json))
-            reader = reader.schema(schema.add(SALT_COL, "integer"))
+            reader = reader.schema(self._data_schema().add(SALT_COL, "integer"))
         if self.fmt == "csv":
             reader = reader.option("header", "true")
         return reader
+
+    def _data_schema(self):
+        """The table's data columns (no ``salt``): the persisted schema,
+        or, for a handle built without one, the loaded frame's."""
+        from pyspark.sql.types import StructType
+
+        if self.data_schema_json:
+            return StructType.fromJson(json.loads(self.data_schema_json))
+        return self.df().drop(SALT_COL).schema
 
     def _writer(self, df: DataFrame):
         """Format-configured salt-partitioned DataFrameWriter."""
@@ -411,14 +399,8 @@ class SaltedTable:
         coercion, which is exactly why only the salt computation broke
         — and why the fixture keys (beyond int32 range, inferred long)
         never tripped it. Found by the r10 key-index crash suite."""
-        from pyspark.sql.types import StructType
-
         try:
-            key_type = (
-                StructType.fromJson(json.loads(self.data_schema_json))
-                if self.data_schema_json
-                else self.df().schema
-            )[self.key_col].dataType
+            key_type = self._data_schema()[self.key_col].dataType
             return F.lit(key_value).cast(key_type)
         except Exception as e:
             # falling back to the UNCAST literal re-opens the exact
@@ -788,12 +770,7 @@ class SaltedTable:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         try:
-            data_schema = (
-                StructType.fromJson(json.loads(self.data_schema_json))
-                if self.data_schema_json
-                else self.df().drop(SALT_COL).schema
-            )
-            col_type = data_schema[col].dataType
+            col_type = self._data_schema()[col].dataType
         except Exception:
             return None  # unknown column/schema: let the scan path speak
         try:
@@ -1624,11 +1601,7 @@ class SaltedTable:
             )
         from pyspark.sql.types import StructType
 
-        data_schema = (
-            StructType.fromJson(json.loads(self.data_schema_json))
-            if self.data_schema_json
-            else self.df().drop(SALT_COL).schema
-        )
+        data_schema = self._data_schema()
         out_fields = [f for f in data_schema.fields]
         if columns:
             known = {f.name for f in out_fields}
@@ -1884,31 +1857,54 @@ def compact(table: SaltedTable, target_files_per_salt: int = 1) -> SaltedTable:
     consistent on filesystems without atomic rename semantics. Every
     path op goes through Hadoop's FileSystem so the same code compacts
     an s3a:// or hdfs:// table, not just local disk."""
-    from pyspark.sql import functions as F
-
     def make_staged():
         n = table.distributor.buckets * target_files_per_salt
-        return (
-            table.df()
-            .repartition(n, F.col(SALT_COL))
-            .sortWithinPartitions(SALT_COL, table.key_col)
-        )
+        return _bucket_sorted(table.df(), n, table.key_col)
 
     return _staged_rewrite(table, make_staged, "compact")
 
 
-def _staged_rewrite(table: SaltedTable, make_staged, op: str) -> SaltedTable:
-    """The crash-safe rewrite protocol shared by the salt-preserving
-    lifecycle verbs (:func:`compact`, :func:`cluster`) — ONE
+def _bucket_sorted(df: DataFrame, n: int, key_col: str) -> DataFrame:
+    """The write layout of a salted frame: ``n`` partitions by salt,
+    each sorted by (salt, key), so every file is key-sorted."""
+    return df.repartition(n, F.col(SALT_COL)).sortWithinPartitions(SALT_COL, key_col)
+
+
+def _write_meta(table: SaltedTable) -> None:
+    """Persist ``table``'s key column, format, data schema and
+    distributor as the metadata of its dir."""
+    meta = {
+        "key_col": table.key_col,
+        "fmt": table.fmt,
+        "data_schema": table.data_schema_json,
+        **table.distributor.to_meta(),
+    }
+    Fs(table.spark, table.path).write_text(
+        table.path.rstrip("/") + "/" + META_FILE, json.dumps(meta)
+    )
+
+
+def _staged_rewrite(
+    table: SaltedTable, make_staged, op: str, distributor: KeyDistributor | None = None
+) -> SaltedTable:
+    """The crash-safe rewrite protocol shared by the lifecycle verbs
+    :func:`compact`, :func:`cluster` and :func:`rebucket` — ONE
     definition, because every line here is safety-critical and a
     protocol fix must reach all verbs at once (the orphaned-``.old``
-    refusal already had to): refuse if a previous swap stranded the
-    only copy, stage the rewrite into a sibling dir, carry the table
-    metadata and the key->salt index (no row crosses a salt
-    partition, so the index mapping survives), aside-rename swap, and
-    restamp the index watermark against the new data files. Runs under
-    the table lifecycle lock (sibling ``<base>.wd_lock``) so two verbs can't
-    interleave the swap.
+    refusal and the zone-sidecar carry both had to): refuse if a
+    previous swap stranded the only copy, stage the rewrite into a
+    sibling dir, carry the zone sidecars (stale, then rebuilt), aside-
+    rename swap. Runs under the table lifecycle lock (sibling
+    ``<base>.wd_lock``) so two verbs can't interleave the swap.
+
+    Without ``distributor`` the rewrite keeps every row's salt: the
+    stage carries the table metadata and the key->salt index (no row
+    crosses a salt partition, so the mapping survives), the index
+    watermark is restamped against the new data files, and ``table``
+    itself is returned. :func:`rebucket` passes its new distributor:
+    the stage gets metadata for it and no key index (every mapping is
+    invalidated by construction), and a handle loaded from the swapped
+    table is returned.
 
     ``make_staged`` is a CALLABLE building the rewrite frame, invoked
     only under the lock: lock acquisition may first complete a crashed
@@ -1923,11 +1919,18 @@ def _staged_rewrite(table: SaltedTable, make_staged, op: str) -> SaltedTable:
         _refuse_orphaned_old(fs, base, op)
         tmp = f"{base}.{op}_tmp"
         fs.delete(tmp, recursive=True)
-        table._writer(make_staged()).mode("overwrite").save(tmp)
-        fs.copy(base + "/" + META_FILE, tmp + "/" + META_FILE)
+        staged = make_staged()
+        table._writer(staged).mode("overwrite").save(tmp)
         idx_src = base + "/" + SaltedTable.KEY_INDEX_DIR
-        if fs.is_dir(idx_src):
-            fs.copy(idx_src, tmp + "/" + SaltedTable.KEY_INDEX_DIR)
+        if distributor is not None:
+            schema_json = staged.drop(SALT_COL).schema.json()
+            _write_meta(SaltedTable(
+                table.spark, tmp, distributor, table.key_col, table.fmt, schema_json
+            ))
+        else:
+            fs.copy(base + "/" + META_FILE, tmp + "/" + META_FILE)
+            if fs.is_dir(idx_src):
+                fs.copy(idx_src, tmp + "/" + SaltedTable.KEY_INDEX_DIR)
         zm_src = base + "/" + SaltedTable.ZONE_MAP_DIR
         if fs.is_dir(zm_src):
             # carried stale (wrong file paths), then rebuilt below —
@@ -1936,18 +1939,21 @@ def _staged_rewrite(table: SaltedTable, make_staged, op: str) -> SaltedTable:
         # the sibling lock (lock_path) is untouched by the swap's renames:
         # it stays held until _lifecycle_lock's finally-block (ADVICE r6/r8)
         _swap_table_dirs(fs, tmp, base, op)
-        table.refresh()
-        # the rewrite replaced the data files: restamp the index
-        # watermark (the mapping itself is unchanged) so indexed gets
-        # stay fast
-        idx_dir = base + "/" + SaltedTable.KEY_INDEX_DIR
-        if fs.is_dir(idx_dir):
-            fs.write_text(
-                idx_dir + "/" + SaltedTable.INDEX_META_FILE,
-                json.dumps({"data_sig": table._data_signature(fs)}),
-            )
-        table.rebuild_zone_maps()
-        return table
+        if distributor is not None:
+            out = SaltedTable.load(table.spark, base)
+        else:
+            out = table
+            out.refresh()
+            # the rewrite replaced the data files: restamp the index
+            # watermark (the mapping itself is unchanged) so indexed
+            # gets stay fast
+            if fs.is_dir(idx_src):
+                fs.write_text(
+                    idx_src + "/" + SaltedTable.INDEX_META_FILE,
+                    json.dumps({"data_sig": out._data_signature(fs)}),
+                )
+        out.rebuild_zone_maps()
+        return out
 
 
 def cluster(
@@ -1998,34 +2004,27 @@ def rebucket(table: SaltedTable, new_distributor: KeyDistributor) -> SaltedTable
     reference's README centers on (bucket count trades write
     parallelism against scan fan-out, README:37-40; changing it there
     means rewriting every HBase row key). Engine version: one read,
-    one re-salt, one salted write to a staging dir, one swap. Salt is
-    a derived column, so no key bytes change — only placement.
+    one re-salt, one salted write to a staging dir, one swap — the
+    :func:`_staged_rewrite` protocol, with the stage re-salted by
+    ``new_distributor``. Salt is a derived column, so no key bytes
+    change — only placement.
 
     At 100 TB this is a full-table rewrite by necessity (every row's
     bucket assignment changes under a new modulus — the same cost the
     reference would pay) but it is ONE shuffle: re-salt is a stateless
     projection and the write repartitions straight to the new bucket
-    count. The key->salt index is dropped (its mapping is invalidated
-    by construction); rebuild after if round-robin point gets matter.
-    Not reader-atomic during the final swap — same contract as
-    compact()."""
-    with table._lifecycle_lock("rebucket"):
-        fs = Fs(table.spark, table.path)
-        base = table.path.rstrip("/")
-        _refuse_orphaned_old(fs, base, "rebucket")
-        tmp = base + ".rebucket_tmp"
-        fs.delete(tmp, recursive=True)
-        data = table.df().drop(SALT_COL)
-        SaltedTable.write(data, tmp, new_distributor, table.key_col, fmt=table.fmt)
-        zm_src = base + "/" + SaltedTable.ZONE_MAP_DIR
-        if fs.is_dir(zm_src):
-            # carried stale to name the columns rebuilt below, as in
-            # _staged_rewrite
-            fs.copy(zm_src, tmp + "/" + SaltedTable.ZONE_MAP_DIR)
-        _swap_table_dirs(fs, tmp, base, "rebucket")
-        out = SaltedTable.load(table.spark, base)
-        out.rebuild_zone_maps()
-        return out
+    count. The table's metadata names ``new_distributor``; the
+    key->salt index is dropped (its mapping is invalidated by
+    construction), rebuild after if round-robin point gets matter;
+    zone sidecars are carried and rebuilt. Returns a handle loaded
+    from the rewritten table. Not reader-atomic during the final swap
+    — same contract as compact()."""
+
+    def make_staged():
+        data = salted(table.df().drop(SALT_COL), new_distributor, table.key_col)
+        return _bucket_sorted(data, new_distributor.buckets, table.key_col)
+
+    return _staged_rewrite(table, make_staged, "rebucket", new_distributor)
 
 
 def vacuum(

@@ -1,9 +1,10 @@
 """bench.py registry mode: registry queries timed as spans, with the
 DataFrame build inside the timed call.
 
-Each query's row carries its ``build`` and ``exec`` child spans, the
-fastest of ``--reps`` reps, and with ``--plans`` the formatted plan's
-structural counts. ``--reps 0`` builds without executing. A stream's
+Each query runs once untimed, then its row carries its ``build`` and
+``exec`` child spans, the fastest of ``--reps`` reps, and with
+``--plans`` the formatted plan's structural counts. ``--reps 0`` builds
+once without executing. A stream's
 micro-batch jobs run under its run id's job group and still count.
 """
 
@@ -80,6 +81,27 @@ def test_reps_zero_builds_without_executing(rows, sf_dir):
     # table read), which read no rows and shuffle nothing
     assert row["jobs"] == row["build"]["jobs"] == rows["rel_join_broadcast"]["build"]["jobs"]
     assert row["input_rows"] == row["shuffle_write_bytes"] == 0
+
+
+def test_each_query_runs_once_untimed_before_its_reps(sf_dir):
+    from hbasewd_spark import queries as Q
+
+    name = "rel_join_broadcast"
+    spec = Q.REGISTRY[name]
+    calls = []
+
+    def counted(spark, sf):
+        calls.append(sf)
+        return spec.fn(spark, sf)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setitem(Q.REGISTRY, name, Q.QuerySpec(counted, spec.oracle, spec.doc))
+        (row,) = _rows(sf_dir, ["--registry", name, "--reps", "2"]).values()
+        assert len(calls) == 3
+        assert len(row["reps_s"]) == 2
+        calls.clear()
+        _rows(sf_dir, ["--registry", name, "--reps", "0"])
+        assert len(calls) == 1
 
 
 def test_bad_arguments_are_refused():

@@ -1,9 +1,9 @@
-"""Every text and MinHash expression is built from one Spark SQL text:
-the plans equal the Column-API builders they replaced (same optimized
-plan, same rows), every ``sql_*(..., "spark")`` text computes what its
-engine function computes, the feature and band frame builds in a few
-dozen py4j commands, and the index build spreads the signature pass
-over every core."""
+"""Every text, MinHash and SimHash expression is built from one Spark
+SQL text: the plans equal the Column-API builders they replaced (same
+optimized plan, same rows), every ``sql_*(..., "spark")`` text computes
+what its engine function computes, the feature and band frame and the
+SimHash frame each build in a few dozen py4j commands, and the index
+build spreads the signature pass over every core."""
 
 from __future__ import annotations
 
@@ -118,6 +118,25 @@ def col_bands_of(sig):
     return sig.select("doc_id", F.posexplode(F.array(*band_hashes)).alias("band", "band_hash"))
 
 
+def col_simhash_df(spark, sf_dir):
+    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"), spark)
+    tok = docs.select("doc_id", F.explode(TX.tokens("text")).alias("tok"))
+    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
+    tok = tok.select("doc_id", h.alias("h"))
+    bit_sums = [
+        F.sum(
+            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+        ).alias(f"s{i}")
+        for i in range(DD.SIMHASH_BITS)
+    ]
+    agg = tok.groupBy("doc_id").agg(*bit_sums)
+    fp = None
+    for i in range(DD.SIMHASH_BITS):
+        bit = F.when(F.col(f"s{i}") > 0, F.lit(2**i).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
+        fp = bit if fp is None else fp + bit
+    return agg.select("doc_id", fp.alias("simhash"))
+
+
 # ---------------------------------------------------------------------------
 
 
@@ -162,6 +181,10 @@ def test_minhash_features_and_bands_keep_the_column_plan(spark, docs):
     wide = ensure_min_parallelism(docs, spark)
     _same_plan_same_rows(DD.features_of_docs(wide), col_features_of_docs(wide))
     _same_plan_same_rows(DD._bands_of(DD.features_of_docs(wide)), col_bands_of(col_features_of_docs(wide)))
+
+
+def test_simhash_keeps_the_column_plan(spark, sf_dir):
+    _same_plan_same_rows(DD.simhash_df(spark, sf_dir), col_simhash_df(spark, sf_dir))
 
 
 @pytest.mark.parametrize("name", ["doc text", "full-text", "a.b", "select", "we`ird"])
@@ -248,6 +271,14 @@ def test_feature_and_band_build_is_a_few_dozen_py4j_commands(spark, sf_dir):
     DD._bands_of(DD.features_of_docs(load_table(spark, sf_dir, "documents")))  # warm class lookups
     fresh = load_table(spark, sf_dir, "documents")
     n = _py4j_commands(spark, lambda: DD._bands_of(DD.features_of_docs(fresh)))
+    assert n <= 60, n
+
+
+def test_simhash_build_is_a_few_dozen_py4j_commands(spark, sf_dir):
+    # the Column builder sent 5,212: one command per node of its 32
+    # when-sums and 32-term fold
+    DD.simhash_df(spark, sf_dir)  # warm class lookups
+    n = _py4j_commands(spark, lambda: DD.simhash_df(spark, sf_dir))
     assert n <= 60, n
 
 

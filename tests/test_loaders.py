@@ -118,3 +118,23 @@ def test_footer_schema_keeps_nanos_as_bigint(spark, tmp_path):
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = [r.us for r in df.select(F.unix_micros("ts").alias("us")).orderBy("event_id").collect()]
     assert got == [v // 1000 for v in ns]
+
+
+def test_min_parallelism_runs_no_job_over_an_exchange(spark, sf_dir, spark_jobs):
+    # a plan with an exchange would run its stages below the exchange
+    # to count its partitions (the AQE plan is executed); it is
+    # returned as it is, and a bare scan is still widened
+    from hbasewd_spark.sources.loaders import ensure_min_parallelism
+
+    events = load_table(spark, sf_dir, "events")
+    for name, df in [
+        ("aggregate", events.groupBy("event_type").count()),
+        ("repartition", events.repartition(4)),
+    ]:
+        out, jobs = spark_jobs(f"min-parallelism-{name}", lambda: ensure_min_parallelism(df, spark))
+        assert jobs == [], name
+        assert out is df, name
+    assert events.rdd.getNumPartitions() < min(spark.sparkContext.defaultParallelism, 32)
+    wide, jobs = spark_jobs("min-parallelism-scan", lambda: ensure_min_parallelism(events, spark))
+    assert jobs == []
+    assert wide is not events
