@@ -199,6 +199,10 @@ def _footer_stats_batch(files: list, col_name: str, target):
 class SaltedTable:
     """Handle over a salted, key-sorted, salt-partitioned parquet table."""
 
+    # parquet row-group size recorded by write() in the metadata; None
+    # keeps parquet's default
+    row_group_bytes: int | None = None
+
     def __init__(
         self,
         spark: SparkSession,
@@ -253,6 +257,8 @@ class SaltedTable:
         right (GB-class bucket files -> ~8+ groups each); at bench
         scale the miniature-faithful move is shrinking the group so the
         file:group ratio matches production (SCALE.md, file geometry).
+        The size persists in the metadata: every later write of the
+        data files (:meth:`_writer`) keeps it.
 
         ``zone_map_cols`` runs :meth:`build_zone_map` per listed column:
         parquet footers serve the column's zone metadata with nothing
@@ -260,11 +266,9 @@ class SaltedTable:
         ``_zone_maps/<col>/`` sidecar from one column scan.
         """
         t = cls(df.sparkSession, path, distributor, key_col, fmt, df.schema.json())
+        t.row_group_bytes = int(row_group_bytes) if row_group_bytes else None
         staged = _bucket_sorted(salted(df, distributor, key_col), distributor.buckets, key_col)
-        writer = t._writer(staged).mode(mode)
-        if row_group_bytes and fmt == "parquet":
-            writer = writer.option("parquet.block.size", int(row_group_bytes))
-        writer.save(path)
+        t._writer(staged).mode(mode).save(path)
         _write_meta(t)
         for c in zone_map_cols or []:
             t.build_zone_map(c)
@@ -275,10 +279,13 @@ class SaltedTable:
     def load(cls, spark: SparkSession, path: str) -> "SaltedTable":
         """Open a salted table, rehydrating its distributor from the
         persisted metadata (O11 without reflection)."""
-        meta = json.loads(
-            Fs(spark, path).read_text(path.rstrip("/") + "/" + META_FILE)
-        )
-        return cls(
+        meta = Fs(spark, path).read_text(path.rstrip("/") + "/" + META_FILE)
+        return cls._from_meta(spark, path, json.loads(meta))
+
+    @classmethod
+    def _from_meta(cls, spark: SparkSession, path: str, meta: dict) -> "SaltedTable":
+        """The handle the parsed metadata ``meta`` of ``path`` describes."""
+        t = cls(
             spark,
             path,
             distributor_from_meta(meta),
@@ -286,6 +293,8 @@ class SaltedTable:
             meta.get("fmt", "parquet"),
             meta.get("data_schema"),
         )
+        t.row_group_bytes = meta.get("row_group_bytes")
+        return t
 
     def _reader(self, base_path: str | None = None):
         """Format-configured DataFrameReader. Every format reads with
@@ -312,10 +321,15 @@ class SaltedTable:
         return self.df().drop(SALT_COL).schema
 
     def _writer(self, df: DataFrame):
-        """Format-configured salt-partitioned DataFrameWriter."""
+        """The one writer of the table's data files (write, lifecycle
+        rewrites, upserts, stream epochs): salt-partitioned, in the
+        table's format (CSV with its header), with the parquet
+        row-group size :meth:`write` recorded."""
         writer = df.write.partitionBy(SALT_COL).format(self.fmt)
         if self.fmt == "csv":
             writer = writer.option("header", "true")
+        if self.fmt == "parquet" and self.row_group_bytes:
+            writer = writer.option("parquet.block.size", self.row_group_bytes)
         return writer
 
     def df(self) -> DataFrame:
@@ -349,7 +363,6 @@ class SaltedTable:
         ordered: bool = True,
         columns: list[str] | None = None,
         where: Any = None,
-        keep_salt: bool = False,
     ) -> DataFrame:
         """Salt-aware range scan (O7+O8+O9 fused).
 
@@ -365,8 +378,7 @@ class SaltedTable:
         out = self.df().where(range_predicate(self.key_col, start, stop))
         if where is not None:
             out = out.where(where)
-        if not keep_salt:
-            out = out.drop(SALT_COL)  # getOriginalKey (O3): salt is a column
+        out = out.drop(SALT_COL)  # getOriginalKey (O3): salt is a column
         if columns:
             out = out.select(*columns)
         if ordered:
@@ -463,11 +475,7 @@ class SaltedTable:
         """Listing signature of the table's data files: (path, bytes,
         mtime) triples — cheap (one LIST per salt glob) and changes on
         any append, overwrite, or compaction."""
-        return [
-            list(t)
-            for t in fs.glob_stats(f"{self.path.rstrip('/')}/{SALT_COL}=*/*")
-            if not t[0].rsplit("/", 1)[1].startswith((".", "_"))
-        ]
+        return [list(t) for t in _data_files(fs, self.path)]
 
     def _index_fresh(self, fs: Fs, idx_dir: str) -> bool:
         # freshness is memoized per table handle (one LIST + one meta
@@ -576,8 +584,7 @@ class SaltedTable:
             # buckets stay as-is on disk, and the session conf is never
             # changed (a failed write cannot leave it dynamic)
             self._writer(
-                merged.repartition(max(len(touched), 1), F.col(SALT_COL))
-                .sortWithinPartitions(SALT_COL, self.key_col)
+                _bucket_sorted(merged, max(len(touched), 1), self.key_col)
             ).option("partitionOverwriteMode", "dynamic").mode("overwrite").save(
                 self.path
             )
@@ -1004,8 +1011,9 @@ class SaltedTable:
         """Operational diagnostics, one row per salt bucket: row count,
         key span, file count, bytes — the skew report an operator reads
         before deciding to compact, re-salt, or widen buckets. One
-        column-pruned scan plus one driver-side file listing; output is
-        |buckets| rows however big the table is."""
+        column-pruned scan plus the data-file listing
+        (:meth:`_data_signature`); output is |buckets| rows however big
+        the table is."""
         per_salt = (
             self.df()
             .groupBy(SALT_COL)
@@ -1015,16 +1023,9 @@ class SaltedTable:
                 F.max(self.key_col).alias("key_hi"),
             )
         )
-        fs = Fs(self.spark, self.path)
-        files = [
-            (int(p.rsplit(f"{SALT_COL}=", 1)[1].split("/", 1)[0]), length)
-            for p, length, _ in fs.glob_stats(
-                f"{self.path.rstrip('/')}/{SALT_COL}=*/*"
-            )
-            if not p.rsplit("/", 1)[1].startswith((".", "_"))
-        ]
         agg: dict[int, list[int]] = {}
-        for salt, length in files:
+        for p, length, _ in self._data_signature(Fs(self.spark, self.path)):
+            salt = int(p.rsplit(f"{SALT_COL}=", 1)[1].split("/", 1)[0])
             n, b = agg.setdefault(salt, [0, 0])
             agg[salt] = [n + 1, b + length]
         file_df = self.spark.createDataFrame(
@@ -1172,8 +1173,7 @@ class SaltedTable:
                 )
                 fs.delete(stage, recursive=True)
                 self._writer(
-                    kept.repartition(len(boundary_files), F.col(SALT_COL))
-                    .sortWithinPartitions(SALT_COL, self.key_col)
+                    _bucket_sorted(kept, len(boundary_files), self.key_col)
                 ).mode("overwrite").save(stage)
                 # _reader, not a bare format read: csv needs header=true +
                 # the persisted schema or header lines count as data rows
@@ -1732,7 +1732,7 @@ class SaltedTable:
 
         return desc.mapInArrow(merge_shards, out_schema)
 
-    def register_view(self, name: str, keep_salt: bool = False) -> None:
+    def register_view(self, name: str) -> None:
         """Plain-SQL access to the salted table: register a desalted
         temp view so users query the LOGICAL table (``SELECT ... FROM
         name WHERE key ...``) with no knowledge of salting — the
@@ -1750,8 +1750,7 @@ class SaltedTable:
         (plan-asserted in tests) — the same single-bucket read
         :meth:`point_get` does through the typed API. Range predicates
         keep the row-group path below; the residual invariant filter
-        (one hash per row) is the cost of transparency and is dropped
-        on request via ``keep_salt`` + direct scans.
+        (one hash per row) is the cost of transparency.
 
         Range pruning carries over without any rule because of the
         write layout: files are key-sorted WITHIN each salt partition,
@@ -1768,9 +1767,7 @@ class SaltedTable:
             df = df.where(
                 F.col(SALT_COL) == self.distributor.salt_expr(F.col(self.key_col))
             )
-        if not keep_salt:
-            df = df.drop(SALT_COL)
-        df.createOrReplaceTempView(name)
+        df.drop(SALT_COL).createOrReplaceTempView(name)
 
     def salted_where(self, start: Any = None, stop: Any = None) -> str:
         """SQL WHERE fragment for a ``[start, stop)`` key-range scan
@@ -1844,10 +1841,10 @@ class SaltedTable:
         return total
 
 
-def compact(table: SaltedTable, target_files_per_salt: int = 1) -> SaltedTable:
+def compact(table: SaltedTable) -> SaltedTable:
     """Compact a salted table in place-ish: streaming ingest appends one
     file per salt per micro-batch (salted_stream_ingest); this rewrites
-    each salt partition into ``target_files_per_salt`` key-sorted files.
+    each salt partition into one key-sorted file.
 
     At 100 TB this is the nightly small-file compaction job: it never
     shuffles across salt partitions (repartition on the existing
@@ -1858,24 +1855,36 @@ def compact(table: SaltedTable, target_files_per_salt: int = 1) -> SaltedTable:
     path op goes through Hadoop's FileSystem so the same code compacts
     an s3a:// or hdfs:// table, not just local disk."""
     def make_staged():
-        n = table.distributor.buckets * target_files_per_salt
-        return _bucket_sorted(table.df(), n, table.key_col)
+        return _bucket_sorted(table.df(), table.distributor.buckets, table.key_col)
 
     return _staged_rewrite(table, make_staged, "compact")
 
 
+def _data_files(fs: Fs, root: str) -> list:
+    """Path-sorted ``(path, bytes, mtime_ms)`` of the data files in the
+    salt dirs under ``root`` (a table or a stage): names starting with
+    ``.`` or ``_`` are skipped, as Spark's file listing skips them."""
+    return [
+        t
+        for t in fs.glob_stats(f"{root.rstrip('/')}/{SALT_COL}=*/*")
+        if not t[0].rsplit("/", 1)[1].startswith((".", "_"))
+    ]
+
+
 def _bucket_sorted(df: DataFrame, n: int, key_col: str) -> DataFrame:
-    """The write layout of a salted frame: ``n`` partitions by salt,
-    each sorted by (salt, key), so every file is key-sorted."""
+    """The write layout of a salted frame (every data-file write but
+    :func:`cluster`'s z-order): ``n`` partitions by salt, each sorted
+    by (salt, key), so every file is key-sorted."""
     return df.repartition(n, F.col(SALT_COL)).sortWithinPartitions(SALT_COL, key_col)
 
 
 def _write_meta(table: SaltedTable) -> None:
-    """Persist ``table``'s key column, format, data schema and
-    distributor as the metadata of its dir."""
+    """Persist ``table``'s key column, format, parquet row-group size,
+    data schema and distributor as the metadata of its dir."""
     meta = {
         "key_col": table.key_col,
         "fmt": table.fmt,
+        "row_group_bytes": table.row_group_bytes,
         "data_schema": table.data_schema_json,
         **table.distributor.to_meta(),
     }
@@ -1924,9 +1933,11 @@ def _staged_rewrite(
         idx_src = base + "/" + SaltedTable.KEY_INDEX_DIR
         if distributor is not None:
             schema_json = staged.drop(SALT_COL).schema.json()
-            _write_meta(SaltedTable(
+            stage_t = SaltedTable(
                 table.spark, tmp, distributor, table.key_col, table.fmt, schema_json
-            ))
+            )
+            stage_t.row_group_bytes = table.row_group_bytes
+            _write_meta(stage_t)
         else:
             fs.copy(base + "/" + META_FILE, tmp + "/" + META_FILE)
             if fs.is_dir(idx_src):
@@ -2249,10 +2260,8 @@ def _merge_stage_into_base(
     a file the crashed run already moved must not be re-renamed (the
     rename would fail and read as a new failure)."""
     failed = []
-    for staged in fs.glob(f"{stage}/{SALT_COL}=*/*"):
+    for staged, _len, _mtime in _data_files(fs, stage):
         name = staged.rsplit("/", 1)[1]
-        if name.startswith((".", "_")):
-            continue
         salt_dir = staged.rsplit("/", 2)[1]  # "salt=K"
         dest = f"{base}/{salt_dir}/{name}"
         if skip_existing and fs.exists(dest):

@@ -115,3 +115,25 @@ def test_staged_file_lost_before_commit_raises_then_replays_once(
     got = sorted(r.v for r in t.df().select("v").collect())
     assert got == list(range(400))
     assert not fs.glob(t.path.rstrip("/") + ".staging-epoch-*")
+
+
+@pytest.mark.parametrize("fmt", ["orc", "json", "csv"])
+def test_epoch_onto_any_format_lands_exactly_once(spark, tmp_path, fmt):
+    """An epoch lands in the table's own format (CSV with its header),
+    so every format reads its rows back exactly once, and a replay of
+    the same epoch id still holds them exactly once."""
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        )
+
+    t = SaltedTable.write(rows(0, 100), str(tmp_path / fmt), HashDistributor(4), "k", fmt=fmt)
+    fs = Fs(spark, t.path)
+    want = [(i, 3 * i) for i in range(150)]
+    for _ in range(2):  # the epoch, then its replay
+        ing.idempotent_salted_batch_write(rows(100, 150), 1, t.path, t.distributor, "k")
+        got = SaltedTable.load(spark, t.path).scan().select("k", "v").collect()
+        assert sorted(tuple(r) for r in got) == want
+    landed = fs.glob(t.path.rstrip("/") + "/salt=*/epoch-*")
+    assert landed and all(p.endswith("." + fmt) for p in landed), landed

@@ -63,3 +63,66 @@ def test_empty_table_keeps_salt_column(spark, tmp_path, fmt):
     assert t.describe().count() == 0
     assert t.scan(0, 50).count() == 0
 
+
+
+RG_BYTES = 256 << 10
+
+
+def _rg_rows(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 997).cast("int").alias("x"),
+        (F.col("id") % 991).cast("int").alias("y"),
+        F.sha2(F.col("id").cast("string"), 256).alias("s"),
+    )
+
+
+def _row_groups_per_file(path, name="*"):
+    """Row groups of every data file larger on disk than one row group
+    (a range remnant of :func:`cluster` can be smaller, and rightly
+    holds one)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(path, "salt=*", name + ".parquet"))
+    return [
+        pq.ParquetFile(f).metadata.num_row_groups
+        for f in files
+        if os.path.getsize(f) > RG_BYTES
+    ]
+
+
+@pytest.mark.parametrize(
+    "verb", ["compact", "cluster", "rebucket", "expire", "upsert_rows", "epoch"]
+)
+def test_rewrites_keep_the_row_group_size(spark, tmp_path, verb):
+    """``write(row_group_bytes=...)`` persists: every later write of the
+    table's data files, a lifecycle rewrite or a stream epoch, keeps
+    several parquet row groups per file instead of parquet's 128 MB
+    default (one group per file at this size)."""
+    from hbasewd_spark.sources.salted_table import cluster, compact, rebucket
+    from hbasewd_spark.streaming.ingest import idempotent_salted_batch_write
+
+    t = SaltedTable.write(
+        _rg_rows(spark, 0, 100_000), str(tmp_path / "t"), HashDistributor(2), "k",
+        row_group_bytes=RG_BYTES,
+    )
+    assert min(_row_groups_per_file(t.path)) > 1
+    if verb == "compact":
+        compact(t)
+    elif verb == "cluster":
+        cluster(t, "x", "y")
+    elif verb == "rebucket":
+        rebucket(t, HashDistributor(3))
+    elif verb == "expire":
+        t.expire(1000)
+    elif verb == "upsert_rows":
+        t.upsert_rows(_rg_rows(spark, 0, 100_000).where(F.col("k") % 7 == 0))
+    else:
+        idempotent_salted_batch_write(
+            _rg_rows(spark, 100_000, 200_000), 1, t.path, t.distributor, "k"
+        )
+    groups = _row_groups_per_file(t.path, "epoch-*" if verb == "epoch" else "*")
+    assert groups and min(groups) > 1, groups

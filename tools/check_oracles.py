@@ -22,9 +22,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from hbasewd_spark.sources.loaders import TABLES  # noqa: E402
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
