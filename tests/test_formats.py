@@ -3,6 +3,10 @@ round-trip, ordered range scans, and point gets must behave identically
 across parquet / orc (scale formats) and csv / json (interchange
 formats, schema-on-read from persisted metadata)."""
 
+import glob
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,7 +68,6 @@ def test_empty_table_keeps_salt_column(spark, tmp_path, fmt):
     assert t.scan(0, 50).count() == 0
 
 
-
 RG_BYTES = 256 << 10
 
 
@@ -81,11 +84,6 @@ def _row_groups_per_file(path, name="*"):
     """Row groups of every data file larger on disk than one row group
     (a range remnant of :func:`cluster` can be smaller, and rightly
     holds one)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
     files = glob.glob(os.path.join(path, "salt=*", name + ".parquet"))
     return [
         pq.ParquetFile(f).metadata.num_row_groups
