@@ -234,12 +234,15 @@ class SaltedTable:
     ) -> "SaltedTable":
         """Bulk salted ingest (P3 at DataFrame granularity).
 
-        ``repartition(salt)`` gives one shuffle that co-locates each
-        bucket (at 100 TB: one writer wave, no small files), then
-        ``sortWithinPartitions(salt, key)`` makes every parquet file
-        key-ordered so row-group stats are tight. This single shuffle
+        One shuffle (:func:`_bucket_sorted`) co-locates each bucket in
+        one of ``p = min(buckets, cores)`` tasks — salt ``s`` in task
+        ``s mod p``, so every task holds ⌊buckets/p⌋ or ⌈buckets/p⌉
+        whole buckets and none idles (with as many cores as buckets:
+        one bucket per task, one writer wave, no small files) — then
+        ``sortWithinPartitions(salt, key)`` makes every file key-ordered
+        so row-group stats are tight. This single shuffle
         IS the anti-hot-spot move: the monotonic key stream fans out
-        over ``buckets`` concurrent writers instead of one hot region.
+        evenly over all ``buckets`` instead of one hot region.
 
         ``fmt`` selects the physical format: parquet (default) and orc
         are the scale formats (columnar, stats-pruned, splittable);
@@ -584,7 +587,7 @@ class SaltedTable:
             # buckets stay as-is on disk, and the session conf is never
             # changed (a failed write cannot leave it dynamic)
             self._writer(
-                _bucket_sorted(merged, max(len(touched), 1), self.key_col)
+                _bucket_sorted(merged, touched, self.key_col)
             ).option("partitionOverwriteMode", "dynamic").mode("overwrite").save(
                 self.path
             )
@@ -1025,7 +1028,7 @@ class SaltedTable:
         )
         agg: dict[int, list[int]] = {}
         for p, length, _ in self._data_signature(Fs(self.spark, self.path)):
-            salt = int(p.rsplit(f"{SALT_COL}=", 1)[1].split("/", 1)[0])
+            salt = _salt_of(p)
             n, b = agg.setdefault(salt, [0, 0])
             agg[salt] = [n + 1, b + length]
         file_df = self.spark.createDataFrame(
@@ -1173,7 +1176,9 @@ class SaltedTable:
                 )
                 fs.delete(stage, recursive=True)
                 self._writer(
-                    _bucket_sorted(kept, len(boundary_files), self.key_col)
+                    _bucket_sorted(
+                        kept, {_salt_of(f) for f in boundary_files}, self.key_col
+                    )
                 ).mode("overwrite").save(stage)
                 # _reader, not a bare format read: csv needs header=true +
                 # the persisted schema or header lines count as data rows
@@ -1860,6 +1865,11 @@ def compact(table: SaltedTable) -> SaltedTable:
     return _staged_rewrite(table, make_staged, "compact")
 
 
+def _salt_of(path: str) -> int:
+    """The salt id of a data file, from its ``salt=K/`` dir."""
+    return int(path.rsplit(f"{SALT_COL}=", 1)[1].split("/", 1)[0])
+
+
 def _data_files(fs: Fs, root: str) -> list:
     """Path-sorted ``(path, bytes, mtime_ms)`` of the data files in the
     salt dirs under ``root`` (a table or a stage): names starting with
@@ -1871,11 +1881,56 @@ def _data_files(fs: Fs, root: str) -> list:
     ]
 
 
-def _bucket_sorted(df: DataFrame, n: int, key_col: str) -> DataFrame:
-    """The write layout of a salted frame (every data-file write but
-    :func:`cluster`'s z-order): ``n`` partitions by salt, each sorted
-    by (salt, key), so every file is key-sorted."""
-    return df.repartition(n, F.col(SALT_COL)).sortWithinPartitions(SALT_COL, key_col)
+_PARTITION_ROUTES: dict[int, list[int]] = {}
+
+
+def _partition_routes(spark: SparkSession, p: int) -> list[int]:
+    """``v_0 .. v_{p-1}``: for each ``j`` the smallest int that Spark's
+    hash partitioning over ``p`` partitions places in partition ``j``
+    (``pmod(Murmur3(v, 42), p) == j``, what ``repartition(p, col)``
+    computes for an int column). Read from Spark's own
+    ``Murmur3_x86_32.hashInt`` on the driver, no job; memoized per
+    ``p`` (the hash is fixed, so any session agrees)."""
+    if p not in _PARTITION_ROUTES:
+        hash_int = spark._jvm.org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt
+        routes: list = [None] * p
+        left, v = p, 0
+        while left:
+            j = hash_int(v, 42) % p  # Python's % of a positive p is pmod
+            if routes[j] is None:
+                routes[j] = v
+                left -= 1
+            v += 1
+        _PARTITION_ROUTES[p] = routes
+    return _PARTITION_ROUTES[p]
+
+
+def _bucket_sorted(df: DataFrame, salts: "int | list[int]", key_col: str) -> DataFrame:
+    """The write layout of a salted frame holding the salt ids
+    ``salts`` (``n`` means ``0..n-1``; every data-file write but
+    :func:`cluster`'s z-order): one shuffle into ``p = min(#salts,
+    defaultParallelism)`` partitions, each sorted by (salt, key), so a
+    write puts one key-sorted file in every salt dir. The ``i``-th salt
+    id (in order) goes to partition ``i mod p`` exactly: every
+    partition holds ⌊#salts/p⌋ or ⌈#salts/p⌉ whole salts and none is
+    empty, one task per core. Hashing the salt itself instead
+    (``repartition(n, salt)``) leaves partitions empty or doubled — 32
+    salts fill 18 of 32 — and the busiest task sets the write's floor.
+    Each row is routed by the int :func:`_partition_routes` picked for
+    its partition."""
+    if isinstance(salts, int):
+        ids = list(range(salts))
+    else:
+        ids = sorted({s for s in salts if s is not None})
+    p = max(1, min(len(ids), df.sparkSession.sparkContext.defaultParallelism))
+    rank = F.col(SALT_COL)
+    if ids != list(range(len(ids))):
+        rank = F.array_position(F.array(*[F.lit(s) for s in ids]), rank) - 1
+    route = F.element_at(
+        F.array(*[F.lit(v) for v in _partition_routes(df.sparkSession, p)]),
+        (F.pmod(rank, F.lit(p)) + 1).cast("int"),
+    )
+    return df.repartition(p, route).sortWithinPartitions(SALT_COL, key_col)
 
 
 def _write_meta(table: SaltedTable) -> None:
