@@ -240,9 +240,9 @@ class SaltedTable:
         whole buckets and none idles (with as many cores as buckets:
         one bucket per task, one writer wave, no small files) — then
         ``sortWithinPartitions(salt, key)`` makes every file key-ordered
-        so row-group stats are tight. This single shuffle
-        IS the anti-hot-spot move: the monotonic key stream fans out
-        evenly over all ``buckets`` instead of one hot region.
+        so row-group stats are tight. This single shuffle IS the
+        anti-hot-spot move: the monotonic key stream fans out evenly
+        over all ``buckets`` instead of one hot region.
 
         ``fmt`` selects the physical format: parquet (default) and orc
         are the scale formats (columnar, stats-pruned, splittable);
@@ -1177,7 +1177,7 @@ class SaltedTable:
                 fs.delete(stage, recursive=True)
                 self._writer(
                     _bucket_sorted(
-                        kept, {_salt_of(f) for f in boundary_files}, self.key_col
+                        kept, [_salt_of(f) for f in boundary_files], self.key_col
                     )
                 ).mode("overwrite").save(stage)
                 # _reader, not a bare format read: csv needs header=true +
@@ -1905,7 +1905,7 @@ def _partition_routes(spark: SparkSession, p: int) -> list[int]:
     return _PARTITION_ROUTES[p]
 
 
-def _bucket_sorted(df: DataFrame, salts: "int | list[int]", key_col: str) -> DataFrame:
+def _bucket_sorted(df: DataFrame, salts: int | list[int], key_col: str) -> DataFrame:
     """The write layout of a salted frame holding the salt ids
     ``salts`` (``n`` means ``0..n-1``; every data-file write but
     :func:`cluster`'s z-order): one shuffle into ``p = min(#salts,
